@@ -679,18 +679,15 @@ def test_cluster_snapshot_load_without_schema_sidecar(spark, tmp_path):
 
 
 def test_packed_assignment_matches_plain_and_roundtrips(spark):
-    """r15 packed fold internals: `_assign_pack_udf` must emit the SAME
-    cluster ids (and centroid distances) as the plain assignment path,
-    and its packed bytes must `_unpack_vecs` back to the exact float64
-    widening of the input vectors — the pair kernels' bit-identity
-    contract."""
+    """Packed fold internals: the assignment builder's packed form must
+    emit the SAME cluster ids (and centroid distances) as its plain
+    forms, and its packed bytes must `_unpack_vecs` back to the exact
+    float64 widening of the input vectors — the pair kernel's
+    bit-identity contract."""
     import numpy as np
 
-    from vicinity_spark.operators.cluster import (
-        _assign_pack_udf,
-        _assign_dist_udf,
-        _unpack_vecs,
-    )
+    from vicinity_spark.operators.cluster import _unpack_vecs
+    from vicinity_spark.operators.grid import centroid_assign_udf
 
     rows = [
         (0, [0.1, 0.0]),
@@ -704,7 +701,10 @@ def test_packed_assignment_matches_plain_and_roundtrips(spark):
     packed = {
         r["id"]: r
         for r in df.select(
-            "id", _assign_pack_udf(cents, with_dist=True)(F.col("vector")).alias("a")
+            "id",
+            centroid_assign_udf(cents, with_dist=True, with_packed=True)(
+                F.col("vector")
+            ).alias("a"),
         )
         .select("id", "a.cluster_id", "a.cdist", "a.packed")
         .collect()
@@ -712,12 +712,17 @@ def test_packed_assignment_matches_plain_and_roundtrips(spark):
     plain = {
         r["id"]: r
         for r in df.select(
-            "id", _assign_dist_udf(cents)(F.col("vector")).alias("a")
+            "id",
+            centroid_assign_udf(cents, with_dist=True)(F.col("vector")).alias("a"),
+            centroid_assign_udf(cents)(F.col("vector")).alias("cid"),
         )
-        .select("id", "a.cluster_id", "a.cdist")
+        .select("id", "a.cluster_id", "a.cdist", "cid")
         .collect()
     }
     assert {i: p["cluster_id"] for i, p in packed.items()} == {
+        i: p["cluster_id"] for i, p in plain.items()
+    }
+    assert {i: p["cid"] for i, p in plain.items()} == {
         i: p["cluster_id"] for i, p in plain.items()
     }
     for i in packed:
@@ -726,3 +731,174 @@ def test_packed_assignment_matches_plain_and_roundtrips(spark):
     V = _unpack_vecs(cell)
     want = np.asarray([v for _, v in rows], dtype=np.float64)
     assert V.shape == want.shape and (V == want).all()
+
+
+def test_empty_centroids_rejected(spark):
+    """Every assigning entry point goes through the one assignment
+    builder, which rejects an empty centroid list before any job."""
+    from vicinity_spark.operators.cluster import cluster_stats, semdedup_incremental
+
+    df = spark.createDataFrame([(0, [1.0, 0.0])], "id long, vector array<double>")
+    snap = spark.createDataFrame(
+        [(1, [0.0, 1.0], 0)], "id long, vector array<double>, cluster_id int"
+    )
+    calls = [
+        lambda: assign_clusters(df, []),
+        lambda: cluster_stats(df, []),
+        lambda: semdedup(df, [], 0.1),
+        lambda: semdedup(df, [], 0.1, keep="farthest"),
+        lambda: semdedup_incremental(df, snap, [], 0.1),
+        lambda: semdedup_incremental(
+            df, snap, [], 0.1, snapshot_cluster_col="cluster_id"
+        ),
+    ]
+    for call in calls:
+        with pytest.raises(ValueError, match="centroids must be non-empty"):
+            call()
+
+
+# --- the pair kernel, driven directly on pandas frames (no Spark job) ---
+
+_THRESH = {"cosine": 0.05, "euclidean": 0.5, "l2sq": 0.25}
+
+
+def _kernel_cluster(seed: int, m: int, dim: int = 6):
+    """m rows with unsorted ids unique across seeds, planted
+    near-duplicates and two zero vectors (distance 0 to each other
+    under l2, NaN under cosine)."""
+    import numpy as np
+
+    rng = np.random.default_rng(seed)
+    ids = (rng.permutation(10 * m)[:m] + 10_000 * seed).astype(np.int64)
+    V = rng.normal(size=(m, dim))
+    for k in range(0, m - 3, 5):
+        V[k + 1] = V[k] + 1e-3 * rng.normal(size=dim)
+    V[-2:] = 0.0
+    return ids, V
+
+
+def _brute_pairs(ids, V, metric, t):
+    """Unordered id pairs at exact per-pair distance <= t."""
+    import numpy as np
+
+    out = set()
+    for a in range(len(ids)):
+        for b in range(a + 1, len(ids)):
+            x, y = V[a], V[b]
+            if metric == "cosine":
+                nx, ny = np.linalg.norm(x), np.linalg.norm(y)
+                if nx == 0.0 or ny == 0.0:
+                    continue  # zero vector: NaN distance, never a match
+                d = 1.0 - float(x @ y) / (nx * ny)
+            else:
+                d = float(((x - y) ** 2).sum())
+                if metric == "euclidean":
+                    d = d**0.5
+            if d <= t:
+                out.add(frozenset((int(ids[a]), int(ids[b]))))
+    return out
+
+
+def _kernel_rows(rows, metric):
+    """Run the pair kernel over one pandas frame of folded rows; the
+    emitted edges as unordered pairs, each asserted emitted once."""
+    import pandas as pd
+
+    from vicinity_spark.operators.cluster import _pair_kernel
+
+    out = list(_pair_kernel(metric, _THRESH[metric])(iter([pd.DataFrame(rows)])))
+    edges = [
+        frozenset((int(a), int(b)))
+        for f in out
+        for a, b in zip(f["id_a"], f["id_b"])
+    ]
+    assert all(len(e) == 2 for e in edges)  # no self pairs
+    assert len(edges) == len(set(edges))  # each unordered pair once
+    return set(edges)
+
+
+def _fold(ids, V, order, **member_cols):
+    """One folded row holding the ``order`` members, in that order."""
+    return {
+        "__ids": ids[order],
+        "__vecs": [V[i].tobytes() for i in order],
+        **{k: v[order] for k, v in member_cols.items()},
+    }
+
+
+def _assert_brute(got, ids, V, metric, keep=lambda pair: True):
+    """Sandwich against the exact brute force: ulp-level expansion
+    error may only move pairs within 1e-9 of the threshold."""
+    t = _THRESH[metric]
+    lo = {p for p in _brute_pairs(ids, V, metric, t - 1e-9) if keep(p)}
+    hi = {p for p in _brute_pairs(ids, V, metric, t + 1e-9) if keep(p)}
+    assert lo, "fixture must plant matches"
+    assert lo <= got <= hi
+
+
+@pytest.mark.parametrize("chunk", [None, 7], ids=["pchunk", "pchunk7"])
+@pytest.mark.parametrize("metric", ["cosine", "euclidean", "l2sq"])
+def test_pair_kernel_shapes_match_brute_force(metric, chunk, monkeypatch):
+    """Within, cross (new vs snapshot) and split-cluster block shapes
+    of the one pair kernel against a numpy brute force, with the chunk
+    size at its real value and at 7 rows so every shape crosses slice
+    boundaries; a zero vector under cosine never matches."""
+    import numpy as np
+
+    from vicinity_spark.operators import cluster
+
+    if chunk is not None:
+        monkeypatch.setattr(cluster, "_PCHUNK", chunk)
+    zero, edges = set(), set()
+
+    # within: two clusters in one frame (rows arrive in collect_list
+    # order, not id order) plus a singleton that must emit nothing
+    ids1, V1 = _kernel_cluster(1, 40)
+    ids2, V2 = _kernel_cluster(2, 23)
+    rng = np.random.default_rng(0)
+    got = _kernel_rows(
+        [
+            _fold(ids1, V1, rng.permutation(len(ids1))),
+            _fold(ids2, V2, rng.permutation(len(ids2))),
+            _fold(ids2[:1], V2[:1], [0]),
+        ],
+        metric,
+    )
+    _assert_brute({p for p in got if p <= set(ids1.tolist())}, ids1, V1, metric)
+    _assert_brute({p for p in got if p <= set(ids2.tolist())}, ids2, V2, metric)
+    edges |= got
+    zero |= {int(i) for i in ids1[-2:]} | {int(i) for i in ids2[-2:]}
+
+    # cross: only new-involved pairs (snapshot-snapshot ones are settled)
+    ids, V = _kernel_cluster(3, 37)
+    sides = rng.integers(0, 2, len(ids)).astype(np.int8)
+    sides[:2] = [1, 0]
+    new = {int(i) for i, sd in zip(ids, sides) if sd == 1}
+    row = _fold(ids, V, rng.permutation(len(ids)), __sides=sides)
+    got = _kernel_rows([row], metric)
+    _assert_brute(got, ids, V, metric, keep=lambda p: bool(p & new))
+    edges |= got
+    zero |= {int(i) for i in ids[-2:]}
+
+    # split cluster: B-row blocks in id order, one task per block pair
+    # (ti <= tj); the union emits each unordered pair exactly once
+    ids, V = _kernel_cluster(4, 31)
+    B = 9
+    blk = np.empty(len(ids), dtype=np.int32)
+    blk[np.argsort(ids)] = np.arange(len(ids)) // B
+    nblk = int(blk.max()) + 1
+    tasks = []
+    for ti in range(nblk):
+        for tj in range(ti, nblk):
+            members = np.nonzero((blk == ti) | (blk == tj))[0]
+            row = _fold(ids, V, rng.permutation(members), __blks=blk)
+            tasks.append({**row, "__ti": ti, "__tj": tj})
+    got = _kernel_rows(tasks, metric)
+    _assert_brute(got, ids, V, metric)
+    edges |= got
+    zero |= {int(i) for i in ids[-2:]}
+
+    # the zero pair is distance 0 under l2 but NaN under cosine
+    assert any(p <= zero for p in edges) == (metric != "cosine")
+    if metric == "cosine":
+        assert not any(p & zero for p in edges)

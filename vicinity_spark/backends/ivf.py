@@ -60,8 +60,11 @@ class IVFStrategy(IndexStrategy):
             # oracle replicate cluster assignment exactly, and what a
             # production reload does after `load` (centroids live in
             # params, build never refits on reload).
+            from vicinity_spark.operators.grid import centroid_assign_udf
+
             self.params["nlist"] = len(self.params["centroids"])
-            out = df.withColumn(CLUSTER_COL, self._assign_udf()(F.col("vector")))
+            assign = centroid_assign_udf(self.params["centroids"])
+            out = df.withColumn(CLUSTER_COL, assign(F.col("vector")))
             return out.repartition(min(self.params["nlist"], 32), F.col(CLUSTER_COL))
         feats = df.withColumn(
             "__features", array_to_vector(F.col("vector").cast("array<double>"))
@@ -91,28 +94,6 @@ class IVFStrategy(IndexStrategy):
             .where(F.col("__rn") == 1)
             .drop("__rn", "__cvec")
         )
-
-    def _assign_udf(self):
-        """array<float> vector → nearest centroid id (argmin squared
-        euclidean, ties to the lower cluster id — first minimum,
-        matching `ORDER BY dist, cid` in SQL). BLAS-form kernel with
-        exact tie repair (grid.nearest_centroids, r13): one matmul
-        instead of an nq×nlist×dim broadcast, so assignment cost stays
-        flat as nlist grows to production scale."""
-        from pyspark.sql.types import IntegerType
-
-        from vicinity_spark.operators.grid import nearest_centroids
-
-        C = self.centroids
-        Csq = (C * C).sum(axis=1)
-
-        @F.pandas_udf(IntegerType())
-        def assign(v: pd.Series) -> pd.Series:
-            Q = np.vstack(v.to_numpy()).astype(np.float64)
-            idx, _ = nearest_centroids(Q, C, 1, Csq)
-            return pd.Series(idx[:, 0].astype(np.int32))
-
-        return assign
 
     def _centroid_df(self, spark) -> DataFrame:
         cents = self.params["centroids"]

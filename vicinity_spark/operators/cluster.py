@@ -18,9 +18,10 @@ LAION scale, keeping clusters ~10⁴ rows).
 
 Scale shape:
 - assignment is a NARROW projection (Arrow-vectorized argmin against
-  the k×dim centroid matrix riding in the closure — the exact kernel
-  and tie rule of the IVF backend, backends/ivf.py:95); no shuffle,
-  no join, replayable by an `ORDER BY dist, cid` oracle;
+  the k×dim centroid matrix riding in the closure — the one
+  `grid.centroid_assign_udf` the IVF backend also builds with, so
+  labels share its tie rule); no shuffle, no join, replayable by an
+  `ORDER BY dist, cid` oracle;
 - the pair mine is ONE equi-join shuffle keyed on cluster id — pair
   work per task is bounded by that cluster's size, never all-pairs;
   a single runaway cluster is the failure mode (quadratic in ITS
@@ -42,6 +43,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from vicinity_spark.operators.grid import centroid_assign_udf
 
 #: rows of the per-cluster distance matrix computed per kernel slice —
 #: bounds kernel memory at _PCHUNK × cluster_size doubles (the grid
@@ -83,29 +86,6 @@ def kmeans_centroids(
     return [list(map(float, c)) for c in model.clusterCenters()]
 
 
-def _assign_udf(centroids):
-    """array<numeric> vector → nearest centroid id (argmin squared
-    euclidean, ties to the lower centroid index — first minimum,
-    matching `ORDER BY dist, cid` in SQL). Identical semantics to
-    backends/ivf.py so cluster labels match the IVF layout's;
-    BLAS-form kernel (grid.nearest_centroids) so cost is one matmul,
-    not an nq×k×dim broadcast."""
-    from pyspark.sql.types import IntegerType
-
-    from vicinity_spark.operators.grid import nearest_centroids
-
-    C = np.asarray(centroids, dtype=np.float64)
-    Csq = (C * C).sum(axis=1)
-
-    @F.pandas_udf(IntegerType())
-    def assign(v: pd.Series) -> pd.Series:
-        Q = np.vstack(v.to_numpy()).astype(np.float64)
-        idx, _ = nearest_centroids(Q, C, 1, Csq)
-        return pd.Series(idx[:, 0].astype(np.int32))
-
-    return assign
-
-
 def _unpack_vecs(cell) -> "np.ndarray":
     """Folded packed-vector cell (sequence of float64-byte rows) →
     (m, dim) float64 matrix via ONE frombuffer over the concatenated
@@ -118,58 +98,11 @@ def _unpack_vecs(cell) -> "np.ndarray":
     )
 
 
-def _assign_pack_udf(centroids, with_dist: bool = False):
-    """The fold-feeding variant of `_assign_udf` (r15, guide §4.2):
-    one Arrow pass returns the nearest-centroid id (and optionally the
-    squared-l2 distance to it) PLUS the row's vector re-packed as
-    float64 bytes. The pack rides the assignment's existing
-    JVM→Python crossing — the kernels previously widened every member
-    to float64 anyway, so `packed` holds bit-identical values and the
-    cluster fold ships one flat binary cell per row instead of a
-    nested array the kernels must re-convert member by member."""
-    from pyspark.sql.types import (
-        BinaryType,
-        DoubleType,
-        IntegerType,
-        StructField,
-        StructType,
-    )
-
-    from vicinity_spark.operators.grid import nearest_centroids
-
-    C = np.asarray(centroids, dtype=np.float64)
-    Csq = (C * C).sum(axis=1)
-    fields = [StructField("cluster_id", IntegerType())]
-    if with_dist:
-        fields.append(StructField("cdist", DoubleType()))
-    fields.append(StructField("packed", BinaryType()))
-    schema = StructType(fields)
-
-    @F.pandas_udf(schema)
-    def assign(v: pd.Series) -> pd.DataFrame:
-        if not len(v):
-            cols = {"cluster_id": [], "packed": []}
-            if with_dist:
-                cols["cdist"] = []
-            return pd.DataFrame(cols)
-        Q = np.vstack(v.to_numpy()).astype(np.float64)
-        idx, best = nearest_centroids(Q, C, 1, Csq)
-        cols = {
-            "cluster_id": idx[:, 0].astype(np.int32),
-            "packed": [Q[i].tobytes() for i in range(len(Q))],
-        }
-        if with_dist:
-            cols["cdist"] = best[:, 0]
-        return pd.DataFrame(cols)
-
-    return assign
-
-
 def _pack_udf():
     """vector → float64 bytes, for paths whose cluster labels are
     already computed (``batch_cluster_col``/``snapshot_cluster_col``)
     and therefore have no assignment pass to amortize the pack into.
-    Same packed layout as `_assign_pack_udf`."""
+    Same packed layout as `centroid_assign_udf(..., with_packed=True)`."""
     from pyspark.sql.types import BinaryType
 
     @F.pandas_udf(BinaryType())
@@ -180,37 +113,6 @@ def _pack_udf():
         return pd.Series([Q[i].tobytes() for i in range(len(Q))])
 
     return pack
-
-
-def _assign_dist_udf(centroids):
-    """Same argmin kernel, returning (cluster_id, the squared-l2
-    distance TO that centroid) — the extra column semdedup's
-    "farthest" keep rule ranks on."""
-    from pyspark.sql.types import DoubleType, IntegerType, StructField, StructType
-
-    from vicinity_spark.operators.grid import nearest_centroids
-
-    C = np.asarray(centroids, dtype=np.float64)
-    Csq = (C * C).sum(axis=1)
-    schema = StructType(
-        [
-            StructField("cluster_id", IntegerType()),
-            StructField("cdist", DoubleType()),
-        ]
-    )
-
-    @F.pandas_udf(schema)
-    def assign(v: pd.Series) -> pd.DataFrame:
-        Q = np.vstack(v.to_numpy()).astype(np.float64)
-        idx, best = nearest_centroids(Q, C, 1, Csq)
-        return pd.DataFrame(
-            {
-                "cluster_id": idx[:, 0].astype(np.int32),
-                "cdist": best[:, 0],
-            }
-        )
-
-    return assign
 
 
 def assign_clusters(
@@ -224,16 +126,62 @@ def assign_clusters(
     centroid (squared-euclidean argmin, ties to the lower index).
     Narrow projection — the k×dim matrix rides in the closure; no
     shuffle, no join, so this composes into any scan."""
-    cents = [list(map(float, c)) for c in centroids]
-    if not cents:
-        raise ValueError("centroids must be non-empty")
-    return df.withColumn(cluster_col, _assign_udf(cents)(F.col(vector_col)))
+    return df.withColumn(
+        cluster_col, centroid_assign_udf(centroids)(F.col(vector_col))
+    )
 
 
-def _cluster_pairs_kernel(metric: str, max_distance: float):
-    """mapInPandas kernel over cluster-folded block rows (__ids,
-    __vecs = packed float64-byte rows, see `_assign_pack_udf`): per
-    cluster, the within-cluster pairwise distance matrix in
+def _packed_rows(df, centroids, id_col, vector_col, cluster_col=None):
+    """(id, cluster_id, __packed) for a pair-kernel fold: the vector
+    as float64 bytes, packed inside the assignment's own Arrow pass —
+    or, when ``cluster_col`` names precomputed labels, in a dedicated
+    one-column pack pass (nothing to amortize it into)."""
+    if cluster_col is not None:
+        return df.select(
+            F.col(id_col).alias("id"),
+            _pack_udf()(F.col(vector_col)).alias("__packed"),
+            F.col(cluster_col).cast("int").alias("cluster_id"),
+        )
+    assign = centroid_assign_udf(centroids, with_packed=True)
+    return df.select(
+        F.col(id_col).alias("id"), assign(F.col(vector_col)).alias("__a")
+    ).select(
+        "id",
+        F.col("__a.cluster_id").alias("cluster_id"),
+        F.col("__a.packed").alias("__packed"),
+    )
+
+
+def _oversize_clusters(asg, max_cluster_rows, *, raise_for=None):
+    """The enforced k-sizing guard: one map-side-combined groupBy over
+    the assigned rows (k rows to the driver) BEFORE any pair work.
+    With ``raise_for=(caller, advice)`` it raises naming the five
+    largest clusters over ``max_cluster_rows``; without, it returns
+    every flagged (cluster_id, n_rows) row — driver-bounded by
+    n / max_cluster_rows rows — for the chunked fold."""
+    over_q = (
+        asg.groupBy("cluster_id")
+        .agg(F.count(F.lit(1)).alias("n_rows"))
+        .where(F.col("n_rows") > max_cluster_rows)
+    )
+    if raise_for is None:
+        return over_q.collect()
+    over = over_q.orderBy(F.col("n_rows").desc()).limit(5).collect()
+    if over:
+        caller, advice = raise_for
+        worst = ", ".join(
+            f"cluster {r['cluster_id']}: {r['n_rows']} rows" for r in over
+        )
+        raise ValueError(
+            f"{caller}: cluster(s) exceed max_cluster_rows="
+            f"{max_cluster_rows} ({worst}) — {advice}"
+        )
+    return []
+
+
+def _pair_kernel(metric: str, max_distance: float):
+    """mapInPandas kernel over cluster-folded rows (__ids, __vecs =
+    packed float64-byte rows): per row, a distance matrix in
     _PCHUNK-row slices, emitting only the (id_a, id_b) edges with
     distance ≤ the threshold. A MATRIX kernel, not a per-pair row
     expansion — at cluster sizes in the thousands a join that expands
@@ -242,7 +190,25 @@ def _cluster_pairs_kernel(metric: str, max_distance: float):
     >10 min join-expanded vs seconds here); one BLAS product per slice
     moves nothing. Zero vectors under cosine produce NaN distances
     (excluded at any threshold) — the same contract as the Catalyst
-    distance expression."""
+    distance expression.
+
+    The folded row's columns pick the matrix shape and keep rule;
+    every unordered pair is emitted once:
+
+    | row carries                  | drive rows | columns    | keep           |
+    |------------------------------|------------|------------|----------------|
+    | __ids, __vecs only           | all        | all        | i < j          |
+    | + __sides (1 new, 0 snapshot)| new rows   | all        | new-new i < j, |
+    |                              |            |            | new-snap i != j|
+    | + __blks, __ti == __tj       | all        | all        | i < j          |
+    | + __blks, __ti != __tj       | block __ti | block __tj | all            |
+
+    The incremental (__sides) shape costs new×(ns+nb) FLOPs, never the
+    snapshot's ns² (snapshot-snapshot pairs were settled when the
+    snapshot was built). The block shape is the over-budget chunked
+    fold: blocks are id-ordered, so every cross pair lives in exactly
+    one off-diagonal task and peak memory is two blocks plus a
+    _PCHUNK × block_size slice."""
     if metric not in ("cosine", "euclidean", "l2sq"):
         raise ValueError(
             f"semdedup supports cosine/euclidean/l2sq, got {metric!r}"
@@ -255,11 +221,25 @@ def _cluster_pairs_kernel(metric: str, max_distance: float):
                 m = len(ids)
                 if m < 2:
                     continue
-                V = _unpack_vecs(pdf["__vecs"].iloc[i])
                 # collect_list order is nondeterministic; id-sort so
                 # slice boundaries (and thus float paths) are stable
                 order = np.argsort(ids, kind="stable")
-                ids, V = ids[order], V[order]
+                ids = ids[order]
+                # drive/cols None = every row, as plain s:e slices
+                drive = cols = new = None
+                if "__sides" in pdf.columns:
+                    new = np.asarray(pdf["__sides"].iloc[i])[order] == 1
+                    drive = np.nonzero(new)[0]
+                elif "__blks" in pdf.columns:
+                    ti, tj = int(pdf["__ti"].iloc[i]), int(pdf["__tj"].iloc[i])
+                    if ti != tj:
+                        blks = np.asarray(pdf["__blks"].iloc[i])[order]
+                        drive = np.nonzero(blks == ti)[0]
+                        cols = np.nonzero(blks == tj)[0]
+                n_drive = m if drive is None else len(drive)
+                if not n_drive or (cols is not None and not len(cols)):
+                    continue
+                V = _unpack_vecs(pdf["__vecs"].iloc[i])[order]
                 if metric == "cosine":
                     nrm = np.linalg.norm(V, axis=1)
                     nrm[nrm == 0.0] = np.nan  # zero vector → NaN row
@@ -267,158 +247,28 @@ def _cluster_pairs_kernel(metric: str, max_distance: float):
                 else:
                     W = V
                     sq = (V * V).sum(axis=1)
+                    sqc = sq if cols is None else sq[cols]
+                Wc = W if cols is None else W[cols]
                 out_a, out_b = [], []
-                for s in range(0, m, _PCHUNK):
-                    e = min(s + _PCHUNK, m)
-                    if metric == "cosine":
-                        D = 1.0 - W[s:e] @ W.T
+                for s in range(0, n_drive, _PCHUNK):
+                    if drive is None:
+                        rows = slice(s, s + _PCHUNK)
                     else:
-                        D = sq[s:e, None] + sq[None, :] - 2.0 * (W[s:e] @ W.T)
+                        rows = drive[s : s + _PCHUNK]
+                    if metric == "cosine":
+                        D = 1.0 - W[rows] @ Wc.T
+                    else:
+                        D = sq[rows, None] + sqc[None, :] - 2.0 * (W[rows] @ Wc.T)
                         if metric == "euclidean":
                             D = np.sqrt(np.maximum(D, 0.0))
                     with np.errstate(invalid="ignore"):
                         ii, jj = np.nonzero(D <= max_distance)
-                    gi = ii + s
-                    keep = gi < jj  # upper triangle: each pair once
-                    if keep.any():
-                        out_a.append(ids[gi[keep]])
-                        out_b.append(ids[jj[keep]])
-                if out_a:
-                    yield pd.DataFrame(
-                        {
-                            "id_a": np.concatenate(out_a),
-                            "id_b": np.concatenate(out_b),
-                        }
-                    )
-
-    return fn
-
-
-def _cluster_cross_pairs_kernel(metric: str, max_distance: float):
-    """The incremental twin of `_cluster_pairs_kernel`: block rows
-    additionally carry __sides (1 = new batch, 0 = snapshot), and the
-    kernel mines only NEW-involved pairs — each chunk of new rows
-    scores against ALL cluster members (new×(ns+nb) FLOPs, never the
-    snapshot's own ns² — snapshot-snapshot pairs were settled when the
-    snapshot was built). Emits each unordered pair once: new-vs-new
-    keeps the id_a < id_b orientation, new-vs-snapshot is oriented
-    (new, snapshot) and cannot double-emit because only new rows drive
-    the rows of the distance matrix. Distance math is byte-identical
-    to the within-cluster kernel (same normalize/expansion paths, same
-    NaN contract for zero vectors under cosine)."""
-    if metric not in ("cosine", "euclidean", "l2sq"):
-        raise ValueError(
-            f"semdedup supports cosine/euclidean/l2sq, got {metric!r}"
-        )
-
-    def fn(it):
-        for pdf in it:
-            for i in range(len(pdf)):
-                ids = np.asarray(pdf["__ids"].iloc[i], dtype=np.int64)
-                sides = np.asarray(pdf["__sides"].iloc[i], dtype=np.int8)
-                m = len(ids)
-                if m < 2 or not (sides == 1).any():
-                    continue
-                V = _unpack_vecs(pdf["__vecs"].iloc[i])
-                order = np.argsort(ids, kind="stable")
-                ids, V, sides = ids[order], V[order], sides[order]
-                if metric == "cosine":
-                    nrm = np.linalg.norm(V, axis=1)
-                    nrm[nrm == 0.0] = np.nan
-                    W = V / nrm[:, None]
-                else:
-                    W = V
-                    sq = (V * V).sum(axis=1)
-                new_idx = np.nonzero(sides == 1)[0]
-                out_a, out_b = [], []
-                for s in range(0, len(new_idx), _PCHUNK):
-                    rows = new_idx[s : s + _PCHUNK]
-                    if metric == "cosine":
-                        D = 1.0 - W[rows] @ W.T
-                    else:
-                        D = sq[rows, None] + sq[None, :] - 2.0 * (W[rows] @ W.T)
-                        if metric == "euclidean":
-                            D = np.sqrt(np.maximum(D, 0.0))
-                    with np.errstate(invalid="ignore"):
-                        ii, jj = np.nonzero(D <= max_distance)
-                    gi = rows[ii]
-                    other_new = sides[jj] == 1
-                    # new-new once (lower id drives); new-snapshot always
-                    keep = np.where(other_new, gi < jj, gi != jj)
-                    if keep.any():
-                        out_a.append(ids[gi[keep]])
-                        out_b.append(ids[jj[keep]])
-                if out_a:
-                    yield pd.DataFrame(
-                        {
-                            "id_a": np.concatenate(out_a),
-                            "id_b": np.concatenate(out_b),
-                        }
-                    )
-
-    return fn
-
-
-def _cluster_block_pairs_kernel(metric: str, max_distance: float):
-    """The chunk-mode sibling of `_cluster_pairs_kernel`: task rows
-    carry ONE block pair (__ti, __tj) of an over-budget cluster —
-    rows of both blocks with their __blks tags. A diagonal task
-    (ti == tj) mines its block's upper triangle exactly like the
-    whole-cluster kernel; an off-diagonal task scores block ti's rows
-    against block tj's (every cross pair exists in exactly one task,
-    so nothing double-emits). Peak memory is two blocks' vectors +
-    a _PCHUNK × block_size distance slice — bounded by the block
-    budget, never the cluster size; total FLOPs stay Σ size²/2."""
-    if metric not in ("cosine", "euclidean", "l2sq"):
-        raise ValueError(
-            f"semdedup supports cosine/euclidean/l2sq, got {metric!r}"
-        )
-
-    def fn(it):
-        for pdf in it:
-            for i in range(len(pdf)):
-                ids = np.asarray(pdf["__ids"].iloc[i], dtype=np.int64)
-                blks = np.asarray(pdf["__blks"].iloc[i], dtype=np.int32)
-                ti = int(pdf["__ti"].iloc[i])
-                tj = int(pdf["__tj"].iloc[i])
-                m = len(ids)
-                if m < 2:
-                    continue
-                V = _unpack_vecs(pdf["__vecs"].iloc[i])
-                order = np.argsort(ids, kind="stable")
-                ids, V, blks = ids[order], V[order], blks[order]
-                if metric == "cosine":
-                    nrm = np.linalg.norm(V, axis=1)
-                    nrm[nrm == 0.0] = np.nan
-                    W = V / nrm[:, None]
-                else:
-                    W = V
-                    sq = (V * V).sum(axis=1)
-                if ti == tj:
-                    drive = np.arange(m)
-                    cols = np.arange(m)
-                else:
-                    drive = np.nonzero(blks == ti)[0]
-                    cols = np.nonzero(blks == tj)[0]
-                if not len(drive) or not len(cols):
-                    continue
-                out_a, out_b = [], []
-                for s in range(0, len(drive), _PCHUNK):
-                    rows = drive[s : s + _PCHUNK]
-                    if metric == "cosine":
-                        D = 1.0 - W[rows] @ W[cols].T
-                    else:
-                        D = (
-                            sq[rows, None]
-                            + sq[cols][None, :]
-                            - 2.0 * (W[rows] @ W[cols].T)
-                        )
-                        if metric == "euclidean":
-                            D = np.sqrt(np.maximum(D, 0.0))
-                    with np.errstate(invalid="ignore"):
-                        ii, jj = np.nonzero(D <= max_distance)
-                    gi, gj = rows[ii], cols[jj]
-                    if ti == tj:
+                    gi = ii + s if drive is None else rows[ii]
+                    gj = jj if cols is None else cols[jj]
+                    if new is not None:  # new-new once; new-snapshot always
+                        keep = np.where(new[gj], gi < gj, gi != gj)
+                        gi, gj = gi[keep], gj[keep]
+                    elif cols is None:
                         keep = gi < gj  # upper triangle: each pair once
                         gi, gj = gi[keep], gj[keep]
                     if len(gi):
@@ -491,8 +341,8 @@ def semdedup(
     flags: ``"raise"`` (default) keeps the re-fit-or-fail contract;
     ``"chunk"`` degrades gracefully instead — the over-budget
     clusters are split into ``max_cluster_rows``-row blocks by id
-    order and mined block-PAIR by block-pair (`_cluster_block_pairs_
-    kernel`), so peak task memory is two blocks, not the cluster,
+    order and mined block-PAIR by block-pair (`_pair_kernel`'s block
+    shape), so peak task memory is two blocks, not the cluster,
     while total FLOPs stay the same Σ size² and the emitted edge set
     (hence the labels) is IDENTICAL to the unguarded all-pairs fold.
     The cost of the degradation is shuffle duplication: each over-
@@ -520,56 +370,33 @@ def semdedup(
     )
     # r15 (guide §4.2): ONE packed-assignment pass replaces
     # assign-then-fold-arrays — the Arrow crossing the assignment
-    # already pays now also emits the row's vector as float64 bytes,
-    # so every downstream fold ships a flat binary cell per row and
-    # the pair kernels rebuild each cluster with one frombuffer
-    # (values bit-identical: the kernels widened members to float64
-    # per element before).
-    cents = [list(map(float, c)) for c in centroids]
-    if not cents:
-        raise ValueError("centroids must be non-empty")
-    if keep == "farthest":
-        asg = base.withColumn(
-            "__a", _assign_pack_udf(cents, with_dist=True)(F.col("vector"))
-        ).select(
-            "id",
-            F.col("__a.cluster_id").alias("cluster_id"),
-            F.col("__a.cdist").alias("__cdist"),
-            F.col("__a.packed").alias("__packed"),
-        )
-    else:
-        asg = base.withColumn(
-            "__a", _assign_pack_udf(cents)(F.col("vector"))
-        ).select(
-            "id",
-            F.col("__a.cluster_id").alias("cluster_id"),
-            F.col("__a.packed").alias("__packed"),
-        )
+    # already pays also emits the row's vector as float64 bytes, so
+    # every downstream fold ships a flat binary cell per row and the
+    # pair kernel rebuilds each cluster with one frombuffer (values
+    # bit-identical: the kernels widened members to float64 before).
+    farthest = keep == "farthest"
+    assign = centroid_assign_udf(centroids, with_dist=farthest, with_packed=True)
+    asg = base.withColumn("__a", assign(F.col("vector"))).select(
+        "id",
+        F.col("__a.cluster_id").alias("cluster_id"),
+        *([F.col("__a.cdist").alias("__cdist")] if farthest else []),
+        F.col("__a.packed").alias("__packed"),
+    )
     over = []
     if max_cluster_rows is not None:
-        over_q = (
-            asg.groupBy("cluster_id")
-            .agg(F.count(F.lit(1)).alias("n_rows"))
-            .where(F.col("n_rows") > max_cluster_rows)
+        # chunk mode mines ALL flagged clusters block-pair-wise, so it
+        # needs their sizes; raise mode fails naming the worst
+        advice = (
+            "the per-cluster fold materializes one whole cluster per task "
+            "and pair work is quadratic in ITS size; re-fit with a larger k "
+            "(cluster_stats has the size/inertia report, or pass "
+            "on_oversize='chunk' to mine them block-pair-wise)"
         )
-        if on_oversize == "chunk":
-            # ALL flagged clusters, with sizes for the block counts —
-            # driver-bounded by n / max_cluster_rows rows
-            over = over_q.collect()
-        else:
-            over = over_q.orderBy(F.col("n_rows").desc()).limit(5).collect()
-            if over:
-                worst = ", ".join(
-                    f"cluster {r['cluster_id']}: {r['n_rows']} rows" for r in over
-                )
-                raise ValueError(
-                    f"semdedup: cluster(s) exceed max_cluster_rows="
-                    f"{max_cluster_rows} ({worst}) — the per-cluster fold "
-                    "materializes one whole cluster per task and pair work is "
-                    "quadratic in ITS size; re-fit with a larger k "
-                    "(cluster_stats has the size/inertia report, or pass "
-                    "on_oversize='chunk' to mine them block-pair-wise)"
-                )
+        over = _oversize_clusters(
+            asg,
+            max_cluster_rows,
+            raise_for=None if on_oversize == "chunk" else ("semdedup", advice),
+        )
     asg_ok = asg
     pairs_over = None
     if over:
@@ -640,7 +467,7 @@ def semdedup(
             F.collect_list("__blk").alias("__blks"),
         )
         pairs_over = folded_ov.mapInPandas(
-            _cluster_block_pairs_kernel(metric, float(max_distance)),
+            _pair_kernel(metric, float(max_distance)),
             "id_a long, id_b long",
         )
     folded = asg_ok.groupBy("cluster_id").agg(
@@ -648,7 +475,7 @@ def semdedup(
         F.collect_list("__packed").alias("__vecs"),
     )
     pairs = folded.mapInPandas(
-        _cluster_pairs_kernel(metric, float(max_distance)),
+        _pair_kernel(metric, float(max_distance)),
         "id_a long, id_b long",
     )
     if pairs_over is not None:
@@ -657,7 +484,7 @@ def semdedup(
 
     comp = connected_components(asg.select("id"), pairs)
     labeled = asg.join(comp, "id")
-    if keep == "farthest":
+    if farthest:
         from pyspark.sql import Window
 
         # re-pick each group's rep: farthest from its centroid, ties
@@ -744,48 +571,11 @@ def semdedup_incremental(
             f"max_cluster_rows must be >= 2, got {max_cluster_rows}"
         )
     # r15: both sides carry the vector as packed float64 bytes for the
-    # fold (see `_assign_pack_udf`); sides with a precomputed cluster
-    # column pack in a dedicated one-column Arrow pass, sides assigned
-    # here amortize the pack into the assignment's pass.
-    cents = [list(map(float, c)) for c in centroids]
-    if batch_cluster_col is not None:
-        nb = new_df.select(
-            F.col(id_col).alias("id"),
-            _pack_udf()(F.col(vector_col)).alias("__packed"),
-            F.col(batch_cluster_col).cast("int").alias("cluster_id"),
-        ).withColumn("__side", F.lit(1).cast("tinyint"))
-    else:
-        if not cents:
-            raise ValueError("centroids must be non-empty")
-        nb = (
-            new_df.select(
-                F.col(id_col).alias("id"),
-                _assign_pack_udf(cents)(F.col(vector_col)).alias("__a"),
-            )
-            .select(
-                "id",
-                F.col("__a.cluster_id").alias("cluster_id"),
-                F.col("__a.packed").alias("__packed"),
-            )
-            .withColumn("__side", F.lit(1).cast("tinyint"))
-        )
-    if snapshot_cluster_col is not None:
-        sb = snapshot.select(
-            F.col(id_col).alias("id"),
-            _pack_udf()(F.col(vector_col)).alias("__packed"),
-            F.col(snapshot_cluster_col).cast("int").alias("cluster_id"),
-        )
-    else:
-        if not cents:
-            raise ValueError("centroids must be non-empty")
-        sb = snapshot.select(
-            F.col(id_col).alias("id"),
-            _assign_pack_udf(cents)(F.col(vector_col)).alias("__a"),
-        ).select(
-            "id",
-            F.col("__a.cluster_id").alias("cluster_id"),
-            F.col("__a.packed").alias("__packed"),
-        )
+    # fold (see `_packed_rows`).
+    nb = _packed_rows(
+        new_df, centroids, id_col, vector_col, batch_cluster_col
+    ).withColumn("__side", F.lit(1).cast("tinyint"))
+    sb = _packed_rows(snapshot, centroids, id_col, vector_col, snapshot_cluster_col)
     if prune_snapshot:
         # prune the snapshot to the batch's clusters. Up to 4096
         # distinct clusters are inlined as LITERALS (bounded driver
@@ -805,30 +595,22 @@ def semdedup_incremental(
     sb = sb.withColumn("__side", F.lit(0).cast("tinyint"))
     un = nb.unionByName(sb.select(*nb.columns))
     if max_cluster_rows is not None:
-        over = (
-            un.groupBy("cluster_id")
-            .agg(F.count(F.lit(1)).alias("n_rows"))
-            .where(F.col("n_rows") > max_cluster_rows)
-            .orderBy(F.col("n_rows").desc())
-            .limit(5)
-            .collect()
+        _oversize_clusters(
+            un,
+            max_cluster_rows,
+            raise_for=(
+                "semdedup_incremental",
+                "re-fit with a larger k (cluster_stats has the size/inertia "
+                "report)",
+            ),
         )
-        if over:
-            worst = ", ".join(
-                f"cluster {r['cluster_id']}: {r['n_rows']} rows" for r in over
-            )
-            raise ValueError(
-                f"semdedup_incremental: cluster(s) exceed max_cluster_rows="
-                f"{max_cluster_rows} ({worst}) — re-fit with a larger k "
-                "(cluster_stats has the size/inertia report)"
-            )
     folded = un.groupBy("cluster_id").agg(
         F.collect_list("id").alias("__ids"),
         F.collect_list("__packed").alias("__vecs"),
         F.collect_list("__side").alias("__sides"),
     )
     pairs = folded.mapInPandas(
-        _cluster_cross_pairs_kernel(metric, float(max_distance)),
+        _pair_kernel(metric, float(max_distance)),
         "id_a long, id_b long",
     )
     from vicinity_spark.operators.dedup import connected_components
@@ -1140,10 +922,8 @@ def cluster_stats(
     One narrow assignment pass (the same closure kernel) + one
     map-side-combined groupBy, output bounded by k rows — safe to run
     at any corpus size."""
-    cents = [list(map(float, c)) for c in centroids]
-    if not cents:
-        raise ValueError("centroids must be non-empty")
-    asg = df.withColumn("__a", _assign_dist_udf(cents)(F.col(vector_col)))
+    assign = centroid_assign_udf(centroids, with_dist=True)
+    asg = df.withColumn("__a", assign(F.col(vector_col)))
     return (
         asg.groupBy(F.col("__a.cluster_id").alias("cluster_id"))
         .agg(

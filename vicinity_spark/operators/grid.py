@@ -115,6 +115,69 @@ def nearest_centroids(Q: np.ndarray, C: np.ndarray, n: int = 1, Csq=None):
     return sel, dist
 
 
+def centroid_assign_udf(
+    centroids, *, with_dist: bool = False, with_packed: bool = False
+):
+    """The one nearest-centroid assignment UDF (cluster assignment,
+    SemDeDup's folds, the IVF preset-centroid build): array<numeric>
+    vector → nearest centroid id by `nearest_centroids` (argmin
+    squared l2, ties to the lower index — `ORDER BY dist, cid`).
+
+    With neither flag the UDF returns the int id alone. Otherwise it
+    returns a struct of ``cluster_id`` plus, on request, ``cdist`` (the
+    exact squared-l2 distance to that centroid — SemDeDup's 'farthest'
+    rule and cluster_stats rank on it) and ``packed`` (the row's vector
+    as float64 bytes, so a cluster fold ships one flat binary cell per
+    row; the pack rides the assignment's Arrow crossing). The k×dim
+    centroid matrix rides in the closure — no shuffle, no join."""
+    from pyspark.sql.types import (
+        BinaryType,
+        DoubleType,
+        IntegerType,
+        StructField,
+        StructType,
+    )
+
+    cents = [list(map(float, c)) for c in centroids]
+    if not cents:
+        raise ValueError("centroids must be non-empty")
+    C = np.asarray(cents, dtype=np.float64)
+    Csq = (C * C).sum(axis=1)
+
+    def nearest(v: pd.Series):
+        if not len(v):
+            return np.empty(0, np.int32), np.empty(0), np.empty((0, C.shape[1]))
+        Q = np.vstack(v.to_numpy()).astype(np.float64)
+        idx, best = nearest_centroids(Q, C, 1, Csq)
+        return idx[:, 0].astype(np.int32), best[:, 0], Q
+
+    if not (with_dist or with_packed):
+
+        @F.pandas_udf(IntegerType())
+        def assign_id(v: pd.Series) -> pd.Series:
+            return pd.Series(nearest(v)[0])
+
+        return assign_id
+
+    fields = [StructField("cluster_id", IntegerType())]
+    if with_dist:
+        fields.append(StructField("cdist", DoubleType()))
+    if with_packed:
+        fields.append(StructField("packed", BinaryType()))
+
+    @F.pandas_udf(StructType(fields))
+    def assign(v: pd.Series) -> pd.DataFrame:
+        cid, dist, Q = nearest(v)
+        cols = {"cluster_id": cid}
+        if with_dist:
+            cols["cdist"] = dist
+        if with_packed:
+            cols["packed"] = [q.tobytes() for q in Q]
+        return pd.DataFrame(cols)
+
+    return assign
+
+
 def _has_python_stage(df: DataFrame) -> bool:
     """True when df's optimized plan contains a Python-worker stage
     (MapInPandas / ArrowEvalPython / BatchEvalPython / FlatMap*Pandas)

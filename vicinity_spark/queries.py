@@ -4878,7 +4878,7 @@ _CLUSTER_K = 8
 def _cluster_asg_ctes(keep_dist: bool = False) -> str:
     """cent + asg CTEs: nearest-preset-centroid assignment, squared-l2
     argmin with ties to the lower centroid id — exactly the
-    np.argmin(first-minimum) rule of operators/cluster.py:_assign_udf
+    np.argmin(first-minimum) rule of operators/grid.py:centroid_assign_udf
     (centroid index ≡ vec_id because the preset list is the first
     _CLUSTER_K rows in vec_id order). ``keep_dist=True`` names the
     CTE ``asgd`` and keeps each row's distance as ``cdist`` (the
@@ -4978,7 +4978,7 @@ def emb_semdedup_chunked(spark: SparkSession, sf_dir: str) -> DataFrame:
     every ~62-row preset cluster 'oversize' at both gate scales
     (embeddings is 500 rows / 8 preset centroids), so
     ``on_oversize='chunk'`` splits it into 16-row blocks mined
-    block-PAIR by block-pair (`_cluster_block_pairs_kernel`,
+    block-PAIR by block-pair (`_pair_kernel`'s block shape,
     operators/cluster.py): peak task memory is two blocks, total
     FLOPs stay Σ size², and the emitted edge set — hence every label —
     is identical to the whole-cluster fold. The oracle is therefore
@@ -5343,10 +5343,10 @@ _CHECK_FIRST = [
     #     7-metric row is the strongest single certifier of that
     #     kernel, and no tail row runs the exact-knn pool path;
     #   emb_semdedup_chunked — the packed-binary fold (commit 125d3dc)
-    #     through _cluster_block_pairs_kernel, the one kernel no other
+    #     through _pair_kernel's block shape, the one shape no other
     #     in-window row executes;
     #   emb_semdedup_incremental — the packed fold through
-    #     _cluster_cross_pairs_kernel plus the new _pack_udf
+    #     _pair_kernel's cross (__sides) shape plus the new _pack_udf
     #     (precomputed-cluster inputs), likewise unique.
     # Six further r15-touched r14-green rows stay in the tail under
     # the r12 docs_unigram_xent subsumption precedent (the touched
@@ -5359,7 +5359,7 @@ _CHECK_FIRST = [
     # emb_cluster_curate run semdedup's default packed path, certified
     # in-window by emb_semdedup (curate's join-back and the farthest
     # re-pick are untouched this round; emb_semdedup_farthest's only
-    # delta — cdist emission in _assign_pack_udf — is pinned
+    # delta — cdist emission in centroid_assign_udf — is pinned
     # bit-equal by tests/test_cluster.py::
     # test_packed_assignment_matches_plain_and_roundtrips).
     # knn_filtered_label / multimodal_knn / ann_recall_summary share
