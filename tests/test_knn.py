@@ -765,6 +765,52 @@ def test_pq_pool_deterministic_under_duplicate_codes(spark):
 
 
 @pytest.mark.slow
+def test_codebooks_independent_of_input_layout(spark):
+    """PQ, IVF-PQ and IVF-PQR train their codebooks on a driver sample.
+    The sample must pick the same rows in the same order whatever the
+    corpus's partitioning: _kmeans_np seeds by row position. The same
+    corpus in one and in seven partitions must give bit-identical
+    codebooks, refinement books and knn rows. pq and ivfpqr sample a
+    subset (train_sample < n); ivfpq trains on every row."""
+    from vicinity_spark.backends.ivfpq import IVFPQStrategy
+    from vicinity_spark.backends.pq import PQStrategy
+    from vicinity_spark.datatypes import Metric
+
+    rng = np.random.default_rng(17)
+    X = rng.normal(size=(600, 8))
+    rows = [(i, [float(x) for x in X[i]]) for i in range(len(X))]
+    q = spark.createDataFrame(
+        [(i, [float(x) for x in v]) for i, v in enumerate(rng.normal(size=(5, 8)))],
+        "query_id long, qvec array<float>",
+    )
+    C = X[:6] / np.linalg.norm(X[:6], axis=1, keepdims=True)
+    pq = dict(m=4, ksub=16, refine=4)
+    ivf = dict(nlist=6, nprobe=3, centroids=C.tolist())
+    cases = {
+        "pq": lambda: PQStrategy(train_sample=400, **pq),
+        "ivfpq": lambda: IVFPQStrategy(**pq, **ivf),
+        "ivfpqr": lambda: IVFPQStrategy(train_sample=400, refine_m=4, **pq, **ivf),
+    }
+    for name, make in cases.items():
+        got = []
+        for parts in (1, 7):
+            corpus = spark.createDataFrame(rows, "id long, vector array<float>").repartition(parts)
+            strat = make()
+            built = strat.build(corpus, Metric.COSINE, 8)
+            knn = sorted(
+                tuple(r)
+                for r in strat.knn(built, q, k=5, metric=Metric.COSINE)
+                .select("query_id", "rank", "id", "distance")
+                .collect()
+            )
+            got.append((strat.params["codebooks"], strat.params.get("rbooks"), knn))
+        assert got[0][0] == got[1][0], (name, "codebooks")
+        assert got[0][1] == got[1][1], (name, "rbooks")
+        assert got[0][2] == got[1][2], (name, "knn")
+        assert len(got[0][2]) == 25
+
+
+@pytest.mark.slow
 def test_lsh_expr_bucketize_matches_arrow_kernel(spark):
     """r6: the pure-Catalyst bucketize for the sparse ±1 and
     bit-sampling families must be BIT-IDENTICAL to the Arrow kernel

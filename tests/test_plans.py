@@ -125,3 +125,34 @@ def test_vocab_counts_prune_scan(spark):
     for cols in read_schema_cols(df):
         # only lang + text are referenced; doc payload columns pruned
         assert set(cols) <= {"lang", "text"}, cols
+
+
+@pytest.mark.parametrize("backend", ["basic", "ivf"])
+def test_serving_path_scans_no_python_rdd(spark, backend):
+    """The facade's query and insert batches are JVM LocalRelations:
+    the query, threshold and post-insert query plans have no leaf that
+    runs Python tasks just to produce its rows, and the query batch has
+    a maxRows, so knn routing decides without a probe job."""
+    import numpy as np
+
+    from vicinity_spark.plans import python_rdd_scans
+    from vicinity_spark.store import VectorStore
+
+    rng = np.random.default_rng(3)
+    params = {"nlist": 4, "nprobe": 2} if backend == "ivf" else {}
+    store = VectorStore.from_vectors_and_items(
+        spark, rng.random((60, 8)), [f"d{i}" for i in range(60)],
+        backend_type=backend, **params,
+    )
+    qdf, _ = store._queries_df(rng.random((3, 8)))
+    assert qdf._jdf.queryExecution().optimizedPlan().maxRows().isDefined()
+    plans = {"query_df": store.query_df(qdf, k=3), "threshold_df": store.threshold_df(qdf, 0.5)}
+    for i in range(2):
+        store.insert([f"ins{i}"], rng.random(8))
+    plans["query_df after inserts"] = store.query_df(qdf, k=3)
+    for what, df in plans.items():
+        assert python_rdd_scans(df) == [], what
+        assert "Scan ExistingRDD" not in explain_str(df, "simple"), what
+    # the guard itself sees a list-built frame
+    listed = spark.createDataFrame([(0, [0.0] * 8)], "query_id long, qvec array<float>")
+    assert python_rdd_scans(store.threshold_df(listed, 0.5))

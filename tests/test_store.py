@@ -652,3 +652,56 @@ def test_scan_reads_path_uri_safe(spark, tmp_path):
     # sibling sharing a name prefix: containment, not substring
     assert not scan_reads_path(df, p[: -1])
     assert not scan_reads_path(spark.range(3), p)  # no file scan at all
+
+
+def test_local_frames_match_list_built_frames(spark):
+    """The query, build and insert batches are built from numpy
+    columns through Arrow. They must collect to the same ids,
+    item_json strings and float32 vector bits as the Python-list
+    frames they replace, for float64 input and nested/unicode items."""
+    from vicinity_spark.store import _INGEST_SCHEMA, _QUERY_SCHEMA, _dump_item
+
+    rng = np.random.default_rng(23)
+    V = rng.normal(size=(12, 5)) * 10.0 ** rng.integers(-30, 30, size=(12, 1))
+    items = [
+        {"ключ": ["ü", {"deep": [i, None, 1.5]}], "emoji": "🦀" * (i % 3)} if i % 2 else f"naïve-{i}"
+        for i in range(12)
+    ]
+
+    def bits(v):
+        return np.asarray(v, dtype=np.float32).view(np.uint32).tolist()
+
+    def rows(df, cols):
+        out = sorted(tuple(r[c] for c in cols) for r in df.collect())
+        return [tuple(bits(v) if isinstance(v, list) else v for v in r) for r in out]
+
+    def listed(start, items_, V_):
+        return spark.createDataFrame(
+            [(start + i, _dump_item(it), [float(x) for x in V_[i]]) for i, it in enumerate(items_)],
+            _INGEST_SCHEMA,
+        )
+
+    cols = ["id", "item_json", "vector"]
+    store = VectorStore.from_vectors_and_items(spark, V[:8], items[:8], backend_type="basic")
+    assert rows(store.df, cols) == rows(listed(0, items[:8], V[:8]), cols)
+    store.insert(items[8:], V[8:])
+    assert rows(store.df, cols) == rows(listed(0, items, V), cols)
+
+    qdf, n = store._queries_df(V[:4])
+    old = spark.createDataFrame(
+        [(i, [float(x) for x in V[i]]) for i in range(4)], _QUERY_SCHEMA
+    )
+    assert n == 4 and rows(qdf, ["query_id", "qvec"]) == rows(old, ["query_id", "qvec"])
+
+
+def test_delete_counts_every_duplicate(spark, data):
+    vectors, _, _ = data
+    store = VectorStore.from_vectors_and_items(
+        spark, vectors[:6], ["a", "b", "a", {"k": 1}, "a", "c"], backend_type="basic"
+    )
+    store.delete(["a", {"k": 1}])
+    assert len(store) == 2
+    assert sorted(r["item_json"] for r in store.df.collect()) == ['"b"', '"c"']
+    with pytest.raises(ValueError, match=r"Tokens \['zz'\] were not in the store."):
+        store.delete(["b", "zz"])
+    assert len(store) == 2

@@ -54,6 +54,7 @@ from pyspark.sql import functions as F
 from vicinity_spark.backends.base import IndexStrategy
 from vicinity_spark.datatypes import Backend, Metric
 from vicinity_spark.functions.metrics import clip_distance
+from vicinity_spark.session import local_frame
 
 NBRS_COL = "__nbrs"
 INSERTED_COL = "__inserted"
@@ -125,12 +126,16 @@ class GraphStrategy(IndexStrategy):
         w = Window.partitionBy("__part").orderBy("id")
         numbered = part.withColumn("__pr", F.row_number().over(w)).localCheckpoint(eager=True)
         counts = numbered.groupBy("__part").agg(F.count("*").alias("__cnt")).collect()
-        acc, rows = 0, []
-        for r in sorted(counts, key=lambda r: r["__part"]):
-            rows.append((int(r["__part"]), acc))
-            acc += int(r["__cnt"])
-        spark = df.sparkSession
-        offsets = spark.createDataFrame(rows, "__part int, __base bigint")
+        counts = sorted(counts, key=lambda r: r["__part"])
+        sizes = np.array([int(r["__cnt"]) for r in counts], dtype=np.int64)
+        offsets = local_frame(
+            df.sparkSession,
+            {
+                "__part": [int(r["__part"]) for r in counts],
+                "__base": np.cumsum(sizes) - sizes,
+            },
+            "__part int, __base bigint",
+        )
         return numbered.join(F.broadcast(offsets), "__part").select(
             "id", (F.col("__pr") - 1 + F.col("__base")).alias("__rank")
         )
@@ -230,14 +235,14 @@ class GraphStrategy(IndexStrategy):
         return X / nrm
 
     def _fit_seed_clusters(self, vectors: DataFrame, metric: Metric) -> None:
-        from vicinity_spark.backends.pq import _kmeans_np
+        from vicinity_spark.backends.pq import _kmeans_np, _train_sample
 
         angular = metric == Metric.COSINE
         self.params["seed_angular"] = bool(angular)
-        n = vectors.count()
-        frac = min(1.0, self.params["train_sample"] / max(n, 1))
-        sample = vectors.select("vector").sample(fraction=frac, seed=self.params["seed"])
-        S = np.vstack(sample.toPandas()["vector"].to_numpy()).astype(np.float64)
+        sample = _train_sample(
+            vectors, ["vector"], self.params["train_sample"], self.params["seed"]
+        )
+        S = np.vstack(sample["vector"].to_numpy()).astype(np.float64)
         from vicinity_spark.operators.grid import nearest_centroids
 
         C = _kmeans_np(self._seed_space(S, angular), self.params["seed_nlist"], self.params["seed"])
@@ -296,12 +301,15 @@ class GraphStrategy(IndexStrategy):
             return pd.Series(list(sel.astype(np.int32)))
 
         probed = queries.select("query_id", F.explode(probe(F.col("qvec"))).alias("__scl"))
-        rows = [
-            (cl, int(i))
-            for cl, ids in enumerate(self.params["seed_member_ids"])
-            for i in ids
-        ]
-        mdf = queries.sparkSession.createDataFrame(rows, "__scl int, id bigint")
+        members = self.params["seed_member_ids"]
+        mdf = local_frame(
+            queries.sparkSession,
+            {
+                "__scl": [cl for cl, ids in enumerate(members) for _ in ids],
+                "id": [int(i) for ids in members for i in ids],
+            },
+            "__scl int, id bigint",
+        )
         return probed.join(F.broadcast(mdf), "__scl").select("query_id", "id").distinct()
 
     def on_insert(self, new_df: DataFrame, metric: Metric, dim: int) -> DataFrame:
@@ -360,8 +368,8 @@ class GraphStrategy(IndexStrategy):
                 qids.crossJoin(F.broadcast(inserted))
             )
         else:
-            entry_df = spark.createDataFrame(
-                [(int(i),) for i in self.params["entry_ids"]], "id bigint"
+            entry_df = local_frame(
+                spark, {"id": [int(i) for i in self.params["entry_ids"]]}, "id bigint"
             )
             seeds = entry_df.unionByName(corpus.where(F.col(INSERTED_COL)).select("id"))
             frontier = qids.crossJoin(F.broadcast(seeds.distinct()))

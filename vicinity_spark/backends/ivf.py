@@ -5,10 +5,14 @@ analog").
 
 Build = MLlib KMeans fit (the distributed equivalent of FAISS's
 `train` pre-pass, faiss.py:116-118) + a `__cluster` column; the corpus
-is repartitioned by cluster so each inverted list is co-located.
-Centroids are stored in params (nlist × dim doubles — tiny), so the
-index reloads from metadata alone and inserts assign clusters without
-refitting.
+is hash-repartitioned by cluster so each inverted list is co-located.
+The partition count is the session's `spark.sql.shuffle.partitions`
+(sized to the parallelism), which AQE may coalesce for a small corpus:
+every query runs its probe and scoring stages over that layout, and
+each Python task costs a fixed worker launch whether its partition
+holds one list or many. Centroids are stored in params (nlist × dim
+doubles — tiny), so the index reloads from metadata alone and inserts
+assign clusters without refitting.
 
 Query = probe the nprobe nearest centroids per query (executor-side
 pandas UDF; the tiny centroid matrix rides in the closure) → equi-join
@@ -28,6 +32,7 @@ from pyspark.sql import functions as F
 from vicinity_spark.backends.base import IndexStrategy
 from vicinity_spark.datatypes import Backend, Metric
 from vicinity_spark.functions.metrics import clip_distance, distance_expr
+from vicinity_spark.session import local_frame
 
 CLUSTER_COL = "__cluster"
 
@@ -65,7 +70,8 @@ class IVFStrategy(IndexStrategy):
             self.params["nlist"] = len(self.params["centroids"])
             assign = centroid_assign_udf(self.params["centroids"])
             out = df.withColumn(CLUSTER_COL, assign(F.col("vector")))
-            return out.repartition(min(self.params["nlist"], 32), F.col(CLUSTER_COL))
+            # same session-sized inverted-list layout as the fit path
+            return out.repartition(F.col(CLUSTER_COL))
         feats = df.withColumn(
             "__features", array_to_vector(F.col("vector").cast("array<double>"))
         )
@@ -78,9 +84,10 @@ class IVFStrategy(IndexStrategy):
         model = km.fit(feats)
         self.params["centroids"] = [list(map(float, c)) for c in model.clusterCenters()]
         out = model.transform(feats).drop("__features")
-        # co-locate inverted lists; at cluster scale this is the layout
-        # that makes nprobe pruning an actual partition prune
-        return out.repartition(min(self.params["nlist"], 32), F.col(CLUSTER_COL))
+        # co-locate inverted lists over a session-sized layout (module
+        # docstring); at cluster scale this is the layout that makes
+        # nprobe pruning an actual partition prune
+        return out.repartition(F.col(CLUSTER_COL))
 
     def on_insert(self, new_df: DataFrame, metric: Metric, dim: int) -> DataFrame:
         """Assign nearest centroid to appended rows — no refit (the
@@ -96,9 +103,10 @@ class IVFStrategy(IndexStrategy):
         )
 
     def _centroid_df(self, spark) -> DataFrame:
-        cents = self.params["centroids"]
-        return spark.createDataFrame(
-            [(i, list(map(float, c))) for i, c in enumerate(cents)],
+        C = self.centroids
+        return local_frame(
+            spark,
+            {CLUSTER_COL: np.arange(len(C), dtype=np.int32), "__cvec": list(C)},
             f"{CLUSTER_COL} int, __cvec array<double>",
         )
 

@@ -50,7 +50,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, ShortType
 
 from vicinity_spark.backends.ivf import CLUSTER_COL, IVFStrategy
-from vicinity_spark.backends.pq import CODE_COL, PQStrategy, _kmeans_np
+from vicinity_spark.backends.pq import CODE_COL, PQStrategy, _kmeans_np, _train_sample
 from vicinity_spark.datatypes import Backend, Metric
 from vicinity_spark.functions.metrics import normalize_expr
 from vicinity_spark.operators.knn import _KNN_SCHEMA
@@ -148,11 +148,9 @@ class IVFPQStrategy(PQStrategy):
         self.params["centroids"] = self._ivf.params["centroids"]
         out = out.withColumnRenamed("vector", "__tvec").withColumnRenamed("__orig", "vector")
         if self.params.get("codebooks") is None:
-            n = out.count()
-            frac = min(1.0, self.params["train_sample"] / max(n, 1))
-            sample = out.select("__tvec", CLUSTER_COL).sample(
-                fraction=frac, seed=self.params["seed"]
-            ).toPandas()
+            sample = _train_sample(
+                out, ["__tvec", CLUSTER_COL], self.params["train_sample"], self.params["seed"]
+            )
             S = np.vstack(sample["__tvec"].to_numpy()).astype(np.float64)
             C = np.asarray(self.params["centroids"], dtype=np.float64)
             R = S - C[sample[CLUSTER_COL].to_numpy().astype(int)]
@@ -197,11 +195,12 @@ class IVFPQStrategy(PQStrategy):
         if dim % rm != 0:
             raise ValueError(f"dim {dim} not divisible by refine_m={rm} subspaces")
         if self.params.get("rbooks") is None:
-            n = out.count()
-            frac = min(1.0, self.params["train_sample"] / max(n, 1))
-            sample = out.select("__tvec", CLUSTER_COL, CODE_COL).sample(
-                fraction=frac, seed=self.params["seed"] + 101
-            ).toPandas()
+            sample = _train_sample(
+                out,
+                ["__tvec", CLUSTER_COL, CODE_COL],
+                self.params["train_sample"],
+                self.params["seed"] + 101,
+            )
             S = np.vstack(sample["__tvec"].to_numpy()).astype(np.float64)
             cl = sample[CLUSTER_COL].to_numpy()
             c1 = np.vstack(sample[CODE_COL].to_numpy()).astype(np.int64)

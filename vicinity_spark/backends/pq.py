@@ -67,6 +67,27 @@ def _cell_arrays(pdf: pd.DataFrame, i: int):
 _NORMALIZED = (Metric.COSINE,)
 
 
+_SAMPLE_BUCKETS = 1 << 30
+
+
+def _train_sample(df: DataFrame, cols: Sequence[str], target: int, seed: int) -> pd.DataFrame:
+    """About ``target`` rows of ``df[cols]`` for codebook / seed
+    training, as pandas sorted by ``id``.
+
+    Rows are kept on a seeded hash of ``id``, not by Spark's
+    per-partition Bernoulli sampler, and arrive in id order, not
+    partition order. _kmeans_np seeds by row position, so both are
+    needed for the trained codebooks to be the same whatever the
+    input's partitioning (shuffle partitions, AQE, cpu count)."""
+    n = df.count()
+    frac = min(1.0, target / max(n, 1))
+    sample = df.select("id", *cols)
+    if frac < 1.0:
+        bucket = F.pmod(F.xxhash64(F.col("id"), F.lit(int(seed))), F.lit(_SAMPLE_BUCKETS))
+        sample = sample.where(bucket < F.lit(int(frac * _SAMPLE_BUCKETS)))
+    return sample.toPandas().sort_values("id", kind="stable", ignore_index=True)
+
+
 def _kmeans_np(X: np.ndarray, k: int, seed: int, iters: int = 12) -> np.ndarray:
     """Seeded Lloyd iterations (kmeans++-lite init via distinct sample)."""
     rng = np.random.default_rng(seed)
@@ -142,10 +163,10 @@ class PQStrategy(IndexStrategy):
         if dim % m != 0:
             raise ValueError(f"dim {dim} not divisible by m={m} subspaces")
         if self.params.get("codebooks") is None:
-            n = df.count()
-            frac = min(1.0, self.params["train_sample"] / max(n, 1))
-            sample = df.select("vector").sample(fraction=frac, seed=self.params["seed"])
-            S = np.vstack(sample.toPandas()["vector"].to_numpy()).astype(np.float64)
+            sample = _train_sample(
+                df, ["vector"], self.params["train_sample"], self.params["seed"]
+            )
+            S = np.vstack(sample["vector"].to_numpy()).astype(np.float64)
             S = self._normalize_if_angular(S, metric)
             dsub = dim // m
             books = [

@@ -45,6 +45,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from vicinity_spark.operators.grid import centroid_assign_udf
+from vicinity_spark.session import local_frame
 
 #: rows of the per-cluster distance matrix computed per kernel slice —
 #: bounds kernel memory at _PCHUNK × cluster_size doubles (the grid
@@ -408,13 +409,13 @@ def semdedup(
         # so the Arrow assignment kernel runs a single corpus pass
         # instead of re-executing per subtree
         asg = asg.localCheckpoint(eager=True)
-        spark = df.sparkSession
         B = int(max_cluster_rows)
-        sizes = spark.createDataFrame(
-            [
-                (int(r["cluster_id"]), int(-(-int(r["n_rows"]) // B)))
-                for r in over
-            ],
+        sizes = local_frame(
+            df.sparkSession,
+            {
+                "cluster_id": [int(r["cluster_id"]) for r in over],
+                "__m": [-(-int(r["n_rows"]) // B) for r in over],
+            },
             "cluster_id int, __m int",
         )
         over_ids = [int(r["cluster_id"]) for r in over]

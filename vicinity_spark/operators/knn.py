@@ -280,9 +280,10 @@ def _queries_are_bounded(queries: DataFrame, limit: int) -> bool:
     """Is the query table provably ≤ limit rows — cheaply?
 
     First consults the optimizer's ``maxRows`` (free: defined for
-    LocalRelation / parallelized batches / LIMIT'd plans — the common
-    "bounded query batch" shapes). Unknown → a limit-bounded count job
-    (scans only until limit+1 rows surface, never the full table).
+    LocalRelation — e.g. ``session.local_frame`` batches — and LIMIT'd
+    plans; a ``createDataFrame(<list>)`` frame has none). Unknown → a
+    limit-bounded count job (scans only until limit+1 rows surface,
+    never the full table).
     """
     try:
         mr = queries._jdf.queryExecution().optimizedPlan().maxRows()

@@ -4,6 +4,7 @@ from vicinity_spark.plans.checks import (
     has_broadcast_join,
     plan_summary,
     pushed_filters,
+    python_rdd_scans,
     read_schema_cols,
 )
 
@@ -13,5 +14,6 @@ __all__ = [
     "has_broadcast_join",
     "plan_summary",
     "pushed_filters",
+    "python_rdd_scans",
     "read_schema_cols",
 ]

@@ -55,3 +55,19 @@ def assert_no_cartesian(df: DataFrame) -> None:
     s = explain_str(df, "simple")
     if "CartesianProduct" in s:
         raise AssertionError("plan contains CartesianProduct:\n" + s)
+
+
+def python_rdd_scans(df: DataFrame) -> "list[str]":
+    """Leaves of ``df``'s optimized plan that scan an RDD built in
+    Python — ``spark.createDataFrame(<list>)``, ``rdd.toDF()``. Each
+    evaluation of such a leaf runs one Python task per partition, and
+    its plan has no ``maxRows``. A checkpointed frame also plans as
+    ``Scan ExistingRDD`` but runs no Python, so it is not reported; a
+    cached frame shows as its cache, not its source."""
+    out = []
+    leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves().iterator()
+    while leaves.hasNext():
+        leaf = leaves.next()
+        if leaf.nodeName() == "LogicalRDD" and "PythonRDD" in leaf.rdd().toDebugString():
+            out.append(leaf.toString().strip())
+    return out

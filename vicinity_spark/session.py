@@ -8,7 +8,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def _default_driver_mem() -> str:
@@ -130,6 +131,30 @@ def get_spark(
             "RocksDBStateStoreProvider",
         )
     return builder.getOrCreate()
+
+
+def local_frame(
+    spark: SparkSession, columns: dict, schema: "StructType | str"
+) -> DataFrame:
+    """A small driver-built frame (query batch, insert batch, centroid
+    or offset table) as a JVM ``LocalRelation``.
+
+    ``columns`` maps each schema field to a numpy array or list (one
+    entry per row; a vector column is a list of 1-D arrays). The rows
+    go to the JVM as one Arrow table, so evaluating the frame runs no
+    Python task and the optimizer knows its ``maxRows``.
+    ``createDataFrame`` on a Python list instead plans a Python-RDD
+    scan, which runs ``defaultParallelism`` Python tasks every time
+    the frame is evaluated. Frames past
+    ``spark.sql.execution.arrow.localRelationThreshold`` become a JVM
+    RDD scan, still with no Python task."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    table = pa.table(columns, schema=to_arrow_schema(schema))
+    return spark.createDataFrame(table, schema)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str):

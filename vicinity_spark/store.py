@@ -30,6 +30,7 @@ from pyspark.sql.types import ArrayType, FloatType, LongType, StringType, Struct
 
 from vicinity_spark.backends import get_strategy_class
 from vicinity_spark.datatypes import Backend, Metric
+from vicinity_spark.session import local_frame
 
 META_FILE = "_vicinity_meta.json"
 STORE_DIR = "store.parquet"
@@ -45,6 +46,9 @@ _INGEST_SCHEMA = StructType(
         StructField("vector", ArrayType(FloatType())),
     ]
 )
+_QUERY_SCHEMA = StructType(
+    [StructField("query_id", LongType()), StructField("qvec", ArrayType(FloatType()))]
+)
 
 
 def _dump_item(item: Any) -> str:
@@ -53,6 +57,19 @@ def _dump_item(item: Any) -> str:
     except TypeError as e:
         # reference: orjson JSONEncodeError at save time (vicinity.py:181-183)
         raise ValueError(f"Item is not JSON-serializable: {item!r}") from e
+
+
+def _ingest_frame(spark: SparkSession, start: int, items, V: np.ndarray) -> DataFrame:
+    """(id, item_json, vector) rows for ``items``/``V``, ids from ``start``."""
+    return local_frame(
+        spark,
+        {
+            "id": np.arange(start, start + len(V), dtype=np.int64),
+            "item_json": [_dump_item(item) for item in items],
+            "vector": list(V.astype(np.float32)),
+        },
+        _INGEST_SCHEMA,
+    )
 
 
 class VectorStore:
@@ -114,11 +131,7 @@ class VectorStore:
             )
         metric = Metric.from_string(metric)
         backend = Backend.from_string(backend_type)
-        rows = [
-            (i, _dump_item(item), [float(x) for x in V[i]])
-            for i, item in enumerate(items)
-        ]
-        df = spark.createDataFrame(rows, _INGEST_SCHEMA)
+        df = _ingest_frame(spark, 0, items, V)
         strategy = get_strategy_class(backend)(**backend_params)
         dim = int(V.shape[1])
         df = strategy.build(df, metric, dim)
@@ -128,8 +141,8 @@ class VectorStore:
             dim,
             backend,
             strategy,
-            count=len(rows),
-            next_id=len(rows),
+            count=len(V),
+            next_id=len(V),
             metadata=metadata,
         )
 
@@ -202,12 +215,13 @@ class VectorStore:
             raise ValueError(
                 f"Query vectors have dimension {V.shape[1]}, store has {self.dim}"
             )
-        spark = self.df.sparkSession
-        schema = StructType(
-            [StructField("query_id", LongType()), StructField("qvec", ArrayType(FloatType()))]
-        )
-        qdf = spark.createDataFrame(
-            [(i, [float(x) for x in V[i]]) for i in range(len(V))], schema
+        qdf = local_frame(
+            self.df.sparkSession,
+            {
+                "query_id": np.arange(len(V), dtype=np.int64),
+                "qvec": list(V.astype(np.float32)),
+            },
+            _QUERY_SCHEMA,
         )
         return qdf, len(V)
 
@@ -394,17 +408,13 @@ class VectorStore:
         if V.shape[1] != self._dim:
             raise ValueError(f"The inserted vectors must have dimension {self._dim}")
         start = self._id_upper_bound()
-        rows = [
-            (start + i, _dump_item(item), [float(x) for x in V[i]])
-            for i, item in enumerate(items)
-        ]
-        new_df = self.df.sparkSession.createDataFrame(rows, _INGEST_SCHEMA)
+        new_df = _ingest_frame(self.df.sparkSession, start, items, V)
         for c in self.df.columns:
             if c not in new_df.columns and not c.startswith("__"):
                 new_df = new_df.withColumn(c, F.lit(None))
         new_df = self.strategy.on_insert(new_df, self._metric, self._dim)
-        self._count = (self._count or 0) + len(rows)
-        self._next_id = start + len(rows)
+        self._count = (self._count or 0) + len(V)
+        self._next_id = start + len(V)
         # lifecycle (r11, same shape as the LSH insert-postings
         # branch): the BASE corpus frame is never re-unioned or
         # checkpointed — only the small accumulated insert DELTA is,
@@ -434,17 +444,18 @@ class VectorStore:
         tokens raise (vicinity.py:255-283)."""
         by_token = {_dump_item(t): t for t in items}
         tokens = list(by_token)
-        present = {
-            r[0]
-            for r in self.df.where(F.col("item_json").isin(tokens))
-            .select("item_json")
-            .distinct()
+        # one job gives both the present set and the removed count;
+        # the result is bounded by len(items) rows
+        present = dict(
+            self.df.where(F.col("item_json").isin(tokens))
+            .groupBy("item_json")
+            .count()
             .collect()
-        }
+        )
         missing = [by_token[t] for t in tokens if t not in present]
         if missing:
             raise ValueError(f"Tokens {missing} were not in the store.")
-        removed = self.df.where(F.col("item_json").isin(tokens)).count()
+        removed = sum(present.values())
         # the filtered frame (which already folds in any insert delta)
         # becomes the new base; the delta restarts empty
         self._set_df(self.df.where(~F.col("item_json").isin(tokens)))
