@@ -88,6 +88,31 @@ def test_query_threshold(store, data):
     assert all(d <= 0.7 for _, d in res[0])
 
 
+def test_query_threshold_max_k(store, data):
+    """ANN strategies searching a top-max_k pool cap radius hits at
+    max_k; the exact, IVF and LSH range searches ignore it."""
+    from vicinity_spark.backends.exact import ExactStrategy
+    from vicinity_spark.backends.ivf import IVFStrategy
+    from vicinity_spark.backends.lsh import LSHStrategy
+
+    vectors, _, qvec = data
+    q = np.stack([qvec, vectors[0]])
+    # every cosine distance is <= 2.0, so only a cap can bound the hits
+    res = store.query_threshold(q, threshold=2.0, max_k=3)
+    assert len(res) == 2
+    if isinstance(store.strategy, (ExactStrategy, IVFStrategy, LSHStrategy)):
+        uncapped = store.query_threshold(q, threshold=2.0, max_k=N)
+        assert [sorted(map(str, r)) for r in res] == [sorted(map(str, r)) for r in uncapped]
+        assert all(len(r) > 3 for r in res)
+    else:
+        assert all(0 < len(r) <= 3 for r in res)
+
+
+def test_query_rejects_k_below_one(store, data):
+    with pytest.raises(ValueError, match="k must be greater than 0"):
+        store.query(data[2], k=0)
+
+
 @pytest.mark.parametrize("backend", BACKENDS)
 def test_insert_then_query_finds_item(spark, data, backend):
     vectors, items, qvec = data

@@ -46,7 +46,9 @@ class ExactStrategy(IndexStrategy):
         metric: Metric,
         *,
         payload_cols: Optional[Sequence[str]] = None,
+        max_k: int = 100,
     ) -> DataFrame:
+        # exact range search: max_k does not cap it (basic.py:149-172).
         # params["algorithm"] names a KNN plan (window/partial/grid/auto);
         # only "grid" has a threshold twin — map everything else to the
         # auto router so an unbounded query table is never force-broadcast

@@ -44,8 +44,6 @@ train-once posture, faiss.py:24-32).
 
 from __future__ import annotations
 
-from typing import Optional, Sequence
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
@@ -53,7 +51,6 @@ from pyspark.sql import functions as F
 
 from vicinity_spark.backends.base import IndexStrategy
 from vicinity_spark.datatypes import Backend, Metric
-from vicinity_spark.functions.metrics import clip_distance
 from vicinity_spark.session import local_frame
 
 NBRS_COL = "__nbrs"
@@ -353,7 +350,7 @@ class GraphStrategy(IndexStrategy):
           per-query early exit for free, global early exit when no
           query produces new rows.
         """
-        from vicinity_spark.operators.knn import score_joined
+        from vicinity_spark.operators.knn import score_joined, topk_by_distance
 
         spark = corpus.sparkSession
         qids = queries.select("query_id")
@@ -373,7 +370,6 @@ class GraphStrategy(IndexStrategy):
             )
             seeds = entry_df.unionByName(corpus.where(F.col(INSERTED_COL)).select("id"))
             frontier = qids.crossJoin(F.broadcast(seeds.distinct()))
-        w = Window.partitionBy("query_id").orderBy(F.col("distance").asc_nulls_last(), F.col("id"))
         scored = score_joined(frontier.join(vec, "id"), queries, metric)
         if rounds >= 2:
             # the seed scores feed every later round's visited/pool —
@@ -381,7 +377,7 @@ class GraphStrategy(IndexStrategy):
             # single fused job and re-deriving the (tiny) seed scoring
             # inside it is cheaper than a separate checkpoint job.
             scored = scored.localCheckpoint(eager=True)
-        pool = scored.withColumn("__r", F.row_number().over(w)).where(F.col("__r") <= B)
+        pool = topk_by_distance(scored, B, "__r")
         visited = scored.select("query_id", "id")
         expanded = None
         unchk = 0  # rounds since the pool lineage was last truncated
@@ -412,11 +408,8 @@ class GraphStrategy(IndexStrategy):
                 expanded = (
                     to_expand if expanded is None else expanded.unionByName(to_expand)
                 )
-            pool = (
-                pool.select("query_id", "id", "distance")
-                .unionByName(newly)
-                .withColumn("__r", F.row_number().over(w))
-                .where(F.col("__r") <= B)
+            pool = topk_by_distance(
+                pool.select("query_id", "id", "distance").unionByName(newly), B, "__r"
             )
             unchk += 1
             if not last and unchk >= 2:
@@ -436,41 +429,7 @@ class GraphStrategy(IndexStrategy):
             return pool.select("query_id", "id", "distance"), visited
         return pool.select("query_id", "id", "distance")
 
-    def knn(
-        self,
-        corpus: DataFrame,
-        queries: DataFrame,
-        k: int,
-        metric: Metric,
-        *,
-        payload_cols: Optional[Sequence[str]] = None,
+    def _scored(
+        self, corpus: DataFrame, queries: DataFrame, k: int, metric: Metric
     ) -> DataFrame:
-        if k < 1:
-            raise ValueError("k must be greater than 0")
-        visited = self._searched(corpus, queries, metric, k)
-        w = Window.partitionBy("query_id").orderBy(F.col("distance").asc_nulls_last(), F.col("id"))
-        out = (
-            visited.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .withColumn("distance", clip_distance(F.col("distance")))
-        )
-        if payload_cols:
-            # no broadcast hint: out is nq×k (scales with the query batch);
-            # AQE broadcasts it at runtime when it is actually small
-            out = out.join(corpus.select("id", *payload_cols), "id", "left")
-        return out.select("query_id", "id", "distance", "rank", *(payload_cols or []))
-
-    def threshold(
-        self,
-        corpus: DataFrame,
-        queries: DataFrame,
-        threshold: float,
-        metric: Metric,
-        *,
-        payload_cols: Optional[Sequence[str]] = None,
-        max_k: int = 100,
-    ) -> DataFrame:
-        """ANN threshold: top-max_k pool then exact `<=` filter (the
-        reference's graph backends cap the same way, hnsw.py:107-114)."""
-        res = self.knn(corpus, queries, k=max_k, metric=metric, payload_cols=payload_cols)
-        return res.where(F.col("distance") <= F.lit(float(threshold))).drop("rank")
+        return self._searched(corpus, queries, metric, k)

@@ -253,8 +253,7 @@ class IVFPQStrategy(PQStrategy):
         rbooks = self._rbooks()
 
         joined = (
-            cand.select("query_id", "id")
-            .join(corpus.select("id", CLUSTER_COL, CODE_COL, RCODE_COL), "id")
+            cand.join(corpus.select("id", CLUSTER_COL, CODE_COL, RCODE_COL), "id")
             .join(queries.select("query_id", F.col("qvec").alias("__qvec")), "query_id")
         )
 
@@ -282,22 +281,16 @@ class IVFPQStrategy(PQStrategy):
 
         return joined.mapInPandas(kernel, _KNN_SCHEMA)
 
-    def knn(self, corpus, queries, k, metric, *, payload_cols=None):
+    def _scored(
+        self, corpus: DataFrame, queries: DataFrame, k: int, metric: Metric
+    ) -> DataFrame:
         if not (self.params["refine_m"] and self._use_residual(metric)):
             # refine_m on a non-residual metric falls back to the exact
             # re-rank (no clean two-stage decomposition exists there)
-            return super().knn(corpus, queries, k, metric, payload_cols=payload_cols)
-        if k < 1:
-            raise ValueError("k must be greater than 0")
-        from pyspark.sql import Window
-
-        from vicinity_spark.functions.metrics import clip_distance
-
-        cand = self._candidates(corpus, queries, k, metric)
-        w0 = Window.partitionBy("query_id").orderBy(F.col("distance").asc_nulls_last(), F.col("id"))
-        kk = max(k * self.params["refine"], k)
-        cand = cand.withColumn("__r0", F.row_number().over(w0)).where(F.col("__r0") <= kk)
-        scored = self._recon_scored(cand, corpus, queries, metric)
+            return super()._scored(corpus, queries, k, metric)
+        scored = self._recon_scored(
+            self._pool(corpus, queries, k, metric), corpus, queries, metric
+        )
         fr = int(self.params.get("final_refine", 2))
         if fr:
             # Final exact touch-up: the code-based re-rank narrows the
@@ -310,27 +303,17 @@ class IVFPQStrategy(PQStrategy):
             # emitted distances exact (hash-checkable against the exact
             # k-NN oracle). final_refine=0 restores pure reconstruction
             # distances (FAISS IndexIVFPQR parity).
-            from vicinity_spark.operators.knn import score_joined
+            from vicinity_spark.operators.knn import score_joined, topk_by_distance
 
-            k2 = max(k * fr, k)
-            w1 = Window.partitionBy("query_id").orderBy(F.col("distance").asc_nulls_last(), F.col("id"))
-            winners = (
-                scored.withColumn("__r1", F.row_number().over(w1))
-                .where(F.col("__r1") <= k2)
-                .select("query_id", "id")
-            )
+            winners = topk_by_distance(scored, max(k * fr, k), "__r1").select("query_id", "id")
             scored = score_joined(
                 winners.join(corpus.select("id", "vector"), "id"), queries, metric
             )
-        w = Window.partitionBy("query_id").orderBy(F.col("distance").asc_nulls_last(), F.col("id"))
-        out = (
-            scored.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .withColumn("distance", clip_distance(F.col("distance")))
-        )
-        if payload_cols:
-            out = out.join(corpus.select("id", *payload_cols), "id", "left")
-        return out.select("query_id", "id", "distance", "rank", *(payload_cols or []))
+        return scored
+
+    # named in the class so per-class instrumentation that wraps only a
+    # class's own methods (perfbench/run.py spans) still sees it
+    knn = PQStrategy.knn
 
     def on_insert(self, new_df: DataFrame, metric: Metric, dim: int) -> DataFrame:
         self._ivf.params["centroids"] = self.params["centroids"]
@@ -352,85 +335,42 @@ class IVFPQStrategy(PQStrategy):
 
     # ---- query -------------------------------------------------------
     def _candidates(
-        self, corpus: DataFrame, queries: DataFrame, k: int, metric: Metric
+        self, corpus: DataFrame, queries: DataFrame, kk: int, metric: Metric
     ) -> DataFrame:
-        """Cluster-keyed block grid: one code block per inverted list,
-        joined ONLY to the query blocks that probe it — the block-level
-        expression of nprobe pruning, so an unprobed list ships nowhere.
-
-        The (query-block → probed clusters) pairs come from an
-        executor-side pandas UDF over the block's own query vectors
-        (centroids ride in the closure — nlist × dim doubles); the cell
-        kernel re-derives per-query probes (cheap) to score only the
-        queries whose probe set contains the cell's cluster, computing
-        residual ADC tables against that single centroid. No driver
-        collect of the query table; no +inf masking — a cell only ever
-        scores its own inverted list."""
-        from pyspark.sql.types import ArrayType, IntegerType
-
+        """Cluster-keyed block grid over PQ codes (grid.cluster_grid):
+        each cell scores only the queries that probe its inverted list,
+        with residual ADC tables against that single centroid — no +inf
+        masking, a cell only ever scores its own list. Probing runs in
+        the space the lists were clustered in: metric space in residual
+        mode, raw for the fallback."""
         from vicinity_spark.backends.pq import _cell_arrays
-        from vicinity_spark.operators.grid import (
-            cell_topk,
-            nearest_centroids,
-            query_blocks,
-        )
+        from vicinity_spark.operators.grid import cell_topk, cluster_grid
 
         m = self.params["m"]
-        kk = max(k * self.params["refine"], k)
         residual = self._use_residual(metric)
         strat = self
         C = np.asarray(self.params["centroids"], dtype=np.float64)
-        Csq = (C * C).sum(axis=1)
-        nprobe = min(self.params["nprobe"], len(C))
-
-        cb = (
-            corpus.select("id", CODE_COL, CLUSTER_COL)
-            .groupBy(CLUSTER_COL)
-            .agg(
-                F.collect_list("id").alias("__cids"),
-                F.collect_list(CODE_COL).alias("__ccodes"),
-            )
-        )
-
-        # probing space matches the space the lists were clustered in:
-        # metric space for residual mode, raw for the fallback
-        def _probe_space(Q: np.ndarray) -> np.ndarray:
-            return strat._t_np(Q, metric) if residual else Q
-
-        @F.pandas_udf(ArrayType(IntegerType()))
-        def block_probes(qv: pd.Series) -> pd.Series:
-            out = []
-            for vecs in qv:
-                Q = np.vstack([np.asarray(v) for v in vecs]).astype(np.float64)
-                P = _probe_space(Q)
-                ps, _ = nearest_centroids(P, C, nprobe, Csq)
-                out.append(np.unique(ps).astype(np.int32))
-            return pd.Series(out)
-
-        qb = query_blocks(queries)
-        grid = (
-            qb.withColumn("__probes", block_probes("__qvecs"))
-            .select("*", F.explode("__probes").alias(CLUSTER_COL))
-            .drop("__probes")
-            .join(cb, CLUSTER_COL)
+        grid, probe_mask = cluster_grid(
+            corpus,
+            queries,
+            C,
+            self.params["nprobe"],
+            CODE_COL,
+            probe_space=(lambda Q: strat._t_np(Q, metric)) if residual else None,
         )
 
         def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             books = strat._codebooks()
-            dsub = None
             for pdf in batches:
                 for i in range(len(pdf)):
                     ids, codes, qids, Q = _cell_arrays(pdf, i)
                     cluster = int(pdf[CLUSTER_COL].iloc[i])
-                    P = _probe_space(Q)
-                    probes, _ = nearest_centroids(P, C, nprobe, Csq)
-                    mask = (probes == cluster).any(axis=1)
+                    mask = probe_mask(Q, cluster)
                     if not mask.any():
                         continue
                     if residual:
-                        R = P[mask] - C[cluster]
-                        if dsub is None:
-                            dsub = R.shape[1] // m
+                        R = strat._t_np(Q[mask], metric) - C[cluster]
+                        dsub = R.shape[1] // m
                         tables = np.stack(
                             [
                                 (

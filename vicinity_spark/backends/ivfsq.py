@@ -14,8 +14,9 @@ query blocks join ONLY the clusters they probe (nprobe pruning
 expressed at the block level — an unprobed list ships nowhere). Each
 grid cell dequantizes with the closure-resident codebook (2×dim
 doubles) and runs the chunked dense partial top-k; the exact re-rank
-on true vectors follows (SQStrategy.knn phase 2). No driver collect of
+on true vectors follows (RerankStrategy phase 2). No driver collect of
 the query table anywhere, so the path holds at any query-batch size.
+The grid itself is grid.cluster_grid, shared with backends/ivfpq.py.
 """
 
 from __future__ import annotations
@@ -25,8 +26,6 @@ from typing import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, IntegerType
 
 from vicinity_spark.backends.ivf import CLUSTER_COL, IVFStrategy
 from vicinity_spark.backends.sq import CODE_COL, SQStrategy
@@ -73,63 +72,24 @@ class IVFSQStrategy(SQStrategy):
 
     # ---- query -------------------------------------------------------
     def _candidates(
-        self, corpus: DataFrame, queries: DataFrame, k: int, metric: Metric
+        self, corpus: DataFrame, queries: DataFrame, kk: int, metric: Metric
     ) -> DataFrame:
-        """Cluster-keyed block grid over SQ codes: one code block per
-        inverted list, joined ONLY to the query blocks that probe it.
-        The (query-block → probed clusters) pairs come from an
-        executor-side pandas UDF over the block's own query vectors
-        (centroids ride in the closure); the cell kernel re-derives
-        per-query probes to score only the queries whose probe set
-        contains the cell's cluster. Same shape as ivfpq.py's grid, with
-        dequantize + dense top-k in place of ADC lookups."""
-        from vicinity_spark.operators.grid import (
-            cell_arrays,
-            dense_cell_topk,
-            nearest_centroids,
-            query_blocks,
-        )
+        """Cluster-keyed block grid over SQ codes (grid.cluster_grid):
+        each cell dequantizes its inverted list with the closure-resident
+        codebook and scores only the queries that probe it."""
+        from vicinity_spark.operators.grid import cell_arrays, cluster_grid, dense_cell_topk
 
         mins = np.asarray(self.params["mins"])
         scales = np.asarray(self.params["scales"])
-        kk = max(k * self.params["refine"], k)
-        C = np.asarray(self.params["centroids"], dtype=np.float64)
-        Csq = (C * C).sum(axis=1)
-        nprobe = min(self.params["nprobe"], len(C))
-
-        cb = (
-            corpus.select("id", CODE_COL, CLUSTER_COL)
-            .groupBy(CLUSTER_COL)
-            .agg(
-                F.collect_list("id").alias("__cids"),
-                F.collect_list(CODE_COL).alias("__ccodes"),
-            )
-        )
-
-        @F.pandas_udf(ArrayType(IntegerType()))
-        def block_probes(qv: pd.Series) -> pd.Series:
-            out = []
-            for vecs in qv:
-                Q = np.vstack([np.asarray(v) for v in vecs]).astype(np.float64)
-                ps, _ = nearest_centroids(Q, C, nprobe, Csq)
-                out.append(np.unique(ps).astype(np.int32))
-            return pd.Series(out)
-
-        grid = (
-            query_blocks(queries)
-            .withColumn("__probes", block_probes("__qvecs"))
-            .select("*", F.explode("__probes").alias(CLUSTER_COL))
-            .drop("__probes")
-            .join(cb, CLUSTER_COL)
+        grid, probe_mask = cluster_grid(
+            corpus, queries, self.params["centroids"], self.params["nprobe"], CODE_COL
         )
 
         def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             for pdf in batches:
                 for i in range(len(pdf)):
                     ids, codes, qids, Q = cell_arrays(pdf, i)
-                    cluster = int(pdf[CLUSTER_COL].iloc[i])
-                    probes, _ = nearest_centroids(Q, C, nprobe, Csq)
-                    mask = (probes == cluster).any(axis=1)
+                    mask = probe_mask(Q, int(pdf[CLUSTER_COL].iloc[i]))
                     if not mask.any():
                         continue
                     X = codes.astype(np.float64) * scales[None, :] + mins[None, :]

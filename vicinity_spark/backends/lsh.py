@@ -26,7 +26,7 @@ from typing import Optional, Sequence
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, LongType
 
@@ -442,7 +442,9 @@ class LSHStrategy(IndexStrategy):
             .distinct()
         )
 
-    def _scored(self, corpus: DataFrame, queries: DataFrame, metric: Metric) -> DataFrame:
+    def _scored(
+        self, corpus: DataFrame, queries: DataFrame, k: int, metric: Metric
+    ) -> DataFrame:
         """Candidates re-scored by the shared vectorized kernel
         (operators/knn.py score_joined): candidate volume is queries ×
         bucket sizes, where per-row JVM evaluation of the dim-wide
@@ -453,30 +455,6 @@ class LSHStrategy(IndexStrategy):
         cand = self._candidates(corpus, queries, metric)
         joined = cand.join(corpus.select("id", "vector"), "id")
         return score_joined(joined, queries, metric)
-
-    def knn(
-        self,
-        corpus: DataFrame,
-        queries: DataFrame,
-        k: int,
-        metric: Metric,
-        *,
-        payload_cols: Optional[Sequence[str]] = None,
-    ) -> DataFrame:
-        if k < 1:
-            raise ValueError("k must be greater than 0")
-        scored = self._scored(corpus, queries, metric)
-        w = Window.partitionBy("query_id").orderBy(F.col("distance").asc_nulls_last(), F.col("id"))
-        out = (
-            scored.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .withColumn("distance", clip_distance(F.col("distance")))
-        )
-        if payload_cols:
-            out = out.select("query_id", "id", "distance", "rank").join(
-                corpus.select("id", *payload_cols), "id", "left"
-            )
-        return out.select("query_id", "id", "distance", "rank", *(payload_cols or []))
 
     def neardup_pairs(
         self,
@@ -550,13 +528,8 @@ class LSHStrategy(IndexStrategy):
         metric: Metric,
         *,
         payload_cols: Optional[Sequence[str]] = None,
+        max_k: int = 100,
     ) -> DataFrame:
-        scored = (
-            self._scored(corpus, queries, metric)
-            .where(F.col("distance") <= F.lit(float(threshold)))
-            .withColumn("distance", clip_distance(F.col("distance")))
-        )
-        cols = ["query_id", "id", "distance"] + list(payload_cols or [])
-        if payload_cols:
-            scored = scored.join(corpus.select("id", *payload_cols), "id", "left")
-        return scored.select(*cols)
+        """Range search over the bucket-matched candidates; `max_k` does
+        not cap it."""
+        return self._within(corpus, queries, threshold, metric, payload_cols)

@@ -34,17 +34,16 @@ IVFPQ, whose grid joins only probed (cluster, query-block) pairs.
 
 from __future__ import annotations
 
-from typing import Iterator, Optional, Sequence
+from typing import Iterator, Sequence
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, ShortType
 
-from vicinity_spark.backends.base import IndexStrategy
+from vicinity_spark.backends.base import RerankStrategy
 from vicinity_spark.datatypes import Backend, Metric
-from vicinity_spark.functions.metrics import clip_distance
 from vicinity_spark.operators.knn import _KNN_SCHEMA
 
 CODE_COL = "__pqcode"
@@ -103,7 +102,7 @@ def _kmeans_np(X: np.ndarray, k: int, seed: int, iters: int = 12) -> np.ndarray:
     return C
 
 
-class PQStrategy(IndexStrategy):
+class PQStrategy(RerankStrategy):
     backend = Backend.PQ
     exact = False
 
@@ -187,7 +186,7 @@ class PQStrategy(IndexStrategy):
         # codebooks train once (faiss.py:24-32); new rows encode with them
         return new_df.withColumn(CODE_COL, self._encode_kernel(metric)(F.col("vector")))
 
-    # ---- query: ADC candidates + exact re-rank -----------------------
+    # ---- query: ADC candidates (RerankStrategy re-ranks them) --------
     def _adc_tables(self, Q: np.ndarray, metric: Metric) -> np.ndarray:
         """Per-query ADC lookup tables, nq × m × ksub.
 
@@ -216,7 +215,7 @@ class PQStrategy(IndexStrategy):
         )
 
     def _candidates(
-        self, corpus: DataFrame, queries: DataFrame, k: int, metric: Metric
+        self, corpus: DataFrame, queries: DataFrame, kk: int, metric: Metric
     ) -> DataFrame:
         """Block-grid ADC scan: corpus code blocks × query blocks.
 
@@ -232,7 +231,6 @@ class PQStrategy(IndexStrategy):
         from vicinity_spark.operators.grid import cell_topk, corpus_blocks, query_blocks
 
         m = self.params["m"]
-        kk = max(k * self.params["refine"], k)
         strat = self
         grid = corpus_blocks(corpus, CODE_COL, target_rows=262_144).crossJoin(
             query_blocks(queries)
@@ -246,51 +244,3 @@ class PQStrategy(IndexStrategy):
                     yield cell_topk(qids, ids, codes, tables, m, kk)
 
         return grid.mapInPandas(fn, _KNN_SCHEMA)
-
-    def knn(
-        self,
-        corpus: DataFrame,
-        queries: DataFrame,
-        k: int,
-        metric: Metric,
-        *,
-        payload_cols: Optional[Sequence[str]] = None,
-    ) -> DataFrame:
-        if k < 1:
-            raise ValueError("k must be greater than 0")
-        cand = self._candidates(corpus, queries, k, metric)
-        w0 = Window.partitionBy("query_id").orderBy(F.col("distance").asc_nulls_last(), F.col("id"))
-        kk = max(k * self.params["refine"], k)
-        cand = cand.withColumn("__r0", F.row_number().over(w0)).where(F.col("__r0") <= kk)
-        from vicinity_spark.operators.knn import score_joined
-
-        # no broadcast hint: cand is nq×k×refine (scales with the query
-        # batch); AQE broadcasts it at runtime when it is actually small
-        joined = cand.select("query_id", "id").join(
-            corpus.select("id", "vector"), "id"
-        )
-        exact = score_joined(joined, queries, metric)
-        w = Window.partitionBy("query_id").orderBy(F.col("distance").asc_nulls_last(), F.col("id"))
-        out = (
-            exact.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .withColumn("distance", clip_distance(F.col("distance")))
-        )
-        if payload_cols:
-            out = out.join(corpus.select("id", *payload_cols), "id", "left")
-        return out.select("query_id", "id", "distance", "rank", *(payload_cols or []))
-
-    def threshold(
-        self,
-        corpus: DataFrame,
-        queries: DataFrame,
-        threshold: float,
-        metric: Metric,
-        *,
-        payload_cols: Optional[Sequence[str]] = None,
-        max_k: int = 100,
-    ) -> DataFrame:
-        """Top-max_k candidate pool then exact `<=` filter (ANN threshold
-        semantics: hnsw.py:107-114, usearch.py:131-139)."""
-        res = self.knn(corpus, queries, k=max_k, metric=metric, payload_cols=payload_cols)
-        return res.where(F.col("distance") <= F.lit(float(threshold))).drop("rank")

@@ -11,28 +11,27 @@ between scanning 25 TB and 100 TB per query sweep. The codebook
 Query: two-phase. Phase 1 scans only (id, __code), dequantizes in the
 vectorized partial-top-k kernel, and keeps k×refine candidates per
 query. Phase 2 re-ranks candidates with exact distances on the true
-vectors — a broadcast join against the corpus touching only the
-candidate rows. Recall is governed by `refine` (evaluate() gates it).
+vectors — a join against the corpus touching only the candidate
+rows (RerankStrategy). Recall is governed by `refine` (evaluate() gates it).
 """
 
 from __future__ import annotations
 
-from typing import Iterator, Optional, Sequence
+from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from vicinity_spark.backends.base import IndexStrategy
+from vicinity_spark.backends.base import RerankStrategy
 from vicinity_spark.datatypes import Backend, Metric
-from vicinity_spark.functions.metrics import clip_distance
 from vicinity_spark.operators.knn import _KNN_SCHEMA
 
 CODE_COL = "__code"
 
 
-class SQStrategy(IndexStrategy):
+class SQStrategy(RerankStrategy):
     backend = Backend.SQ
     exact = False
 
@@ -83,7 +82,7 @@ class SQStrategy(IndexStrategy):
 
     # ---- phase 1: approximate candidates over codes ------------------
     def _candidates(
-        self, corpus: DataFrame, queries: DataFrame, k: int, metric: Metric
+        self, corpus: DataFrame, queries: DataFrame, kk: int, metric: Metric
     ) -> DataFrame:
         """Block-grid quantized scan (same shape as the PQ path): corpus
         code blocks × query blocks, dequantize + chunked partial top-k
@@ -99,7 +98,6 @@ class SQStrategy(IndexStrategy):
 
         mins = np.asarray(self.params["mins"])
         scales = np.asarray(self.params["scales"])
-        kk = max(k * self.params["refine"], k)
         grid = corpus_blocks(corpus, CODE_COL).crossJoin(query_blocks(queries))
 
         def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -110,56 +108,3 @@ class SQStrategy(IndexStrategy):
                     yield dense_cell_topk(qids, ids, X, Q, metric, kk)
 
         return grid.mapInPandas(fn, _KNN_SCHEMA)
-
-    def knn(
-        self,
-        corpus: DataFrame,
-        queries: DataFrame,
-        k: int,
-        metric: Metric,
-        *,
-        payload_cols: Optional[Sequence[str]] = None,
-    ) -> DataFrame:
-        if k < 1:
-            raise ValueError("k must be greater than 0")
-        cand = self._candidates(corpus, queries, k, metric)
-        # keep k×refine best approx candidates globally per query
-        w0 = Window.partitionBy("query_id").orderBy(F.col("distance").asc_nulls_last(), F.col("id"))
-        kk = max(k * self.params["refine"], k)
-        cand = cand.withColumn("__r0", F.row_number().over(w0)).where(F.col("__r0") <= kk)
-        # phase 2: exact re-rank on true vectors (candidates are tiny →
-        # broadcast them into a hash join against the corpus; scored by
-        # the shared vectorized kernel, operators/knn.py score_joined)
-        from vicinity_spark.operators.knn import score_joined
-
-        # no broadcast hint: cand scales with the query batch; AQE
-        # broadcasts it at runtime when it is actually small
-        joined = cand.select("query_id", "id").join(
-            corpus.select("id", "vector"), "id"
-        )
-        exact = score_joined(joined, queries, metric)
-        w = Window.partitionBy("query_id").orderBy(F.col("distance").asc_nulls_last(), F.col("id"))
-        out = (
-            exact.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .withColumn("distance", clip_distance(F.col("distance")))
-        )
-        if payload_cols:
-            out = out.join(corpus.select("id", *payload_cols), "id", "left")
-        return out.select("query_id", "id", "distance", "rank", *(payload_cols or []))
-
-    def threshold(
-        self,
-        corpus: DataFrame,
-        queries: DataFrame,
-        threshold: float,
-        metric: Metric,
-        *,
-        payload_cols: Optional[Sequence[str]] = None,
-        max_k: int = 100,
-    ) -> DataFrame:
-        """ANN threshold: top-max_k candidate pool then exact `<=` filter
-        (the reference's ANN backends cap candidates at max_k the same
-        way: hnsw.py:107-114, usearch.py:131-139)."""
-        res = self.knn(corpus, queries, k=max_k, metric=metric, payload_cols=payload_cols)
-        return res.where(F.col("distance") <= F.lit(float(threshold))).drop("rank")

@@ -1,6 +1,6 @@
 """Block-grid scan scaffolding shared by the quantized strategies
-(backends/pq.py, sq.py, ivfpq.py) and the exact `grid` algorithm in
-operators/knn.py.
+(backends/pq.py, sq.py, ivfpq.py, ivfsq.py) and the exact `grid` and
+`partial` algorithms in operators/knn.py.
 
 The shape: fold the corpus scan payload into block rows
 (collect_list), fold the query table into ~512-query block rows, join
@@ -264,6 +264,69 @@ def corpus_blocks(
             F.collect_list(payload_col).alias("__ccodes"),
         )
     )
+
+
+def cluster_grid(
+    corpus: DataFrame,
+    queries: DataFrame,
+    centroids,
+    nprobe: int,
+    payload_col: str,
+    probe_space=None,
+):
+    """Cluster-keyed block grid for the IVF composites (ivfsq, ivfpq):
+    one block row per inverted list (`__cluster` plus the collected
+    ids and `payload_col`), joined ONLY to the query blocks that probe
+    it — nprobe pruning at the block level, so an unprobed list ships
+    nowhere. The (query block → probed clusters) pairs come from an
+    executor-side pandas UDF over the block's own query vectors; the
+    centroids ride in the closure.
+
+    Returns ``(grid, probe_mask)``. A cell holds the whole query
+    block, so ``probe_mask(Q, cluster)`` re-derives each query's probe
+    set (cheap) and marks the queries that probe the cell's cluster —
+    the only ones the cell scores. ``probe_space`` maps query vectors
+    into the space the lists were clustered in (identity when None)."""
+    from pyspark.sql.types import ArrayType, IntegerType
+
+    from vicinity_spark.backends.ivf import CLUSTER_COL
+
+    C = np.asarray(centroids, dtype=np.float64)
+    Csq = (C * C).sum(axis=1)
+    nprobe = min(nprobe, len(C))
+    space = probe_space or (lambda Q: Q)
+
+    lists = (
+        corpus.select("id", payload_col, CLUSTER_COL)
+        .groupBy(CLUSTER_COL)
+        .agg(
+            F.collect_list("id").alias("__cids"),
+            F.collect_list(payload_col).alias("__ccodes"),
+        )
+    )
+
+    @F.pandas_udf(ArrayType(IntegerType()))
+    def block_probes(qv: pd.Series) -> pd.Series:
+        out = []
+        for vecs in qv:
+            Q = np.vstack([np.asarray(v) for v in vecs]).astype(np.float64)
+            ps, _ = nearest_centroids(space(Q), C, nprobe, Csq)
+            out.append(np.unique(ps).astype(np.int32))
+        return pd.Series(out)
+
+    grid = (
+        query_blocks(queries)
+        .withColumn("__probes", block_probes("__qvecs"))
+        .select("*", F.explode("__probes").alias(CLUSTER_COL))
+        .drop("__probes")
+        .join(lists, CLUSTER_COL)
+    )
+
+    def probe_mask(Q: np.ndarray, cluster: int) -> np.ndarray:
+        probes, _ = nearest_centroids(space(Q), C, nprobe, Csq)
+        return (probes == cluster).any(axis=1)
+
+    return grid, probe_mask
 
 
 def cell_arrays(pdf: pd.DataFrame, i: int):

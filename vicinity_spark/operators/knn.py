@@ -26,8 +26,9 @@ Two physical strategies for top-k:
   plan that survives a 100 TB corpus: the full cross product is never
   materialized and never shuffled.
 
-Payload columns ride along: the merged (query_id, id, distance) result
-is tiny, so it re-joins the corpus payload with a broadcast hash join.
+Payload columns ride along: ``window`` carries them through the rank
+in-row; ``partial`` and ``grid`` re-join the corpus payload onto the
+merged q×k result (join_payload — AQE broadcasts the small side).
 """
 
 from __future__ import annotations
@@ -42,7 +43,7 @@ from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
 from vicinity_spark.datatypes import Metric
 from vicinity_spark.functions.metrics import clip_distance, distance_expr
-from vicinity_spark.operators.grid import det_topk_idx, rescore_pairs
+from vicinity_spark.operators.grid import dense_cell_topk
 
 
 def _np_distances(metric: Metric, Q: np.ndarray, X: np.ndarray) -> np.ndarray:
@@ -217,6 +218,47 @@ def score_pairs(
     return pairs.select(a_col, b_col, va_col, vb_col).mapInPandas(kernel, schema)
 
 
+KNN_COLS = ("query_id", "id", "distance", "rank")
+RADIUS_COLS = ("query_id", "id", "distance")
+
+
+def topk_by_distance(df: DataFrame, k: int, rank_col: str = "rank") -> DataFrame:
+    """The ``k`` best rows of each query by (distance, id), numbered
+    1..k in ``rank_col`` — the one top-k cut, for final results and
+    intermediate candidate prunes alike. The id tiebreak makes the cut
+    layout-independent at exact-distance ties (duplicate vectors or
+    quantization codes), matching the oracles' ORDER BY d, id; NaN
+    distances rank last."""
+    w = Window.partitionBy("query_id").orderBy(F.col("distance").asc_nulls_last(), F.col("id"))
+    return df.withColumn(rank_col, F.row_number().over(w)).where(F.col(rank_col) <= k)
+
+
+def clipped_topk(scored: DataFrame, k: int) -> DataFrame:
+    """topk_by_distance on the RAW distances, then clip the returned
+    values — the reference's argsort-then-clip order (basic.py:202,
+    vicinity.py:135): clipping before the rank would tie every dot>1
+    inner-product hit at 0."""
+    return topk_by_distance(scored, k).withColumn("distance", clip_distance(F.col("distance")))
+
+
+def join_payload(
+    out: DataFrame,
+    corpus: DataFrame,
+    payload_cols: Optional[Sequence[str]],
+    cols: Sequence[str],
+    *,
+    id_col: str = "id",
+) -> DataFrame:
+    """``out[cols]`` plus the corpus payload columns, left-joined on id.
+    No broadcast hint: ``out`` scales with the query batch, and AQE
+    broadcasts it at runtime when it is actually small."""
+    if payload_cols:
+        out = out.join(
+            corpus.select(F.col(id_col).alias("id"), *payload_cols), "id", "left"
+        )
+    return out.select(*cols, *(payload_cols or []))
+
+
 def _partial_topk(
     corpus: DataFrame,
     id_col: str,
@@ -234,35 +276,13 @@ def _partial_topk(
                 continue
             X = np.vstack(pdf[vector_col].to_numpy()).astype(np.float64)
             ids = pdf[id_col].to_numpy()
-            # sort the batch by id, then STABLE-sort distances: the
-            # per-partition cut then breaks exact-distance ties
-            # (duplicate vectors) by id, so the emitted pool — and
-            # therefore the final window result — is deterministic
-            # and matches the oracle's ORDER BY d, id at any layout
+            # sort the batch by id: the kernel breaks exact-distance ties
+            # (duplicate vectors) by position, so the emitted pool — and
+            # therefore the final window result — is deterministic and
+            # matches the oracle's ORDER BY d, id at any layout; emitted
+            # distances are per-pair rescored (see grid._merge_parts)
             order = np.argsort(ids, kind="stable")
-            ids, X = ids[order], X[order]
-            D = _np_distances(metric, Q, X)
-            kk = min(k, D.shape[1])
-            idx = det_topk_idx(D, kk)
-            out_qid = np.repeat(qids, kk)
-            out_id = ids[idx.ravel()]
-            # layout-independent emitted distances (r14): re-score the
-            # ≤ q×kk winners with the per-pair kernel — BLAS matrix
-            # kernels can differ by batch SHAPE, so the same pair can
-            # score an ulp apart in different partitions and the
-            # global merge window then breaks exact-duplicate ties by
-            # the wrong ids (see grid._merge_parts rescore note; the
-            # live failure this fixes is tests/test_knn.py::
-            # test_topk_deterministic_under_duplicate_vectors_and_
-            # layouts on a host whose BLAS picks shape-dependent
-            # micro-kernels). Per-batch selection is unaffected.
-            # r15 (ADVICE): chunked via rescore_pairs so the repeated
-            # query / gathered corpus temporaries are byte-bounded
-            # instead of two full q·kk × dim materializations.
-            out_d = rescore_pairs(metric, Q, X, idx).ravel()
-            yield pd.DataFrame(
-                {"query_id": out_qid, "id": out_id, "distance": out_d}
-            )
+            yield dense_cell_topk(qids, ids[order], X[order], Q, metric, k)
 
     return corpus.select(id_col, vector_col).mapInPandas(fn, _KNN_SCHEMA)
 
@@ -342,69 +362,29 @@ def knn_join(
             F.col(query_vector_col).alias("__qvec"),
         )
         pairs = corpus.crossJoin(F.broadcast(q))
-        # rank by the RAW distance, clip only the output — the
-        # reference argsorts raw distances and clips the returned
-        # values (basic.py:202, vicinity.py:135); clipped ranking would
-        # collapse every dot>1 inner-product hit into a tie at 0
         dist = distance_expr(metric, "__qvec", vector_col, dim)
         # project the vectors away BEFORE the window: the rank shuffle
         # then moves (query_id, id, distance[, payload]) rows, not the
         # full arrays — at dim=1024 that is a ~100× shuffle-byte cut
-        scored = pairs.select(
+        local = pairs.select(
             "query_id",
             F.col(id_col).alias("id"),
             dist.alias("distance"),
             *(payload_cols or []),
         )
-        w = Window.partitionBy("query_id").orderBy(F.col("distance").asc_nulls_last(), F.col("id"))
-        ranked = (
-            scored.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .withColumn("distance", clip_distance(F.col("distance")))
-        )
-        return ranked.select("query_id", "id", "distance", "rank", *(payload_cols or []))
-
-    if algorithm == "partial":
+    elif algorithm == "partial":
         bq = collect_query_matrix(queries, query_id_col, query_vector_col)
         if bq.value[0].size == 0:
-            empty = corpus.sparkSession.createDataFrame([], _KNN_SCHEMA).withColumn(
-                "rank", F.lit(0)
-            )
-            if payload_cols:
-                empty = empty.join(
-                    corpus.select(F.col(id_col).alias("id"), *payload_cols), "id", "left"
-                )
-            return empty.select(
-                "query_id", "id", "distance", "rank", *(payload_cols or [])
-            )
-        local = _partial_topk(corpus, id_col, vector_col, bq, k, metric)
-        w = Window.partitionBy("query_id").orderBy(F.col("distance").asc_nulls_last(), F.col("id"))
-        merged = (
-            local.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .withColumn("distance", clip_distance(F.col("distance")))
-        )
-        if payload_cols:
-            # q×k result is tiny → broadcast it and hash-join payload back.
-            merged = F.broadcast(merged).join(
-                corpus.select(F.col(id_col).alias("id"), *payload_cols), "id", "left"
-            )
-        return merged.select(
-            "query_id", "id", "distance", "rank", *(payload_cols or [])
-        )
-
-    if algorithm == "grid":
+            local = corpus.sparkSession.createDataFrame([], _KNN_SCHEMA)
+        else:
+            local = _partial_topk(corpus, id_col, vector_col, bq, k, metric)
+    elif algorithm == "grid":
         # exact block grid (operators/grid.py): same kernel math and
         # bounded-merge shape as `partial`, but the query batch arrives
         # through a join instead of a driver collect + broadcast — the
         # plan for UNBOUNDED query tables (a 10M-row query side would
         # materialize nq×dim on the driver under `partial`).
-        from vicinity_spark.operators.grid import (
-            cell_arrays,
-            corpus_blocks,
-            dense_cell_topk,
-            query_blocks,
-        )
+        from vicinity_spark.operators.grid import cell_arrays, corpus_blocks, query_blocks
 
         q = queries.select(
             F.col(query_id_col).alias("query_id"),
@@ -422,22 +402,12 @@ def knn_join(
                     yield dense_cell_topk(qids, ids, X.astype(np.float64), Q, metric, k)
 
         local = grid.mapInPandas(cell_fn, _KNN_SCHEMA)
-        w = Window.partitionBy("query_id").orderBy(F.col("distance").asc_nulls_last(), F.col("id"))
-        merged = (
-            local.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .withColumn("distance", clip_distance(F.col("distance")))
-        )
-        if payload_cols:
-            # unbounded-query path: no broadcast hint, AQE decides
-            merged = merged.join(
-                corpus.select(F.col(id_col).alias("id"), *payload_cols), "id", "left"
-            )
-        return merged.select(
-            "query_id", "id", "distance", "rank", *(payload_cols or [])
-        )
-
-    raise ValueError(f"unknown algorithm {algorithm!r}")
+    else:
+        raise ValueError(f"unknown algorithm {algorithm!r}")
+    ranked = clipped_topk(local, k)
+    if algorithm == "window":  # the payload rode through the window in-row
+        return ranked.select(*KNN_COLS, *(payload_cols or []))
+    return join_payload(ranked, corpus, payload_cols, KNN_COLS, id_col=id_col)
 
 
 def threshold_join(
@@ -479,8 +449,8 @@ def threshold_join(
     """
     metric = Metric.from_string(metric)
     if algorithm == "auto":
-        # mirror knn_join's routing (operators/knn.py:306-315): a query
-        # table past the broadcast ceiling must never be force-broadcast
+        # mirror knn_join's routing: a query table past the broadcast
+        # ceiling must never be force-broadcast
         algorithm = (
             "expr"
             if _queries_are_bounded(queries, AUTO_GRID_QUERY_ROWS)
@@ -523,11 +493,7 @@ def threshold_join(
                         )
 
         out = grid.mapInPandas(fn, _KNN_SCHEMA)
-        if payload_cols:
-            out = out.join(
-                corpus.select(F.col(id_col).alias("id"), *payload_cols), "id", "left"
-            )
-        return out.select("query_id", "id", "distance", *(payload_cols or []))
+        return join_payload(out, corpus, payload_cols, RADIUS_COLS, id_col=id_col)
     if algorithm != "expr":
         raise ValueError(f"unknown algorithm {algorithm!r}")
     q = queries.select(

@@ -963,8 +963,8 @@ def _recall_pq_branch(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("query_id", "id")
         .localCheckpoint(eager=True)  # feeds ann re-rank + the count
     )
-    # ann = exact re-rank of the SAME pool (what PQStrategy.knn does to
-    # its pool, backends/pq.py:243-252), deterministic end to end
+    # ann = exact re-rank of the SAME pool (what RerankStrategy._scored
+    # does to its pool, backends/base.py), deterministic end to end
     from vicinity_spark.operators.knn import score_joined
 
     joined = cand.join(built.select("id", "vector"), "id")

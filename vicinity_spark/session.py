@@ -106,14 +106,9 @@ def get_spark(
             "spark.driver.memory",
             os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_mem(),
         )
-        # UI off by default (driver/bench runs need no HTTP server);
-        # SPARK_GRAFT_UI=1 turns it on for diagnostic sessions that
-        # read per-stage metrics (spill/GC/shuffle) from the REST API,
-        # e.g. scripts/probe_r15_neardup.py.
-        .config(
-            "spark.ui.enabled",
-            "true" if os.environ.get("SPARK_GRAFT_UI") == "1" else "false",
-        )
+        # UI off: library and benchmark runs need no HTTP server; per-stage
+        # metrics come from the statusTracker and the offline event log
+        .config("spark.ui.enabled", "false")
     )
     # SPARK_GRAFT_STATE_STORE=rocksdb switches streaming state to the
     # RocksDB provider (bundled with Spark 4) — the production choice

@@ -362,11 +362,20 @@ class VectorStore:
     def query_threshold(
         self, vectors, threshold: float = 0.5, max_k: int = 100
     ) -> "list[list[tuple[Any, float]]]":
-        """Radius search (vicinity.py:140-165). `max_k` is accepted for
-        API parity; the exact path ignores it, like the reference's
-        BASIC backend (basic.py:149-172)."""
+        """Radius search (vicinity.py:140-165). `max_k` caps the hits
+        per query on the ANN strategies that search a top-`max_k` pool
+        (sq, pq, ivfpq, ivfsq, graph); the exact, IVF and LSH range
+        searches ignore it, like the reference's BASIC backend
+        (basic.py:149-172)."""
         qdf, n = self._queries_df(vectors)
-        rows = self.threshold_df(qdf, threshold=threshold).collect()
+        rows = self.strategy.threshold(
+            self.df,
+            qdf,
+            threshold=threshold,
+            metric=self._metric,
+            payload_cols=self.payload_cols,
+            max_k=max_k,
+        ).collect()
         out: "list[list[tuple[Any, float]]]" = [[] for _ in range(n)]
         for r in rows:
             out[r["query_id"]].append((json.loads(r["item_json"]), float(r["distance"])))
