@@ -11,12 +11,13 @@ at the same byte budget: residual magnitudes are much smaller than
 vector magnitudes, so the per-subspace codebooks spend their 8 bits on
 the fine structure instead of re-describing the coarse position.
 
-Query: a cluster-keyed block grid. Each inverted list's codes fold
-into one block row; query blocks join ONLY the clusters they probe
-(nprobe pruning expressed at the block level), and each grid cell
-computes its queries' residual ADC tables against that single centroid
-executor-side — centroids and codebooks ride in the task closure, the
-query vectors arrive through the join. Nothing collects to the driver,
+Query: PQStrategy's ADC scan over a cluster-keyed block grid — this
+class overrides only its `_grid` and `_cell_tables` hooks. Each
+inverted list's codes fold into one block row; query blocks join ONLY
+the clusters they probe (nprobe pruning expressed at the block level),
+and each grid cell computes its queries' residual ADC tables against
+that single centroid executor-side — centroids and codebooks ride in
+the task closure, the query vectors arrive through the join. Nothing collects to the driver,
 so the path holds at any query-batch size. The usual exact re-rank on
 true vectors follows. Scan payload per row: 4 bytes cluster + m bytes
 code, independent of dim.
@@ -41,8 +42,6 @@ code re-rank from containing the true top-k at the gate params.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -50,7 +49,16 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, ShortType
 
 from vicinity_spark.backends.ivf import CLUSTER_COL, IVFStrategy
-from vicinity_spark.backends.pq import CODE_COL, PQStrategy, _kmeans_np, _train_sample
+from vicinity_spark.backends.pq import (
+    CODE_COL,
+    PQStrategy,
+    _normalized,
+    _train_sample,
+    decode,
+    encode,
+    l2_tables,
+    train_codebooks,
+)
 from vicinity_spark.datatypes import Backend, Metric
 from vicinity_spark.functions.metrics import normalize_expr
 from vicinity_spark.operators.knn import _KNN_SCHEMA
@@ -102,30 +110,16 @@ class IVFPQStrategy(PQStrategy):
         c = F.col(col) if isinstance(col, str) else col
         return normalize_expr(c) if metric is Metric.COSINE else c.cast("array<double>")
 
-    def _t_np(self, X: np.ndarray, metric: Metric) -> np.ndarray:
-        if metric is Metric.COSINE:
-            n = np.linalg.norm(X, axis=1, keepdims=True)
-            return np.divide(X, n, out=np.zeros_like(X), where=n != 0)
-        return X
-
     def _residual_encode_kernel(self):
-        m = self.params["m"]
         books = self._codebooks()
         C = np.asarray(self.params["centroids"], dtype=np.float64)
 
         @F.pandas_udf(ArrayType(ShortType()))
-        def encode(tv: pd.Series, cl: pd.Series) -> pd.Series:
+        def residual_encode(tv: pd.Series, cl: pd.Series) -> pd.Series:
             X = np.vstack(tv.to_numpy()).astype(np.float64)
-            R = X - C[cl.to_numpy().astype(int)]
-            dsub = R.shape[1] // m
-            codes = np.empty((len(R), m), dtype=np.int16)
-            for j in range(m):
-                sub = R[:, j * dsub : (j + 1) * dsub]
-                d = ((sub[:, None, :] - books[j][None, :, :]) ** 2).sum(axis=2)
-                codes[:, j] = d.argmin(axis=1).astype(np.int16)
-            return pd.Series(list(codes))
+            return pd.Series(list(encode(X - C[cl.to_numpy().astype(int)], books)))
 
-        return encode
+        return residual_encode
 
     # ---- build -------------------------------------------------------
     def build(self, df: DataFrame, metric: Metric, dim: int) -> DataFrame:
@@ -154,19 +148,9 @@ class IVFPQStrategy(PQStrategy):
             S = np.vstack(sample["__tvec"].to_numpy()).astype(np.float64)
             C = np.asarray(self.params["centroids"], dtype=np.float64)
             R = S - C[sample[CLUSTER_COL].to_numpy().astype(int)]
-            dsub = dim // m
-            books = [
-                _kmeans_np(
-                    R[:, j * dsub : (j + 1) * dsub],
-                    self.params["ksub"],
-                    self.params["seed"] + j,
-                )
-                for j in range(m)
-            ]
-            ksub = min(self.params["ksub"], min(len(b) for b in books))
-            self.params["codebooks"] = [
-                [[float(x) for x in c] for c in b[:ksub]] for b in books
-            ]
+            self.params["codebooks"] = train_codebooks(
+                R, m, self.params["ksub"], self.params["seed"]
+            )
         enc = self._residual_encode_kernel()
         out = out.withColumn(CODE_COL, enc(F.col("__tvec"), F.col(CLUSTER_COL)))
         if self.params["refine_m"]:
@@ -176,14 +160,8 @@ class IVFPQStrategy(PQStrategy):
     # ---- ivfpqr refinement codes (faiss.py:111-113) ------------------
     def _decode_primary(self, cl: np.ndarray, code1: np.ndarray) -> np.ndarray:
         """x̂₁ = centroid + primary-PQ decode of the residual codes."""
-        books = self._codebooks()
         C = np.asarray(self.params["centroids"], dtype=np.float64)
-        m = self.params["m"]
-        dsub = C.shape[1] // m
-        recon = C[cl.astype(int)].copy()
-        for j in range(m):
-            recon[:, j * dsub : (j + 1) * dsub] += books[j][code1[:, j]]
-        return recon
+        return C[cl.astype(int)] + decode(code1, self._codebooks())
 
     def _rbooks(self) -> np.ndarray:
         return np.asarray(self.params["rbooks"], dtype=np.float64)
@@ -205,21 +183,10 @@ class IVFPQStrategy(PQStrategy):
             cl = sample[CLUSTER_COL].to_numpy()
             c1 = np.vstack(sample[CODE_COL].to_numpy()).astype(np.int64)
             R2 = S - self._decode_primary(cl, c1)
-            rdsub = dim // rm
-            rbooks = [
-                _kmeans_np(
-                    R2[:, j * rdsub : (j + 1) * rdsub],
-                    self.params["ksub"],
-                    self.params["seed"] + 1000 + j,
-                )
-                for j in range(rm)
-            ]
-            ksub = min(self.params["ksub"], min(len(b) for b in rbooks))
-            self.params["rbooks"] = [
-                [[float(x) for x in c] for c in b[:ksub]] for b in rbooks
-            ]
+            self.params["rbooks"] = train_codebooks(
+                R2, rm, self.params["ksub"], self.params["seed"] + 1000
+            )
         strat = self
-        rm_ = rm
         rbooks = self._rbooks()
 
         @F.pandas_udf(ArrayType(ShortType()))
@@ -227,13 +194,7 @@ class IVFPQStrategy(PQStrategy):
             X = np.vstack(tv.to_numpy()).astype(np.float64)
             code1 = np.vstack(c1.to_numpy()).astype(np.int64)
             R2 = X - strat._decode_primary(cl.to_numpy(), code1)
-            rdsub = X.shape[1] // rm_
-            codes = np.empty((len(X), rm_), dtype=np.int16)
-            for j in range(rm_):
-                sub = R2[:, j * rdsub : (j + 1) * rdsub]
-                d = ((sub[:, None, :] - rbooks[j][None, :, :]) ** 2).sum(axis=2)
-                codes[:, j] = d.argmin(axis=1).astype(np.int16)
-            return pd.Series(list(codes))
+            return pd.Series(list(encode(R2, rbooks)))
 
         return out.withColumn(
             RCODE_COL, rencode(F.col("__tvec"), F.col(CLUSTER_COL), F.col(CODE_COL))
@@ -249,7 +210,6 @@ class IVFPQStrategy(PQStrategy):
         from vicinity_spark.operators.knn import _np_pairwise
 
         strat = self
-        rm = self.params["refine_m"]
         rbooks = self._rbooks()
 
         joined = (
@@ -262,15 +222,11 @@ class IVFPQStrategy(PQStrategy):
                 if len(b) == 0:
                     continue
                 Q = np.vstack(b["__qvec"].to_numpy()).astype(np.float64)
-                Qt = strat._t_np(Q, metric)
                 cl = b[CLUSTER_COL].to_numpy()
                 code1 = np.vstack(b[CODE_COL].to_numpy()).astype(np.int64)
                 code2 = np.vstack(b[RCODE_COL].to_numpy()).astype(np.int64)
-                recon = strat._decode_primary(cl, code1)
-                rdsub = recon.shape[1] // rm
-                for j in range(rm):
-                    recon[:, j * rdsub : (j + 1) * rdsub] += rbooks[j][code2[:, j]]
-                d = _np_pairwise(metric, Qt, recon)
+                recon = strat._decode_primary(cl, code1) + decode(code2, rbooks)
+                d = _np_pairwise(metric, _normalized(Q, metric), recon)
                 yield pd.DataFrame(
                     {
                         "query_id": b["query_id"].to_numpy(),
@@ -334,58 +290,31 @@ class IVFPQStrategy(PQStrategy):
         return out.drop("__tvec")
 
     # ---- query -------------------------------------------------------
-    def _candidates(
-        self, corpus: DataFrame, queries: DataFrame, kk: int, metric: Metric
-    ) -> DataFrame:
+    def _grid(self, corpus: DataFrame, queries: DataFrame, metric: Metric):
         """Cluster-keyed block grid over PQ codes (grid.cluster_grid):
-        each cell scores only the queries that probe its inverted list,
-        with residual ADC tables against that single centroid — no +inf
-        masking, a cell only ever scores its own list. Probing runs in
-        the space the lists were clustered in: metric space in residual
-        mode, raw for the fallback."""
-        from vicinity_spark.backends.pq import _cell_arrays
-        from vicinity_spark.operators.grid import cell_topk, cluster_grid
+        each cell scores only the queries that probe its inverted list
+        — no +inf masking, a cell only ever scores its own list.
+        Probing runs in the space the lists were clustered in: metric
+        space in residual mode, raw for the fallback."""
+        from vicinity_spark.operators.grid import cluster_grid
 
-        m = self.params["m"]
-        residual = self._use_residual(metric)
-        strat = self
-        C = np.asarray(self.params["centroids"], dtype=np.float64)
-        grid, probe_mask = cluster_grid(
+        return cluster_grid(
             corpus,
             queries,
-            C,
+            self.params["centroids"],
             self.params["nprobe"],
             CODE_COL,
-            probe_space=(lambda Q: strat._t_np(Q, metric)) if residual else None,
+            probe_space=(
+                (lambda Q: _normalized(Q, metric)) if self._use_residual(metric) else None
+            ),
         )
 
-        def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            books = strat._codebooks()
-            for pdf in batches:
-                for i in range(len(pdf)):
-                    ids, codes, qids, Q = _cell_arrays(pdf, i)
-                    cluster = int(pdf[CLUSTER_COL].iloc[i])
-                    mask = probe_mask(Q, cluster)
-                    if not mask.any():
-                        continue
-                    if residual:
-                        R = strat._t_np(Q[mask], metric) - C[cluster]
-                        dsub = R.shape[1] // m
-                        tables = np.stack(
-                            [
-                                (
-                                    (
-                                        R[:, j * dsub : (j + 1) * dsub][:, None, :]
-                                        - books[j][None, :, :]
-                                    )
-                                    ** 2
-                                ).sum(axis=2)
-                                for j in range(m)
-                            ],
-                            axis=1,
-                        )
-                    else:
-                        tables = strat._adc_tables(Q[mask], metric)
-                    yield cell_topk(qids[mask], ids, codes, tables, m, kk)
-
-        return grid.mapInPandas(fn, _KNN_SCHEMA)
+    def _cell_tables(self, metric: Metric):
+        """Residual mode: squared-L2 tables of each probing query's
+        metric-space residual against the cell's own centroid. Other
+        metrics: the parent's whole-vector tables."""
+        if not self._use_residual(metric):
+            return super()._cell_tables(metric)
+        books = self._codebooks()
+        C = np.asarray(self.params["centroids"], dtype=np.float64)
+        return lambda Q, key: l2_tables(_normalized(Q, metric) - C[key[CLUSTER_COL]], books)

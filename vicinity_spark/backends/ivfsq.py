@@ -8,29 +8,26 @@ the per-dimension min/max scalar quantizer (`__code: array<smallint>`,
 exactly backends/sq.py). Scan payload per row: 4 bytes cluster + dim
 bytes of codes — the IVF prune and the 4-8× SQ byte reduction stack.
 
-Query: a cluster-keyed block grid (the shape backends/ivfpq.py uses
-for PQ codes). Each inverted list's SQ codes fold into one block row;
-query blocks join ONLY the clusters they probe (nprobe pruning
-expressed at the block level — an unprobed list ships nowhere). Each
-grid cell dequantizes with the closure-resident codebook (2×dim
-doubles) and runs the chunked dense partial top-k; the exact re-rank
-on true vectors follows (RerankStrategy phase 2). No driver collect of
-the query table anywhere, so the path holds at any query-batch size.
-The grid itself is grid.cluster_grid, shared with backends/ivfpq.py.
+Query: SQStrategy's code scan over a cluster-keyed block grid
+(grid.cluster_grid, shared with backends/ivfpq.py) — the one hook this
+class overrides is `_grid`. Each inverted list's SQ codes fold into
+one block row; query blocks join ONLY the clusters they probe (nprobe
+pruning expressed at the block level — an unprobed list ships
+nowhere), and grid.scan_cells hands each cell only the queries that
+probe its list. Each cell dequantizes with the closure-resident
+codebook (2×dim doubles) and runs the chunked dense partial top-k; the
+exact re-rank on true vectors follows (RerankStrategy phase 2). No
+driver collect of the query table anywhere, so the path holds at any
+query-batch size.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 
-from vicinity_spark.backends.ivf import CLUSTER_COL, IVFStrategy
+from vicinity_spark.backends.ivf import IVFStrategy
 from vicinity_spark.backends.sq import CODE_COL, SQStrategy
 from vicinity_spark.datatypes import Backend, Metric
-from vicinity_spark.operators.knn import _KNN_SCHEMA
 
 
 class IVFSQStrategy(SQStrategy):
@@ -71,28 +68,10 @@ class IVFSQStrategy(SQStrategy):
         return super().on_insert(self._ivf.on_insert(new_df, metric, dim), metric, dim)
 
     # ---- query -------------------------------------------------------
-    def _candidates(
-        self, corpus: DataFrame, queries: DataFrame, kk: int, metric: Metric
-    ) -> DataFrame:
-        """Cluster-keyed block grid over SQ codes (grid.cluster_grid):
-        each cell dequantizes its inverted list with the closure-resident
-        codebook and scores only the queries that probe it."""
-        from vicinity_spark.operators.grid import cell_arrays, cluster_grid, dense_cell_topk
+    def _grid(self, corpus: DataFrame, queries: DataFrame, metric: Metric):
+        """Cluster-keyed block grid over SQ codes (grid.cluster_grid)."""
+        from vicinity_spark.operators.grid import cluster_grid
 
-        mins = np.asarray(self.params["mins"])
-        scales = np.asarray(self.params["scales"])
-        grid, probe_mask = cluster_grid(
+        return cluster_grid(
             corpus, queries, self.params["centroids"], self.params["nprobe"], CODE_COL
         )
-
-        def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                for i in range(len(pdf)):
-                    ids, codes, qids, Q = cell_arrays(pdf, i)
-                    mask = probe_mask(Q, int(pdf[CLUSTER_COL].iloc[i]))
-                    if not mask.any():
-                        continue
-                    X = codes.astype(np.float64) * scales[None, :] + mins[None, :]
-                    yield dense_cell_topk(qids[mask], ids, X, Q[mask], metric, kk)
-
-        return grid.mapInPandas(fn, _KNN_SCHEMA)

@@ -7,7 +7,9 @@ on a sample), run seeded Lloyd iterations per subspace in numpy, store
 the m × ksub × dsub codebook in params (it reloads from metadata, no
 binary files). Encode: one Arrow pass assigns each subvector its
 nearest centroid id → `__pqcode: array<smallint>` (m bytes per vector —
-a dim×4/m byte reduction, 32× at dim=64, m=8).
+a dim×4/m byte reduction, 32× at dim=64, m=8). The codec itself —
+`train_codebooks`, `encode`, `l2_tables`, `decode` — is module-level
+and shared with backends/ivfpq.py (residual codes, ivfpqr refinement).
 
 Query: ADC (asymmetric distance computation) as a BLOCK GRID — corpus
 code blocks × query blocks via crossJoin, every ADC table computed
@@ -34,7 +36,7 @@ IVFPQ, whose grid joins only probed (cluster, query-block) pairs.
 
 from __future__ import annotations
 
-from typing import Iterator, Sequence
+from typing import Sequence
 
 import numpy as np
 import pandas as pd
@@ -48,14 +50,6 @@ from vicinity_spark.operators.knn import _KNN_SCHEMA
 
 CODE_COL = "__pqcode"
 
-
-def _cell_arrays(pdf: pd.DataFrame, i: int):
-    """Grid-cell row → (ids, int codes, qids, Q) numpy arrays."""
-    from vicinity_spark.operators.grid import cell_arrays
-
-    ids, payload, qids, Q = cell_arrays(pdf, i)
-    return ids, payload.astype(np.int64), qids, Q
-
 # Only cosine is served by unit-normalization (‖q−x‖² = 2·(1−cos) on
 # the unit sphere). INNER_PRODUCT must NOT be normalized: the high-norm
 # corpus vectors that dominate the true IP top-k would be pruned before
@@ -67,6 +61,15 @@ _NORMALIZED = (Metric.COSINE,)
 
 
 _SAMPLE_BUCKETS = 1 << 30
+
+
+def _normalized(X: np.ndarray, metric: Metric) -> np.ndarray:
+    """Rows scaled to unit norm for the _NORMALIZED metrics (zero rows
+    stay zero); X unchanged otherwise."""
+    if metric in _NORMALIZED:
+        n = np.linalg.norm(X, axis=1, keepdims=True)
+        return np.divide(X, n, out=np.zeros_like(X), where=n != 0)
+    return X
 
 
 def _train_sample(df: DataFrame, cols: Sequence[str], target: int, seed: int) -> pd.DataFrame:
@@ -102,6 +105,68 @@ def _kmeans_np(X: np.ndarray, k: int, seed: int, iters: int = 12) -> np.ndarray:
     return C
 
 
+# ---- the product-quantizer codec (pq, ivfpq, ivfpqr) -----------------
+# A codebook set is m × ksub × dsub: subspace j of a vector is columns
+# j·dsub … (j+1)·dsub, coded by its nearest of that subspace's ksub
+# codewords.
+
+
+def train_codebooks(X: np.ndarray, m: int, ksub: int, seed: int) -> list:
+    """m subspace codebooks for the rows of X: seeded Lloyd iterations
+    per subspace (subspace j seeded ``seed + j``), every book cut to
+    the smallest trained size, as nested float lists (params and
+    metadata hold them verbatim)."""
+    dsub = X.shape[1] // m
+    books = [_kmeans_np(X[:, j * dsub : (j + 1) * dsub], ksub, seed + j) for j in range(m)]
+    k = min(ksub, min(len(b) for b in books))
+    return [[[float(x) for x in c] for c in b[:k]] for b in books]
+
+
+def _sub_l2(X: np.ndarray, books: np.ndarray, j: int) -> np.ndarray:
+    """n × ksub squared-L2 distances of X's subspace j to book j."""
+    dsub = books.shape[2]
+    sub = X[:, j * dsub : (j + 1) * dsub]
+    return ((sub[:, None, :] - books[j][None, :, :]) ** 2).sum(axis=2)
+
+
+def encode(X: np.ndarray, books: np.ndarray) -> np.ndarray:
+    """n × m int16 codes: each subspace's nearest codeword (ties to the
+    lower index)."""
+    codes = np.empty((len(X), len(books)), dtype=np.int16)
+    for j in range(len(books)):
+        codes[:, j] = _sub_l2(X, books, j).argmin(axis=1).astype(np.int16)
+    return codes
+
+
+def l2_tables(X: np.ndarray, books: np.ndarray) -> np.ndarray:
+    """n × m × ksub squared-L2 ADC tables: Σ_j T[i, j, codes[j]] is
+    ‖X[i] − decode(codes)‖²."""
+    return np.stack([_sub_l2(X, books, j) for j in range(len(books))], axis=1)
+
+
+def decode(codes: np.ndarray, books: np.ndarray) -> np.ndarray:
+    """n × (m·dsub) reconstruction: each subspace's codeword."""
+    return np.concatenate([books[j][codes[:, j]] for j in range(len(books))], axis=1)
+
+
+def adc_tables(Q: np.ndarray, books: np.ndarray, metric: Metric) -> np.ndarray:
+    """Per-query ADC lookup tables, nq × m × ksub.
+
+    COSINE: squared-L2 tables on unit-normalized vectors (ranking ≡
+    cosine). INNER_PRODUCT: sign-flipped dot tables — Σ_j −q_j·c ≈
+    −q·x̂, so ascending order is descending approximate IP and
+    high-norm corpus rows keep their rightful candidate slots.
+    Everything else: squared-L2 on the raw space."""
+    Q = _normalized(Q, metric)
+    if metric is Metric.INNER_PRODUCT:
+        dsub = books.shape[2]
+        return np.stack(
+            [-(Q[:, j * dsub : (j + 1) * dsub] @ books[j].T) for j in range(len(books))],
+            axis=1,
+        )
+    return l2_tables(Q, books)
+
+
 class PQStrategy(RerankStrategy):
     backend = Backend.PQ
     exact = False
@@ -127,33 +192,18 @@ class PQStrategy(RerankStrategy):
         )
 
     # ---- helpers -----------------------------------------------------
-    def _normalize_if_angular(self, X: np.ndarray, metric: Metric) -> np.ndarray:
-        if metric in _NORMALIZED:
-            n = np.linalg.norm(X, axis=1, keepdims=True)
-            return np.divide(X, n, out=np.zeros_like(X), where=n != 0)
-        return X
-
     def _codebooks(self) -> np.ndarray:
         return np.asarray(self.params["codebooks"], dtype=np.float64)
 
     def _encode_kernel(self, metric: Metric):
-        m = self.params["m"]
         books = self._codebooks()  # m × ksub × dsub
-        strat = self
 
         @F.pandas_udf(ArrayType(ShortType()))
-        def encode(v: pd.Series) -> pd.Series:
+        def pq_encode(v: pd.Series) -> pd.Series:
             X = np.vstack(v.to_numpy()).astype(np.float64)
-            X = strat._normalize_if_angular(X, metric)
-            dsub = X.shape[1] // m
-            codes = np.empty((len(X), m), dtype=np.int16)
-            for j in range(m):
-                sub = X[:, j * dsub : (j + 1) * dsub]
-                d = ((sub[:, None, :] - books[j][None, :, :]) ** 2).sum(axis=2)
-                codes[:, j] = d.argmin(axis=1).astype(np.int16)
-            return pd.Series(list(codes))
+            return pd.Series(list(encode(_normalized(X, metric), books)))
 
-        return encode
+        return pq_encode
 
     # ---- build -------------------------------------------------------
     def build(self, df: DataFrame, metric: Metric, dim: int) -> DataFrame:
@@ -166,20 +216,9 @@ class PQStrategy(RerankStrategy):
                 df, ["vector"], self.params["train_sample"], self.params["seed"]
             )
             S = np.vstack(sample["vector"].to_numpy()).astype(np.float64)
-            S = self._normalize_if_angular(S, metric)
-            dsub = dim // m
-            books = [
-                _kmeans_np(
-                    S[:, j * dsub : (j + 1) * dsub],
-                    self.params["ksub"],
-                    self.params["seed"] + j,
-                )
-                for j in range(m)
-            ]
-            ksub = min(self.params["ksub"], min(len(b) for b in books))
-            self.params["codebooks"] = [
-                [[float(x) for x in c] for c in b[:ksub]] for b in books
-            ]
+            self.params["codebooks"] = train_codebooks(
+                _normalized(S, metric), m, self.params["ksub"], self.params["seed"]
+            )
         return df.withColumn(CODE_COL, self._encode_kernel(metric)(F.col("vector")))
 
     def on_insert(self, new_df: DataFrame, metric: Metric, dim: int) -> DataFrame:
@@ -187,60 +226,42 @@ class PQStrategy(RerankStrategy):
         return new_df.withColumn(CODE_COL, self._encode_kernel(metric)(F.col("vector")))
 
     # ---- query: ADC candidates (RerankStrategy re-ranks them) --------
-    def _adc_tables(self, Q: np.ndarray, metric: Metric) -> np.ndarray:
-        """Per-query ADC lookup tables, nq × m × ksub.
+    def _grid(self, corpus: DataFrame, queries: DataFrame, metric: Metric):
+        """(grid, probe_mask) for the code scan: corpus code blocks ×
+        query blocks, no probe mask. Codes fold into ceil(n/262144)
+        density-sized hash blocks (narrow shuffle of m-byte codes — the
+        compact payload affords 4× the dense default, and every extra
+        block re-computes the per-cell ADC tables and widens the
+        candidate merge)."""
+        from vicinity_spark.operators.grid import corpus_blocks, query_blocks
 
-        COSINE: squared-L2 tables on unit-normalized vectors (ranking ≡
-        cosine). INNER_PRODUCT: sign-flipped dot tables — Σ_j −q_j·c ≈
-        −q·x̂, so ascending order is descending approximate IP and
-        high-norm corpus rows keep their rightful candidate slots.
-        Everything else: squared-L2 on the raw space."""
+        blocks = corpus_blocks(corpus, CODE_COL, target_rows=262_144)
+        return blocks.crossJoin(query_blocks(queries)), None
+
+    def _cell_tables(self, metric: Metric):
+        """``tables(Q, key)`` → the ADC tables one grid cell (``key``:
+        its scan_cells key columns) scores its queries with. The
+        function closes over the converted codebooks, not the strategy:
+        one conversion per query plan and a closure no larger than the
+        books."""
         books = self._codebooks()
-        m = self.params["m"]
-        Q = self._normalize_if_angular(Q, metric)
-        dsub = Q.shape[1] // m
-        if metric is Metric.INNER_PRODUCT:
-            return np.stack(
-                [-(Q[:, j * dsub : (j + 1) * dsub] @ books[j].T) for j in range(m)],
-                axis=1,
-            )
-        return np.stack(
-            [
-                ((Q[:, j * dsub : (j + 1) * dsub][:, None, :] - books[j][None, :, :]) ** 2).sum(
-                    axis=2
-                )
-                for j in range(m)
-            ],
-            axis=1,
-        )
+        return lambda Q, key: adc_tables(Q, books, metric)
 
     def _candidates(
         self, corpus: DataFrame, queries: DataFrame, kk: int, metric: Metric
     ) -> DataFrame:
-        """Block-grid ADC scan: corpus code blocks × query blocks.
-
-        Corpus codes fold into ceil(n/262144) density-sized hash blocks
-        (narrow shuffle of m-byte codes — the compact payload affords
-        4× the dense default, and every extra block re-computes the
-        per-cell ADC tables and widens the candidate merge); the grid
-        is a crossJoin against the query blocks. Each cell computes its
-        queries' ADC tables from the closure codebooks —
-        D[q, n] = Σ_j tables[q, j, codes[n, j]], pure lookups — and
-        emits per-query top-kk via chunked argpartition. No driver
-        collect of the query table."""
-        from vicinity_spark.operators.grid import cell_topk, corpus_blocks, query_blocks
+        """Block-grid ADC scan over the `_grid` cells: each cell builds
+        its queries' tables (`_cell_tables`) and emits per-query top-kk
+        by pure lookups — D[q, n] = Σ_j tables[q, j, codes[n, j]] —
+        via chunked argpartition (grid.cell_topk). No driver collect of
+        the query table."""
+        from vicinity_spark.operators.grid import cell_topk, scan_cells
 
         m = self.params["m"]
-        strat = self
-        grid = corpus_blocks(corpus, CODE_COL, target_rows=262_144).crossJoin(
-            query_blocks(queries)
-        )
+        grid, probe_mask = self._grid(corpus, queries, metric)
+        tables = self._cell_tables(metric)
 
-        def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                for i in range(len(pdf)):
-                    ids, codes, qids, Q = _cell_arrays(pdf, i)
-                    tables = strat._adc_tables(Q, metric)
-                    yield cell_topk(qids, ids, codes, tables, m, kk)
+        def kernel(ids, codes, qids, Q, key):
+            yield cell_topk(qids, ids, codes, tables(Q, key), m, kk)
 
-        return grid.mapInPandas(fn, _KNN_SCHEMA)
+        return scan_cells(grid, kernel, _KNN_SCHEMA, probe_mask)

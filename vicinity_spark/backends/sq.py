@@ -17,10 +17,7 @@ rows (RerankStrategy). Recall is governed by `refine` (evaluate() gates it).
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -81,30 +78,29 @@ class SQStrategy(RerankStrategy):
         return new_df.withColumn(CODE_COL, self._encode_expr())
 
     # ---- phase 1: approximate candidates over codes ------------------
+    def _grid(self, corpus: DataFrame, queries: DataFrame, metric: Metric):
+        """(grid, probe_mask) for the code scan: corpus code blocks ×
+        query blocks, no probe mask."""
+        from vicinity_spark.operators.grid import corpus_blocks, query_blocks
+
+        return corpus_blocks(corpus, CODE_COL).crossJoin(query_blocks(queries)), None
+
     def _candidates(
         self, corpus: DataFrame, queries: DataFrame, kk: int, metric: Metric
     ) -> DataFrame:
-        """Block-grid quantized scan (same shape as the PQ path): corpus
-        code blocks × query blocks, dequantize + chunked partial top-k
-        inside each grid cell. The codebook (2×dim doubles) rides in the
-        closure; query vectors arrive through the join — no driver
-        collect of the query table."""
-        from vicinity_spark.operators.grid import (
-            cell_arrays,
-            corpus_blocks,
-            dense_cell_topk,
-            query_blocks,
-        )
+        """Block-grid quantized scan over the `_grid` cells (same shape
+        as the PQ path): dequantize + chunked partial top-k inside each
+        grid cell. The codebook (2×dim doubles) rides in the closure;
+        query vectors arrive through the join — no driver collect of
+        the query table."""
+        from vicinity_spark.operators.grid import dense_cell_topk, scan_cells
 
         mins = np.asarray(self.params["mins"])
         scales = np.asarray(self.params["scales"])
-        grid = corpus_blocks(corpus, CODE_COL).crossJoin(query_blocks(queries))
+        grid, probe_mask = self._grid(corpus, queries, metric)
 
-        def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                for i in range(len(pdf)):
-                    ids, codes, qids, Q = cell_arrays(pdf, i)
-                    X = codes.astype(np.float64) * scales[None, :] + mins[None, :]
-                    yield dense_cell_topk(qids, ids, X, Q, metric, kk)
+        def kernel(ids, codes, qids, Q, key):
+            X = codes.astype(np.float64) * scales[None, :] + mins[None, :]
+            yield dense_cell_topk(qids, ids, X, Q, metric, kk)
 
-        return grid.mapInPandas(fn, _KNN_SCHEMA)
+        return scan_cells(grid, kernel, _KNN_SCHEMA, probe_mask)

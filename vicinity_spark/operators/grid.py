@@ -1,17 +1,20 @@
 """Block-grid scan scaffolding shared by the quantized strategies
-(backends/pq.py, sq.py, ivfpq.py, ivfsq.py) and the exact `grid` and
-`partial` algorithms in operators/knn.py.
+(backends/sq.py, pq.py and their IVF composites ivfsq.py, ivfpq.py),
+the exact `grid` top-k and range algorithms and the `neardup_join`
+self-join in operators/knn.py, and (through `dense_cell_topk`) the
+`partial` algorithm there.
 
 The shape: fold the corpus scan payload into block rows
 (collect_list), fold the query table into ~512-query block rows, join
 the two block relations (crossJoin for full scans, an equi-join on
-cluster for pruned scans), and run the scoring kernel per grid cell
-with chunked partial top-k so the distance matrix never exceeds
-nq_block × _CCHUNK doubles. Everything the kernel needs beyond the
-cell row (codebooks, centroids) is closure-small; query vectors arrive
-through the join — NO driver collect anywhere, so the plan holds at
-any query-batch size (the broadcast/driver-matrix alternative bounds
-the batch at driver memory).
+cluster for pruned scans, a block-pair theta join for the self-join),
+and run the scoring kernel per grid cell through `scan_cells` — the
+one mapInPandas over grid cells — with chunked kernels so a distance
+matrix never exceeds _QBLOCK × _CCHUNK doubles. Everything the kernel
+needs beyond the cell row (codebooks, centroids) is closure-small;
+query vectors arrive through the join — NO driver collect anywhere, so
+the plan holds at any query-batch size (the broadcast/driver-matrix
+alternative bounds the batch at driver memory).
 
 Reference analog: none (vicinity scores one in-memory matrix,
 basic.py:195-204); this is the distributed decomposition of the same
@@ -21,6 +24,8 @@ scan.
 from __future__ import annotations
 
 import math
+from functools import partial
+from typing import Iterator
 
 import numpy as np
 import pandas as pd
@@ -285,8 +290,9 @@ def cluster_grid(
     Returns ``(grid, probe_mask)``. A cell holds the whole query
     block, so ``probe_mask(Q, cluster)`` re-derives each query's probe
     set (cheap) and marks the queries that probe the cell's cluster —
-    the only ones the cell scores. ``probe_space`` maps query vectors
-    into the space the lists were clustered in (identity when None)."""
+    the only ones `scan_cells` hands the cell's kernel. ``probe_space``
+    maps query vectors into the space the lists were clustered in
+    (identity when None)."""
     from pyspark.sql.types import ArrayType, IntegerType
 
     from vicinity_spark.backends.ivf import CLUSTER_COL
@@ -346,6 +352,40 @@ def cell_arrays(pdf: pd.DataFrame, i: int):
     qids = np.asarray(pdf["__qids"].iloc[i], dtype=np.int64)
     Q = np.vstack([np.asarray(v) for v in pdf["__qvecs"].iloc[i]]).astype(np.float64)
     return ids, payload, qids, Q
+
+
+def scan_cells(grid: DataFrame, kernel, schema, probe_mask=None) -> DataFrame:
+    """The one mapInPandas over grid cells. Each cell row is decoded by
+    `cell_arrays` (id-sorted corpus ids and payload, query ids, float64
+    Q) and handed to ``kernel(ids, payload, qids, Q, key)``, which
+    yields frames of ``schema``; ``key`` maps the cell's key columns
+    (``__cluster``, ``__cb``, ``__qb`` — those the grid has) to ints.
+    With a `cluster_grid` ``probe_mask``, the kernel sees only the
+    queries that probe the cell's cluster, and cells no query probes
+    are skipped. The loop is a module function bound by `partial`, so
+    a task's closure carries only the kernel, the key names and the
+    mask."""
+    from vicinity_spark.backends.ivf import CLUSTER_COL
+
+    keys = [c for c in (CLUSTER_COL, "__cb", "__qb") if c in grid.columns]
+    fn = partial(_scan, kernel, keys, probe_mask)
+    fn.__name__ = "scan_cells"  # the UDF's name in plan dumps
+    return grid.mapInPandas(fn, schema)
+
+
+def _scan(kernel, keys, probe_mask, batches: Iterator[pd.DataFrame]):
+    from vicinity_spark.backends.ivf import CLUSTER_COL
+
+    for pdf in batches:
+        for i in range(len(pdf)):
+            ids, payload, qids, Q = cell_arrays(pdf, i)
+            key = {c: int(pdf[c].iloc[i]) for c in keys}
+            if probe_mask is not None:
+                mask = probe_mask(Q, key[CLUSTER_COL])
+                if not mask.any():
+                    continue
+                qids, Q = qids[mask], Q[mask]
+            yield from kernel(ids, payload, qids, Q, key)
 
 
 def det_topk_idx(D: np.ndarray, cap: int) -> np.ndarray:
@@ -483,3 +523,27 @@ def dense_cell_topk(qids, ids, X: np.ndarray, Q: np.ndarray, metric, kk: int) ->
         parts_d.append(np.take_along_axis(D, idx, axis=1))
         parts_i.append(idx + s)
     return _merge_parts(qids, ids, parts_d, parts_i, kk, rescore=(Q, X, metric))
+
+
+def dense_cell_within(qids, ids, X: np.ndarray, Q: np.ndarray, metric, t: float):
+    """Every (query, corpus row) pair of one grid cell with distance
+    ``<= t``, as (query_id, id, distance) frames, distances clipped to
+    ≥ 0 — the range kernel of the exact `grid` threshold search and
+    the near-dup self-join. Both sides are sliced (_QBLOCK queries ×
+    _CCHUNK rows), so no distance matrix exceeds that many doubles
+    whatever the block sizes."""
+    from vicinity_spark.operators.knn import _np_distances
+
+    for s in range(0, len(ids), _CCHUNK):
+        Xs, cs = X[s : s + _CCHUNK], ids[s : s + _CCHUNK]
+        for r in range(0, len(qids), _QBLOCK):
+            D = _np_distances(metric, Q[r : r + _QBLOCK], Xs)
+            qi, ci = np.nonzero(D <= t)
+            if len(qi):
+                yield pd.DataFrame(
+                    {
+                        "query_id": qids[r : r + _QBLOCK][qi],
+                        "id": cs[ci],
+                        "distance": np.maximum(D[qi, ci], 0.0),
+                    }
+                )

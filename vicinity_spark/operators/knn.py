@@ -9,7 +9,7 @@ Reference semantics mirrored (citations into /root/reference/):
   (vicinity/vicinity.py:140-165, basic.py:149-172; SURVEY.md §2.3
   threshold-semantics note: we standardize on the exact backend's `<=`).
 
-Two physical strategies for top-k:
+Three physical strategies for top-k:
 
 - ``window``: broadcast(queries) ⋈ corpus → distance column →
   `row_number() over (partition by query_id order by distance, id)`.
@@ -24,7 +24,13 @@ Two physical strategies for top-k:
   merge window over the surviving q×k×num_partitions rows. The shuffle
   is bounded by q×k×partitions regardless of corpus size — this is the
   plan that survives a 100 TB corpus: the full cross product is never
-  materialized and never shuffled.
+  materialized and never shuffled. The query matrix is collected to
+  the driver and broadcast, so the query batch must be bounded.
+
+- ``grid``: corpus blocks × query blocks (operators/grid.py), each
+  cell scored by the same chunked kernel as ``partial``, then the same
+  merge. Query vectors arrive through the join instead of a driver
+  collect — the plan for UNBOUNDED query tables.
 
 Payload columns ride along: ``window`` carries them through the rank
 in-row; ``partial`` and ``grid`` re-join the corpus payload onto the
@@ -43,15 +49,37 @@ from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
 from vicinity_spark.datatypes import Metric
 from vicinity_spark.functions.metrics import clip_distance, distance_expr
-from vicinity_spark.operators.grid import dense_cell_topk
+from vicinity_spark.operators.grid import (
+    corpus_blocks,
+    dense_cell_topk,
+    dense_cell_within,
+    query_blocks,
+    scan_cells,
+)
 
 
-def _np_distances(metric: Metric, Q: np.ndarray, X: np.ndarray) -> np.ndarray:
+def _np_distances(
+    metric: Metric, Q: np.ndarray, X: np.ndarray, budget_bytes: int = 32 << 20
+) -> np.ndarray:
     """Vectorized distance matrix (len(Q) × len(X)), float64.
 
     Kernels match functions/metrics.py (and the reference kernels they
-    mirror: basic.py:218-222, 241-247; usearch.py:27-34).
+    mirror: basic.py:218-222, 241-247; usearch.py:27-34). MANHATTAN and
+    HAMMING broadcast a rows × len(X) × dim temporary, so Q is taken in
+    row blocks that keep it within ``budget_bytes`` (the rescore_pairs
+    budget); each value is a per-pair reduction, so the blocking never
+    changes a bit.
     """
+    if metric in (Metric.MANHATTAN, Metric.HAMMING):
+        out = np.empty((len(Q), len(X)), dtype=np.float64)
+        rows = max(1, budget_bytes // max(1, X.size * 8))
+        for s in range(0, len(Q), rows):
+            Qb = Q[s : s + rows, None, :]
+            if metric is Metric.MANHATTAN:
+                out[s : s + rows] = np.abs(Qb - X[None, :, :]).sum(axis=2)
+            else:
+                out[s : s + rows] = (Qb != X[None, :, :]).sum(axis=2)
+        return out
     if metric is Metric.COSINE:
         qn = np.linalg.norm(Q, axis=1, keepdims=True)
         xn = np.linalg.norm(X, axis=1, keepdims=True)
@@ -65,10 +93,6 @@ def _np_distances(metric: Metric, Q: np.ndarray, X: np.ndarray) -> np.ndarray:
         x2 = (X * X).sum(axis=1)[None, :]
         d2 = np.clip(q2 + x2 - 2.0 * (Q @ X.T), 0.0, None)
         return d2 if metric is Metric.L2_SQUARED else np.sqrt(d2)
-    if metric is Metric.MANHATTAN:
-        return np.abs(Q[:, None, :] - X[None, :, :]).sum(axis=2)
-    if metric is Metric.HAMMING:
-        return (Q[:, None, :] != X[None, :, :]).sum(axis=2).astype(np.float64)
     if metric is Metric.TANIMOTO:
         dot = Q @ X.T
         denom = (Q * Q).sum(axis=1)[:, None] + (X * X).sum(axis=1)[None, :] - dot
@@ -133,28 +157,13 @@ def score_joined(
     returned values, the reference's argsort-then-clip order,
     basic.py:202 / vicinity.py:135 — clipping before the rank would tie
     every dot>1 inner-product hit at 0)."""
-    metric = Metric.from_string(metric)
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            if len(b) == 0:
-                continue
-            X = np.vstack(b[vector_col].to_numpy()).astype(np.float64)
-            A = np.vstack(b["__qvec"].to_numpy()).astype(np.float64)
-            d = _np_pairwise(metric, A, X)
-            yield pd.DataFrame(
-                {
-                    "query_id": b["query_id"].to_numpy(),
-                    "id": b[id_col].to_numpy(),
-                    "distance": d,
-                }
-            )
-
     q = queries.select("query_id", F.col("qvec").alias("__qvec"))
     withq = joined.select("query_id", F.col(id_col).alias("id"), vector_col).join(
         q, "query_id"
     )
-    return withq.mapInPandas(kernel, _KNN_SCHEMA)
+    return score_pairs(
+        withq, metric, a_col="query_id", b_col="id", va_col="__qvec", vb_col=vector_col
+    )
 
 
 def query_matrix(queries: DataFrame, id_col: str = "query_id", vec_col: str = "qvec"):
@@ -287,6 +296,19 @@ def _partial_topk(
     return corpus.select(id_col, vector_col).mapInPandas(fn, _KNN_SCHEMA)
 
 
+def _dense_grid(corpus, queries, id_col, vector_col, query_id_col, query_vector_col):
+    """Dense corpus blocks × query blocks — the exact `grid` algorithms'
+    cell relation (operators/grid.py)."""
+    q = queries.select(
+        F.col(query_id_col).alias("query_id"),
+        F.col(query_vector_col).alias("qvec"),
+    )
+    return corpus_blocks(
+        corpus.select(F.col(id_col).alias("id"), F.col(vector_col).alias("vector")),
+        "vector",
+    ).crossJoin(query_blocks(q))
+
+
 # Past this many query rows, `auto` routes to the block-grid plan:
 # `partial` materializes the nq×dim query matrix on the driver
 # (collect_query_matrix), which stops being a bounded structure once
@@ -384,24 +406,16 @@ def knn_join(
         # through a join instead of a driver collect + broadcast — the
         # plan for UNBOUNDED query tables (a 10M-row query side would
         # materialize nq×dim on the driver under `partial`).
-        from vicinity_spark.operators.grid import cell_arrays, corpus_blocks, query_blocks
-
-        q = queries.select(
-            F.col(query_id_col).alias("query_id"),
-            F.col(query_vector_col).alias("qvec"),
+        grid = _dense_grid(
+            corpus, queries, id_col, vector_col, query_id_col, query_vector_col
         )
-        grid = corpus_blocks(
-            corpus.select(F.col(id_col).alias("id"), F.col(vector_col).alias("vector")),
-            "vector",
-        ).crossJoin(query_blocks(q))
-
-        def cell_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                for i in range(len(pdf)):
-                    ids, X, qids, Q = cell_arrays(pdf, i)
-                    yield dense_cell_topk(qids, ids, X.astype(np.float64), Q, metric, k)
-
-        local = grid.mapInPandas(cell_fn, _KNN_SCHEMA)
+        local = scan_cells(
+            grid,
+            lambda ids, X, qids, Q, key: [
+                dense_cell_topk(qids, ids, X.astype(np.float64), Q, metric, k)
+            ],
+            _KNN_SCHEMA,
+        )
     else:
         raise ValueError(f"unknown algorithm {algorithm!r}")
     ranked = clipped_topk(local, k)
@@ -457,42 +471,17 @@ def threshold_join(
             else "grid"
         )
     if algorithm == "grid":
-        from vicinity_spark.operators.grid import (
-            _CCHUNK,
-            cell_arrays,
-            corpus_blocks,
-            query_blocks,
-        )
-
         t = float(threshold)
-        q = queries.select(
-            F.col(query_id_col).alias("query_id"),
-            F.col(query_vector_col).alias("qvec"),
+        grid = _dense_grid(
+            corpus, queries, id_col, vector_col, query_id_col, query_vector_col
         )
-        grid = corpus_blocks(
-            corpus.select(F.col(id_col).alias("id"), F.col(vector_col).alias("vector")),
-            "vector",
-        ).crossJoin(query_blocks(q))
-
-        def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                for i in range(len(pdf)):
-                    ids, X, qids, Q = cell_arrays(pdf, i)
-                    X = X.astype(np.float64)
-                    for s in range(0, len(ids), _CCHUNK):
-                        D = _np_distances(metric, Q, X[s : s + _CCHUNK])
-                        qi, ci = np.nonzero(D <= t)
-                        if not len(qi):
-                            continue
-                        yield pd.DataFrame(
-                            {
-                                "query_id": qids[qi],
-                                "id": ids[s : s + _CCHUNK][ci],
-                                "distance": np.maximum(D[qi, ci], 0.0),
-                            }
-                        )
-
-        out = grid.mapInPandas(fn, _KNN_SCHEMA)
+        out = scan_cells(
+            grid,
+            lambda ids, X, qids, Q, key: dense_cell_within(
+                qids, ids, X.astype(np.float64), Q, metric, t
+            ),
+            _KNN_SCHEMA,
+        )
         return join_payload(out, corpus, payload_cols, RADIUS_COLS, id_col=id_col)
     if algorithm != "expr":
         raise ValueError(f"unknown algorithm {algorithm!r}")
@@ -526,57 +515,45 @@ def neardup_join(
 ) -> DataFrame:
     """EXACT similarity self-join (distance <= threshold) as a BLOCK
     GRID: fold the corpus into hash blocks, enumerate only the upper
-    triangle of block pairs, and score each grid cell with the chunked
-    vectorized kernel. Same output as the all-pairs theta join; the
+    triangle of block pairs (the second block of each pair rides in the
+    cell's query-block columns), and score each grid cell with the
+    chunked range kernel (grid.dense_cell_within). Same output as the all-pairs theta join; the
     O(n²) work is split across ~P²/2 bounded numpy cells instead of
     evaluated per-row by dim-wide JVM expressions (which fall out of
     codegen at large dim — functions/metrics.py). Nothing collects to
     the driver, so the plan holds at any corpus size; for corpora where
     O(n²) itself is the problem, the LSH-bucketed
     `LSHStrategy.neardup_pairs` is the sub-quadratic path."""
-    from vicinity_spark.operators.grid import _CCHUNK, corpus_blocks
-
-    m = Metric.from_string(metric)
-    t = float(threshold)
     a = corpus_blocks(corpus.select("id", "vector"), "vector")
     b = a.select(
-        F.col("__cb").alias("__cb2"),
-        F.col("__cids").alias("__cids2"),
-        F.col("__ccodes").alias("__ccodes2"),
+        F.col("__cb").alias("__qb"),
+        F.col("__cids").alias("__qids"),
+        F.col("__ccodes").alias("__qvecs"),
     )
-    grid = a.join(b, F.col("__cb") <= F.col("__cb2"))
+    grid = a.join(b, F.col("__cb") <= F.col("__qb"))
+    return scan_cells(
+        grid, _neardup_kernel(Metric.from_string(metric), float(threshold)), _PAIRS_SCHEMA
+    )
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for i in range(len(pdf)):
-                ia = np.asarray(pdf["__cids"].iloc[i], dtype=np.int64)
-                XA = np.vstack([np.asarray(v) for v in pdf["__ccodes"].iloc[i]]).astype(
-                    np.float64
-                )
-                ib = np.asarray(pdf["__cids2"].iloc[i], dtype=np.int64)
-                XB = np.vstack([np.asarray(v) for v in pdf["__ccodes2"].iloc[i]]).astype(
-                    np.float64
-                )
-                same = int(pdf["__cb"].iloc[i]) == int(pdf["__cb2"].iloc[i])
-                for s in range(0, len(ib), _CCHUNK):
-                    D = _np_distances(m, XA, XB[s : s + _CCHUNK])
-                    ii, jj = np.nonzero(D <= t)
-                    if not len(ii):
-                        continue
-                    id1 = ia[ii]
-                    id2 = ib[s : s + _CCHUNK][jj]
-                    d = np.maximum(D[ii, jj], 0.0)
-                    if same:
-                        # full matrix: keep one orientation only
-                        keep = id1 < id2
-                    else:
-                        # each unordered pair appears once; orient it
-                        keep = id1 != id2
-                        lo = np.minimum(id1, id2)
-                        hi = np.maximum(id1, id2)
-                        id1, id2 = lo, hi
-                    yield pd.DataFrame(
-                        {"id_a": id1[keep], "id_b": id2[keep], "distance": d[keep]}
-                    )
 
-    return grid.mapInPandas(fn, _PAIRS_SCHEMA)
+def _neardup_kernel(metric: Metric, t: float):
+    """scan_cells kernel for one block pair of the self-join: the range
+    kernel's hits, each unordered pair emitted once as (id_a < id_b). A
+    same-block cell holds both orientations of every pair, so it keeps
+    the one with the query side lower; a cross-block cell holds each
+    pair once, so it only drops self pairs."""
+
+    def kernel(ids, X, qids, Q, key):
+        same = key["__cb"] == key["__qb"]
+        for f in dense_cell_within(qids, ids, X.astype(np.float64), Q, metric, t):
+            qi, ci = f["query_id"].to_numpy(), f["id"].to_numpy()
+            keep = qi < ci if same else qi != ci
+            yield pd.DataFrame(
+                {
+                    "id_a": np.minimum(qi, ci)[keep],
+                    "id_b": np.maximum(qi, ci)[keep],
+                    "distance": f["distance"].to_numpy()[keep],
+                }
+            )
+
+    return kernel

@@ -930,12 +930,13 @@ def _recall_pq_branch(spark: SparkSession, sf_dir: str) -> DataFrame:
     # row_number window over (adc, id). Equal codes give bit-equal adc
     # in each engine, so the id tiebreak agrees with the oracle; the
     # strategy's argpartition pool is this same pool up to tie choice.
-    from vicinity_spark.backends.pq import CODE_COL
+    from vicinity_spark.backends.pq import CODE_COL, adc_tables
 
     kk = _RECALL_K * _RECALL_PQ_REFINE
     ksub = len(cents)
-    Tq = strat._adc_tables(
+    Tq = adc_tables(
         np.array([r.qvec for r in queries.orderBy("query_id").collect()], dtype=np.float64),
+        strat._codebooks(),
         Metric.EUCLIDEAN,
     )  # nq × m × ksub — bounded (8×4×8)
     tbl_rows = [
