@@ -153,6 +153,92 @@ def test_serving_path_scans_no_python_rdd(spark, backend):
     for what, df in plans.items():
         assert python_rdd_scans(df) == [], what
         assert "Scan ExistingRDD" not in explain_str(df, "simple"), what
-    # the guard itself sees a list-built frame
+    # the guard itself sees a list-built frame (bounded ANN batches are
+    # collected to the driver, so only the frame itself is sure to hold
+    # its scan)
     listed = spark.createDataFrame([(0, [0.0] * 8)], "query_id long, qvec array<float>")
-    assert python_rdd_scans(store.threshold_df(listed, 0.5))
+    assert python_rdd_scans(listed)
+
+
+def _count_jobs(spark, fn) -> int:
+    """Spark jobs ``fn()`` runs, counted through a job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"count-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+# jobs per bounded query_df(...).collect() at the commit before the
+# bounded scan, on the store built below (query_blocks / corpus_blocks
+# counts, the block folds and the grid joins, each a job)
+_GRID_JOBS = {"sq": 13, "pq": 13, "ivfsq": 10, "ivfpq": 11}
+
+
+@pytest.mark.parametrize("backend", ["basic", "ivf", "sq", "pq", "ivfsq", "ivfpq"])
+def test_bounded_query_job_count(spark, backend):
+    """A bounded query batch takes one broadcast-query scan of the
+    corpus partitions: exact and IVF run at most 4 jobs per collected
+    query_df, and the code-scan strategies fewer than the block grid
+    did. Counts, not times."""
+    import numpy as np
+
+    from vicinity_spark.store import VectorStore
+
+    rng = np.random.default_rng(5)
+    X = rng.standard_normal((400, 8))
+    C = X[:8] / np.linalg.norm(X[:8], axis=1)[:, None]
+    params = {
+        "basic": {},
+        "ivf": {"nlist": 8, "nprobe": 2, "centroids": C},
+        "sq": {"refine": 4},
+        "pq": {"m": 4, "ksub": 16, "refine": 4},
+        "ivfsq": {"nlist": 8, "nprobe": 2, "centroids": C, "refine": 4},
+        "ivfpq": {"nlist": 8, "nprobe": 2, "centroids": C, "m": 4, "ksub": 16, "refine": 4},
+    }[backend]
+    store = VectorStore.from_vectors_and_items(
+        spark, X, [f"i{i}" for i in range(400)], backend_type=backend, metric="cosine", **params
+    )
+    store.df.cache()
+    store.df.count()
+    qdf, _ = store._queries_df(rng.standard_normal((5, 8)))
+    try:
+        jobs = _count_jobs(spark, lambda: store.query_df(qdf, k=5).collect())
+    finally:
+        store.df.unpersist()
+    assert jobs <= 4 if backend in ("basic", "ivf") else jobs < _GRID_JOBS[backend], jobs
+
+
+def test_bounded_ivf_plan_prunes_lists(spark, tmp_path):
+    """The bounded IVF plan scores on the corpus scan: no query_id join
+    carries the query vectors (they are broadcast), and on a reloaded
+    store — written partitionBy(__cluster) — the probed-list filter is
+    a partition filter of the scan."""
+    import numpy as np
+
+    from vicinity_spark.store import VectorStore
+
+    rng = np.random.default_rng(9)
+    X = rng.standard_normal((120, 8))
+    store = VectorStore.from_vectors_and_items(
+        spark, X, [f"i{i}" for i in range(120)], backend_type="ivf",
+        nlist=6, nprobe=2, centroids=X[:6].tolist(),
+    )
+    qdf, _ = store._queries_df(X[:3])
+    for df in (store.query_df(qdf, k=3), store.threshold_df(qdf, 0.4)):
+        s = explain_str(df, "simple")
+        assert "qvec" not in s and "MapInPandas" in s
+    path = str(tmp_path / "ivf_store")
+    store.save(path)
+    loaded = VectorStore.load(path, spark)
+    s = explain_str(loaded.query_df(qdf, k=3), "simple")
+    # the vector scan under the kernel (the payload join's scan reads
+    # every list: it is keyed by id)
+    scans = [ln for ln in s.splitlines() if "FileScan" in ln and "vector" in ln]
+    assert len(scans) == 1 and "PartitionFilters: [__cluster" in scans[0] and " IN (" in scans[0], s
+    assert len(loaded.query_df(qdf, k=3).collect()) == 9

@@ -730,3 +730,100 @@ def test_delete_counts_every_duplicate(spark, data):
     with pytest.raises(ValueError, match=r"Tokens \['zz'\] were not in the store."):
         store.delete(["b", "zz"])
     assert len(store) == 2
+
+
+_SCAN_STORES = {
+    "basic": ("basic", {}),
+    "ivf": ("ivf", {"nlist": 6, "nprobe": 2}),
+    "ivfsq": ("ivfsq", {"nlist": 6, "nprobe": 2, "refine": 4}),
+    "ivfpq": ("ivfpq", {"nlist": 6, "nprobe": 2, "m": 4, "ksub": 16, "refine": 4}),
+    "ivfpq_flat": (
+        "ivfpq",
+        {"nlist": 6, "nprobe": 2, "m": 4, "ksub": 16, "refine": 4, "residual": False},
+    ),
+    "ivfpqr": (
+        "ivfpq",
+        {"nlist": 6, "nprobe": 2, "m": 4, "ksub": 16, "refine": 4, "refine_m": 4},
+    ),
+    "sq": ("sq", {"refine": 4}),
+    "pq": ("pq", {"m": 4, "ksub": 16, "refine": 4}),
+}
+
+
+@pytest.mark.parametrize("name", list(_SCAN_STORES))
+def test_bounded_scan_equals_unbounded(spark, monkeypatch, name):
+    """A bounded query batch (one broadcast-query scan of the corpus
+    partitions) returns the same rows, to the float bit, as the same
+    batch forced down the unbounded plans (row limit patched to -1).
+    Arrow batches of 7 rows split every inverted list across batches.
+    Covers planted duplicate vectors, an empty batch, a `where` that
+    removes every probed list, and k past the probed rows. The exact
+    threshold search is the JVM `expr` plan when bounded and the numpy
+    grid when not, so there rows are equal and distances approximate."""
+    import vicinity_spark.operators.knn as knn_mod
+    from vicinity_spark.session import local_frame
+
+    backend, params = _SCAN_STORES[name]
+    rng = np.random.default_rng(17)
+    n, dim = 240, 8
+    X = rng.standard_normal((n, dim))
+    X[11] = X[200] = X[5]  # planted duplicates
+    if "nlist" in params:  # preset lists: no KMeans fit
+        params = dict(params, centroids=X[20:26] / np.linalg.norm(X[20:26], axis=1)[:, None])
+    store = VectorStore.from_vectors_and_items(
+        spark, X, [f"i{i}" for i in range(n)], backend_type=backend, metric="cosine", **params
+    )
+    store.df.cache()
+    Qv = np.vstack([X[5], rng.standard_normal((6, dim))])
+    qdf, _ = store._queries_df(Qv)
+    empty = local_frame(
+        spark,
+        {"query_id": np.empty(0, np.int64), "qvec": []},
+        "query_id long, qvec array<float>",
+    )
+    lists = store.strategy._lists(store.metric)
+    if lists is None:
+        gone = "id < 0"
+    else:
+        probed = ", ".join(str(int(c)) for c in np.unique(lists.probes(Qv)))
+        gone = f"__cluster NOT IN ({probed})"
+    calls = [
+        ("knn", qdf, 5, None),
+        ("knn", qdf, n + 10, None),
+        ("knn", qdf, 5, gone),
+        ("knn", empty, 5, None),
+        ("thr", qdf, 0.6, None),
+        ("thr", qdf, 0.6, gone),
+        ("thr", empty, 0.6, None),
+    ]
+
+    def run():
+        out = []
+        for what, q, arg, where in calls:
+            df = (
+                store.query_df(q, k=arg, where=where)
+                if what == "knn"
+                else store.threshold_df(q, arg, where=where)
+            )
+            out.append(sorted(tuple(r) for r in df.collect()))
+        return out
+
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "7")
+    try:
+        bounded = run()
+        monkeypatch.setattr(knn_mod, "AUTO_GRID_QUERY_ROWS", -1)
+        unbounded = run()
+    finally:
+        spark.conf.unset("spark.sql.execution.arrow.maxRecordsPerBatch")
+        store.df.unpersist()
+    for (what, q, arg, where), b, u in zip(calls, bounded, unbounded):
+        case = (what, arg, where, q is empty)
+        if backend == "basic" and what == "thr":
+            assert [r[:2] for r in b] == [r[:2] for r in u], case
+            assert [r[2] for r in b] == pytest.approx([r[2] for r in u], abs=1e-6), case
+        else:
+            assert b == u, case
+        assert bool(b) == (q is qdf and where is None), case
+    # the query equal to the planted duplicates ranks them first, tied
+    top = sorted((r[3], r[1]) for r in bounded[0] if r[0] == 0)[:3]
+    assert top == [(1, 5), (2, 11), (3, 200)]

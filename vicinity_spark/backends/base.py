@@ -13,6 +13,14 @@ The contract:
   result size the caller asked for; strategies that prune internally
   (code scans, beam pools) size their pools from it. The range-search
   strategies (IVF, LSH) ignore it, and `_within` passes None.
+- Bounded route: a query batch of at most AUTO_GRID_QUERY_ROWS rows
+  (decided, and collected, by `knn.bounded_query_matrix`) is scored in
+  one broadcast-query scan of the corpus partitions (`grid.cell_scan` /
+  `grid.probe_scan`; IVF strategies probe on the driver and push the
+  probed lists into the scan). A larger query table keeps the
+  strategy's join or block-grid plan, which never collects it. The
+  exact, IVF, SQ/PQ and IVF-SQ/PQ candidate scans take this route;
+  LSH and graph do not.
 - `knn` rejects `k < 1`, keeps each query's top `k` by
   `(distance, id)` — the id tiebreak makes the cut independent of the
   physical layout at exact ties — and only then clips the returned
@@ -72,6 +80,11 @@ class IndexStrategy:
     def on_insert(self, new_df: DataFrame, metric: Metric, dim: int) -> DataFrame:
         """Decorate appended rows with layout columns (F9 analog)."""
         return self.build(new_df, metric, dim)
+
+    def _lists(self, metric: Metric):
+        """The inverted lists a cell scan probes (grid.InvertedLists);
+        None: a flat scan."""
+        return None
 
     def _scored(
         self, corpus: DataFrame, queries: DataFrame, k: "int | None", metric: Metric

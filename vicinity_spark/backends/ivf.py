@@ -14,10 +14,16 @@ holds one list or many. Centroids are stored in params (nlist × dim
 doubles — tiny), so the index reloads from metadata alone and inserts
 assign clusters without refitting.
 
-Query = probe the nprobe nearest centroids per query (executor-side
-pandas UDF; the tiny centroid matrix rides in the closure) → equi-join
-corpus on `__cluster` (Catalyst prunes every other cluster's
-partitions) → exact re-rank.
+Query, bounded batch (at most AUTO_GRID_QUERY_ROWS rows — every facade
+`query`): the batch is collected once and probed on the driver
+(`nearest_centroids`), `__cluster IN (<probed union>)` is pushed into
+the corpus scan (a partition filter on a reloaded store), and ONE
+mapInPandas over the corpus partitions scores each inverted list's
+rows against only the queries that probe it (grid.probe_scan, the
+dense cell kernel) → top-k merge. Query, unbounded table: probe the
+nprobe nearest centroids per query executor-side (pandas UDF; the tiny
+centroid matrix rides in the closure) → equi-join corpus on
+`__cluster` → exact re-score of the joined rows.
 """
 
 from __future__ import annotations
@@ -137,20 +143,40 @@ class IVFStrategy(IndexStrategy):
             "query_id", *extra_cols, F.explode(probe(F.col("qvec"))).alias(CLUSTER_COL)
         )
 
-    def _scored(
-        self, corpus: DataFrame, queries: DataFrame, k: int, metric: Metric
-    ) -> DataFrame:
-        """Probed-cluster rows re-scored by the shared vectorized kernel
-        (operators/knn.py score_joined). The probe side carries only
-        (query_id, __cluster); query vectors ride in the kernel closure.
-        Downstream shuffles carry only (query_id, id, distance)."""
-        from vicinity_spark.operators.knn import score_joined
+    def _lists(self, metric: Metric):
+        from vicinity_spark.operators.grid import InvertedLists
 
-        probe = self._probe_df(queries)
-        # no broadcast hint: probe is nq×nprobe (scales with the query
-        # batch); AQE broadcasts it at runtime when it is actually small
-        joined = corpus.join(probe, CLUSTER_COL)
-        return score_joined(joined, queries, metric)
+        return InvertedLists(self.centroids, self.params["nprobe"])
+
+    def _scored(
+        self, corpus: DataFrame, queries: DataFrame, k: "int | None", metric: Metric
+    ) -> DataFrame:
+        """Probed-list rows scored by the dense cell kernel; with
+        ``k`` each cell keeps its per-query top ``k``, with None (range
+        search) every probed row. A bounded batch runs
+        `grid.probe_scan` (driver probe, one corpus scan); an unbounded
+        query table joins the corpus to its executor-side probes and
+        re-scores the joined rows (operators/knn.py score_joined)."""
+        from vicinity_spark.operators.grid import dense_cell_topk, probe_scan
+        from vicinity_spark.operators.knn import (
+            _KNN_SCHEMA,
+            bounded_query_matrix,
+            score_joined,
+        )
+
+        batch = bounded_query_matrix(queries)
+        if batch is None:
+            # no broadcast hint: probe is nq×nprobe (scales with the
+            # query batch); AQE broadcasts it when it is actually small
+            joined = corpus.join(self._probe_df(queries), CLUSTER_COL)
+            return score_joined(joined, queries, metric)
+
+        def kernel(ids, X, qids, Q, key):
+            kk = k or len(ids)
+            yield dense_cell_topk(qids, ids, X.astype(np.float64), Q, metric, kk)
+
+        lists = self._lists(metric)
+        return probe_scan(corpus, "vector", batch, kernel, _KNN_SCHEMA, lists)
 
     # named in the class so per-class instrumentation that wraps only a
     # class's own methods (perfbench/run.py spans) still sees it

@@ -11,16 +11,16 @@ at the same byte budget: residual magnitudes are much smaller than
 vector magnitudes, so the per-subspace codebooks spend their 8 bits on
 the fine structure instead of re-describing the coarse position.
 
-Query: PQStrategy's ADC scan over a cluster-keyed block grid — this
-class overrides only its `_grid` and `_cell_tables` hooks. Each
-inverted list's codes fold into one block row; query blocks join ONLY
-the clusters they probe (nprobe pruning expressed at the block level),
-and each grid cell computes its queries' residual ADC tables against
-that single centroid executor-side — centroids and codebooks ride in
-the task closure, the query vectors arrive through the join. Nothing collects to the driver,
-so the path holds at any query-batch size. The usual exact re-rank on
-true vectors follows. Scan payload per row: 4 bytes cluster + m bytes
-code, independent of dim.
+Query: PQStrategy's ADC scan over the inverted lists — this class
+overrides only its `_lists` and `_cell_tables` hooks. A bounded batch
+is probed on the driver and scanned in one corpus pass restricted to
+the probed lists (grid.probe_scan); a larger query table folds each
+inverted list's codes into one block row joined ONLY to the query
+blocks that probe it (grid.cluster_grid). Each cell computes its
+queries' residual ADC tables against that single centroid
+executor-side — centroids and codebooks ride in the task closure. The
+usual exact re-rank on true vectors follows. Scan payload per row: 4
+bytes cluster + m bytes code, independent of dim.
 
 Metrics without a clean residual-L2 decomposition (inner product,
 hamming, tanimoto, manhattan) fall back to the non-residual path of
@@ -290,24 +290,15 @@ class IVFPQStrategy(PQStrategy):
         return out.drop("__tvec")
 
     # ---- query -------------------------------------------------------
-    def _grid(self, corpus: DataFrame, queries: DataFrame, metric: Metric):
-        """Cluster-keyed block grid over PQ codes (grid.cluster_grid):
-        each cell scores only the queries that probe its inverted list
-        — no +inf masking, a cell only ever scores its own list.
-        Probing runs in the space the lists were clustered in: metric
-        space in residual mode, raw for the fallback."""
-        from vicinity_spark.operators.grid import cluster_grid
+    def _lists(self, metric: Metric):
+        """Probing runs in the space the lists were clustered in:
+        metric space in residual mode, raw for the fallback. Each cell
+        then scores only the queries that probe its inverted list — no
+        +inf masking, a cell only ever scores its own list."""
+        from vicinity_spark.operators.grid import InvertedLists
 
-        return cluster_grid(
-            corpus,
-            queries,
-            self.params["centroids"],
-            self.params["nprobe"],
-            CODE_COL,
-            probe_space=(
-                (lambda Q: _normalized(Q, metric)) if self._use_residual(metric) else None
-            ),
-        )
+        space = (lambda Q: _normalized(Q, metric)) if self._use_residual(metric) else None
+        return InvertedLists(self.params["centroids"], self.params["nprobe"], space)
 
     def _cell_tables(self, metric: Metric):
         """Residual mode: squared-L2 tables of each probing query's

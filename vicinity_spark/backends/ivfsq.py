@@ -8,17 +8,16 @@ the per-dimension min/max scalar quantizer (`__code: array<smallint>`,
 exactly backends/sq.py). Scan payload per row: 4 bytes cluster + dim
 bytes of codes — the IVF prune and the 4-8× SQ byte reduction stack.
 
-Query: SQStrategy's code scan over a cluster-keyed block grid
-(grid.cluster_grid, shared with backends/ivfpq.py) — the one hook this
-class overrides is `_grid`. Each inverted list's SQ codes fold into
-one block row; query blocks join ONLY the clusters they probe (nprobe
-pruning expressed at the block level — an unprobed list ships
-nowhere), and grid.scan_cells hands each cell only the queries that
-probe its list. Each cell dequantizes with the closure-resident
+Query: SQStrategy's code scan over the inverted lists — the one hook
+this class overrides is `_lists` (grid.InvertedLists, shared with
+backends/ivfpq.py). A bounded batch is probed on the driver and scanned
+in one corpus pass restricted to the probed lists (grid.probe_scan); a
+larger query table folds each inverted list's SQ codes into one block
+row that joins ONLY the query blocks probing it (grid.cluster_grid —
+an unprobed list ships nowhere). Either way each cell gets only the
+queries that probe its list, dequantizes with the closure-resident
 codebook (2×dim doubles) and runs the chunked dense partial top-k; the
-exact re-rank on true vectors follows (RerankStrategy phase 2). No
-driver collect of the query table anywhere, so the path holds at any
-query-batch size.
+exact re-rank on true vectors follows (RerankStrategy phase 2).
 """
 
 from __future__ import annotations
@@ -26,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 from vicinity_spark.backends.ivf import IVFStrategy
-from vicinity_spark.backends.sq import CODE_COL, SQStrategy
+from vicinity_spark.backends.sq import SQStrategy
 from vicinity_spark.datatypes import Backend, Metric
 
 
@@ -68,10 +67,7 @@ class IVFSQStrategy(SQStrategy):
         return super().on_insert(self._ivf.on_insert(new_df, metric, dim), metric, dim)
 
     # ---- query -------------------------------------------------------
-    def _grid(self, corpus: DataFrame, queries: DataFrame, metric: Metric):
-        """Cluster-keyed block grid over SQ codes (grid.cluster_grid)."""
-        from vicinity_spark.operators.grid import cluster_grid
+    def _lists(self, metric: Metric):
+        from vicinity_spark.operators.grid import InvertedLists
 
-        return cluster_grid(
-            corpus, queries, self.params["centroids"], self.params["nprobe"], CODE_COL
-        )
+        return InvertedLists(self.params["centroids"], self.params["nprobe"])

@@ -11,27 +11,26 @@ a dim×4/m byte reduction, 32× at dim=64, m=8). The codec itself —
 `train_codebooks`, `encode`, `l2_tables`, `decode` — is module-level
 and shared with backends/ivfpq.py (residual codes, ivfpqr refinement).
 
-Query: ADC (asymmetric distance computation) as a BLOCK GRID — corpus
-code blocks × query blocks via crossJoin, every ADC table computed
-*executor-side* inside the grid kernel from the broadcast codebooks
-(they ride in the task closure: m × ksub × dsub doubles, ≤ a few
-hundred KB) and the block's own query vectors. No driver collect of
-the query table anywhere on the path, so a 10M-row query batch
-distributes instead of materializing nq×dim on the driver. Each grid
-cell emits its per-query top-k×refine candidates pre-ranked (the
-chunked argpartition runs inside the kernel); the only later shuffle
-is the bounded candidate merge (≤ kk × n_corpus_blocks rows per
-query — the same partial-top-k merge shape as the exact plan) followed
-by the exact re-rank on true vectors. Cosine is served by normalizing
+Query: ADC (asymmetric distance computation) over grid.cell_scan
+cells, every ADC table computed *executor-side* inside the cell kernel
+from the codebooks (they ride in the task closure: m × ksub × dsub
+doubles, ≤ a few hundred KB). A bounded batch (≤ AUTO_GRID_QUERY_ROWS
+rows) is broadcast into one scan of the corpus partitions; a larger
+query table runs as a BLOCK GRID — corpus code blocks × query blocks
+via crossJoin, the query vectors arriving through the join — so a
+10M-row query table distributes instead of materializing nq×dim on the
+driver. Each cell emits its per-query top-k×refine candidates
+pre-ranked (the chunked argpartition runs inside the kernel); the only
+later shuffle is the bounded candidate merge followed by the exact
+re-rank on true vectors. Cosine is served by normalizing
 at train/encode/query time: squared-euclidean ADC ranking on unit
 vectors is cosine ranking (‖q−x‖² = 2·(1−cos) on the unit sphere).
 
-Scale envelope: the grid replicates the compact code blocks once per
-query block (ceil(nq/512)); with m-byte codes that is a dim·4/m-fold
-smaller payload than replicating vectors, and it beats the broadcast
-alternative (nq × m × ksub tables to every executor) as soon as the
-query batch is large. For full-corpus × huge-query sweeps prefer
-IVFPQ, whose grid joins only probed (cluster, query-block) pairs.
+Scale envelope (unbounded tables): the grid replicates the compact code
+blocks once per query block (ceil(nq/512)); with m-byte codes that is a
+dim·4/m-fold smaller payload than replicating vectors. For full-corpus
+× huge-query sweeps prefer IVFPQ, whose grid joins only probed
+(cluster, query-block) pairs.
 """
 
 from __future__ import annotations
@@ -226,42 +225,39 @@ class PQStrategy(RerankStrategy):
         return new_df.withColumn(CODE_COL, self._encode_kernel(metric)(F.col("vector")))
 
     # ---- query: ADC candidates (RerankStrategy re-ranks them) --------
-    def _grid(self, corpus: DataFrame, queries: DataFrame, metric: Metric):
-        """(grid, probe_mask) for the code scan: corpus code blocks ×
-        query blocks, no probe mask. Codes fold into ceil(n/262144)
-        density-sized hash blocks (narrow shuffle of m-byte codes — the
-        compact payload affords 4× the dense default, and every extra
-        block re-computes the per-cell ADC tables and widens the
-        candidate merge)."""
-        from vicinity_spark.operators.grid import corpus_blocks, query_blocks
-
-        blocks = corpus_blocks(corpus, CODE_COL, target_rows=262_144)
-        return blocks.crossJoin(query_blocks(queries)), None
-
     def _cell_tables(self, metric: Metric):
-        """``tables(Q, key)`` → the ADC tables one grid cell (``key``:
-        its scan_cells key columns) scores its queries with. The
-        function closes over the converted codebooks, not the strategy:
-        one conversion per query plan and a closure no larger than the
-        books."""
+        """``tables(Q, key)`` → the ADC tables one cell (``key``: its
+        cell key columns) scores its queries with. The function closes
+        over the converted codebooks, not the strategy: one conversion
+        per query plan and a closure no larger than the books."""
         books = self._codebooks()
         return lambda Q, key: adc_tables(Q, books, metric)
 
     def _candidates(
         self, corpus: DataFrame, queries: DataFrame, kk: int, metric: Metric
     ) -> DataFrame:
-        """Block-grid ADC scan over the `_grid` cells: each cell builds
-        its queries' tables (`_cell_tables`) and emits per-query top-kk
-        by pure lookups — D[q, n] = Σ_j tables[q, j, codes[n, j]] —
-        via chunked argpartition (grid.cell_topk). No driver collect of
-        the query table."""
-        from vicinity_spark.operators.grid import cell_topk, scan_cells
+        """ADC scan over `grid.cell_scan` cells: each cell builds its
+        queries' tables (`_cell_tables`) and emits per-query top-kk by
+        pure lookups — D[q, n] = Σ_j tables[q, j, codes[n, j]] — via
+        chunked argpartition (grid.cell_topk). On the unbounded grid,
+        codes fold into ceil(n/262144) density-sized hash blocks: the
+        m-byte payload affords 4× the dense default, and every extra
+        block re-computes the per-cell ADC tables and widens the
+        candidate merge."""
+        from vicinity_spark.operators.grid import cell_scan, cell_topk
 
         m = self.params["m"]
-        grid, probe_mask = self._grid(corpus, queries, metric)
         tables = self._cell_tables(metric)
 
         def kernel(ids, codes, qids, Q, key):
             yield cell_topk(qids, ids, codes, tables(Q, key), m, kk)
 
-        return scan_cells(grid, kernel, _KNN_SCHEMA, probe_mask)
+        return cell_scan(
+            corpus,
+            queries,
+            CODE_COL,
+            kernel,
+            _KNN_SCHEMA,
+            lists=self._lists(metric),
+            target_rows=262_144,
+        )

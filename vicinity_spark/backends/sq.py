@@ -78,29 +78,21 @@ class SQStrategy(RerankStrategy):
         return new_df.withColumn(CODE_COL, self._encode_expr())
 
     # ---- phase 1: approximate candidates over codes ------------------
-    def _grid(self, corpus: DataFrame, queries: DataFrame, metric: Metric):
-        """(grid, probe_mask) for the code scan: corpus code blocks ×
-        query blocks, no probe mask."""
-        from vicinity_spark.operators.grid import corpus_blocks, query_blocks
-
-        return corpus_blocks(corpus, CODE_COL).crossJoin(query_blocks(queries)), None
-
     def _candidates(
         self, corpus: DataFrame, queries: DataFrame, kk: int, metric: Metric
     ) -> DataFrame:
-        """Block-grid quantized scan over the `_grid` cells (same shape
-        as the PQ path): dequantize + chunked partial top-k inside each
-        grid cell. The codebook (2×dim doubles) rides in the closure;
-        query vectors arrive through the join — no driver collect of
-        the query table."""
-        from vicinity_spark.operators.grid import dense_cell_topk, scan_cells
+        """Quantized scan over `grid.cell_scan` cells (same shape as the
+        PQ path): dequantize + chunked partial top-k inside each cell.
+        The codebook (2×dim doubles) rides in the closure."""
+        from vicinity_spark.operators.grid import cell_scan, dense_cell_topk
 
         mins = np.asarray(self.params["mins"])
         scales = np.asarray(self.params["scales"])
-        grid, probe_mask = self._grid(corpus, queries, metric)
 
         def kernel(ids, codes, qids, Q, key):
             X = codes.astype(np.float64) * scales[None, :] + mins[None, :]
             yield dense_cell_topk(qids, ids, X, Q, metric, kk)
 
-        return scan_cells(grid, kernel, _KNN_SCHEMA, probe_mask)
+        return cell_scan(
+            corpus, queries, CODE_COL, kernel, _KNN_SCHEMA, lists=self._lists(metric)
+        )

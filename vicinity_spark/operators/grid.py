@@ -1,20 +1,35 @@
-"""Block-grid scan scaffolding shared by the quantized strategies
-(backends/sq.py, pq.py and their IVF composites ivfsq.py, ivfpq.py),
-the exact `grid` top-k and range algorithms and the `neardup_join`
-self-join in operators/knn.py, and (through `dense_cell_topk`) the
-`partial` algorithm there.
+"""Cell scans shared by the quantized strategies (backends/sq.py,
+pq.py and their IVF composites ivfsq.py, ivfpq.py), IVF
+(backends/ivf.py), the exact `partial` / `grid` top-k and range
+algorithms and the `neardup_join` self-join in operators/knn.py.
 
-The shape: fold the corpus scan payload into block rows
-(collect_list), fold the query table into ~512-query block rows, join
-the two block relations (crossJoin for full scans, an equi-join on
-cluster for pruned scans, a block-pair theta join for the self-join),
-and run the scoring kernel per grid cell through `scan_cells` — the
-one mapInPandas over grid cells — with chunked kernels so a distance
-matrix never exceeds _QBLOCK × _CCHUNK doubles. Everything the kernel
-needs beyond the cell row (codebooks, centroids) is closure-small;
-query vectors arrive through the join — NO driver collect anywhere, so
-the plan holds at any query-batch size (the broadcast/driver-matrix
-alternative bounds the batch at driver memory).
+Every scan hands cells to a kernel ``kernel(ids, payload, qids, Q,
+key)`` — id-sorted corpus ids and payload, the queries scored against
+them, the cell's key columns — and the kernels are chunked so a
+distance matrix never exceeds _QBLOCK × _CCHUNK doubles. Two plans
+deliver the cells; `cell_scan` routes between them
+(knn.bounded_query_matrix decides):
+
+- The block grid, for UNBOUNDED query tables: fold the corpus scan
+  payload into block rows (collect_list), fold the query table into
+  ~512-query block rows, join the two block relations (crossJoin for
+  full scans, an equi-join on cluster for pruned scans —
+  `cluster_grid` —, a block-pair theta join for the self-join), and
+  run the kernel per grid cell through `scan_cells`. Query vectors
+  arrive through the join — no driver collect, so the plan holds at
+  any query-table size.
+- Its bounded twin `probe_scan`, for a batch of at most
+  AUTO_GRID_QUERY_ROWS rows (every facade query): the batch is
+  collected once and broadcast, IVF lists are probed on the driver and
+  pushed into the corpus scan as ``__cluster IN (...)``, and ONE
+  mapInPandas over the corpus partitions cuts each Arrow batch into
+  cells (one per inverted list, or the whole batch) with the queries
+  in _QBLOCK slices — no fold, no join, no count job. Consumers: the
+  exact ``partial`` top-k, IVF's scoring, and the candidate scans of
+  sq, pq, ivfsq, ivfpq and ivfpqr.
+
+Everything a kernel needs beyond its cell (codebooks, centroids) is
+closure-small.
 
 Reference analog: none (vicinity scores one in-memory matrix,
 basic.py:195-204); this is the distributed decomposition of the same
@@ -271,14 +286,26 @@ def corpus_blocks(
     )
 
 
-def cluster_grid(
-    corpus: DataFrame,
-    queries: DataFrame,
-    centroids,
-    nprobe: int,
-    payload_col: str,
-    probe_space=None,
-):
+class InvertedLists:
+    """The probe side of an IVF index: each query probes its ``nprobe``
+    nearest centroids (`nearest_centroids`), taken in ``space`` — the
+    space the lists were clustered in (identity when None). Small
+    enough to ride in a task closure."""
+
+    def __init__(self, centroids, nprobe: int, space=None):
+        self.C = np.asarray(centroids, dtype=np.float64)
+        self.Csq = (self.C * self.C).sum(axis=1)
+        self.nprobe = min(int(nprobe), len(self.C))
+        self.space = space
+
+    def probes(self, Q: np.ndarray) -> np.ndarray:
+        """nq × nprobe probed list ids."""
+        if self.space is not None:
+            Q = self.space(Q)
+        return nearest_centroids(Q, self.C, self.nprobe, self.Csq)[0]
+
+
+def cluster_grid(corpus: DataFrame, queries: DataFrame, lists: InvertedLists, payload_col: str):
     """Cluster-keyed block grid for the IVF composites (ivfsq, ivfpq):
     one block row per inverted list (`__cluster` plus the collected
     ids and `payload_col`), joined ONLY to the query blocks that probe
@@ -290,19 +317,12 @@ def cluster_grid(
     Returns ``(grid, probe_mask)``. A cell holds the whole query
     block, so ``probe_mask(Q, cluster)`` re-derives each query's probe
     set (cheap) and marks the queries that probe the cell's cluster —
-    the only ones `scan_cells` hands the cell's kernel. ``probe_space``
-    maps query vectors into the space the lists were clustered in
-    (identity when None)."""
+    the only ones `scan_cells` hands the cell's kernel."""
     from pyspark.sql.types import ArrayType, IntegerType
 
     from vicinity_spark.backends.ivf import CLUSTER_COL
 
-    C = np.asarray(centroids, dtype=np.float64)
-    Csq = (C * C).sum(axis=1)
-    nprobe = min(nprobe, len(C))
-    space = probe_space or (lambda Q: Q)
-
-    lists = (
+    lists_df = (
         corpus.select("id", payload_col, CLUSTER_COL)
         .groupBy(CLUSTER_COL)
         .agg(
@@ -316,8 +336,7 @@ def cluster_grid(
         out = []
         for vecs in qv:
             Q = np.vstack([np.asarray(v) for v in vecs]).astype(np.float64)
-            ps, _ = nearest_centroids(space(Q), C, nprobe, Csq)
-            out.append(np.unique(ps).astype(np.int32))
+            out.append(np.unique(lists.probes(Q)).astype(np.int32))
         return pd.Series(out)
 
     grid = (
@@ -325,12 +344,11 @@ def cluster_grid(
         .withColumn("__probes", block_probes("__qvecs"))
         .select("*", F.explode("__probes").alias(CLUSTER_COL))
         .drop("__probes")
-        .join(lists, CLUSTER_COL)
+        .join(lists_df, CLUSTER_COL)
     )
 
     def probe_mask(Q: np.ndarray, cluster: int) -> np.ndarray:
-        probes, _ = nearest_centroids(space(Q), C, nprobe, Csq)
-        return (probes == cluster).any(axis=1)
+        return (lists.probes(Q) == cluster).any(axis=1)
 
     return grid, probe_mask
 
@@ -386,6 +404,104 @@ def _scan(kernel, keys, probe_mask, batches: Iterator[pd.DataFrame]):
                     continue
                 qids, Q = qids[mask], Q[mask]
             yield from kernel(ids, payload, qids, Q, key)
+
+
+def cell_scan(
+    corpus: DataFrame,
+    queries: DataFrame,
+    payload_col: str,
+    kernel,
+    schema,
+    *,
+    lists: "InvertedLists | None" = None,
+    target_rows: int = _CTARGET,
+    bounded: bool = True,
+) -> DataFrame:
+    """The query scan of every cell kernel: ``kernel(ids, payload, qids,
+    Q, key)`` over ``corpus`` (``id`` plus ``payload_col``, and
+    ``__cluster`` when ``lists`` is given) against ``queries``
+    (``query_id``, ``qvec``). A bounded batch (`bounded_query_matrix`)
+    runs `probe_scan`; an unbounded one — or any batch when ``bounded``
+    is False — runs the block grid: `cluster_grid` with ``lists``,
+    else ``corpus_blocks`` (``target_rows`` per block) × `query_blocks`,
+    through `scan_cells`."""
+    from vicinity_spark.operators.knn import bounded_query_matrix
+
+    batch = bounded_query_matrix(queries) if bounded else None
+    if batch is not None:
+        return probe_scan(corpus, payload_col, batch, kernel, schema, lists)
+    if lists is None:
+        blocks = corpus_blocks(corpus, payload_col, target_rows=target_rows)
+        grid, probe_mask = blocks.crossJoin(query_blocks(queries)), None
+    else:
+        grid, probe_mask = cluster_grid(corpus, queries, lists, payload_col)
+    return scan_cells(grid, kernel, schema, probe_mask)
+
+
+def probe_scan(
+    corpus: DataFrame,
+    payload_col: str,
+    batch,
+    kernel,
+    schema,
+    lists: "InvertedLists | None" = None,
+) -> DataFrame:
+    """The bounded twin of `cluster_grid` + `scan_cells`: ONE
+    mapInPandas over the corpus partitions, with the driver-collected
+    batch ``(qids, Q)`` broadcast — no query fold, no corpus fold, no
+    join. With ``lists`` the queries are probed on the driver and
+    ``__cluster IN (<probed union>)`` is pushed into the corpus scan
+    (a partition filter on a reloaded ``partitionBy(__cluster)``
+    store); each Arrow batch is then cut into one cell per inverted
+    list, handed only the queries that probe that list. Without
+    ``lists`` each Arrow batch is one cell with every query. Cells are
+    id-sorted like `cell_arrays`' and the queries go to the kernel in
+    ``_QBLOCK`` slices, so a kernel's matrices stay within _QBLOCK ×
+    _CCHUNK doubles as on the grid."""
+    from vicinity_spark.backends.ivf import CLUSTER_COL
+    from vicinity_spark.session import local_frame
+
+    qids, Q = batch
+    spark = corpus.sparkSession
+    if len(qids) == 0:
+        return local_frame(spark, {f.name: [] for f in schema.fields}, schema)
+    cols, members = ["id", payload_col], None
+    if lists is not None:
+        probes = lists.probes(Q)
+        union = np.unique(probes)
+        members = {int(c): np.nonzero((probes == c).any(axis=1))[0] for c in union}
+        corpus = corpus.where(F.col(CLUSTER_COL).isin([int(c) for c in union]))
+        cols.append(CLUSTER_COL)
+    bq = spark.sparkContext.broadcast((qids, Q, members))
+    fn = partial(_probe_scan, kernel, payload_col, bq)
+    fn.__name__ = "probe_scan"  # the UDF's name in plan dumps
+    return corpus.select(*cols).mapInPandas(fn, schema)
+
+
+def _probe_scan(kernel, payload_col, bq, batches: Iterator[pd.DataFrame]):
+    from vicinity_spark.backends.ivf import CLUSTER_COL
+
+    qids, Q, members = bq.value
+    every = np.arange(len(qids))
+    for pdf in batches:
+        if not len(pdf):
+            continue
+        ids = pdf["id"].to_numpy().astype(np.int64)
+        payload = np.vstack(pdf[payload_col].to_numpy())
+        if members is None:
+            cells = [({}, np.arange(len(ids)), every)]
+        else:
+            cl = pdf[CLUSTER_COL].to_numpy()
+            cells = [
+                ({CLUSTER_COL: int(c)}, np.nonzero(cl == c)[0], members[int(c)])
+                for c in np.unique(cl)
+            ]
+        for key, rows, qs in cells:
+            rows = rows[np.argsort(ids[rows], kind="stable")]
+            cids, cpay = ids[rows], payload[rows]
+            for s in range(0, len(qs), _QBLOCK):
+                b = qs[s : s + _QBLOCK]
+                yield from kernel(cids, cpay, qids[b], Q[b], key)
 
 
 def det_topk_idx(D: np.ndarray, cap: int) -> np.ndarray:

@@ -18,14 +18,19 @@ Three physical strategies for top-k:
   shuffles all q×n candidate rows by query_id, so it is the right plan
   only when q×n is modest or q is large relative to n.
 
-- ``partial``: per-corpus-partition vectorized top-k inside
-  `mapInPandas` (numpy matrix kernel — the distributed analog of the
-  reference's 1024-row batched matmul, basic.py:195-204), then a final
-  merge window over the surviving q×k×num_partitions rows. The shuffle
+- ``partial`` (and ``auto``, the default): the bounded broadcast-query
+  scan (grid.probe_scan). A batch of at most AUTO_GRID_QUERY_ROWS
+  rows is collected to the driver once (`bounded_query_matrix`) and
+  broadcast; ONE mapInPandas over the corpus partitions runs the
+  vectorized top-k kernel (grid.dense_cell_topk — the distributed
+  analog of the reference's 1024-row batched matmul,
+  basic.py:195-204) per Arrow batch, the queries in _QBLOCK slices so
+  every distance matrix stays within _QBLOCK × _CCHUNK doubles, then a
+  final merge window over the surviving q×k×batches rows. The shuffle
   is bounded by q×k×partitions regardless of corpus size — this is the
   plan that survives a 100 TB corpus: the full cross product is never
-  materialized and never shuffled. The query matrix is collected to
-  the driver and broadcast, so the query batch must be bounded.
+  materialized and never shuffled. A larger query table runs as
+  ``grid``.
 
 - ``grid``: corpus blocks × query blocks (operators/grid.py), each
   cell scored by the same chunked kernel as ``partial``, then the same
@@ -50,10 +55,10 @@ from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 from vicinity_spark.datatypes import Metric
 from vicinity_spark.functions.metrics import clip_distance, distance_expr
 from vicinity_spark.operators.grid import (
+    cell_scan,
     corpus_blocks,
     dense_cell_topk,
     dense_cell_within,
-    query_blocks,
     scan_cells,
 )
 
@@ -167,23 +172,24 @@ def score_joined(
 
 
 def query_matrix(queries: DataFrame, id_col: str = "query_id", vec_col: str = "qvec"):
-    """(qids, Q) numpy arrays of the query batch, via the Arrow path.
-    An empty batch yields (0,)-shaped ids and a (0, 0) matrix."""
-    qpdf = queries.select(id_col, vec_col).toPandas()
-    if len(qpdf) == 0:
+    """(qids, Q) numpy arrays of the query batch. A ``LocalRelation``
+    (``session.local_frame`` batches) already holds its rows on the
+    driver, so ``collect()`` reads them without a Spark job; any other
+    plan comes through the Arrow path (one job). An empty batch yields
+    (0,)-shaped ids and a (0, 0) matrix."""
+    q = queries.select(id_col, vec_col)
+    plan = _optimized_plan(q)
+    if plan is not None and plan.getClass().getSimpleName() == "LocalRelation":
+        rows = q.collect()
+        qids = [r[0] for r in rows]
+        vecs = [r[1] for r in rows]
+    else:
+        qpdf = q.toPandas()
+        qids, vecs = qpdf[id_col].to_numpy(), qpdf[vec_col]
+    if len(qids) == 0:
         return np.empty(0, np.int64), np.empty((0, 0), np.float64)
-    qids = qpdf[id_col].to_numpy().astype(np.int64)
-    Q = np.vstack([np.asarray(v, dtype=np.float64) for v in qpdf[vec_col]])
-    return qids, Q
-
-
-def collect_query_matrix(queries: DataFrame, id_col: str = "query_id", vec_col: str = "qvec"):
-    """Collect the query batch (Arrow path) and ship it as a torrent
-    broadcast: one copy per executor instead of a pickled closure copy
-    per task — the pattern that holds for large query batches."""
-    return queries.sparkSession.sparkContext.broadcast(
-        query_matrix(queries, id_col, vec_col)
-    )
+    Q = np.vstack([np.asarray(v, dtype=np.float64) for v in vecs])
+    return np.asarray(qids, dtype=np.int64), Q
 
 
 def score_pairs(
@@ -268,72 +274,79 @@ def join_payload(
     return out.select(*cols, *(payload_cols or []))
 
 
-def _partial_topk(
-    corpus: DataFrame,
-    id_col: str,
-    vector_col: str,
-    bq,  # Broadcast[(qids, Q)]
-    k: int,
-    metric: Metric,
-) -> DataFrame:
-    """Per-partition vectorized top-k: emits ≤ q×k rows per Arrow batch."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        qids, Q = bq.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            X = np.vstack(pdf[vector_col].to_numpy()).astype(np.float64)
-            ids = pdf[id_col].to_numpy()
-            # sort the batch by id: the kernel breaks exact-distance ties
-            # (duplicate vectors) by position, so the emitted pool — and
-            # therefore the final window result — is deterministic and
-            # matches the oracle's ORDER BY d, id at any layout; emitted
-            # distances are per-pair rescored (see grid._merge_parts)
-            order = np.argsort(ids, kind="stable")
-            yield dense_cell_topk(qids, ids[order], X[order], Q, metric, k)
-
-    return corpus.select(id_col, vector_col).mapInPandas(fn, _KNN_SCHEMA)
-
-
-def _dense_grid(corpus, queries, id_col, vector_col, query_id_col, query_vector_col):
-    """Dense corpus blocks × query blocks — the exact `grid` algorithms'
-    cell relation (operators/grid.py)."""
-    q = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        F.col(query_vector_col).alias("qvec"),
-    )
-    return corpus_blocks(
-        corpus.select(F.col(id_col).alias("id"), F.col(vector_col).alias("vector")),
-        "vector",
-    ).crossJoin(query_blocks(q))
-
-
-# Past this many query rows, `auto` routes to the block-grid plan:
-# `partial` materializes the nq×dim query matrix on the driver
-# (collect_query_matrix), which stops being a bounded structure once
-# the query side is itself a large table. 8192 × dim=1024 × 8 B ≈
-# 64 MB is a comfortable driver/broadcast ceiling; past it, grid's
-# join-delivered query blocks are the plan that holds.
+# Past this many query rows, a batch is unbounded and routes to the
+# block-grid plan: the bounded scan materializes the nq×dim query
+# matrix on the driver (bounded_query_matrix), which stops being a
+# bounded structure once the query side is itself a large table.
+# 8192 × dim=1024 × 8 B ≈ 64 MB is a comfortable driver/broadcast
+# ceiling; past it, grid's join-delivered query blocks are the plan
+# that holds.
 AUTO_GRID_QUERY_ROWS = 8192
 
 
-def _queries_are_bounded(queries: DataFrame, limit: int) -> bool:
-    """Is the query table provably ≤ limit rows — cheaply?
-
-    First consults the optimizer's ``maxRows`` (free: defined for
-    LocalRelation — e.g. ``session.local_frame`` batches — and LIMIT'd
-    plans; a ``createDataFrame(<list>)`` frame has none). Unknown → a
-    limit-bounded count job (scans only until limit+1 rows surface,
-    never the full table).
-    """
+def _optimized_plan(df: DataFrame):
+    """df's optimized JVM logical plan (None where there is none to
+    read: Spark Connect)."""
     try:
-        mr = queries._jdf.queryExecution().optimizedPlan().maxRows()
-        if mr.isDefined():
-            return int(mr.get()) <= limit
+        return df._jdf.queryExecution().optimizedPlan()
     except Exception:
-        pass  # Spark Connect / plan shapes without maxRows
+        return None
+
+
+def _max_rows(df: DataFrame):
+    """The optimizer's ``maxRows`` bound, or None when it has none
+    (defined for LocalRelation — ``session.local_frame`` batches — and
+    LIMIT'd plans; a ``createDataFrame(<list>)`` or cached frame has
+    none)."""
+    plan = _optimized_plan(df)
+    if plan is None or not plan.maxRows().isDefined():
+        return None
+    return int(plan.maxRows().get())
+
+
+def _queries_are_bounded(queries: DataFrame, limit: int) -> bool:
+    """Is the query table provably ≤ limit rows — cheaply? The
+    optimizer's ``maxRows`` when defined (free); otherwise a
+    limit-bounded count job (scans only until limit+1 rows surface,
+    never the full table). For plans that only need the decision
+    (threshold_join's broadcast); the kNN scans decide and collect in
+    one step with `bounded_query_matrix`."""
+    mr = _max_rows(queries)
+    if mr is not None:
+        return mr <= limit
     return queries.limit(limit + 1).count() <= limit
+
+
+def bounded_query_matrix(
+    queries: DataFrame, id_col: str = "query_id", vec_col: str = "qvec"
+):
+    """The one bounded/unbounded router of the kNN scans: ``(qids, Q)``
+    when the batch has at most AUTO_GRID_QUERY_ROWS rows, else None
+    (the caller then plans for an unbounded query table).
+
+    With a defined ``maxRows`` the decision is free and only a bounded
+    batch is collected (a ``local_frame`` batch without a job, see
+    `query_matrix`). Otherwise ``limit(AUTO_GRID_QUERY_ROWS + 1)`` is
+    collected once — one job that both decides and delivers — and the
+    batch is unbounded exactly when that many rows came back."""
+    mr = _max_rows(queries)
+    if mr is not None:
+        if mr > AUTO_GRID_QUERY_ROWS:
+            return None
+        return query_matrix(queries, id_col, vec_col)
+    qids, Q = query_matrix(queries.limit(AUTO_GRID_QUERY_ROWS + 1), id_col, vec_col)
+    return None if len(qids) > AUTO_GRID_QUERY_ROWS else (qids, Q)
+
+
+def _dense_inputs(corpus, queries, id_col, vector_col, query_id_col, query_vector_col):
+    """(corpus as id, vector; queries as query_id, qvec) — the exact
+    cell scans' inputs."""
+    return (
+        corpus.select(F.col(id_col).alias("id"), F.col(vector_col).alias("vector")),
+        queries.select(
+            F.col(query_id_col).alias("query_id"), F.col(query_vector_col).alias("qvec")
+        ),
+    )
 
 
 def knn_join(
@@ -356,28 +369,18 @@ def knn_join(
     ascending distance (ties broken by id — the reference's argsort is
     positional-stable, basic.py:200-204).
 
-    ``algorithm="auto"`` routing note: deciding partial-vs-grid may run
-    an EAGER bounded probe on the query side at plan-construction time —
-    free when the optimizer's ``maxRows`` is defined (local batches,
-    LIMIT'd plans), otherwise a ``limit(n+1).count()`` job that executes
-    the query-side pipeline once up to n+1 rows. If the query side is an
-    expensive lazily-derived pipeline, pass ``algorithm="partial"`` or
-    ``"grid"`` explicitly to skip the probe.
+    ``algorithm="auto"`` is ``partial``. Routing a batch to the bounded
+    scan or the grid (`bounded_query_matrix`) may run one EAGER job on
+    the query side at plan-construction time: none when the optimizer's
+    ``maxRows`` is defined (local batches, LIMIT'd plans), otherwise a
+    ``limit(n+1)`` collect that executes the query-side pipeline once
+    up to n+1 rows and delivers the batch. If the query side is an
+    expensive lazily-derived table, pass ``algorithm="grid"`` to skip
+    it.
     """
     if k < 1:
         raise ValueError("k must be greater than 0")  # basic.py:187-188
     metric = Metric.from_string(metric)
-    if algorithm == "auto":
-        # bounded batch → `partial` (driver-collected query matrix,
-        # shuffle bounded by q×k×partitions); large/unbounded query
-        # table → `grid` (query blocks arrive by join, no driver
-        # materialization). See AUTO_GRID_QUERY_ROWS.
-        algorithm = (
-            "partial"
-            if _queries_are_bounded(queries, AUTO_GRID_QUERY_ROWS)
-            else "grid"
-        )
-
     if algorithm == "window":
         q = queries.select(
             F.col(query_id_col).alias("query_id"),
@@ -394,27 +397,22 @@ def knn_join(
             dist.alias("distance"),
             *(payload_cols or []),
         )
-    elif algorithm == "partial":
-        bq = collect_query_matrix(queries, query_id_col, query_vector_col)
-        if bq.value[0].size == 0:
-            local = corpus.sparkSession.createDataFrame([], _KNN_SCHEMA)
-        else:
-            local = _partial_topk(corpus, id_col, vector_col, bq, k, metric)
-    elif algorithm == "grid":
-        # exact block grid (operators/grid.py): same kernel math and
-        # bounded-merge shape as `partial`, but the query batch arrives
-        # through a join instead of a driver collect + broadcast — the
-        # plan for UNBOUNDED query tables (a 10M-row query side would
-        # materialize nq×dim on the driver under `partial`).
-        grid = _dense_grid(
-            corpus, queries, id_col, vector_col, query_id_col, query_vector_col
-        )
-        local = scan_cells(
-            grid,
+    elif algorithm in ("auto", "partial", "grid"):
+        # `partial`: the bounded broadcast-query scan when the batch is
+        # bounded (driver-collected query matrix, shuffle bounded by
+        # q×k×partitions), else — and always for `grid` — the block
+        # grid, whose query blocks arrive by join: a 10M-row query side
+        # would materialize nq×dim on the driver. Same kernel either way.
+        local = cell_scan(
+            *_dense_inputs(
+                corpus, queries, id_col, vector_col, query_id_col, query_vector_col
+            ),
+            "vector",
             lambda ids, X, qids, Q, key: [
                 dense_cell_topk(qids, ids, X.astype(np.float64), Q, metric, k)
             ],
             _KNN_SCHEMA,
+            bounded=algorithm != "grid",
         )
     else:
         raise ValueError(f"unknown algorithm {algorithm!r}")
@@ -472,15 +470,16 @@ def threshold_join(
         )
     if algorithm == "grid":
         t = float(threshold)
-        grid = _dense_grid(
-            corpus, queries, id_col, vector_col, query_id_col, query_vector_col
-        )
-        out = scan_cells(
-            grid,
+        out = cell_scan(
+            *_dense_inputs(
+                corpus, queries, id_col, vector_col, query_id_col, query_vector_col
+            ),
+            "vector",
             lambda ids, X, qids, Q, key: dense_cell_within(
                 qids, ids, X.astype(np.float64), Q, metric, t
             ),
             _KNN_SCHEMA,
+            bounded=False,
         )
         return join_payload(out, corpus, payload_cols, RADIUS_COLS, id_col=id_col)
     if algorithm != "expr":

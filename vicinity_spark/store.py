@@ -254,7 +254,10 @@ class VectorStore:
         """Batched k-NN; returns the reference's nested-list shape
         (vicinity.py:114-138). `where` enables filtered search."""
         qdf, n = self._queries_df(vectors)
-        rows = self.query_df(qdf, k=k, where=where).orderBy("query_id", "rank").collect()
+        # at most n·k rows: sorted here, not by a Spark orderBy (a
+        # range-sampling job and a shuffle)
+        rows = self.query_df(qdf, k=k, where=where).collect()
+        rows.sort(key=lambda r: (r["query_id"], r["rank"]))
         out: "list[list[tuple[Any, float]]]" = [[] for _ in range(n)]
         for r in rows:
             out[r["query_id"]].append((json.loads(r["item_json"]), float(r["distance"])))
