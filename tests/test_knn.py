@@ -1,3 +1,4 @@
+import itertools
 from types import SimpleNamespace
 
 import numpy as np
@@ -447,16 +448,28 @@ def test_knn_auto_routes_large_query_tables_to_grid(spark, monkeypatch):
     assert res.count() == nq * 3
 
 
-def test_queries_are_bounded_scan_fallback(spark, tmp_path):
-    """Parquet scans have no optimizer maxRows → the bounded check
-    falls back to a limit-bounded count, correct in both directions."""
-    from vicinity_spark.operators.knn import _queries_are_bounded
+def test_queries_are_bounded_scan_fallback(spark, tmp_path, monkeypatch):
+    """Parquet scans have no optimizer maxRows → the bounded router
+    falls back to one limit-bounded collect, correct in both
+    directions, and threshold_join's auto routes on the same answer."""
+    import vicinity_spark.operators.knn as knn_mod
+    from vicinity_spark.operators.knn import bounded_query_matrix
 
     p = str(tmp_path / "q.parquet")
-    spark.range(100).write.parquet(p)
+    spark.range(100).select(
+        F.col("id").alias("query_id"), F.array(F.col("id").cast("double")).alias("qvec")
+    ).write.parquet(p)
     scan = spark.read.parquet(p)
-    assert _queries_are_bounded(scan, 100)
-    assert not _queries_are_bounded(scan, 99)
+    corpus = spark.createDataFrame([(0, [1.0])], "id long, vector array<double>")
+    monkeypatch.setattr(knn_mod, "AUTO_GRID_QUERY_ROWS", 100)
+    qids, Q = bounded_query_matrix(scan)
+    assert sorted(qids.tolist()) == list(range(100)) and Q.shape == (100, 1)
+    plan = threshold_join(corpus, scan, 0.5, "euclidean")._jdf.queryExecution()
+    assert "BroadcastNestedLoopJoin" in plan.executedPlan().toString()
+    monkeypatch.setattr(knn_mod, "AUTO_GRID_QUERY_ROWS", 99)
+    assert bounded_query_matrix(scan) is None
+    plan = threshold_join(corpus, scan, 0.5, "euclidean")._jdf.queryExecution()
+    assert "MapInPandas" in plan.optimizedPlan().toString()
 
 
 def test_knn_empty_query_table_all_algorithms(spark):
@@ -1352,10 +1365,13 @@ def test_probe_scan_bounded_matches_brute_force(metric, monkeypatch):
     into _QBLOCK blocks before any kernel runs: with _QBLOCK and
     _CCHUNK patched small, every distance matrix stays within them,
     and the top-k (distance, id) cut of the emitted rows equals a numpy
-    brute force — flat (one cell per Arrow batch) and over inverted
-    lists (one cell per list in a batch, only the queries that probe
-    it), duplicate vectors included, and for the range form (every
-    row, kk = the cell's width) the IVF threshold search uses."""
+    brute force — flat and over inverted lists (only the queries that
+    probe a list score its cell), duplicate vectors included, and for
+    the range form (every row, kk = the cell's width) the IVF threshold
+    search uses. Cells gather Arrow batches up to ``target_rows`` rows:
+    one piece per cell (1), cuts between batches (20) and one cell per
+    list (10**6) give the same rows, and no cell passes the target
+    unless a single batch piece does."""
     import numpy as np
     import pandas as pd
 
@@ -1399,19 +1415,25 @@ def test_probe_scan_bounded_matches_brute_force(metric, monkeypatch):
         for b in np.array_split(order, 3)
     ]
 
-    def run(kk, with_lists):
+    def run(kk, with_lists, target_rows):
+        cells = []
+
         def kernel(cids, X, cq, Qb, key):
+            cells.append(len(cids))
             yield grid.dense_cell_topk(cq, cids, X, Qb, mm, kk or len(cids))
 
         bq = SimpleNamespace(value=(qids, Q, members if with_lists else None))
         batches = [f[np.isin(f["__cluster"], list(members))] if with_lists else f for f in frames]
         shapes.clear()
-        out = pd.concat(list(grid._probe_scan(kernel, "vector", bq, iter(batches))))
+        out = pd.concat(
+            list(grid._probe_scan(kernel, "vector", target_rows, bq, iter(batches)))
+        )
         assert shapes and all(r <= 4 and c <= 5 for r, c in shapes)
+        assert max(cells) <= max(target_rows, max(len(f) for f in batches))
         assert not out.duplicated(["query_id", "id"]).any()
         return out
 
-    for with_lists in (False, True):
+    for with_lists, target_rows in itertools.product((False, True), (1, 20, 10**6)):
         for qi in range(nq):
             rows = (
                 np.nonzero(np.isin(cluster, probes[qi]))[0] if with_lists else np.arange(n)
@@ -1419,10 +1441,10 @@ def test_probe_scan_bounded_matches_brute_force(metric, monkeypatch):
             d = _np_pairwise(mm, np.repeat(Q[qi : qi + 1], len(rows), axis=0), V[rows])
             truth = sorted(zip(d.tolist(), ids[rows].tolist()))
             for kk, want in ((k, truth[:k]), (2, truth[:2]), (None, truth)):
-                out = run(kk, with_lists)
+                out = run(kk, with_lists, target_rows)
                 mine = out[out["query_id"] == qids[qi]]
                 got = sorted(zip(mine["distance"].tolist(), mine["id"].tolist()))
-                assert got[: len(want)] == want, (with_lists, kk, qi)
+                assert got[: len(want)] == want, (with_lists, target_rows, kk, qi)
                 if kk is None:
                     assert len(got) == len(truth)
     # the duplicate rows tie at the query's own vector

@@ -128,13 +128,14 @@ def test_vocab_counts_prune_scan(spark):
 
 
 @pytest.mark.parametrize("backend", ["basic", "ivf"])
-def test_serving_path_scans_no_python_rdd(spark, backend):
+def test_serving_path_scans_no_python_rdd(spark, backend, monkeypatch):
     """The facade's query and insert batches are JVM LocalRelations:
     the query, threshold and post-insert query plans have no leaf that
     runs Python tasks just to produce its rows, and the query batch has
     a maxRows, so knn routing decides without a probe job."""
     import numpy as np
 
+    import vicinity_spark.operators.knn as knn_mod
     from vicinity_spark.plans import python_rdd_scans
     from vicinity_spark.store import VectorStore
 
@@ -153,11 +154,13 @@ def test_serving_path_scans_no_python_rdd(spark, backend):
     for what, df in plans.items():
         assert python_rdd_scans(df) == [], what
         assert "Scan ExistingRDD" not in explain_str(df, "simple"), what
-    # the guard itself sees a list-built frame (bounded ANN batches are
-    # collected to the driver, so only the frame itself is sure to hold
-    # its scan)
+    # the guard itself sees a list-built frame through a store plan. A
+    # bounded IVF batch is collected to the driver, so its plan no
+    # longer holds the frame: there the unbounded plan is checked
     listed = spark.createDataFrame([(0, [0.0] * 8)], "query_id long, qvec array<float>")
-    assert python_rdd_scans(listed)
+    if backend == "ivf":
+        monkeypatch.setattr(knn_mod, "AUTO_GRID_QUERY_ROWS", -1)
+    assert python_rdd_scans(store.threshold_df(listed, 0.5))
 
 
 def _count_jobs(spark, fn) -> int:

@@ -49,7 +49,7 @@ class ExactStrategy(IndexStrategy):
         max_k: int = 100,
     ) -> DataFrame:
         # exact range search: max_k does not cap it (basic.py:149-172).
-        # params["algorithm"] names a KNN plan (window/partial/grid/auto);
+        # params["algorithm"] names a KNN plan (window/auto/grid; partial = auto);
         # only "grid" has a threshold twin — map everything else to the
         # auto router so an unbounded query table is never force-broadcast
         algo = self.params.get("threshold_algorithm") or (

@@ -126,18 +126,12 @@ class IVFStrategy(IndexStrategy):
         path (ts + qvec, so scoring never re-joins the query stream)."""
         from pyspark.sql.types import ArrayType, IntegerType
 
-        C = self.centroids
-        nprobe = min(self.params["nprobe"], len(C))
-
-        from vicinity_spark.operators.grid import nearest_centroids
-
-        Csq = (C * C).sum(axis=1)
+        lists = self._lists(None)
 
         @F.pandas_udf(ArrayType(IntegerType()))
         def probe(v: pd.Series) -> pd.Series:
             Q = np.vstack(v.to_numpy()).astype(np.float64)
-            sel, _ = nearest_centroids(Q, C, nprobe, Csq)
-            return pd.Series(list(sel.astype(np.int32)))
+            return pd.Series(list(lists.probes(Q).astype(np.int32)))
 
         return queries.select(
             "query_id", *extra_cols, F.explode(probe(F.col("qvec"))).alias(CLUSTER_COL)
@@ -157,7 +151,12 @@ class IVFStrategy(IndexStrategy):
         `grid.probe_scan` (driver probe, one corpus scan); an unbounded
         query table joins the corpus to its executor-side probes and
         re-scores the joined rows (operators/knn.py score_joined)."""
-        from vicinity_spark.operators.grid import dense_cell_topk, probe_scan
+        from vicinity_spark.operators.grid import (
+            _CCHUNK,
+            _CTARGET,
+            dense_cell_topk,
+            probe_scan,
+        )
         from vicinity_spark.operators.knn import (
             _KNN_SCHEMA,
             bounded_query_matrix,
@@ -175,8 +174,11 @@ class IVFStrategy(IndexStrategy):
             kk = k or len(ids)
             yield dense_cell_topk(qids, ids, X.astype(np.float64), Q, metric, kk)
 
+        # range search keeps every probed row, so its merge matrix is
+        # queries × cell rows: there cells stay chunk-sized
+        target = _CCHUNK if k is None else _CTARGET
         lists = self._lists(metric)
-        return probe_scan(corpus, "vector", batch, kernel, _KNN_SCHEMA, lists)
+        return probe_scan(corpus, "vector", batch, kernel, _KNN_SCHEMA, lists, target)
 
     # named in the class so per-class instrumentation that wraps only a
     # class's own methods (perfbench/run.py spans) still sees it

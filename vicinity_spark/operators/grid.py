@@ -1,6 +1,6 @@
 """Cell scans shared by the quantized strategies (backends/sq.py,
 pq.py and their IVF composites ivfsq.py, ivfpq.py), IVF
-(backends/ivf.py), the exact `partial` / `grid` top-k and range
+(backends/ivf.py), the exact `auto` / `grid` top-k and range
 algorithms and the `neardup_join` self-join in operators/knn.py.
 
 Every scan hands cells to a kernel ``kernel(ids, payload, qids, Q,
@@ -22,11 +22,12 @@ deliver the cells; `cell_scan` routes between them
   AUTO_GRID_QUERY_ROWS rows (every facade query): the batch is
   collected once and broadcast, IVF lists are probed on the driver and
   pushed into the corpus scan as ``__cluster IN (...)``, and ONE
-  mapInPandas over the corpus partitions cuts each Arrow batch into
-  cells (one per inverted list, or the whole batch) with the queries
-  in _QBLOCK slices — no fold, no join, no count job. Consumers: the
-  exact ``partial`` top-k, IVF's scoring, and the candidate scans of
-  sq, pq, ivfsq, ivfpq and ivfpqr.
+  mapInPandas over the corpus partitions gathers each task's Arrow
+  batches into cells of up to the grid's block size (per inverted
+  list, or flat) with the queries in _QBLOCK slices — no fold, no
+  join, no count job. Consumers: the exact ``auto`` top-k, IVF's
+  scoring, and the candidate scans of sq, pq, ivfsq, ivfpq and
+  ivfpqr.
 
 Everything a kernel needs beyond its cell (codebooks, centroids) is
 closure-small.
@@ -421,15 +422,16 @@ def cell_scan(
     Q, key)`` over ``corpus`` (``id`` plus ``payload_col``, and
     ``__cluster`` when ``lists`` is given) against ``queries``
     (``query_id``, ``qvec``). A bounded batch (`bounded_query_matrix`)
-    runs `probe_scan`; an unbounded one — or any batch when ``bounded``
-    is False — runs the block grid: `cluster_grid` with ``lists``,
-    else ``corpus_blocks`` (``target_rows`` per block) × `query_blocks`,
-    through `scan_cells`."""
+    runs `probe_scan` (cells of up to ``target_rows`` rows); an
+    unbounded one — or any batch when ``bounded`` is False — runs the
+    block grid: `cluster_grid` with ``lists``, else ``corpus_blocks``
+    (``target_rows`` per block) × `query_blocks`, through
+    `scan_cells`."""
     from vicinity_spark.operators.knn import bounded_query_matrix
 
     batch = bounded_query_matrix(queries) if bounded else None
     if batch is not None:
-        return probe_scan(corpus, payload_col, batch, kernel, schema, lists)
+        return probe_scan(corpus, payload_col, batch, kernel, schema, lists, target_rows)
     if lists is None:
         blocks = corpus_blocks(corpus, payload_col, target_rows=target_rows)
         grid, probe_mask = blocks.crossJoin(query_blocks(queries)), None
@@ -445,6 +447,7 @@ def probe_scan(
     kernel,
     schema,
     lists: "InvertedLists | None" = None,
+    target_rows: int = _CTARGET,
 ) -> DataFrame:
     """The bounded twin of `cluster_grid` + `scan_cells`: ONE
     mapInPandas over the corpus partitions, with the driver-collected
@@ -452,9 +455,15 @@ def probe_scan(
     join. With ``lists`` the queries are probed on the driver and
     ``__cluster IN (<probed union>)`` is pushed into the corpus scan
     (a partition filter on a reloaded ``partitionBy(__cluster)``
-    store); each Arrow batch is then cut into one cell per inverted
+    store); each task then gathers its rows into one cell per inverted
     list, handed only the queries that probe that list. Without
-    ``lists`` each Arrow batch is one cell with every query. Cells are
+    ``lists`` a task's rows form flat cells with every query.
+
+    A cell is cut once adding the next Arrow batch (or a list's share
+    of it) would pass ``target_rows`` rows, so cells are as coarse as
+    the grid's corpus blocks: a kernel's per-cell cost (PQ's ADC
+    tables, the per-query candidate merge, q × kk rows shipped per
+    cell) is paid per ~target_rows rows, not per Arrow batch. Cells are
     id-sorted like `cell_arrays`' and the queries go to the kernel in
     ``_QBLOCK`` slices, so a kernel's matrices stay within _QBLOCK ×
     _CCHUNK doubles as on the grid."""
@@ -473,35 +482,49 @@ def probe_scan(
         corpus = corpus.where(F.col(CLUSTER_COL).isin([int(c) for c in union]))
         cols.append(CLUSTER_COL)
     bq = spark.sparkContext.broadcast((qids, Q, members))
-    fn = partial(_probe_scan, kernel, payload_col, bq)
+    fn = partial(_probe_scan, kernel, payload_col, target_rows, bq)
     fn.__name__ = "probe_scan"  # the UDF's name in plan dumps
     return corpus.select(*cols).mapInPandas(fn, schema)
 
 
-def _probe_scan(kernel, payload_col, bq, batches: Iterator[pd.DataFrame]):
+def _probe_scan(kernel, payload_col, target_rows, bq, batches: Iterator[pd.DataFrame]):
     from vicinity_spark.backends.ivf import CLUSTER_COL
 
     qids, Q, members = bq.value
     every = np.arange(len(qids))
+    pending = {}  # cell (list id, or None when flat) → [ids parts, payload parts, rows]
+
+    def cut(c):
+        id_parts, pay_parts, _ = pending.pop(c)
+        ids, payload = np.concatenate(id_parts), np.concatenate(pay_parts)
+        order = np.argsort(ids, kind="stable")
+        ids, payload = ids[order], payload[order]
+        qs, key = (every, {}) if c is None else (members[c], {CLUSTER_COL: c})
+        for s in range(0, len(qs), _QBLOCK):
+            b = qs[s : s + _QBLOCK]
+            yield from kernel(ids, payload, qids[b], Q[b], key)
+
     for pdf in batches:
         if not len(pdf):
             continue
         ids = pdf["id"].to_numpy().astype(np.int64)
         payload = np.vstack(pdf[payload_col].to_numpy())
         if members is None:
-            cells = [({}, np.arange(len(ids)), every)]
+            pieces = [(None, ids, payload)]
         else:
             cl = pdf[CLUSTER_COL].to_numpy()
-            cells = [
-                ({CLUSTER_COL: int(c)}, np.nonzero(cl == c)[0], members[int(c)])
-                for c in np.unique(cl)
+            pieces = [
+                (int(c), ids[cl == c], payload[cl == c]) for c in np.unique(cl)
             ]
-        for key, rows, qs in cells:
-            rows = rows[np.argsort(ids[rows], kind="stable")]
-            cids, cpay = ids[rows], payload[rows]
-            for s in range(0, len(qs), _QBLOCK):
-                b = qs[s : s + _QBLOCK]
-                yield from kernel(cids, cpay, qids[b], Q[b], key)
+        for c, pids, ppay in pieces:
+            if c in pending and pending[c][2] + len(pids) > target_rows:
+                yield from cut(c)
+            cell = pending.setdefault(c, [[], [], 0])
+            cell[0].append(pids)
+            cell[1].append(ppay)
+            cell[2] += len(pids)
+    for c in list(pending):
+        yield from cut(c)
 
 
 def det_topk_idx(D: np.ndarray, cap: int) -> np.ndarray:

@@ -18,28 +18,33 @@ Three physical strategies for top-k:
   shuffles all q×n candidate rows by query_id, so it is the right plan
   only when q×n is modest or q is large relative to n.
 
-- ``partial`` (and ``auto``, the default): the bounded broadcast-query
-  scan (grid.probe_scan). A batch of at most AUTO_GRID_QUERY_ROWS
-  rows is collected to the driver once (`bounded_query_matrix`) and
-  broadcast; ONE mapInPandas over the corpus partitions runs the
-  vectorized top-k kernel (grid.dense_cell_topk — the distributed
-  analog of the reference's 1024-row batched matmul,
-  basic.py:195-204) per Arrow batch, the queries in _QBLOCK slices so
-  every distance matrix stays within _QBLOCK × _CCHUNK doubles, then a
-  final merge window over the surviving q×k×batches rows. The shuffle
-  is bounded by q×k×partitions regardless of corpus size — this is the
-  plan that survives a 100 TB corpus: the full cross product is never
-  materialized and never shuffled. A larger query table runs as
-  ``grid``.
+- ``auto`` (the default; ``partial`` is an alias kept for callers of
+  the older name): the bounded broadcast-query scan (grid.probe_scan).
+  A batch of at most AUTO_GRID_QUERY_ROWS rows is collected to the
+  driver once (`bounded_query_matrix`) and broadcast; ONE mapInPandas
+  over the corpus partitions runs the vectorized top-k kernel
+  (grid.dense_cell_topk — the distributed analog of the reference's
+  1024-row batched matmul, basic.py:195-204) per cell of up to
+  _CTARGET rows of a partition, the queries in _QBLOCK slices so every
+  distance matrix stays within _QBLOCK × _CCHUNK doubles. Each cell
+  emits q×k rows; the merge window's partial limit (WindowGroupLimit)
+  keeps q×k of them per scan task before the shuffle, so the shuffle
+  is q×k×partitions whatever the corpus size — the q×n cross product
+  is neither materialized nor shuffled, the plan that survives a
+  100 TB corpus. A larger query table runs as ``grid``.
 
 - ``grid``: corpus blocks × query blocks (operators/grid.py), each
-  cell scored by the same chunked kernel as ``partial``, then the same
+  cell scored by the same chunked kernel as ``auto``, then the same
   merge. Query vectors arrive through the join instead of a driver
   collect — the plan for UNBOUNDED query tables.
 
 Payload columns ride along: ``window`` carries them through the rank
-in-row; ``partial`` and ``grid`` re-join the corpus payload onto the
+in-row; ``auto`` and ``grid`` re-join the corpus payload onto the
 merged q×k result (join_payload — AQE broadcasts the small side).
+
+``bounded_query_matrix`` is the one bounded/unbounded router: the kNN
+scans, the IVF and code-scan strategies and ``threshold_join``'s
+``auto`` all decide (and collect) through it.
 """
 
 from __future__ import annotations
@@ -304,25 +309,12 @@ def _max_rows(df: DataFrame):
     return int(plan.maxRows().get())
 
 
-def _queries_are_bounded(queries: DataFrame, limit: int) -> bool:
-    """Is the query table provably ≤ limit rows — cheaply? The
-    optimizer's ``maxRows`` when defined (free); otherwise a
-    limit-bounded count job (scans only until limit+1 rows surface,
-    never the full table). For plans that only need the decision
-    (threshold_join's broadcast); the kNN scans decide and collect in
-    one step with `bounded_query_matrix`."""
-    mr = _max_rows(queries)
-    if mr is not None:
-        return mr <= limit
-    return queries.limit(limit + 1).count() <= limit
-
-
 def bounded_query_matrix(
     queries: DataFrame, id_col: str = "query_id", vec_col: str = "qvec"
 ):
-    """The one bounded/unbounded router of the kNN scans: ``(qids, Q)``
-    when the batch has at most AUTO_GRID_QUERY_ROWS rows, else None
-    (the caller then plans for an unbounded query table).
+    """The one bounded/unbounded router: ``(qids, Q)`` when the batch
+    has at most AUTO_GRID_QUERY_ROWS rows, else None (the caller then
+    plans for an unbounded query table).
 
     With a defined ``maxRows`` the decision is free and only a bounded
     batch is collected (a ``local_frame`` batch without a job, see
@@ -369,18 +361,20 @@ def knn_join(
     ascending distance (ties broken by id — the reference's argsort is
     positional-stable, basic.py:200-204).
 
-    ``algorithm="auto"`` is ``partial``. Routing a batch to the bounded
-    scan or the grid (`bounded_query_matrix`) may run one EAGER job on
-    the query side at plan-construction time: none when the optimizer's
-    ``maxRows`` is defined (local batches, LIMIT'd plans), otherwise a
-    ``limit(n+1)`` collect that executes the query-side pipeline once
-    up to n+1 rows and delivers the batch. If the query side is an
-    expensive lazily-derived table, pass ``algorithm="grid"`` to skip
-    it.
+    ``algorithm="auto"`` (alias ``partial``) routes a batch to the
+    bounded scan or the grid (`bounded_query_matrix`). Routing may run
+    one EAGER job on the query side at plan-construction time: none
+    when the optimizer's ``maxRows`` is defined (local batches, LIMIT'd
+    plans), otherwise a ``limit(n+1)`` collect that executes the
+    query-side pipeline once up to n+1 rows and delivers the batch. If
+    the query side is an expensive lazily-derived table, pass
+    ``algorithm="grid"`` to skip it.
     """
     if k < 1:
         raise ValueError("k must be greater than 0")  # basic.py:187-188
     metric = Metric.from_string(metric)
+    if algorithm == "partial":
+        algorithm = "auto"
     if algorithm == "window":
         q = queries.select(
             F.col(query_id_col).alias("query_id"),
@@ -397,12 +391,12 @@ def knn_join(
             dist.alias("distance"),
             *(payload_cols or []),
         )
-    elif algorithm in ("auto", "partial", "grid"):
-        # `partial`: the bounded broadcast-query scan when the batch is
-        # bounded (driver-collected query matrix, shuffle bounded by
-        # q×k×partitions), else — and always for `grid` — the block
-        # grid, whose query blocks arrive by join: a 10M-row query side
-        # would materialize nq×dim on the driver. Same kernel either way.
+    elif algorithm in ("auto", "grid"):
+        # `auto`: the bounded broadcast-query scan when the batch is
+        # bounded (driver-collected query matrix), else — and always
+        # for `grid` — the block grid, whose query blocks arrive by
+        # join: a 10M-row query side would materialize nq×dim on the
+        # driver. Same kernel either way.
         local = cell_scan(
             *_dense_inputs(
                 corpus, queries, id_col, vector_col, query_id_col, query_vector_col
@@ -453,21 +447,17 @@ def threshold_join(
     (asserted by test_threshold_grid_equals_expr).
 
     `auto` (default): bounded query batch (≤ AUTO_GRID_QUERY_ROWS,
-    decided exactly like `knn_join` — optimizer maxRows when defined,
-    else a limit-bounded count probe) → `expr`; otherwise `grid`. The
-    same eager-probe caveat as `knn_join` applies: pass an explicit
-    algorithm to skip the probe on expensive lazily-derived query
-    pipelines.
+    decided by `bounded_query_matrix` exactly as `knn_join` decides —
+    optimizer maxRows when defined, else one ``limit(n+1)`` collect)
+    → `expr`; otherwise `grid`. The same eager-probe caveat as
+    `knn_join` applies: pass an explicit algorithm to skip the probe
+    on expensive lazily-derived query pipelines.
     """
     metric = Metric.from_string(metric)
     if algorithm == "auto":
         # mirror knn_join's routing: a query table past the broadcast
         # ceiling must never be force-broadcast
-        algorithm = (
-            "expr"
-            if _queries_are_bounded(queries, AUTO_GRID_QUERY_ROWS)
-            else "grid"
-        )
+        algorithm = "expr" if bounded_query_matrix(queries) is not None else "grid"
     if algorithm == "grid":
         t = float(threshold)
         out = cell_scan(

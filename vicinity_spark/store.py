@@ -580,7 +580,7 @@ class VectorStore:
         qdf = qdf.cache()
         qdf.count()
         gt = (
-            knn_join(self.df, qdf, k=k, metric=self._metric, algorithm="partial")
+            knn_join(self.df, qdf, k=k, metric=self._metric, algorithm="auto")
             .groupBy("query_id")
             .agg(F.max("distance").alias("gt_kth"))
         )
