@@ -174,39 +174,6 @@ def test_dedup_e2e_composition(spark):
     assert all(rep == i - 3000 for i, rep in planted.items())
 
 
-@pytest.mark.slow
-def test_band_buckets_onepass_equals_row_form(spark):
-    """The one-shuffle band-bucket computation (r5) must be
-    row-identical to minhash_signatures -> minhash_band_buckets for
-    BOTH hash families — same seeds, same band layout, same keys."""
-    from vicinity_spark.operators.dedup import (
-        band_buckets_onepass,
-        minhash_band_buckets,
-        minhash_signatures,
-        shingles,
-    )
-
-    docs = spark.createDataFrame(
-        [
-            (1, "a b c d e f g h"),
-            (2, "a b c d e f g x"),
-            (3, "totally different words here now ok fine yes"),
-        ],
-        "doc_id long, text string",
-    )
-    sh = shingles(docs, n=3)
-    for fam in ["md5", "xxhash64", "affine", "md5_affine"]:
-        for n_hashes, rpb in [(16, 2), (12, 5)]:  # incl. a partial last band
-            row = minhash_band_buckets(
-                minhash_signatures(sh, "shingle", n_hashes=n_hashes, hash_fn=fam),
-                rows_per_band=rpb,
-            )
-            fast = band_buckets_onepass(sh, "shingle", n_hashes, rpb, fam)
-            a = {(r.doc_id, r.band, r.bkey) for r in row.collect()}
-            b = {(r.doc_id, r.band, r.bkey) for r in fast.collect()}
-            assert a == b, (fam, n_hashes, rpb)
-
-
 def test_shingles_matches_window_form(spark):
     """The projection-form shingles must be ROW-IDENTICAL to the
     posexplode + lead-window form it replaced (including empty-token
@@ -253,17 +220,17 @@ def test_shingles_matches_window_form(spark):
     assert plan.count("Exchange") <= 2  # distinct = partial+final around 1 exchange
 
 
-@pytest.mark.slow
-def test_band_buckets_rowwise_matches_onepass(spark):
-    """r6: the zero-shuffle rowwise band-bucket projection must be
-    row-identical to band_buckets_onepass over shingles(docs) for both
-    hash families (incl. a partial last band and a doc too short to
-    shingle) — and its plan really is a projection: no Exchange."""
-    from vicinity_spark.operators.dedup import (
-        band_buckets_onepass,
-        band_buckets_rowwise,
-        shingles,
-    )
+def test_band_buckets_rowwise_matches_reference(spark):
+    """The zero-shuffle rowwise band-bucket projection must be
+    row-identical to the reference row form (seed cross product +
+    groupBy signatures, then per-band md5 keys) over shingles(docs)
+    for every string-gram family — same seeds, same band layout, same
+    keys, incl. a partial last band, a doc too short to shingle and
+    in-row duplicate grams — and its plan really is a projection: no
+    Exchange."""
+    from dedup_reference import minhash_band_buckets, minhash_signatures
+
+    from vicinity_spark.operators.dedup import band_buckets_rowwise, shingles
     from vicinity_spark.plans.checks import plan_summary
 
     docs = spark.createDataFrame(
@@ -278,14 +245,18 @@ def test_band_buckets_rowwise_matches_onepass(spark):
     )
     sh = shingles(docs, n=3)
     for fam in ["md5", "xxhash64", "affine", "md5_affine"]:
-        for n_hashes, rpb in [(16, 2), (12, 5)]:
-            one = band_buckets_onepass(sh, "shingle", n_hashes, rpb, fam)
+        for n_hashes, rpb in [(16, 2), (12, 5)]:  # incl. a partial last band
+            ref = minhash_band_buckets(
+                minhash_signatures(sh, "shingle", n_hashes=n_hashes, hash_fn=fam),
+                rows_per_band=rpb,
+            )
             row = band_buckets_rowwise(
                 docs, n_hashes, rpb, shingle_n=3, hash_fn=fam
             )
-            a = {(r.doc_id, r.band, r.bkey) for r in one.collect()}
+            a = {(r.doc_id, r.band, r.bkey) for r in ref.collect()}
             b = {(r.doc_id, r.band, r.bkey) for r in row.collect()}
             assert a == b, (fam, n_hashes, rpb)
+            assert 4 not in {d for d, _, _ in b}
     assert "Exchange" not in plan_summary(
         band_buckets_rowwise(docs, 16, 2, shingle_n=3, hash_fn="xxhash64")
     )
@@ -293,15 +264,20 @@ def test_band_buckets_rowwise_matches_onepass(spark):
 
 @pytest.mark.slow
 def test_minhash_lsh_pairs_rowwise_matches(docs_df):
-    """r6: the candidate-bounded rowwise miner returns exactly the
-    pairs (and jaccard values) of minhash_lsh_pairs for both hash
-    families."""
+    """The candidate-bounded miner returns exactly the pairs (and
+    jaccard values) of the reference pipeline — reference signatures,
+    banding, bucket self-join, jaccard_pairs over the candidates — for
+    every string-gram family; minhash_lsh_pairs_rowwise is the same
+    function."""
+    from dedup_reference import reference_lsh_pairs
+
     from vicinity_spark.operators.dedup import minhash_lsh_pairs_rowwise
 
+    assert minhash_lsh_pairs_rowwise is minhash_lsh_pairs
     for fam in ["md5", "xxhash64", "affine", "md5_affine"]:
         ref = {
             (r.id_a, r.id_b): round(r.jaccard, 9)
-            for r in minhash_lsh_pairs(
+            for r in reference_lsh_pairs(
                 docs_df, n_hashes=16, rows_per_band=2, min_jaccard=0.3, hash_fn=fam
             ).collect()
         }
@@ -317,23 +293,24 @@ def test_minhash_lsh_pairs_rowwise_matches(docs_df):
 
 @pytest.mark.slow
 def test_simhash_rowwise_matches(spark, docs_df):
-    """r6: the zero-shuffle rowwise SimHash must be row-identical to
-    simhash_fingerprints (exploded votes + groupBy), including the
+    """The zero-shuffle rowwise SimHash must be row-identical to the
+    exploded reference (token votes + groupBy), including the
     empty-text and repeated-token edges, and its plan must be
-    Exchange-free."""
-    from vicinity_spark.operators.dedup import (
-        simhash_fingerprints,
-        simhash_fingerprints_rowwise,
-    )
+    Exchange-free; simhash_fingerprints_rowwise is the same function."""
+    from dedup_reference import simhash_exploded
+
+    from vicinity_spark.operators.dedup import simhash_fingerprints_rowwise
     from vicinity_spark.plans.checks import plan_summary
+
+    assert simhash_fingerprints_rowwise is simhash_fingerprints
 
     edge = spark.createDataFrame(
         [(100, ""), (101, "   "), (102, "same same same words words")],
         "doc_id long, text string",
     )
     for df in (docs_df, edge):
-        a = {(r.doc_id, r.simhash) for r in simhash_fingerprints(df).collect()}
-        b = {(r.doc_id, r.simhash) for r in simhash_fingerprints_rowwise(df).collect()}
+        a = {(r.doc_id, r.simhash) for r in simhash_exploded(df).collect()}
+        b = {(r.doc_id, r.simhash) for r in simhash_fingerprints(df).collect()}
         assert a == b
     assert "Exchange" not in plan_summary(simhash_fingerprints_rowwise(docs_df))
 
@@ -357,26 +334,33 @@ def spark_prop(spark):
 @pytest.mark.slow
 def test_rowwise_forms_match_exploded_property(spark_prop, texts):
     """For ARBITRARY small corpora (repeated words, empty docs,
-    too-short docs — whatever hypothesis finds), the r6 rowwise
-    MinHash buckets and SimHash fingerprints must equal their exploded
+    too-short docs — whatever hypothesis finds), the rowwise MinHash
+    buckets and SimHash fingerprints must equal their reference row
     forms row-for-row."""
+    from dedup_reference import (
+        minhash_band_buckets,
+        minhash_signatures,
+        simhash_exploded,
+    )
+
     from vicinity_spark.operators.dedup import (
-        band_buckets_onepass,
         band_buckets_rowwise,
         shingles,
         simhash_fingerprints,
-        simhash_fingerprints_rowwise,
     )
 
     spark = spark_prop
     docs = spark.createDataFrame(
         list(enumerate(texts)), "doc_id long, text string"
     )
-    one = band_buckets_onepass(shingles(docs, n=2), "shingle", 8, 2, "md5")
+    ref = minhash_band_buckets(
+        minhash_signatures(shingles(docs, n=2), "shingle", n_hashes=8, hash_fn="md5"),
+        rows_per_band=2,
+    )
     row = band_buckets_rowwise(docs, 8, 2, shingle_n=2, hash_fn="md5")
-    assert {tuple(r) for r in one.collect()} == {tuple(r) for r in row.collect()}, texts
-    a = {tuple(r) for r in simhash_fingerprints(docs).collect()}
-    b = {tuple(r) for r in simhash_fingerprints_rowwise(docs).collect()}
+    assert {tuple(r) for r in ref.collect()} == {tuple(r) for r in row.collect()}, texts
+    a = {tuple(r) for r in simhash_exploded(docs).collect()}
+    b = {tuple(r) for r in simhash_fingerprints(docs).collect()}
     assert a == b, texts
 
 
@@ -389,12 +373,9 @@ def test_affine_minhash_matches_python_reference(spark):
     other."""
     import hashlib
 
-    from vicinity_spark.operators.dedup import (
-        _AFFINE_P,
-        affine_consts,
-        minhash_signatures,
-        shingles,
-    )
+    from dedup_reference import minhash_signatures
+
+    from vicinity_spark.operators.dedup import _AFFINE_P, affine_consts, shingles
 
     rows = [
         (1, "a b c d e f g h"),
@@ -577,28 +558,13 @@ def test_minhash_cap_bounds_identical_cluster(spark):
 
 def test_minhash_cap_is_noop_below_threshold(docs_df):
     """On a corpus where no bucket exceeds the cap, the capped miner is
-    pair-set identical to the uncapped one (both plans)."""
-    from vicinity_spark.operators.dedup import (
-        minhash_lsh_pairs,
-        minhash_lsh_pairs_rowwise,
-    )
-
-    base = {
-        tuple(r)
-        for r in minhash_lsh_pairs_rowwise(docs_df, min_jaccard=0.3).collect()
-    }
-    capped_row = {
-        tuple(r)
-        for r in minhash_lsh_pairs_rowwise(
-            docs_df, min_jaccard=0.3, max_bucket=100
-        ).collect()
-    }
-    capped_one = {
+    pair-set identical to the uncapped one."""
+    base = {tuple(r) for r in minhash_lsh_pairs(docs_df, min_jaccard=0.3).collect()}
+    capped = {
         tuple(r)
         for r in minhash_lsh_pairs(docs_df, min_jaccard=0.3, max_bucket=100).collect()
     }
-    assert capped_row == base
-    assert capped_one == base
+    assert capped == base
 
 
 def test_simhash_cap_bounds_identical_cluster(spark):
@@ -1173,7 +1139,8 @@ def test_neardup_dedup_quality_survivors(spark):
 
 def test_hash_fn_auto_resolves_to_tokenroll(spark, docs_df):
     """hash_fn='auto' (the documented production default, r8) must be
-    pair-identical to an explicit 'tokenroll' in every public miner."""
+    pair-identical to an explicit 'tokenroll' in every public miner;
+    the max_df cap needs gram strings, which tokenroll never builds."""
     from vicinity_spark.operators.dedup import (
         minhash_lsh_pairs_rowwise,
         resolve_hash_fn,
@@ -1181,17 +1148,70 @@ def test_hash_fn_auto_resolves_to_tokenroll(spark, docs_df):
 
     assert resolve_hash_fn("auto") == "tokenroll"
     assert resolve_hash_fn("md5") == "md5"
-    a = {
-        tuple(r)
-        for r in minhash_lsh_pairs_rowwise(docs_df, min_jaccard=0.3, hash_fn="auto").collect()
-    }
     b = {
         tuple(r)
         for r in minhash_lsh_pairs_rowwise(
             docs_df, min_jaccard=0.3, hash_fn="tokenroll"
         ).collect()
     }
-    assert a == b and len(a) > 0
+    assert len(b) > 0
+    for miner in (minhash_lsh_pairs_rowwise, minhash_lsh_pairs):
+        a = {
+            tuple(r)
+            for r in miner(docs_df, min_jaccard=0.3, hash_fn="auto").collect()
+        }
+        assert a == b, miner.__name__
+    for fam in ("tokenroll", "md5_tokenroll", "auto"):
+        with pytest.raises(ValueError, match="max_df"):
+            minhash_lsh_pairs(docs_df, hash_fn=fam, max_df=3)
+
+
+@pytest.mark.parametrize(
+    "fam",
+    ["md5"]
+    + [pytest.param(f, marks=pytest.mark.slow) for f in ("xxhash64", "affine", "md5_affine")],
+)
+def test_minhash_max_df_cap_matches_reference(spark, fam):
+    """The max_df hot-shingle cap: a boilerplate prefix shared by every
+    doc is dropped from both the signatures and the verification, so
+    the capped miner equals the reference pipeline over the
+    hot-filtered shingles for every string-gram family — and unrelated
+    docs that only share the boilerplate stop pairing."""
+    from dedup_reference import reference_lsh_pairs
+
+    boiler = "click here to subscribe now for more"
+    bodies = [
+        "the quick brown fox jumps over the lazy dog near the river",
+        "the quick brown fox jumps over the lazy dog near the river",
+        "the quick brown fox jumps over the lazy dog near the lake",
+        "spark shuffles partitions across executors",
+        "parquet stores columns in row groups",
+        "duckdb runs analytical sql in process",
+        "arrow batches move data between runtimes",
+        "",  # boilerplate only: every shingle is hot → no buckets
+        "x",
+    ]
+    docs = spark.createDataFrame(
+        [(i, f"{boiler} {b}".strip()) for i, b in enumerate(bodies)],
+        "doc_id long, text string",
+    )
+    kw = dict(n_hashes=16, rows_per_band=2, min_jaccard=0.2, hash_fn=fam)
+    got = {
+        (r.id_a, r.id_b): round(r.jaccard, 9)
+        for r in minhash_lsh_pairs(docs, max_df=3, **kw).collect()
+    }
+    ref = {
+        (r.id_a, r.id_b): round(r.jaccard, 9)
+        for r in reference_lsh_pairs(docs, max_df=3, **kw).collect()
+    }
+    assert got == ref
+    assert got[(0, 1)] == 1.0
+    assert all(a < 3 and b < 3 for a, b in got)
+    # the cap binds: uncapped, the shared boilerplate pairs unrelated docs
+    uncapped = {(r.id_a, r.id_b) for r in minhash_lsh_pairs(docs, **kw).collect()}
+    assert any(b >= 3 for _, b in uncapped)
+    with pytest.raises(ValueError, match="max_df"):
+        minhash_lsh_pairs(docs, max_df=3, buckets=docs.select("doc_id"))
 
 
 def test_dedup_lines_cross_doc_boilerplate(spark):

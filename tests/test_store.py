@@ -306,6 +306,21 @@ def test_ivf_save_partitions_inverted_lists(spark, data, tmp_path):
     assert loaded.query(qvec, k=3) == store.query(qvec, k=3)
 
 
+@pytest.mark.parametrize("backend", ["ivf", "ivfsq", "ivfpq"])
+def test_ivf_preset_numpy_centroids_save_load(spark, data, tmp_path, backend):
+    """An IVF-family store built with preset `centroids=` as a numpy
+    array saves (the params go to JSON as float lists) and reloads
+    answering the same rows."""
+    vectors, _, qvec = data
+    store = make_store(
+        spark, data, backend, centroids=np.asarray(vectors[:8], dtype=np.float32)
+    )
+    path = str(tmp_path / f"np_centroids_{backend}")
+    store.save(path)
+    loaded = VectorStore.load(path, spark)
+    assert loaded.query(qvec, k=3) == store.query(qvec, k=3)
+
+
 @pytest.mark.slow
 def test_lsh_save_partitions_posting_lists(spark, data, tmp_path):
     """LSH stores persist an exploded posting-list layout partitioned

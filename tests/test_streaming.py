@@ -277,7 +277,9 @@ def test_stateless_minhash_matches_batch_family(spark):
     xxhash64 MinHash family (operators/dedup.py) component-for-
     component — it is the same estimator, so streaming candidates and
     batch verification agree on est_jaccard."""
-    from vicinity_spark.operators.dedup import minhash_signatures, shingles
+    from dedup_reference import minhash_signatures
+
+    from vicinity_spark.operators.dedup import shingles
     from vicinity_spark.streaming import stateless_minhash
 
     docs = spark.createDataFrame(

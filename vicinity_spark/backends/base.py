@@ -41,6 +41,7 @@ from __future__ import annotations
 
 from typing import Optional, Sequence
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -150,7 +151,12 @@ class IndexStrategy:
         pass
 
     def to_params(self) -> dict:
-        return dict(self.params)
+        """JSON-ready params: numpy arrays (preset ``centroids=``)
+        become nested float lists."""
+        return {
+            k: v.astype(np.float64).tolist() if isinstance(v, np.ndarray) else v
+            for k, v in self.params.items()
+        }
 
 
 class RerankStrategy(IndexStrategy):

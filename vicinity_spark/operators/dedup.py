@@ -8,17 +8,27 @@ survives 100 TB.
 
 Hashing is *portable by construction*: md5 over strings (identical in
 Spark and any ANSI engine), so every operator here is oracle-checkable
-cross-engine. MinHash additionally offers the JVM-native ``xxhash64``
-family (`hash_fn=`) for production-scale mining — same plans, ~2×
-cheaper signatures, not cross-engine portable.
+cross-engine. MinHash additionally offers JVM-native families (``xxhash64``,
+``affine``, ``tokenroll``; `hash_fn=`) for production-scale mining —
+same plans, cheaper signatures, not cross-engine portable.
 
 Operators:
 - exact_dedup:        hash-groupBy (content hash → canonical id)
 - token_set / shingles: tokenization primitives
 - jaccard_pairs:      exact Jaccard over candidate (or all) pairs
-- minhash_signatures / minhash_lsh_pairs: MinHash banding → candidate
-  pairs → exact-Jaccard verification (the classic MinHash-LSH dedup)
-- simhash_fingerprints / simhash_pairs: 32-bit SimHash + Hamming pairs
+- band_buckets_rowwise: the MinHash signature + band-key projection
+  (per row, zero shuffles) every miner below shares
+- minhash_lsh_pairs (alias minhash_lsh_pairs_rowwise): bucket
+  self-join → candidate pairs → candidate-bounded exact-Jaccard
+  verification (the classic MinHash-LSH dedup)
+- minhash_lsh_pairs_incremental / _vs_snapshot: new batch vs corpus
+  (or a persisted bucket snapshot: save/append/compact_corpus_buckets)
+- simhash_fingerprints (alias simhash_fingerprints_rowwise) /
+  simhash_pairs: 32-bit SimHash + Hamming pairs
+- connected_components / keep_best / neardup_dedup: pairs → one
+  survivor per dup cluster
+- contamination / decontaminate, shared_gram_stats,
+  strip_shared_spans, dedup_lines: n-gram and line-level curation
 """
 
 from __future__ import annotations
@@ -203,6 +213,17 @@ def exact_dedup(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id")
     )
 
 
+def _hot_features(feature_df: DataFrame, feature_col: str, max_df: int) -> DataFrame:
+    """(feature_col) of features in more than ``max_df`` docs — few by
+    construction, so callers drop them with a broadcast anti-join."""
+    return (
+        feature_df.groupBy(feature_col)
+        .agg(F.count("*").alias("__df"))
+        .where(F.col("__df") > int(max_df))
+        .select(feature_col)
+    )
+
+
 def jaccard_pairs(
     feature_df: DataFrame,
     feature_col: str,
@@ -225,15 +246,8 @@ def jaccard_pairs(
     computed after the filter), i.e. Jaccard over the rare-feature space.
     """
     if max_df is not None:
-        # the features ABOVE the cap are few by construction → broadcast
-        # anti-join (a broadcast of all sub-cap features would not scale)
-        hot = (
-            feature_df.groupBy(feature_col)
-            .agg(F.count("*").alias("__df"))
-            .where(F.col("__df") > int(max_df))
-            .select(feature_col)
-        )
-        feature_df = feature_df.join(F.broadcast(hot), feature_col, "left_anti")
+        hot = F.broadcast(_hot_features(feature_df, feature_col, max_df))
+        feature_df = feature_df.join(hot, feature_col, "left_anti")
     sizes = feature_df.groupBy("doc_id").agg(F.count("*").alias("sz"))
     a = feature_df.select(F.col("doc_id").alias("id_a"), F.col(feature_col))
     b = feature_df.select(F.col("doc_id").alias("id_b"), F.col(feature_col))
@@ -261,59 +275,18 @@ def jaccard_pairs(
     return j.select("id_a", "id_b", "jaccard")
 
 
-def minhash_signatures(
-    features: DataFrame, feature_col: str, n_hashes: int = 16, hash_fn: str = "md5"
-) -> DataFrame:
-    """(doc_id, seed, mh) — mh = min over features of hash(seed, feature).
-
-    Two hash families:
-    - ``md5`` (default): lexicographic-min over md5 hex strings — a
-      valid min-hash family (md5 is uniform over hex strings) that any
-      engine with md5() reproduces bit-for-bit (the oracle family).
-    - ``xxhash64``: min over the JVM-native 64-bit hash — the fast
-      family for production-scale mining (long arithmetic instead of
-      32-char string allocation + comparison per feature×seed; same
-      uniformity argument, not portable to engines without xxhash64).
-    - ``affine`` / ``md5_affine`` (r7): Carter–Wegman universal
-      hashing — ONE 32-bit base hash per feature (xxhash64-derived /
-      md5-derived) + n_hashes affine transforms mod a prime. ~n_hashes×
-      fewer hash evaluations than the families above; ``md5_affine``
-      is cross-engine portable (the affine oracle family).
-    """
-    hash_fn = resolve_hash_fn(hash_fn)
-    spark = features.sparkSession
-    seeds = spark.range(n_hashes).select(F.col("id").alias("seed"))
-    if hash_fn == "xxhash64":
-        mh = F.xxhash64(F.col("seed"), F.col(feature_col))
-    elif hash_fn == "md5":
-        mh = F.md5(
-            F.concat(F.col("seed").cast("string"), F.lit(":"), F.col(feature_col)).cast("binary")
-        )
-    elif _is_affine(hash_fn):
-        # coefficient lookup by the seed column (literal arrays) — this
-        # reference form recomputes the base hash per (seed, feature)
-        # row; the onepass/rowwise forms hash each feature once
-        consts = affine_consts(n_hashes)
-        a_arr = F.array(*[F.lit(a) for a, _ in consts])
-        b_arr = F.array(*[F.lit(b) for _, b in consts])
-        idx = (F.col("seed") + 1).cast("int")
-        h = _affine_base_expr(feature_col, hash_fn)
-        mh = (F.element_at(a_arr, idx) * h + F.element_at(b_arr, idx)) % F.lit(_AFFINE_P)
-    else:
-        raise ValueError(f"unknown minhash family {hash_fn!r}")
-    return (
-        features.crossJoin(F.broadcast(seeds))
-        .groupBy("doc_id", "seed")
-        .agg(F.min(mh).alias("mh"))
-    )
+# ---- MinHash hash families -------------------------------------------
+# mh_s = min over a doc's distinct grams g of hash_s(g). ``md5``: min
+# over md5("<s>:" || g) hex strings — portable to any engine with md5()
+# (the oracle family). ``xxhash64``: xxhash64(bigint s, g) — JVM-native,
+# not portable. The affine and tokenroll families are below. The
+# reference row forms live in tests/dedup_reference.py.
 
 
 def _seed_mh_expr(seed: int, feature, hash_fn: str):
-    """hash(seed, feature) for one literal seed — value-identical to
-    the minhash_signatures column families (the seed literal is cast
-    bigint because xxhash64 hashes by input type and the row-form seed
-    column comes from spark.range). `feature` is a column name or a
-    Column (the rowwise form passes the transform lambda variable)."""
+    """hash(seed, feature) for one literal seed, md5 / xxhash64 (the
+    seed literal is cast bigint: xxhash64 hashes by input type). `feature`
+    is a column name or a Column (the fold's lambda variable)."""
     feature = F.col(feature) if isinstance(feature, str) else feature
     if hash_fn == "xxhash64":
         return F.xxhash64(F.lit(seed).cast("bigint"), feature)
@@ -371,10 +344,18 @@ def _affine_base_expr(feature, hash_fn: str):
     raise ValueError(f"not an affine minhash family: {hash_fn!r}")
 
 
-def _affine_mh_expr(a: int, b: int, h):
-    """(a*h + b) mod P. Bounded arithmetic: a < 2^30, h < 2^32 →
-    a*h < 2^62, + b < 2^62 + 2^32 — no bigint overflow (ANSI-safe)."""
-    return (F.lit(a) * h + F.lit(b)) % F.lit(_AFFINE_P)
+def affine_signature(hashes, n_hashes: int) -> "list":
+    """n_hashes columns array_min(transform(h → (a_s·h + b_s) mod P))
+    over `hashes`, an array<bigint> of 32-bit base hashes that MUST sit
+    behind a Generate barrier (each column re-walks it) — the signature
+    batch and streaming tokenroll share. a < 2^30, h < 2^32 → no bigint
+    overflow (ANSI-safe)."""
+    return [
+        F.array_min(
+            F.transform(hashes, lambda h: (F.lit(a) * h + F.lit(b)) % F.lit(_AFFINE_P))
+        )
+        for a, b in affine_consts(n_hashes)
+    ]
 
 
 def resolve_hash_fn(hash_fn: str) -> str:
@@ -478,44 +459,10 @@ def _tokenroll_gram_hashes(shingle_n: int, tok_hash_col: str):
     ).otherwise(F.array().cast("array<bigint>"))
 
 
-def band_buckets_onepass(
-    sh: DataFrame, feature_col: str, n_hashes: int, rows_per_band: int, hash_fn: str
-) -> DataFrame:
-    """(doc_id, band, bkey) in ONE shuffle (r5): the signature is
-    n_hashes map-side-combined `min(hash(seed, feature))` aggregates of
-    a single groupBy(doc_id), and band keys are projections over the
-    aggregated row. Value-identical to minhash_signatures →
-    minhash_band_buckets (same hash families, same seed order, same
-    band key layout), but the row form crossJoins the seed table first
-    — shuffling n_hashes× the shingle rows into a two-key aggregation —
-    where this shuffles exactly one combined row per doc."""
-    hash_fn = resolve_hash_fn(hash_fn)
-    if _is_affine(hash_fn):
-        # project the base hash ONCE per shingle row (a projection
-        # below the aggregate — guaranteed single evaluation, where 16
-        # independent agg expressions would re-hash per seed), then
-        # the n_hashes aggregates are codegen'd long multiply-adds
-        sh = sh.withColumn("__h", _affine_base_expr(feature_col, hash_fn))
-        aggs = [
-            F.min(_affine_mh_expr(a, b, F.col("__h"))).alias(f"__mh{s}")
-            for s, (a, b) in enumerate(affine_consts(n_hashes))
-        ]
-    else:
-        aggs = [
-            F.min(_seed_mh_expr(s, feature_col, hash_fn)).alias(f"__mh{s}")
-            for s in range(n_hashes)
-        ]
-    per_doc = sh.groupBy("doc_id").agg(*aggs)
-    bands = _band_key_cols(n_hashes, rows_per_band)
-    return per_doc.select("doc_id", F.explode(F.array(*bands)).alias("bb")).select(
-        "doc_id", "bb.band", "bb.bkey"
-    )
-
-
 def _band_key_cols(n_hashes: int, rows_per_band: int):
-    """The banded-key projection shared by the onepass and rowwise
-    forms: band b's key is md5 over the '|'-joined stringified minhash
-    values of its seed slice (the layout minhash_band_buckets emits)."""
+    """The banded-key projection: band b's key is md5 over the
+    '|'-joined stringified minhash values of its seed slice (the last
+    band may be narrower)."""
     import math
 
     bands = []
@@ -528,6 +475,70 @@ def _band_key_cols(n_hashes: int, rows_per_band: int):
     return bands
 
 
+def _signature_buckets(
+    staged: DataFrame, grams, n_hashes: int, rows_per_band: int, hash_fn: str
+) -> DataFrame:
+    """(doc_id, band, bkey) from `staged` (a doc_id column plus what
+    `grams` reads), where `grams` is each row's distinct gram array:
+    gram strings for md5 / xxhash64 / affine / md5_affine, gram base
+    hashes (materialized) for the tokenroll families. Rows without
+    grams emit no buckets."""
+    if _is_affine(hash_fn) or _is_tokenroll(hash_fn):
+        # hash every gram ONCE into an int array and materialize THAT
+        # behind the Generate barrier; the n_hashes signature values
+        # are then independent array_min(transform(...)) passes of pure
+        # long arithmetic over the materialized ints. Measured FASTER
+        # than folding (22.1s vs 24.0s signature+banding at 200k×160
+        # tokens): the zip_with fold allocates two 16-element arrays
+        # per gram, which costs more than 16 re-walks of a 160-int
+        # array. The r6 per-seed trap does not apply — that form
+        # rebuilt the STRING gram array per seed; here the barrier
+        # guarantees gram construction and hashing run once per row.
+        hashes = (
+            grams
+            if _is_tokenroll(hash_fn)
+            else F.transform(grams, lambda g: _affine_base_expr(g, hash_fn))
+        )
+        per_doc = (
+            staged.select("doc_id", F.explode(F.array(hashes)).alias("__h"))
+            .where(F.size("__h") > 0)  # no shingles → no buckets
+            .select(
+                "doc_id",
+                *[
+                    mh.alias(f"__mh{s}")
+                    for s, mh in enumerate(affine_signature("__h", n_hashes))
+                ],
+            )
+        )
+    else:
+        sig = F.aggregate(
+            grams,
+            F.array_repeat(
+                F.lit(None).cast("string" if hash_fn == "md5" else "bigint"), n_hashes
+            ),
+            lambda acc, g: F.zip_with(
+                acc,
+                F.array(*[_seed_mh_expr(s, g, hash_fn) for s in range(n_hashes)]),
+                lambda a, v: F.least(a, v),
+            ),
+        )
+        per_doc = (
+            # the Generate barrier: one fold evaluation per row (see
+            # band_buckets_rowwise)
+            staged.select("doc_id", F.explode(F.array(sig)).alias("__sig"))
+            # docs with no shingles fold to all-NULL → no buckets
+            .where(F.element_at("__sig", 1).isNotNull())
+            .select(
+                "doc_id",
+                *[F.element_at("__sig", s + 1).alias(f"__mh{s}") for s in range(n_hashes)],
+            )
+        )
+    bands = _band_key_cols(n_hashes, rows_per_band)
+    return per_doc.select("doc_id", F.explode(F.array(*bands)).alias("bb")).select(
+        "doc_id", "bb.band", "bb.bkey"
+    )
+
+
 def band_buckets_rowwise(
     docs: DataFrame,
     n_hashes: int,
@@ -537,120 +548,46 @@ def band_buckets_rowwise(
     id_col: str = "doc_id",
     hash_fn: str = "md5",
 ) -> DataFrame:
-    """(doc_id, band, bkey) with ZERO shuffles (r6): the signature is
-    computed per ROW by ONE `aggregate` fold over the in-row distinct
-    gram array — each gram is visited once and hashed n_hashes times
-    into a zip_with(least) array accumulator — no exploded shingle
-    stream, no distinct shuffle, no groupBy. Value-identical to
-    band_buckets_onepass over `shingles(docs)` (same hash families,
-    seed order, and band-key layout; per-row array_distinct ≡ the
-    global distinct because doc_id is unique per row —
-    test_band_buckets_rowwise_matches_onepass), but the whole
-    signature+banding phase is a projection: at corpus scale the only
-    shuffle left in MinHash candidate mining is the bucket equi-join
-    itself, over narrow (doc_id, band, bkey) rows.
+    """(doc_id, band, bkey) with ZERO shuffles (r6) — the one MinHash
+    signature + banding projection every miner shares: per ROW over the
+    in-row distinct gram array, so the only shuffle left in candidate
+    mining is the bucket equi-join. Value-identical to the reference
+    row form over `shingles(docs)` for every family (per-row
+    array_distinct ≡ the global distinct: doc_id is unique per row).
 
-    Why one fold and not n_hashes × array_min(transform(...)): the
-    per-seed form built the (expensive) gram array once per seed and
-    measured 30% SLOWER than the exploded plan at 160-token docs; the
-    single fold builds it once and flipped that to faster-than-
-    exploded. The fold sits inside a Generate-node barrier
-    (explode(array(sig))) — REQUIRED, not optional: consumers that
-    materialize all n_hashes signature columns re-evaluate the fold
-    per column without it (54-74s vs 34-36s full-miner at 160-token
-    docs; a count()-only A/B hides this via column pruning —
-    BENCHNOTES r6 "measurement trap"). F.least skips the NULL init
-    values, so the fold needs no sentinel."""
+    md5 / xxhash64: ONE `aggregate` fold hashes each gram n_hashes
+    times into a zip_with(least) accumulator (the per-seed
+    array_min(transform(...)) form rebuilt the gram array per seed and
+    measured 30% slower than the exploded plan at 160-token docs).
+    The fold sits inside a Generate barrier (explode(array(sig))) —
+    REQUIRED: consumers that materialize all n_hashes columns
+    re-evaluate it per column without one (54-74s vs 34-36s full miner
+    at 160-token docs; a count()-only A/B hides this via column
+    pruning — BENCHNOTES r6 "measurement trap"). F.least skips the
+    NULL init values, so the fold needs no sentinel.
+
+    affine / md5_affine / tokenroll / md5_tokenroll (r7): one base
+    hash per gram, then affine_signature; tokenroll also skips gram
+    strings (token hashes combined arithmetically)."""
     hash_fn = resolve_hash_fn(hash_fn)
-    if _is_affine(hash_fn) or _is_tokenroll(hash_fn):
-        # affine/tokenroll families (r7): hash every gram ONCE into an
-        # int array (transform pass) and materialize THAT behind the
-        # Generate barrier; the n_hashes signature values are then
-        # independent array_min(transform(...)) passes of pure long
-        # arithmetic over the materialized ints. Measured FASTER than
-        # folding (22.1s vs 24.0s signature+banding at 200k×160
-        # tokens): the zip_with fold allocates two 16-element arrays
-        # per gram, which costs more than 16 re-walks of a 160-int
-        # array. The r6 per-seed trap does not apply — that form
-        # rebuilt the STRING gram array per seed; here the barrier
-        # guarantees gram construction and hashing run once per row.
-        # tokenroll additionally skips gram strings entirely (token
-        # hashes combined arithmetically — the dominant phase cost).
-        consts = affine_consts(n_hashes)
-        if _is_tokenroll(hash_fn):
-            # barrier 1: token hashes materialized once per row;
-            # barrier 2 (below) then materializes the gram hashes —
-            # without barrier 1 the gram lambda re-evaluates the whole
-            # token-hash transform per gram (O(tokens²):
-            # _tokenroll_token_hashes docstring has the measurement)
-            staged = docs.select(
-                F.col(id_col).alias("doc_id"),
-                F.explode(
-                    F.array(_tokenroll_token_hashes(text_col, hash_fn))
-                ).alias("__th"),
-            )
-            hashes = _tokenroll_gram_hashes(shingle_n, "__th")
-        else:
-            staged = docs.select(F.col(id_col).alias("doc_id"), F.col(text_col))
-            hashes = F.transform(
-                _grams_arr(shingle_n, text_col), lambda g: _affine_base_expr(g, hash_fn)
-            )
-        per_doc = (
-            staged.select(
-                F.col("doc_id"), F.explode(F.array(hashes)).alias("__h")
-            )
-            .where(F.size("__h") > 0)  # no shingles → no buckets
-            .select(
-                "doc_id",
-                *[
-                    F.array_min(
-                        F.transform("__h", lambda h: _affine_mh_expr(a, b, h))
-                    ).alias(f"__mh{s}")
-                    for s, (a, b) in enumerate(consts)
-                ],
-            )
+    if _is_tokenroll(hash_fn):
+        # barrier 1: token hashes materialized once per row; barrier 2
+        # (in _signature_buckets) then materializes the gram hashes —
+        # without barrier 1 the gram lambda re-evaluates the whole
+        # token-hash transform per gram (O(tokens²):
+        # _tokenroll_token_hashes docstring has the measurement)
+        staged = docs.select(
+            F.col(id_col).alias("doc_id"),
+            F.explode(F.array(_tokenroll_token_hashes(text_col, hash_fn))).alias("__th"),
         )
-        bands = _band_key_cols(n_hashes, rows_per_band)
-        return per_doc.select(
-            "doc_id", F.explode(F.array(*bands)).alias("bb")
-        ).select("doc_id", "bb.band", "bb.bkey")
-    sig = F.aggregate(
-        _grams_arr(shingle_n, text_col),
-        F.array_repeat(
-            F.lit(None).cast("string" if hash_fn == "md5" else "bigint"), n_hashes
-        ),
-        lambda acc, g: F.zip_with(
-            acc,
-            F.array(*[_seed_mh_expr(s, g, hash_fn) for s in range(n_hashes)]),
-            lambda a, v: F.least(a, v),
-        ),
-    )
-    per_doc = (
-        # explode(array(sig)) puts the fold in a Generate node — the
-        # evaluation barrier that guarantees ONE evaluation regardless
-        # of how many downstream columns reference it. Without it, a
-        # bare count() measures fine (column pruning leaves a single
-        # reference) but MATERIALIZING all n_hashes signature columns
-        # (the miner's checkpoint) re-evaluated the fold per column:
-        # 54-74s vs 23s for the full miner at the 160-token tier.
-        docs.select(
-            F.col(id_col).alias("doc_id"), F.explode(F.array(sig)).alias("__sig")
-        )
-        # docs with no shingles fold to all-NULL → no buckets,
-        # matching the exploded form
-        .where(F.element_at("__sig", 1).isNotNull())
-        .select(
-            "doc_id",
-            *[F.element_at("__sig", s + 1).alias(f"__mh{s}") for s in range(n_hashes)],
-        )
-    )
-    bands = _band_key_cols(n_hashes, rows_per_band)
-    return per_doc.select("doc_id", F.explode(F.array(*bands)).alias("bb")).select(
-        "doc_id", "bb.band", "bb.bkey"
-    )
+        grams = _tokenroll_gram_hashes(shingle_n, "__th")
+    else:
+        staged = docs.select(F.col(id_col).alias("doc_id"), F.col(text_col))
+        grams = _grams_arr(shingle_n, text_col)
+    return _signature_buckets(staged, grams, n_hashes, rows_per_band, hash_fn)
 
 
-def minhash_lsh_pairs_rowwise(
+def minhash_lsh_pairs(
     docs: DataFrame,
     n_hashes: int = 16,
     rows_per_band: int = 4,
@@ -662,25 +599,23 @@ def minhash_lsh_pairs_rowwise(
     max_bucket: Optional[int] = None,
     cap_observation=None,
     buckets: Optional[DataFrame] = None,
+    max_df: Optional[int] = None,
 ) -> DataFrame:
-    """MinHash-LSH near-dup pairs with CANDIDATE-BOUNDED verification
-    (r6) — same output as minhash_lsh_pairs (row-identical by test),
-    different plan:
+    """MinHash-LSH near-duplicate pairs (id_a, id_b, jaccard), verified
+    by exact Jaccard ≥ min_jaccard, with CANDIDATE-BOUNDED verification
+    (r6). ``minhash_lsh_pairs_rowwise`` is the same function.
 
     - candidate mining: band_buckets_rowwise (a pure projection) →
-      bucket self-equi-join. No full-corpus shuffle anywhere — the
-      exploded-shingle distinct AND the signature groupBy of the
-      onepass plan are both gone.
+      materialized bucket table → optional hot-bucket cap → bucket
+      self-equi-join. No full-corpus shuffle anywhere.
     - verification: the shingle table is exploded ONLY for docs that
       appear in some candidate pair (semi-join on the bucket-join
       output), so the exact-Jaccard equi-join and the set-size
       aggregation shuffle candidate volume, not corpus volume.
 
-    At 100 TB this is the structural difference between shuffling the
-    token stream (∝ total text) and shuffling candidates (∝ near-dup
-    rate). No max_df here: the hot-shingle cap needs global document
-    frequencies, which is exactly the full-stream aggregation this
-    plan exists to avoid — capped flows keep minhash_lsh_pairs.
+    Precondition: doc_id unique per row (the universal dedup-input
+    contract). Signatures are per row, so duplicate doc_id rows would
+    bucket separately instead of as one merged shingle set.
 
     max_bucket (hot-BUCKET guard, r7): drop (band, bkey) buckets with
     more than max_bucket member docs before the self-join — a cluster
@@ -688,9 +623,15 @@ def minhash_lsh_pairs_rowwise(
     bucket yields ~d²/2 candidates (see cap_hot_buckets; run
     exact_dedup first so such clusters collapse upstream).
 
-    Precondition: doc_id unique per row (the universal dedup-input
-    contract). Duplicate doc_id rows would bucket per-row here where
-    minhash_lsh_pairs merges them into one shingle set first.
+    max_df (hot-SHINGLE guard): shingles in more than max_df docs
+    leave the feature universe BEFORE signatures, so buckets and
+    verification see the same capped space (see jaccard_pairs). The
+    hot set is one groupBy over `shingles(docs)` (global document
+    frequencies need the full stream), broadcast-anti-joined from the
+    exploded shingles regrouped per doc as signature input and from
+    the verification's explode. Needs gram strings: the tokenroll
+    families (and ``hash_fn='auto'``) raise, as do precomputed
+    ``buckets``.
 
     ``buckets`` (r11): a PRECOMPUTED, already-materialized
     (doc_id, band, bkey) table for `docs` — must come from
@@ -700,23 +641,49 @@ def minhash_lsh_pairs_rowwise(
     table twice (the streaming ingest loop's within-batch self-mine +
     snapshot probe) pay the signature pass ONCE per trigger."""
     hash_fn = resolve_hash_fn(hash_fn)
+    hot = None
+    if max_df is not None:
+        if _is_tokenroll(hash_fn):
+            raise ValueError(
+                f"max_df needs gram strings to count shingle document "
+                f"frequencies, and hash_fn={hash_fn!r} never builds them "
+                "(it hashes grams from token hashes); use md5, xxhash64, "
+                "affine or md5_affine with max_df"
+            )
+        if buckets is not None:
+            raise ValueError(
+                "max_df cannot cap precomputed buckets: their signatures "
+                "were built over every shingle"
+            )
+        sh = shingles(docs, n=shingle_n, text_col=text_col, id_col=id_col)
+        hot = F.broadcast(_hot_features(sh, "shingle", max_df))
     if buckets is None:
-        buckets = band_buckets_rowwise(
-            docs, n_hashes, rows_per_band, shingle_n=shingle_n,
-            text_col=text_col, id_col=id_col, hash_fn=hash_fn,
-        )
+        if hot is None:
+            buckets = band_buckets_rowwise(
+                docs, n_hashes, rows_per_band, shingle_n=shingle_n,
+                text_col=text_col, id_col=id_col, hash_fn=hash_fn,
+            )
+        else:
+            capped = (
+                sh.join(hot, "shingle", "left_anti")
+                .groupBy("doc_id")
+                .agg(F.collect_list("shingle").alias("__grams"))
+            )
+            buckets = _signature_buckets(
+                capped, F.col("__grams"), n_hashes, rows_per_band, hash_fn
+            )
         # materialize the narrow (doc_id, band, bkey) table ONCE: the
         # bucket self-join consumes it on both sides, and a projection
-        # has no shuffle for Spark's ReusedExchange to share (unlike
-        # the onepass groupBy plan) — without this the whole signature
-        # chain runs twice (measured: the win below disappears at 2M)
+        # has no shuffle for Spark's ReusedExchange to share — without
+        # this the whole signature chain runs twice (measured: the
+        # rowwise win disappears at 2M)
         buckets = buckets.localCheckpoint(eager=True)
     if max_bucket is not None:
         buckets = cap_hot_buckets(
             buckets,
             ("band", "bkey"),
             max_bucket,
-            "minhash_lsh_pairs_rowwise",
+            "minhash_lsh_pairs",
             observation=cap_observation,
         )
     a = buckets.select(F.col("doc_id").alias("id_a"), "band", "bkey")
@@ -741,81 +708,15 @@ def minhash_lsh_pairs_rowwise(
         .select("doc_id", F.explode(_grams_arr(shingle_n, "__text")).alias("shingle"))
         # candidate-volume distinct: keeps the verification's set sizes
         # and intersections exact even if a caller passes duplicate
-        # doc_id rows (candidate GENERATION would still see such docs
-        # per-row rather than as a merged shingle set — doc_id is
-        # expected unique per row, like every dedup pipeline input)
+        # doc_id rows
         .distinct()
     )
+    if hot is not None:
+        sh_cand = sh_cand.join(hot, "shingle", "left_anti")
     return jaccard_pairs(sh_cand, "shingle", min_jaccard, candidates=cands)
 
 
-def minhash_band_buckets(signatures: DataFrame, rows_per_band: int = 4) -> DataFrame:
-    """(doc_id, band, bkey) — hash each band of the signature. Works
-    over either signature family (mh values are stringified into the
-    band key; only equality of bkey matters)."""
-    banded = signatures.withColumn("band", F.expr(f"seed div {rows_per_band}"))
-    ordered = F.transform(
-        F.array_sort(F.collect_list(F.struct("seed", "mh"))), lambda x: x["mh"].cast("string")
-    )
-    return banded.groupBy("doc_id", "band").agg(
-        F.md5(F.array_join(ordered, "|").cast("binary")).alias("bkey")
-    )
-
-
-def minhash_lsh_pairs(
-    docs: DataFrame,
-    n_hashes: int = 16,
-    rows_per_band: int = 4,
-    shingle_n: int = 3,
-    min_jaccard: float = 0.5,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_df: Optional[int] = None,
-    hash_fn: str = "md5",
-    max_bucket: Optional[int] = None,
-) -> DataFrame:
-    """MinHash-LSH near-duplicate detection, verified by exact Jaccard.
-
-    shingle → minhash → band → bucket-equi-join → candidate pairs →
-    exact Jaccard ≥ min_jaccard. Returns (id_a, id_b, jaccard).
-    max_df (hot-key guard) drops stop-shingles from the feature universe
-    BEFORE signatures, so both the MinHash buckets and the verification
-    see the same capped feature space (see jaccard_pairs).
-    max_bucket (hot-BUCKET guard, r7) additionally drops (band, bkey)
-    buckets with more than max_bucket docs before the candidate
-    self-join — identical-doc clusters share every band key, which
-    max_df cannot cap (see cap_hot_buckets).
-
-    The shingle table is localCheckpoint'ed: it feeds FOUR consumers
-    (signatures, both sides of the verification join, set sizes), and
-    without materialization each one re-runs the tokenize+window scan —
-    at corpus scale that is the difference between one pass over the
-    text and four.
-    """
-    hash_fn = resolve_hash_fn(hash_fn)
-    sh = shingles(docs, n=shingle_n, text_col=text_col, id_col=id_col)
-    if max_df is not None:
-        hot = (
-            sh.groupBy("shingle")
-            .agg(F.count("*").alias("__df"))
-            .where(F.col("__df") > int(max_df))
-            .select("shingle")
-        )
-        sh = sh.join(F.broadcast(hot), "shingle", "left_anti")
-    sh = sh.localCheckpoint(eager=True)
-    buckets = band_buckets_onepass(
-        sh, "shingle", n_hashes=n_hashes, rows_per_band=rows_per_band, hash_fn=hash_fn
-    )
-    if max_bucket is not None:
-        buckets = cap_hot_buckets(
-            buckets, ("band", "bkey"), max_bucket, "minhash_lsh_pairs"
-        )
-    a = buckets.select(F.col("doc_id").alias("id_a"), "band", "bkey")
-    b = buckets.select(F.col("doc_id").alias("id_b"), "band", "bkey")
-    cands = (
-        a.join(b, ["band", "bkey"]).where(F.col("id_a") < F.col("id_b")).select("id_a", "id_b").distinct()
-    )
-    return jaccard_pairs(sh, "shingle", min_jaccard, candidates=cands)
+minhash_lsh_pairs_rowwise = minhash_lsh_pairs
 
 
 # ---- SimHash -------------------------------------------------------
@@ -831,46 +732,20 @@ def _hex_digit(col, pos: int):
 def simhash_fingerprints(
     docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
-    """(doc_id, simhash) — 32-bit SimHash over the distinct token set.
+    """(doc_id, simhash) — 32-bit SimHash over the distinct token set,
+    computed per ROW with zero shuffles (r6).
+    ``simhash_fingerprints_rowwise`` is the same function.
 
     Bit p (p = 0..31, MSB-first within each hex digit) of each token's
     md5 votes ±1; the fingerprint takes the sign of each bit's total.
-    Everything is md5/substring/div/mod — portable across engines.
-    """
-    ts = token_set(docs, text_col=text_col, id_col=id_col)
-    h = ts.withColumn("h", F.md5(F.col("tok").cast("binary")))
-    for d in range(8):  # first 8 hex chars → 32 bits
-        h = h.withColumn(f"d{d}", _hex_digit(F.col("h"), d + 1))
-    bit_cols = []
-    for p in range(N_SIMHASH_BITS):
-        d, j = p // 4, 3 - (p % 4)
-        bit = (F.col(f"d{d}") / (1 << j)).cast("long") % 2
-        bit_cols.append(F.when(bit == 1, 1).otherwise(-1).alias(f"b{p}"))
-    votes = h.select("doc_id", *bit_cols)
-    agg = votes.groupBy("doc_id").agg(
-        *[F.sum(f"b{p}").alias(f"s{p}") for p in range(N_SIMHASH_BITS)]
-    )
-    fp = None
-    for p in range(N_SIMHASH_BITS):
-        term = F.when(F.col(f"s{p}") > 0, F.lit(1 << p).cast("long")).otherwise(F.lit(0).cast("long"))
-        fp = term if fp is None else fp + term
-    return agg.select("doc_id", fp.alias("simhash"))
-
-
-def simhash_fingerprints_rowwise(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """(doc_id, simhash) — the zero-shuffle SimHash (r6): the whole
-    fingerprint is computed per ROW. The distinct token set is
-    array_distinct in-row; each token hashes ONCE inside a transform;
-    the 32 ±1 vote counters are a single `aggregate` fold with a
-    zip_with array accumulator. Value-identical to
-    simhash_fingerprints (the vote totals are integer sums — exact and
-    order-independent — and the per-row distinct equals the global
-    distinct because doc_id is unique per row;
-    test_simhash_rowwise_matches), but the plan is a pure projection:
-    no token explode, no distinct shuffle, no 32-sum groupBy. Docs
-    with no tokens emit no row (matching the exploded form)."""
+    Everything is md5/substring/div/mod — portable across engines. The
+    distinct token set is array_distinct in-row (≡ the global distinct
+    because doc_id is unique per row); each token hashes ONCE inside a
+    transform; the 32 ±1 vote counters are a single `aggregate` fold
+    with a zip_with array accumulator. Vote totals are integer sums —
+    exact and order-independent — so the values equal the exploded
+    token-vote + groupBy reference form (tests/dedup_reference.py).
+    Docs with no tokens emit no row."""
     toks = F.array_distinct(
         F.filter(F.split(F.lower(text_col), " "), lambda t: t != F.lit(""))
     )
@@ -905,6 +780,9 @@ def simhash_fingerprints_rowwise(
         .where(F.col("__nt") > 0)
         .select("doc_id", fp.alias("simhash"))
     )
+
+
+simhash_fingerprints_rowwise = simhash_fingerprints
 
 
 def _simhash_chunks(fingerprints: DataFrame, n_chunks: int, width: int) -> DataFrame:
@@ -1826,7 +1704,7 @@ def neardup_dedup(
         F.col("canonical_id").alias(id_col)
     )
     canon_docs = docs.join(canon, id_col, "left_semi")
-    pairs = minhash_lsh_pairs_rowwise(
+    pairs = minhash_lsh_pairs(
         canon_docs,
         n_hashes=n_hashes,
         rows_per_band=rows_per_band,

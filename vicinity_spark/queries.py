@@ -3290,8 +3290,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate generation oracle-checkable. r6: runs the ROWWISE plan
     (signatures as a per-row projection, candidate-bounded
     verification — zero full-corpus shuffles), so the oracle
-    hash-checks the production plan; output is pair-identical to
-    minhash_lsh_pairs (also pinned by test)."""
+    hash-checks the production plan."""
     from vicinity_spark.operators.dedup import minhash_lsh_pairs_rowwise
 
     j = minhash_lsh_pairs_rowwise(
@@ -3302,12 +3301,12 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register("dedup_minhash_onepass", _MINHASH_SQL)
 def dedup_minhash_onepass(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """r7 (VERDICT r6 item 7): the ONE-PASS exploded miner
-    (operators/dedup.py minhash_lsh_pairs — shingle explode →
-    per-seed min aggregate → band keys) certified against the SAME
-    oracle SQL as `dedup_minhash_lsh`. A shared green hash on both
-    rows IS the rowwise↔onepass equality proof, driver-checked rather
-    than only pytest-pinned (tests/test_dedup.py property test)."""
+    """The `minhash_lsh_pairs` entry point, checked against the same
+    oracle SQL as `dedup_minhash_lsh`. Since the onepass twin left the
+    library both names run one plan (the rowwise miner), so this row
+    is a second hash of it, not an equality proof between plans; the
+    signature forms are pinned to their reference row forms in
+    tests/test_dedup.py."""
     from vicinity_spark.operators.dedup import minhash_lsh_pairs
 
     j = minhash_lsh_pairs(
@@ -3468,7 +3467,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/dedup.py: md5-bit voting, engine-portable). r6: runs
     the ROWWISE plan — the whole fingerprint is a per-row fold, zero
     shuffles — so the oracle hash-checks the production plan
-    (row-identity to the exploded form is also test-pinned)."""
+    (row-identity to the exploded reference form is test-pinned)."""
     from vicinity_spark.operators.dedup import simhash_fingerprints_rowwise
 
     return simhash_fingerprints_rowwise(_t(spark, sf_dir, "documents"))
@@ -3476,12 +3475,12 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register("dedup_simhash_exploded", _simhash_sql())
 def dedup_simhash_exploded(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """r7 (VERDICT r6 item 7 pattern): the EXPLODED token-vote SimHash
-    plan (operators/dedup.py simhash_fingerprints — explode distinct
-    tokens → per-bit vote aggregate) certified against the SAME oracle
-    SQL as `dedup_simhash`. A shared green hash is the driver-checked
-    rowwise↔exploded equality proof for the SimHash family, matching
-    what dedup_minhash_onepass provides for MinHash."""
+    """The `simhash_fingerprints` entry point, checked against the
+    same oracle SQL as `dedup_simhash`. Since the exploded token-vote
+    form left the library both names run the per-row projection, so
+    this row is a second hash of that plan; the exploded form is the
+    test-side reference (tests/dedup_reference.py) the projection is
+    pinned to."""
     from vicinity_spark.operators.dedup import simhash_fingerprints
 
     return simhash_fingerprints(_t(spark, sf_dir, "documents"))

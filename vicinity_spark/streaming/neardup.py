@@ -6,13 +6,13 @@ A production corpus ingested continuously needs near-dup detection AT
 INGEST, not only in nightly batch sweeps. Design constraints and how
 this operator meets them:
 
-- **One stateful operator.** The batch MinHash pipeline computes
-  signatures with a crossJoin + groupBy — a stateful aggregation in
-  streaming, which would chain two stateful operators. Here the
-  signature is computed STATELESSLY per row (pure column expressions:
-  shingle array → per-seed `array_min(transform(xxhash64(seed, _)))`),
-  so the only stateful operator in the query is the keyed bucket
-  state.
+- **One stateful operator.** The signature is computed STATELESSLY
+  per row, like the batch miners' band_buckets_rowwise projection
+  (pure column expressions: shingle array → per-seed
+  `array_min(transform(xxhash64(seed, _)))`, or the tokenroll
+  family's dedup.affine_signature), so the only stateful operator in
+  the query is the keyed bucket state — a per-doc groupBy signature
+  would be a second stateful aggregation in streaming.
 - **Bounded state.** Docs explode to one row per signature band;
   per-(band, bucket) state keeps only the MOST RECENT prior doc
   (id, event time, signature). Buckets are 64-bit hashes, so non-dup
@@ -99,8 +99,7 @@ def stateless_minhash_tokenroll(
         _affine_base_expr,
         _roll_combine,
         _tokenroll_gram_hashes,
-        affine_consts,
-        _affine_mh_expr,
+        affine_signature,
     )
 
     toks = F.split(F.trim(F.lower(F.col(text_col))), r"\s+")
@@ -123,12 +122,7 @@ def stateless_minhash_tokenroll(
     if short is not None:
         gram_h = short.otherwise(gram_h)
     staged = staged.select("*", F.explode(F.array(gram_h)).alias("__gh")).drop("__th")
-    sig = F.array(
-        *[
-            F.array_min(F.transform("__gh", lambda h: _affine_mh_expr(a, b, h)))
-            for a, b in affine_consts(n_hashes)
-        ]
-    )
+    sig = F.array(*affine_signature("__gh", n_hashes))
     return staged.select("*", sig.alias(sig_col)).drop("__gh")
 
 
@@ -401,7 +395,7 @@ def stream_daily_ingest(
          compute, and before r11 each miner recomputed it;
       1. **within-batch dedup** (``within_batch``, default on — r9
          ADVICE): mine the micro-batch against ITSELF with the
-         snapshot's own banding params (``minhash_lsh_pairs_rowwise``
+         snapshot's own banding params (``minhash_lsh_pairs``
          — the candidate-bounded miner, which supports every hash
          family a snapshot can be built with, tokenroll included) and
          keep, of every flagged pair, the smaller id — without this,
@@ -473,7 +467,7 @@ def stream_daily_ingest(
         _read_sidecar,
         append_corpus_buckets,
         compact_corpus_buckets,
-        minhash_lsh_pairs_rowwise,
+        minhash_lsh_pairs,
         minhash_lsh_pairs_vs_snapshot,
     )
 
@@ -528,7 +522,7 @@ def stream_daily_ingest(
             # flagged pair keep the smaller id — deterministic, and a
             # chain a~b~c keeps exactly its minimum
             obs_wb = Observation() if max_bucket is not None else None
-            wb = minhash_lsh_pairs_rowwise(
+            wb = minhash_lsh_pairs(
                 batch,
                 n_hashes=int(params["n_hashes"]),
                 rows_per_band=int(params["rows_per_band"]),
