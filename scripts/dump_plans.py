@@ -15,12 +15,14 @@ import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+# the checkout this script lives in, so a second checkout imports its own library
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 SUFFIX = sys.argv[1] if len(sys.argv) > 1 else "before"
 ONLY = set(sys.argv[2:])
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-OUT = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", os.environ.get("SPARK_GRAFT_PLANS_DIR", "r15"))
+OUT = os.path.join(ROOT, "plans", os.environ.get("SPARK_GRAFT_PLANS_DIR", "r15"))
 
 
 def main():

@@ -600,14 +600,40 @@ def test_ivf_preset_centroids_build_assigns_argmin(spark):
         [(i, [float(v) for v in X[i]]) for i in range(60)], "id long, vector array<float>"
     )
     cents = [list(map(float, X[j])) for j in (5, 20, 40)]
-    strat = IVFStrategy(nlist=3, nprobe=3, centroids=cents)
+    # a fourth centroid mirrors centroid 0 through a row p of list 0, so
+    # p is EXACTLY as far from both (the float32 values are exact in
+    # float64, and so are 2p - c0 and p - (2p - c0) = c0 - p): the tie
+    # must go to the lower index
+    def sq(i):
+        return ((X[i].astype(np.float64) - np.asarray(cents)) ** 2).sum(axis=1)
+
+    p = next(i for i in range(60) if i not in (5, 20, 40) and np.argmin(sq(i)) == 0)
+    cents.append(list(2 * X[p].astype(np.float64) - np.asarray(cents[0])))
+    assert sq(p)[0] == sq(p)[3] and sq(p)[0] < sq(p)[1:3].min()
+    strat = IVFStrategy(nlist=4, nprobe=4, centroids=cents)
     built = strat.build(corpus, Metric.COSINE, 8)
 
     got = {r.id: r[CLUSTER_COL] for r in built.collect()}
-    C = np.asarray(cents)
     for i in range(60):
-        expect = int(np.argmin(((X[i].astype(np.float64) - C) ** 2).sum(axis=1)))
+        expect = int(np.argmin(sq(i)))
         assert got[i] == expect, (i, got[i], expect)
+    assert got[p] == 0
+
+    # inserted rows follow the same rule: a facade insert (a driver-built
+    # batch, assigned on the driver) and on_insert on a list-built frame
+    # (the streaming-ingest path, the assignment UDF) both give each
+    # vector the build's list
+    from vicinity_spark.store import VectorStore
+
+    store = VectorStore.from_vectors_and_items(
+        spark, X, [f"x{i}" for i in range(60)], backend_type="ivf",
+        metric="cosine", nlist=4, nprobe=4, centroids=cents,
+    )
+    store.insert([f"y{i}" for i in range(60)], X)
+    inserted = store.df.where(F.col("id") >= 60).collect()
+    assert {r.id - 60: r[CLUSTER_COL] for r in inserted} == got
+    streamed = strat.on_insert(corpus, Metric.COSINE, 8).collect()
+    assert {r.id: r[CLUSTER_COL] for r in streamed} == got
 
     # nprobe = nlist → exact recall: the preset path is a real index
     queries = corpus.where(F.col("id") < 3).select(

@@ -154,6 +154,12 @@ def test_serving_path_scans_no_python_rdd(spark, backend, monkeypatch):
     for what, df in plans.items():
         assert python_rdd_scans(df) == [], what
         assert "Scan ExistingRDD" not in explain_str(df, "simple"), what
+    # the insert batches add no operator of their own to the query: the
+    # IVF assignment is made on the driver, so no centroid cross join,
+    # no per-id window and no Python UDF is re-run by each query
+    before, after = (explain_str(plans[w], "simple") for w in ("query_df", "query_df after inserts"))
+    for op in ("Window", "CartesianProduct", "BroadcastNestedLoopJoin", "ArrowEvalPython"):
+        assert after.count(op) == before.count(op), (op, after)
     # the guard itself sees a list-built frame through a store plan. A
     # bounded IVF batch is collected to the driver, so its plan no
     # longer holds the frame: there the unbounded plan is checked
@@ -215,6 +221,44 @@ def test_bounded_query_job_count(spark, backend):
     finally:
         store.df.unpersist()
     assert jobs <= 4 if backend in ("basic", "ivf") else jobs < _GRID_JOBS[backend], jobs
+
+
+@pytest.mark.parametrize("backend", ["ivf", "ivfsq"])
+def test_insert_runs_no_job(spark, backend):
+    """A facade insert into an IVF-family store runs no Spark job (the
+    batch is assigned on the driver and stays a LocalRelation); only
+    the every-_INSERT_CHECKPOINT_EVERY-th insert runs one, its delta
+    checkpoint. A bounded query after any number of inserts runs as
+    many jobs as before the first."""
+    import numpy as np
+
+    from vicinity_spark.store import _INSERT_CHECKPOINT_EVERY, VectorStore
+
+    rng = np.random.default_rng(8)
+    X = rng.standard_normal((400, 8))
+    C = X[:8] / np.linalg.norm(X[:8], axis=1)[:, None]
+    params = {"nlist": 8, "nprobe": 2, "centroids": C}
+    if backend == "ivfsq":
+        params["refine"] = 4
+    store = VectorStore.from_vectors_and_items(
+        spark, X, [f"i{i}" for i in range(400)], backend_type=backend, metric="cosine", **params
+    )
+    store.df.cache()
+    store.df.count()
+    qdf, _ = store._queries_df(rng.standard_normal((5, 8)))
+
+    def query():
+        return _count_jobs(spark, lambda: store.query_df(qdf, k=5).collect())
+
+    try:
+        before = query()
+        for i in range(1, _INSERT_CHECKPOINT_EVERY + 2):
+            jobs = _count_jobs(spark, lambda: store.insert([f"n{i}"], rng.standard_normal(8)))
+            assert jobs == (1 if i == _INSERT_CHECKPOINT_EVERY else 0), (i, jobs)
+            if i in (1, 3, _INSERT_CHECKPOINT_EVERY, _INSERT_CHECKPOINT_EVERY + 1):
+                assert query() == before, i
+    finally:
+        store._base_df.unpersist()
 
 
 def test_bounded_ivf_plan_prunes_lists(spark, tmp_path):

@@ -587,7 +587,6 @@ def test_threshold_df_filtered(spark):
     assert {r["id"] for r in odd_q} == {i for i in full if i % 2 == 1}
 
 
-@pytest.mark.slow
 def test_store_insert_lineage_bounded(spark, data):
     """r11 (the store-level twin of the LSH branch lifecycle): every
     insert() extends the plan by one lazy unionByName, so an
@@ -616,6 +615,9 @@ def test_store_insert_lineage_bounded(spark, data):
     # only the post-checkpoint tail unions remain (3 batches since the
     # last truncation + the base∪delta seam), never the full history
     assert plan.count("Union") < _INSERT_CHECKPOINT_EVERY, plan[:2000]
+    # the pending delta is one partition, so each query scans the base
+    # partitions plus one, however many batches are pending
+    assert store._insert_delta.rdd.getNumPartitions() == 1
     assert len(store) == N + n_inserts
     res = store.query(qvec, k=3)
     assert "ins0" in [it for it, _ in res[0]]

@@ -12,7 +12,10 @@ every query runs its probe and scoring stages over that layout, and
 each Python task costs a fixed worker launch whether its partition
 holds one list or many. Centroids are stored in params (nlist × dim
 doubles — tiny), so the index reloads from metadata alone and inserts
-assign clusters without refitting.
+assign clusters without refitting. An insert batch built on the driver
+is assigned there (`nearest_centroids`, the preset build's rule) and
+stays a LocalRelation: the insert and every later scan of its rows run
+no Spark job for the assignment.
 
 Query, bounded batch (at most AUTO_GRID_QUERY_ROWS rows — every facade
 `query`): the batch is collected once and probed on the driver
@@ -32,13 +35,13 @@ from typing import Optional, Sequence
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, StructField, StructType
 
 from vicinity_spark.backends.base import IndexStrategy
 from vicinity_spark.datatypes import Backend, Metric
-from vicinity_spark.functions.metrics import distance_expr
-from vicinity_spark.session import local_frame
+from vicinity_spark.session import local_frame, local_rows
 
 CLUSTER_COL = "__cluster"
 
@@ -96,25 +99,27 @@ class IVFStrategy(IndexStrategy):
         return out.repartition(F.col(CLUSTER_COL))
 
     def on_insert(self, new_df: DataFrame, metric: Metric, dim: int) -> DataFrame:
-        """Assign nearest centroid to appended rows — no refit (the
-        reference's trainable indexes likewise train once, add many)."""
-        cent = self._centroid_df(new_df.sparkSession)
-        d = distance_expr(Metric.EUCLIDEAN, F.col("vector"), F.col("__cvec"))
-        w = Window.partitionBy("id").orderBy(d, F.col(CLUSTER_COL))
-        return (
-            new_df.crossJoin(F.broadcast(cent))
-            .withColumn("__rn", F.row_number().over(w))
-            .where(F.col("__rn") == 1)
-            .drop("__rn", "__cvec")
-        )
+        """Assign appended rows their nearest centroid — no refit (the
+        reference's trainable indexes likewise train once, add many) —
+        by the preset-centroid build's rule: argmin squared l2, ties to
+        the lower index (`nearest_centroids`). A driver-built batch (a
+        LocalRelation: every `VectorStore.insert`) is assigned on the
+        driver and comes back as a LocalRelation, so neither the insert
+        nor a later scan of the rows runs a job or a Python task for
+        it; any other frame (a streaming micro-batch) gets
+        `centroid_assign_udf`."""
+        from vicinity_spark.operators.grid import centroid_assign_udf, nearest_centroids
 
-    def _centroid_df(self, spark) -> DataFrame:
-        C = self.centroids
-        return local_frame(
-            spark,
-            {CLUSTER_COL: np.arange(len(C), dtype=np.int32), "__cvec": list(C)},
-            f"{CLUSTER_COL} int, __cvec array<double>",
-        )
+        rows = local_rows(new_df)
+        if rows is None:
+            assign = centroid_assign_udf(self.params["centroids"])
+            return new_df.withColumn(CLUSTER_COL, assign(F.col("vector")))
+        schema = new_df.schema
+        cols = {f.name: [r[i] for r in rows] for i, f in enumerate(schema.fields)}
+        X = np.asarray(cols["vector"], dtype=np.float64).reshape(len(rows), dim)
+        cols[CLUSTER_COL] = nearest_centroids(X, self.centroids)[0][:, 0].astype(np.int32)
+        out = StructType(schema.fields + [StructField(CLUSTER_COL, IntegerType())])
+        return local_frame(new_df.sparkSession, cols, out)
 
     def _probe_df(self, queries: DataFrame, extra_cols: Sequence[str] = ()) -> DataFrame:
         """(query_id, *extra_cols, __cluster) for the nprobe nearest
@@ -124,7 +129,7 @@ class IVFStrategy(IndexStrategy):
         10M-row query table probes in parallel instead of bottlenecking
         the driver. `extra_cols` ride along for the streaming serving
         path (ts + qvec, so scoring never re-joins the query stream)."""
-        from pyspark.sql.types import ArrayType, IntegerType
+        from pyspark.sql.types import ArrayType
 
         lists = self._lists(None)
 

@@ -66,6 +66,7 @@ from vicinity_spark.operators.grid import (
     dense_cell_within,
     scan_cells,
 )
+from vicinity_spark.session import local_rows, optimized_plan
 
 
 def _np_distances(
@@ -178,14 +179,13 @@ def score_joined(
 
 def query_matrix(queries: DataFrame, id_col: str = "query_id", vec_col: str = "qvec"):
     """(qids, Q) numpy arrays of the query batch. A ``LocalRelation``
-    (``session.local_frame`` batches) already holds its rows on the
-    driver, so ``collect()`` reads them without a Spark job; any other
-    plan comes through the Arrow path (one job). An empty batch yields
-    (0,)-shaped ids and a (0, 0) matrix."""
+    (``session.local_frame`` batches) is read without a Spark job
+    (``session.local_rows``); any other plan comes through the Arrow
+    path (one job). An empty batch yields (0,)-shaped ids and a (0, 0)
+    matrix."""
     q = queries.select(id_col, vec_col)
-    plan = _optimized_plan(q)
-    if plan is not None and plan.getClass().getSimpleName() == "LocalRelation":
-        rows = q.collect()
+    rows = local_rows(q)
+    if rows is not None:
         qids = [r[0] for r in rows]
         vecs = [r[1] for r in rows]
     else:
@@ -289,21 +289,12 @@ def join_payload(
 AUTO_GRID_QUERY_ROWS = 8192
 
 
-def _optimized_plan(df: DataFrame):
-    """df's optimized JVM logical plan (None where there is none to
-    read: Spark Connect)."""
-    try:
-        return df._jdf.queryExecution().optimizedPlan()
-    except Exception:
-        return None
-
-
 def _max_rows(df: DataFrame):
     """The optimizer's ``maxRows`` bound, or None when it has none
     (defined for LocalRelation — ``session.local_frame`` batches — and
     LIMIT'd plans; a ``createDataFrame(<list>)`` or cached frame has
     none)."""
-    plan = _optimized_plan(df)
+    plan = optimized_plan(df)
     if plan is None or not plan.maxRows().isDefined():
         return None
     return int(plan.maxRows().get())

@@ -152,6 +152,26 @@ def local_frame(
     return spark.createDataFrame(table, schema)
 
 
+def optimized_plan(df: DataFrame):
+    """df's optimized JVM logical plan (None where there is none to
+    read: Spark Connect)."""
+    try:
+        return df._jdf.queryExecution().optimizedPlan()
+    except Exception:
+        return None
+
+
+def local_rows(df: DataFrame):
+    """``df``'s rows when its optimized plan is a ``LocalRelation`` (a
+    ``local_frame`` batch, or a projection the optimizer folds into
+    one): they are already on the driver, so ``collect()`` reads them
+    without a Spark job. None for any other plan."""
+    plan = optimized_plan(df)
+    if plan is None or plan.getClass().getSimpleName() != "LocalRelation":
+        return None
+    return df.collect()
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str):
     """Read one of the driver's parquet tables (TESTDATA.md)."""
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))

@@ -438,12 +438,18 @@ class VectorStore:
         # store the full corpus every 8 row-level inserts — the wrong
         # trade at any real corpus size). The delta blocks live on
         # executors — on a cluster with executor churn, save()
-        # periodically instead.
-        self._insert_delta = (
+        # periodically instead. Between checkpoints an insert runs no
+        # job: the batch is a LocalRelation (IVF's on_insert assigns
+        # its lists on the driver and keeps it one). The delta is
+        # coalesced to ONE partition, so a later query scans the base
+        # partitions plus one, not min(rows, parallelism) more per
+        # pending batch, and the checkpoint is one job of one task.
+        delta = (
             new_df
             if self._insert_delta is None
             else self._insert_delta.unionByName(new_df, allowMissingColumns=True)
         )
+        self._insert_delta = delta.coalesce(1)
         self._insert_batches += 1
         if self._insert_batches % _INSERT_CHECKPOINT_EVERY == 0:
             self._insert_delta = self._insert_delta.localCheckpoint(eager=True)
