@@ -36,9 +36,9 @@ def knn_batch_full(spark, sf_dir):
     """Every embedding queries the whole corpus, k=10, exact BLOCK-GRID
     plan (operators/grid.py): query vectors arrive through a join, so
     the plan holds at any query-table size — the honest shape for a
-    full-table query load. (The `partial` plan, which driver-collects
-    the bounded query batch, is benched under knn_scale_200k — its
-    correct regime.)"""
+    full-table query load. (The bounded `auto` plan, which
+    driver-collects the query batch, is benched under knn_scale_200k —
+    its correct regime.)"""
     from vicinity_spark.operators.knn import knn_join
 
     return knn_join(
@@ -169,8 +169,8 @@ def _knn_scale(n, parts=32):
         )
         # untimed warm-up on a bounded slice: JIT/codegen for the same
         # operators, so the timed single-shot measures the plan
-        knn_join(corpus.limit(5000), queries, k=10, metric="cosine", algorithm="partial").count()
-        return lambda s, d: knn_join(corpus, queries, k=10, metric="cosine", algorithm="partial")
+        knn_join(corpus.limit(5000), queries, k=10, metric="cosine", algorithm="auto").count()
+        return lambda s, d: knn_join(corpus, queries, k=10, metric="cosine", algorithm="auto")
 
     return make
 

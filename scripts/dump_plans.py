@@ -5,7 +5,8 @@ Usage: python scripts/dump_plans.py <suffix> [query ...]
         python scripts/dump_plans.py after emb_semdedup ann_ivf_knn
 
 Driver-only work (no jobs run): builds each DataFrame at sf0.01 and
-writes plans/r14/<name>_<suffix>.txt. Queries whose factories
+writes plans/r15/<name>_<suffix>.txt (SPARK_GRAFT_PLANS_DIR names
+another folder). Queries whose factories
 themselves run jobs (index builds, collects) still execute those.
 """
 

@@ -8,7 +8,7 @@ from pyspark.sql import functions as F
 from vicinity_spark.operators.knn import knn_join, threshold_join
 
 
-@pytest.mark.parametrize("algorithm", ["window", "partial", "grid"])
+@pytest.mark.parametrize("algorithm", ["window", "auto", "grid"])
 @pytest.mark.parametrize("metric", ["cosine", "euclidean"])
 def test_knn_matches_numpy_oracle(corpus_df, queries_df, np_oracle, metric, algorithm):
     k = 10
@@ -37,7 +37,7 @@ def test_knn_k_below_one_raises(corpus_df, queries_df):
         knn_join(corpus_df, queries_df, k=0)
 
 
-@pytest.mark.parametrize("algorithm", ["window", "partial", "grid"])
+@pytest.mark.parametrize("algorithm", ["window", "auto", "grid"])
 def test_knn_duplicate_queries_identical(corpus_df, queries_df, algorithm):
     # determinism: duplicated query rows give identical results
     # (reference tests/test_vicinity.py:58-64)
@@ -382,7 +382,9 @@ def test_threshold_grid_equals_expr(spark, corpus_df, queries_df):
     for metric, t in (("cosine", 0.4), ("euclidean", 1.0), ("manhattan", 2.0)):
         a = {
             (r["query_id"], r["id"]): r["distance"]
-            for r in threshold_join(corpus_df, queries_df, t, metric, dim=8).collect()
+            for r in threshold_join(
+                corpus_df, queries_df, t, metric, dim=8, algorithm="expr"
+            ).collect()
         }
         b = {
             (r["query_id"], r["id"]): r["distance"]
@@ -396,8 +398,8 @@ def test_threshold_grid_equals_expr(spark, corpus_df, queries_df):
 
 
 def test_knn_auto_routes_large_query_tables_to_grid(spark, monkeypatch):
-    """`algorithm="auto"` sends bounded query batches through `partial`
-    (driver-collected query matrix) but a query TABLE past
+    """`algorithm="auto"` sends bounded query batches through the
+    bounded scan (driver-collected query matrix) but a query TABLE past
     AUTO_GRID_QUERY_ROWS through `grid` — no driver materialization of
     the query side (r3 VERDICT item 4). The large table has an
     optimizer maxRows, so its routing collects nothing."""
@@ -414,7 +416,7 @@ def test_knn_auto_routes_large_query_tables_to_grid(spark, monkeypatch):
         "id long, vector array<float>",
     )
 
-    # small bounded batch → partial: the query-matrix collect runs
+    # small bounded batch → bounded scan: the query-matrix collect runs
     calls = []
     orig = knn_mod.query_matrix
 
@@ -429,7 +431,7 @@ def test_knn_auto_routes_large_query_tables_to_grid(spark, monkeypatch):
     )
     got = knn_join(corpus, small, k=3, algorithm="auto").collect()
     assert len(got) == 15
-    assert calls, "auto did not route a bounded batch to partial"
+    assert calls, "auto did not route a bounded batch to the bounded scan"
 
     # large query table → grid: poison the collect helpers; the whole
     # job must still run without them
@@ -451,7 +453,8 @@ def test_knn_auto_routes_large_query_tables_to_grid(spark, monkeypatch):
 def test_queries_are_bounded_scan_fallback(spark, tmp_path, monkeypatch):
     """Parquet scans have no optimizer maxRows → the bounded router
     falls back to one limit-bounded collect, correct in both
-    directions, and threshold_join's auto routes on the same answer."""
+    directions, and threshold_join's auto routes on the same answer:
+    the bounded scan (no join at all) or the block grid."""
     import vicinity_spark.operators.knn as knn_mod
     from vicinity_spark.operators.knn import bounded_query_matrix
 
@@ -465,16 +468,18 @@ def test_queries_are_bounded_scan_fallback(spark, tmp_path, monkeypatch):
     qids, Q = bounded_query_matrix(scan)
     assert sorted(qids.tolist()) == list(range(100)) and Q.shape == (100, 1)
     plan = threshold_join(corpus, scan, 0.5, "euclidean")._jdf.queryExecution()
-    assert "BroadcastNestedLoopJoin" in plan.executedPlan().toString()
+    bounded = plan.optimizedPlan().toString()
+    assert "MapInPandas" in bounded and "Join" not in bounded
     monkeypatch.setattr(knn_mod, "AUTO_GRID_QUERY_ROWS", 99)
     assert bounded_query_matrix(scan) is None
     plan = threshold_join(corpus, scan, 0.5, "euclidean")._jdf.queryExecution()
-    assert "MapInPandas" in plan.optimizedPlan().toString()
+    grid = plan.optimizedPlan().toString()
+    assert "MapInPandas" in grid and "Join" in grid
 
 
 def test_knn_empty_query_table_all_algorithms(spark):
     """An empty query batch returns an empty, correctly-shaped result
-    on every exact plan (the partial plan used to crash on the empty
+    on every exact plan (the bounded plan used to crash on the empty
     driver-collected matrix)."""
     import numpy as np
 
@@ -484,7 +489,7 @@ def test_knn_empty_query_table_all_algorithms(spark):
         "id long, vector array<float>",
     )
     empty_q = spark.createDataFrame([], "query_id long, qvec array<float>")
-    for algo in ("auto", "window", "partial", "grid"):
+    for algo in ("auto", "window", "grid"):
         res = knn_join(corpus, empty_q, k=3, algorithm=algo)
         assert res.count() == 0, algo
         assert res.columns == ["query_id", "id", "distance", "rank"], algo
@@ -682,13 +687,12 @@ def test_graph_ivf_seed_state_survives_save_reload(spark, tmp_path):
 
 
 def test_threshold_auto_routes_large_query_tables_to_grid(spark):
-    """r5 VERDICT item 1: `threshold_join(algorithm="auto")` (now the
-    default) must mirror knn_join's routing — a bounded query batch
-    keeps the oracle-matched expr plan (query side broadcast), but a
-    query TABLE past AUTO_GRID_QUERY_ROWS routes to the block-grid
-    kernel: NO broadcast of the query side, query vectors arrive
-    through the block join. Routing is asserted on the physical plan:
-    the grid kernel is the only MapInPandas in either plan."""
+    """`threshold_join(algorithm="auto")` (the default) routes as
+    knn_join does: a bounded query batch takes the bounded scan (one
+    mapInPandas over the corpus, no join and no broadcast of a query
+    relation), a query TABLE past AUTO_GRID_QUERY_ROWS the block grid
+    (query vectors arrive through the block join). Routing is asserted
+    on the physical plan; both return the rows of the `expr` plan."""
     import vicinity_spark.operators.knn as knn_mod
     from vicinity_spark.plans.checks import explain_str
 
@@ -700,21 +704,17 @@ def test_threshold_auto_routes_large_query_tables_to_grid(spark):
         "id long, vector array<float>",
     )
 
-    # bounded batch → expr: broadcast join present, no python kernel
+    # bounded batch → bounded scan: python kernel, no join at all
     small = spark.createDataFrame(
         [(i, [float(x) for x in X[i]]) for i in range(5)],
         "query_id long, qvec array<float>",
     )
     res_small = threshold_join(corpus, small, threshold=0.4, metric="cosine")
     plan_small = explain_str(res_small, "simple")
-    assert "MapInPandas" not in plan_small
-    assert "Broadcast" in plan_small
-    n_small = res_small.count()
+    assert "MapInPandas" in plan_small
+    assert "Join" not in plan_small and "CartesianProduct" not in plan_small
 
-    # large query table → grid: python kernel present, and the QUERY
-    # side is never broadcast (the only joins are over bounded block
-    # rows; the raw 8193-row query relation reaches the kernel via the
-    # block fold, not a driver/broadcast materialization)
+    # large query table → grid: python kernel over the block join
     nq = knn_mod.AUTO_GRID_QUERY_ROWS + 1
     big = spark.range(nq).select(
         F.col("id").alias("query_id"),
@@ -724,23 +724,20 @@ def test_threshold_auto_routes_large_query_tables_to_grid(spark):
     )
     res_big = threshold_join(corpus, big, threshold=2.0, metric="cosine")
     plan_big = explain_str(res_big, "simple")
-    assert "MapInPandas" in plan_big
+    assert "MapInPandas" in plan_big and "Join" in plan_big
     # every query is within cosine distance 2.0 of everything → n rows each
     assert res_big.count() == nq * n
 
-    # same rows either way on the bounded batch (routing changed the
-    # plan, not the answer)
-    got_grid = {
-        (r["query_id"], r["id"])
-        for r in threshold_join(
-            corpus, small, threshold=0.4, metric="cosine", algorithm="grid"
-        ).collect()
-    }
+    # same rows as the expression plan on the bounded batch (routing
+    # picks the plan, not the answer)
     got_expr = {
         (r["query_id"], r["id"])
-        for r in res_small.collect()
+        for r in threshold_join(
+            corpus, small, threshold=0.4, metric="cosine", algorithm="expr"
+        ).collect()
     }
-    assert got_expr == got_grid and len(got_expr) == n_small
+    got_auto = {(r["query_id"], r["id"]) for r in res_small.collect()}
+    assert got_auto == got_expr and got_auto
 
 
 def test_threshold_join_rejects_unknown_algorithm(spark, corpus_df, queries_df):
@@ -769,7 +766,7 @@ def test_topk_deterministic_under_duplicate_vectors_and_layouts(spark):
     expected = None
     for parts in (1, 7, 32):
         corpus = spark.createDataFrame(rows, "id long, vector array<float>").repartition(parts)
-        for algo in ("window", "partial", "grid"):
+        for algo in ("window", "auto", "grid"):
             got = [
                 (r["rank"], r["id"])
                 for r in knn_join(corpus, q, k=5, metric="cosine", algorithm=algo)
@@ -1019,7 +1016,7 @@ def test_nonfinite_corpus_vectors_rank_last_all_algorithms(spark):
         "id long, vector array<double>",
     )
     q = spark.createDataFrame([(100, [1.0, 0.0])], "query_id long, qvec array<double>")
-    for alg in ("window", "partial", "grid"):
+    for alg in ("window", "auto", "grid"):
         rows = knn_join(emb, q, k=4, metric="cosine", algorithm=alg).collect()
         ids = [r.id for r in sorted(rows, key=lambda r: r.rank)]
         assert ids[:2] == [0, 3], (alg, ids)

@@ -86,7 +86,7 @@ def test_simhash_pairs_plan_is_blocking_equijoin(spark):
 def test_partial_topk_shuffle_is_bounded(spark, corpus_df, queries_df):
     from vicinity_spark.operators.knn import knn_join
 
-    df = knn_join(corpus_df, queries_df, k=5, metric="cosine", algorithm="partial")
+    df = knn_join(corpus_df, queries_df, k=5, metric="cosine", algorithm="auto")
     s = explain_str(df, "simple")
     # the merge window consumes the mapInPandas output (q×k×partitions
     # rows), not the raw cross product: no join at all in this plan
@@ -161,11 +161,10 @@ def test_serving_path_scans_no_python_rdd(spark, backend, monkeypatch):
     for op in ("Window", "CartesianProduct", "BroadcastNestedLoopJoin", "ArrowEvalPython"):
         assert after.count(op) == before.count(op), (op, after)
     # the guard itself sees a list-built frame through a store plan. A
-    # bounded IVF batch is collected to the driver, so its plan no
-    # longer holds the frame: there the unbounded plan is checked
+    # bounded batch is collected to the driver, so its plan no longer
+    # holds the frame: the unbounded plan is checked
     listed = spark.createDataFrame([(0, [0.0] * 8)], "query_id long, qvec array<float>")
-    if backend == "ivf":
-        monkeypatch.setattr(knn_mod, "AUTO_GRID_QUERY_ROWS", -1)
+    monkeypatch.setattr(knn_mod, "AUTO_GRID_QUERY_ROWS", -1)
     assert python_rdd_scans(store.threshold_df(listed, 0.5))
 
 
@@ -193,8 +192,9 @@ _GRID_JOBS = {"sq": 13, "pq": 13, "ivfsq": 10, "ivfpq": 11}
 def test_bounded_query_job_count(spark, backend):
     """A bounded query batch takes one broadcast-query scan of the
     corpus partitions: exact and IVF run at most 4 jobs per collected
-    query_df, and the code-scan strategies fewer than the block grid
-    did. Counts, not times."""
+    query_df and at most 2 per collected threshold_df, and the
+    code-scan strategies fewer than the block grid did. Counts, not
+    times."""
     import numpy as np
 
     from vicinity_spark.store import VectorStore
@@ -218,9 +218,36 @@ def test_bounded_query_job_count(spark, backend):
     qdf, _ = store._queries_df(rng.standard_normal((5, 8)))
     try:
         jobs = _count_jobs(spark, lambda: store.query_df(qdf, k=5).collect())
+        thr_jobs = _count_jobs(spark, lambda: store.threshold_df(qdf, 0.5).collect())
     finally:
         store.df.unpersist()
     assert jobs <= 4 if backend in ("basic", "ivf") else jobs < _GRID_JOBS[backend], jobs
+    if backend in ("basic", "ivf"):
+        assert thr_jobs <= 2, thr_jobs
+
+
+def test_unbounded_ivf_plan_has_no_query_id_join(spark, monkeypatch):
+    """An unbounded IVF query table scores on the cluster-keyed block
+    grid: cells join on `__cluster`, and no join re-attaches query
+    vectors by query_id (the join-scored plan it replaces did)."""
+    import numpy as np
+
+    import vicinity_spark.operators.knn as knn_mod
+    from vicinity_spark.store import VectorStore
+
+    rng = np.random.default_rng(4)
+    X = rng.standard_normal((120, 8))
+    store = VectorStore.from_vectors_and_items(
+        spark, X, [f"i{i}" for i in range(120)], backend_type="ivf",
+        nlist=4, nprobe=2, centroids=X[:4],
+    )
+    qdf, _ = store._queries_df(rng.standard_normal((6, 8)))
+    monkeypatch.setattr(knn_mod, "AUTO_GRID_QUERY_ROWS", -1)
+    for df in (store.query_df(qdf, k=3), store.threshold_df(qdf, 0.5)):
+        s = explain_str(df, "simple")
+        assert "MapInPandas" in s and "__cluster" in s
+        joins = [ln for ln in s.splitlines() if "Join" in ln]
+        assert joins and not [ln for ln in joins if "query_id" in ln], joins
 
 
 @pytest.mark.parametrize("backend", ["ivf", "ivfsq"])

@@ -844,3 +844,26 @@ def test_bounded_scan_equals_unbounded(spark, monkeypatch, name):
     # the query equal to the planted duplicates ranks them first, tied
     top = sorted((r[3], r[1]) for r in bounded[0] if r[0] == 0)[:3]
     assert top == [(1, 5), (2, 11), (3, 200)]
+
+
+@pytest.mark.parametrize("backend", ["basic", "ivf"])
+def test_from_dataframe_items_without_item_json(spark, backend):
+    """A `from_dataframe` store has no item_json column: query and
+    query_threshold return a dict of the row's payload columns as its
+    item, and an inserted row (which has an item_json) its decoded
+    item. The ivf store is queried after one insert."""
+    rng = np.random.default_rng(21)
+    X = rng.standard_normal((50, 4))
+    df = spark.createDataFrame(
+        [(i, f"t{i}", [float(x) for x in X[i]]) for i in range(50)],
+        "id long, text string, vector array<float>",
+    )
+    params = {"nlist": 4, "nprobe": 4, "centroids": X[:4]} if backend == "ivf" else {}
+    store = VectorStore.from_dataframe(df, backend_type=backend, metric="euclidean", **params)
+    want = [({"text": "t7"}, 0.0)]
+    if backend == "ivf":
+        store.insert([{"new": 1}], X[7] + 1e-3)
+        want.append(({"new": 1}, pytest.approx(2e-3, abs=1e-5)))
+    assert store.query(X[7], k=len(want)) == [want]
+    got = store.query_threshold(X[7], threshold=0.01)
+    assert sorted(got[0], key=lambda h: h[1]) == want

@@ -13,14 +13,14 @@ The contract:
   result size the caller asked for; strategies that prune internally
   (code scans, beam pools) size their pools from it. The range-search
   strategies (IVF, LSH) ignore it, and `_within` passes None.
-- Bounded route: a query batch of at most AUTO_GRID_QUERY_ROWS rows
-  (decided, and collected, by `knn.bounded_query_matrix`) is scored in
-  one broadcast-query scan of the corpus partitions (`grid.cell_scan` /
-  `grid.probe_scan`; IVF strategies probe on the driver and push the
-  probed lists into the scan). A larger query table keeps the
-  strategy's join or block-grid plan, which never collects it. The
-  exact, IVF, SQ/PQ and IVF-SQ/PQ candidate scans take this route;
-  LSH and graph do not.
+- Dense scans: the exact, IVF, SQ/PQ and IVF-SQ/PQ candidate scans
+  are one `grid.cell_scan` call each, which alone picks the plan. A
+  query batch of at most AUTO_GRID_QUERY_ROWS rows is scored in one
+  broadcast-query scan of the corpus partitions (`grid.probe_scan`;
+  IVF strategies probe on the driver and push the probed lists into
+  the scan); a larger query table runs the block grid (`cluster_grid`
+  for IVF strategies), which never collects it. LSH and graph join
+  their own candidates.
 - `knn` rejects `k < 1`, keeps each query's top `k` by
   `(distance, id)` — the id tiebreak makes the cut independent of the
   physical layout at exact ties — and only then clips the returned

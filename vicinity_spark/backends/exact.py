@@ -1,7 +1,8 @@
 """Exact brute-force strategy — the analog of the reference's BASIC
 backend (vicinity/backends/basic.py:98-247): flat layout, exact
 distances, the ground truth every ANN strategy is measured against
-(vicinity/vicinity.py:363-368).
+(vicinity/vicinity.py:363-368). Both queries take `knn_join` /
+`threshold_join` with their default `auto` plan: one `grid.cell_scan`.
 """
 
 from __future__ import annotations
@@ -34,7 +35,6 @@ class ExactStrategy(IndexStrategy):
             k=k,
             metric=metric,
             payload_cols=payload_cols,
-            algorithm=self.params.get("algorithm", "auto"),
             dim=self.params.get("dim"),
         )
 
@@ -48,13 +48,7 @@ class ExactStrategy(IndexStrategy):
         payload_cols: Optional[Sequence[str]] = None,
         max_k: int = 100,
     ) -> DataFrame:
-        # exact range search: max_k does not cap it (basic.py:149-172).
-        # params["algorithm"] names a KNN plan (window/auto/grid; partial = auto);
-        # only "grid" has a threshold twin — map everything else to the
-        # auto router so an unbounded query table is never force-broadcast
-        algo = self.params.get("threshold_algorithm") or (
-            "grid" if self.params.get("algorithm") == "grid" else "auto"
-        )
+        # exact range search: max_k does not cap it (basic.py:149-172)
         return threshold_join(
             corpus,
             queries,
@@ -62,5 +56,4 @@ class ExactStrategy(IndexStrategy):
             metric=metric,
             payload_cols=payload_cols,
             dim=self.params.get("dim"),
-            algorithm=algo,
         )

@@ -17,16 +17,18 @@ is assigned there (`nearest_centroids`, the preset build's rule) and
 stays a LocalRelation: the insert and every later scan of its rows run
 no Spark job for the assignment.
 
-Query, bounded batch (at most AUTO_GRID_QUERY_ROWS rows — every facade
-`query`): the batch is collected once and probed on the driver
-(`nearest_centroids`), `__cluster IN (<probed union>)` is pushed into
-the corpus scan (a partition filter on a reloaded store), and ONE
-mapInPandas over the corpus partitions scores each inverted list's
-rows against only the queries that probe it (grid.probe_scan, the
-dense cell kernel) → top-k merge. Query, unbounded table: probe the
-nprobe nearest centroids per query executor-side (pandas UDF; the tiny
-centroid matrix rides in the closure) → equi-join corpus on
-`__cluster` → exact re-score of the joined rows.
+Query: one `grid.cell_scan` over the inverted lists, the same call as
+the IVF composites' code scans. A bounded batch (at most
+AUTO_GRID_QUERY_ROWS rows — every facade `query`) is collected once
+and probed on the driver (`nearest_centroids`), `__cluster IN (<probed
+union>)` is pushed into the corpus scan (a partition filter on a
+reloaded store), and ONE mapInPandas over the corpus partitions scores
+each inverted list's rows against only the queries that probe it
+(grid.probe_scan). An unbounded query table runs `grid.cluster_grid`:
+each list folds into one block row joined only to the query blocks
+that probe it. Both deliver cells to the dense cell kernel → top-k
+merge. `_probe_df` (executor-side probes as rows) stays for the
+streaming serving path.
 """
 
 from __future__ import annotations
@@ -145,45 +147,32 @@ class IVFStrategy(IndexStrategy):
     def _lists(self, metric: Metric):
         from vicinity_spark.operators.grid import InvertedLists
 
-        return InvertedLists(self.centroids, self.params["nprobe"])
+        return InvertedLists(self.params["centroids"], self.params["nprobe"])
 
     def _scored(
         self, corpus: DataFrame, queries: DataFrame, k: "int | None", metric: Metric
     ) -> DataFrame:
-        """Probed-list rows scored by the dense cell kernel; with
-        ``k`` each cell keeps its per-query top ``k``, with None (range
-        search) every probed row. A bounded batch runs
-        `grid.probe_scan` (driver probe, one corpus scan); an unbounded
-        query table joins the corpus to its executor-side probes and
-        re-scores the joined rows (operators/knn.py score_joined)."""
-        from vicinity_spark.operators.grid import (
-            _CCHUNK,
-            _CTARGET,
-            dense_cell_topk,
-            probe_scan,
-        )
-        from vicinity_spark.operators.knn import (
-            _KNN_SCHEMA,
-            bounded_query_matrix,
-            score_joined,
-        )
-
-        batch = bounded_query_matrix(queries)
-        if batch is None:
-            # no broadcast hint: probe is nq×nprobe (scales with the
-            # query batch); AQE broadcasts it when it is actually small
-            joined = corpus.join(self._probe_df(queries), CLUSTER_COL)
-            return score_joined(joined, queries, metric)
+        """Probed-list rows scored by the dense cell kernel over
+        `grid.cell_scan` cells (`probe_scan` for a bounded batch,
+        `cluster_grid` for an unbounded table); with ``k`` each cell
+        keeps its per-query top ``k``, with None (range search) every
+        probed row, scored in _CCHUNK-row slices so the merge matrix
+        stays queries × _CCHUNK whatever the cell size."""
+        from vicinity_spark.operators.grid import _CCHUNK, cell_scan, dense_cell_topk
+        from vicinity_spark.operators.knn import _KNN_SCHEMA
 
         def kernel(ids, X, qids, Q, key):
-            kk = k or len(ids)
-            yield dense_cell_topk(qids, ids, X.astype(np.float64), Q, metric, kk)
+            X = X.astype(np.float64)
+            if k is not None:
+                yield dense_cell_topk(qids, ids, X, Q, metric, k)
+                return
+            for s in range(0, len(ids), _CCHUNK):
+                e = s + _CCHUNK
+                yield dense_cell_topk(qids, ids[s:e], X[s:e], Q, metric, _CCHUNK)
 
-        # range search keeps every probed row, so its merge matrix is
-        # queries × cell rows: there cells stay chunk-sized
-        target = _CCHUNK if k is None else _CTARGET
-        lists = self._lists(metric)
-        return probe_scan(corpus, "vector", batch, kernel, _KNN_SCHEMA, lists, target)
+        return cell_scan(
+            corpus, queries, "vector", kernel, _KNN_SCHEMA, lists=self._lists(metric)
+        )
 
     # named in the class so per-class instrumentation that wraps only a
     # class's own methods (perfbench/run.py spans) still sees it

@@ -9,12 +9,13 @@ exactly backends/sq.py). Scan payload per row: 4 bytes cluster + dim
 bytes of codes — the IVF prune and the 4-8× SQ byte reduction stack.
 
 Query: SQStrategy's code scan over the inverted lists — the one hook
-this class overrides is `_lists` (grid.InvertedLists, shared with
-backends/ivfpq.py). A bounded batch is probed on the driver and scanned
-in one corpus pass restricted to the probed lists (grid.probe_scan); a
-larger query table folds each inverted list's SQ codes into one block
-row that joins ONLY the query blocks probing it (grid.cluster_grid —
-an unprobed list ships nowhere). Either way each cell gets only the
+this class takes from IVF is `_lists` (grid.InvertedLists), and
+`grid.cell_scan` routes the scan exactly as it routes IVF's: a bounded
+batch is probed on the driver and scanned in one corpus pass
+restricted to the probed lists (grid.probe_scan); a larger query table
+folds each inverted list's SQ codes into one block row that joins ONLY
+the query blocks probing it (grid.cluster_grid — an unprobed list
+ships nowhere). Either way each cell gets only the
 queries that probe its list, dequantizes with the closure-resident
 codebook (2×dim doubles) and runs the chunked dense partial top-k; the
 exact re-rank on true vectors follows (RerankStrategy phase 2).
@@ -67,7 +68,4 @@ class IVFSQStrategy(SQStrategy):
         return super().on_insert(self._ivf.on_insert(new_df, metric, dim), metric, dim)
 
     # ---- query -------------------------------------------------------
-    def _lists(self, metric: Metric):
-        from vicinity_spark.operators.grid import InvertedLists
-
-        return InvertedLists(self.params["centroids"], self.params["nprobe"])
+    _lists = IVFStrategy._lists

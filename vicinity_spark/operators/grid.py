@@ -7,8 +7,8 @@ Every scan hands cells to a kernel ``kernel(ids, payload, qids, Q,
 key)`` — id-sorted corpus ids and payload, the queries scored against
 them, the cell's key columns — and the kernels are chunked so a
 distance matrix never exceeds _QBLOCK × _CCHUNK doubles. Two plans
-deliver the cells; `cell_scan` routes between them
-(knn.bounded_query_matrix decides):
+deliver the cells; `cell_scan`, the one entry of every dense query
+scan, routes between them (knn.bounded_query_matrix decides):
 
 - The block grid, for UNBOUNDED query tables: fold the corpus scan
   payload into block rows (collect_list), fold the query table into
@@ -25,9 +25,9 @@ deliver the cells; `cell_scan` routes between them
   mapInPandas over the corpus partitions gathers each task's Arrow
   batches into cells of up to the grid's block size (per inverted
   list, or flat) with the queries in _QBLOCK slices — no fold, no
-  join, no count job. Consumers: the exact ``auto`` top-k, IVF's
-  scoring, and the candidate scans of sq, pq, ivfsq, ivfpq and
-  ivfpqr.
+  join, no count job. Consumers: the exact ``auto`` top-k and radius
+  search, IVF's scoring, and the candidate scans of sq, pq, ivfsq,
+  ivfpq and ivfpqr.
 
 Everything a kernel needs beyond its cell (codebooks, centroids) is
 closure-small.
@@ -307,7 +307,7 @@ class InvertedLists:
 
 
 def cluster_grid(corpus: DataFrame, queries: DataFrame, lists: InvertedLists, payload_col: str):
-    """Cluster-keyed block grid for the IVF composites (ivfsq, ivfpq):
+    """Cluster-keyed block grid for IVF and its composites (ivfsq, ivfpq):
     one block row per inverted list (`__cluster` plus the collected
     ids and `payload_col`), joined ONLY to the query blocks that probe
     it — nprobe pruning at the block level, so an unprobed list ships

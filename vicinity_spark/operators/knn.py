@@ -18,15 +18,15 @@ Three physical strategies for top-k:
   shuffles all q×n candidate rows by query_id, so it is the right plan
   only when q×n is modest or q is large relative to n.
 
-- ``auto`` (the default; ``partial`` is an alias kept for callers of
-  the older name): the bounded broadcast-query scan (grid.probe_scan).
-  A batch of at most AUTO_GRID_QUERY_ROWS rows is collected to the
-  driver once (`bounded_query_matrix`) and broadcast; ONE mapInPandas
-  over the corpus partitions runs the vectorized top-k kernel
-  (grid.dense_cell_topk — the distributed analog of the reference's
-  1024-row batched matmul, basic.py:195-204) per cell of up to
-  _CTARGET rows of a partition, the queries in _QBLOCK slices so every
-  distance matrix stays within _QBLOCK × _CCHUNK doubles. Each cell
+- ``auto`` (the default): the bounded broadcast-query scan
+  (grid.probe_scan). A batch of at most AUTO_GRID_QUERY_ROWS rows is
+  collected to the driver once (`bounded_query_matrix`) and
+  broadcast; ONE mapInPandas over the corpus partitions runs the
+  vectorized top-k kernel (grid.dense_cell_topk — the distributed
+  analog of the reference's 1024-row batched matmul,
+  basic.py:195-204) per cell of up to _CTARGET rows of a partition,
+  the queries in _QBLOCK slices so every distance matrix stays within
+  _QBLOCK × _CCHUNK doubles. Each cell
   emits q×k rows; the merge window's partial limit (WindowGroupLimit)
   keeps q×k of them per scan task before the shuffle, so the shuffle
   is q×k×partitions whatever the corpus size — the q×n cross product
@@ -42,9 +42,13 @@ Payload columns ride along: ``window`` carries them through the rank
 in-row; ``auto`` and ``grid`` re-join the corpus payload onto the
 merged q×k result (join_payload — AQE broadcasts the small side).
 
-``bounded_query_matrix`` is the one bounded/unbounded router: the kNN
-scans, the IVF and code-scan strategies and ``threshold_join``'s
-``auto`` all decide (and collect) through it.
+Radius search has the same two cell plans (``auto``, ``grid``) over
+the chunked range kernel, plus ``expr``, the JVM reference plan, as
+``window`` is for top-k.
+
+``bounded_query_matrix`` is the one bounded/unbounded router, called
+only by `grid.cell_scan`: every dense query scan (exact top-k and
+radius, IVF, the code scans) decides (and collects) there.
 """
 
 from __future__ import annotations
@@ -321,14 +325,21 @@ def bounded_query_matrix(
     return None if len(qids) > AUTO_GRID_QUERY_ROWS else (qids, Q)
 
 
-def _dense_inputs(corpus, queries, id_col, vector_col, query_id_col, query_vector_col):
-    """(corpus as id, vector; queries as query_id, qvec) — the exact
-    cell scans' inputs."""
-    return (
+def _dense_scan(corpus, queries, cols, kernel, algorithm: str) -> DataFrame:
+    """The exact cell scans: ``kernel(qids, ids, X, Q)`` over
+    `grid.cell_scan` cells of the corpus (``cols``: id, vector, query
+    id and query vector column names); ``grid`` skips the bounded
+    route."""
+    id_col, vector_col, query_id_col, query_vector_col = cols
+    return cell_scan(
         corpus.select(F.col(id_col).alias("id"), F.col(vector_col).alias("vector")),
         queries.select(
             F.col(query_id_col).alias("query_id"), F.col(query_vector_col).alias("qvec")
         ),
+        "vector",
+        lambda ids, X, qids, Q, key: kernel(qids, ids, X.astype(np.float64), Q),
+        _KNN_SCHEMA,
+        bounded=algorithm != "grid",
     )
 
 
@@ -352,10 +363,10 @@ def knn_join(
     ascending distance (ties broken by id — the reference's argsort is
     positional-stable, basic.py:200-204).
 
-    ``algorithm="auto"`` (alias ``partial``) routes a batch to the
-    bounded scan or the grid (`bounded_query_matrix`). Routing may run
-    one EAGER job on the query side at plan-construction time: none
-    when the optimizer's ``maxRows`` is defined (local batches, LIMIT'd
+    ``algorithm="auto"`` routes a batch to the bounded scan or the
+    grid (`bounded_query_matrix`). Routing may run one EAGER job on
+    the query side at plan-construction time: none when the
+    optimizer's ``maxRows`` is defined (local batches, LIMIT'd
     plans), otherwise a ``limit(n+1)`` collect that executes the
     query-side pipeline once up to n+1 rows and delivers the batch. If
     the query side is an expensive lazily-derived table, pass
@@ -364,8 +375,6 @@ def knn_join(
     if k < 1:
         raise ValueError("k must be greater than 0")  # basic.py:187-188
     metric = Metric.from_string(metric)
-    if algorithm == "partial":
-        algorithm = "auto"
     if algorithm == "window":
         q = queries.select(
             F.col(query_id_col).alias("query_id"),
@@ -388,16 +397,12 @@ def knn_join(
         # for `grid` — the block grid, whose query blocks arrive by
         # join: a 10M-row query side would materialize nq×dim on the
         # driver. Same kernel either way.
-        local = cell_scan(
-            *_dense_inputs(
-                corpus, queries, id_col, vector_col, query_id_col, query_vector_col
-            ),
-            "vector",
-            lambda ids, X, qids, Q, key: [
-                dense_cell_topk(qids, ids, X.astype(np.float64), Q, metric, k)
-            ],
-            _KNN_SCHEMA,
-            bounded=algorithm != "grid",
+        local = _dense_scan(
+            corpus,
+            queries,
+            (id_col, vector_col, query_id_col, query_vector_col),
+            lambda *cell: [dense_cell_topk(*cell, metric, k)],
+            algorithm,
         )
     else:
         raise ValueError(f"unknown algorithm {algorithm!r}")
@@ -421,46 +426,31 @@ def threshold_join(
     dim: Optional[int] = None,
     algorithm: str = "auto",
 ) -> DataFrame:
-    """Radius search: all corpus rows with distance <= threshold.
+    """Radius search: all corpus rows with distance <= threshold,
+    unsorted (vicinity.py:147).
 
-    `expr`: filter-only plan — no window, no sort (output unsorted,
-    matching vicinity.py:147). The filter sits directly on the scan
-    side of the broadcast join, so Catalyst prunes columns and the
-    cross product streams without materialization. The JVM expression
-    chain is bit-comparable to the DuckDB oracle; the bounded-batch
-    facade path. Force-broadcasts the QUERY side — only safe when the
-    query table is bounded.
+    `auto` (default) and `grid` route exactly as `knn_join` does: one
+    `grid.cell_scan` over the chunked range kernel (grid.
+    dense_cell_within) — the bounded broadcast-query scan for a batch
+    of at most AUTO_GRID_QUERY_ROWS rows, else (and always for `grid`)
+    the block grid; no dim-wide JVM expression, which falls out of
+    whole-stage codegen at large dim. The same eager-probe caveat as
+    `knn_join` applies.
 
-    `grid`: corpus blocks × query blocks scored by the chunked
-    vectorized kernel (operators/grid.py) — the plan for UNBOUNDED
-    query tables: no broadcast of the query side, no dim-wide JVM
-    expression (which falls out of codegen at large dim), same rows
-    (asserted by test_threshold_grid_equals_expr).
-
-    `auto` (default): bounded query batch (≤ AUTO_GRID_QUERY_ROWS,
-    decided by `bounded_query_matrix` exactly as `knn_join` decides —
-    optimizer maxRows when defined, else one ``limit(n+1)`` collect)
-    → `expr`; otherwise `grid`. The same eager-probe caveat as
-    `knn_join` applies: pass an explicit algorithm to skip the probe
-    on expensive lazily-derived query pipelines.
+    `expr`: the JVM reference plan, bit-comparable to the DuckDB
+    oracle and run only on request (as `window` is for top-k): a
+    filter on the scan side of a broadcast cross join. Force-broadcasts
+    the QUERY side — only safe when the query table is bounded.
     """
     metric = Metric.from_string(metric)
-    if algorithm == "auto":
-        # mirror knn_join's routing: a query table past the broadcast
-        # ceiling must never be force-broadcast
-        algorithm = "expr" if bounded_query_matrix(queries) is not None else "grid"
-    if algorithm == "grid":
+    if algorithm in ("auto", "grid"):
         t = float(threshold)
-        out = cell_scan(
-            *_dense_inputs(
-                corpus, queries, id_col, vector_col, query_id_col, query_vector_col
-            ),
-            "vector",
-            lambda ids, X, qids, Q, key: dense_cell_within(
-                qids, ids, X.astype(np.float64), Q, metric, t
-            ),
-            _KNN_SCHEMA,
-            bounded=False,
+        out = _dense_scan(
+            corpus,
+            queries,
+            (id_col, vector_col, query_id_col, query_vector_col),
+            lambda *cell: dense_cell_within(*cell, metric, t),
+            algorithm,
         )
         return join_payload(out, corpus, payload_cols, RADIUS_COLS, id_col=id_col)
     if algorithm != "expr":

@@ -348,9 +348,8 @@ def threshold_grid_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
     AUTO_GRID_QUERY_ROWS=8192, so `algorithm="auto"` must route to
     the GRID plan (block-matrix kernel, no query-side broadcast) —
     the 100 TB shape. The oracle hash certifies the grid threshold
-    kernel's output bit-equals the expression plan the bounded
-    entries take; tests/test_knn.py pins the routing decision
-    itself."""
+    kernel's output, as `threshold_radius` certifies the bounded
+    scan's; tests/test_knn.py pins the routing decision itself."""
     e = _t(spark, sf_dir, "embeddings")
     q = (
         e.withColumn("r", F.explode(F.sequence(F.lit(0), F.lit(_TG_REPS - 1))))

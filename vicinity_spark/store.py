@@ -258,9 +258,22 @@ class VectorStore:
         # range-sampling job and a shuffle)
         rows = self.query_df(qdf, k=k, where=where).collect()
         rows.sort(key=lambda r: (r["query_id"], r["rank"]))
+        return self._nested(rows, n)
+
+    def _nested(self, rows, n: int) -> "list[list[tuple[Any, float]]]":
+        """Result rows → the reference's per-query (item, distance)
+        lists. A row's item is its decoded ``item_json`` when it has
+        one; otherwise (rows of a `from_dataframe` store) a dict of its
+        other payload columns, or its id when there are none."""
+        other = [c for c in self.payload_cols if c != "item_json"]
         out: "list[list[tuple[Any, float]]]" = [[] for _ in range(n)]
         for r in rows:
-            out[r["query_id"]].append((json.loads(r["item_json"]), float(r["distance"])))
+            d = r.asDict()
+            if d.get("item_json") is not None:
+                item = json.loads(d["item_json"])
+            else:
+                item = {c: d[c] for c in other} if other else d["id"]
+            out[d["query_id"]].append((item, float(d["distance"])))
         return out
 
     def query_stream(
@@ -379,10 +392,7 @@ class VectorStore:
             payload_cols=self.payload_cols,
             max_k=max_k,
         ).collect()
-        out: "list[list[tuple[Any, float]]]" = [[] for _ in range(n)]
-        for r in rows:
-            out[r["query_id"]].append((json.loads(r["item_json"]), float(r["distance"])))
-        return out
+        return self._nested(rows, n)
 
     # ---- point lookup (F5) -----------------------------------------
     def get_vector_by_index(self, index) -> np.ndarray:
