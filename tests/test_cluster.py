@@ -687,7 +687,8 @@ def test_packed_assignment_matches_plain_and_roundtrips(spark):
     import numpy as np
 
     from vicinity_spark.operators.cluster import _unpack_vecs
-    from vicinity_spark.operators.grid import centroid_assign_udf
+    from vicinity_spark.operators.grid import centroid_assign
+    from vicinity_spark.session import vector_column
 
     rows = [
         (0, [0.1, 0.0]),
@@ -698,24 +699,17 @@ def test_packed_assignment_matches_plain_and_roundtrips(spark):
     ]
     df = spark.createDataFrame(rows, "id long, vector array<double>")
     cents = [[0.0, 0.0], [10.0, 10.0]]
+    both = centroid_assign(cents, with_dist=True, with_packed=True)
     packed = {
         r["id"]: r
-        for r in df.select(
-            "id",
-            centroid_assign_udf(cents, with_dist=True, with_packed=True)(
-                F.col("vector")
-            ).alias("a"),
-        )
+        for r in vector_column(df, "a", *both, "vector")
         .select("id", "a.cluster_id", "a.cdist", "a.packed")
         .collect()
     }
+    plain_df = vector_column(df, "a", *centroid_assign(cents, with_dist=True), "vector")
     plain = {
         r["id"]: r
-        for r in df.select(
-            "id",
-            centroid_assign_udf(cents, with_dist=True)(F.col("vector")).alias("a"),
-            centroid_assign_udf(cents)(F.col("vector")).alias("cid"),
-        )
+        for r in vector_column(plain_df, "cid", *centroid_assign(cents), "vector")
         .select("id", "a.cluster_id", "a.cdist", "cid")
         .collect()
     }

@@ -1,6 +1,7 @@
 """Plan-shape assertions: the properties that make these operators
 viable at 100 TB must hold in the physical plan, not just in intent."""
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -127,12 +128,13 @@ def test_vocab_counts_prune_scan(spark):
         assert set(cols) <= {"lang", "text"}, cols
 
 
-@pytest.mark.parametrize("backend", ["basic", "ivf"])
+@pytest.mark.parametrize("backend", ["basic", "ivf", "pq", "ivfpq", "lsh"])
 def test_serving_path_scans_no_python_rdd(spark, backend, monkeypatch):
     """The facade's query and insert batches are JVM LocalRelations:
     the query, threshold and post-insert query plans have no leaf that
     runs Python tasks just to produce its rows, and the query batch has
-    a maxRows, so knn routing decides without a probe job."""
+    a maxRows, so knn routing decides without a probe job. An insert
+    batch stays a LocalRelation after its layout columns are added."""
     import numpy as np
 
     import vicinity_spark.operators.knn as knn_mod
@@ -140,7 +142,11 @@ def test_serving_path_scans_no_python_rdd(spark, backend, monkeypatch):
     from vicinity_spark.store import VectorStore
 
     rng = np.random.default_rng(3)
-    params = {"nlist": 4, "nprobe": 2} if backend == "ivf" else {}
+    params = {
+        "ivf": {"nlist": 4, "nprobe": 2},
+        "pq": {"m": 4, "ksub": 16},
+        "ivfpq": {"nlist": 4, "nprobe": 2, "m": 4, "ksub": 16},
+    }.get(backend, {})
     store = VectorStore.from_vectors_and_items(
         spark, rng.random((60, 8)), [f"d{i}" for i in range(60)],
         backend_type=backend, **params,
@@ -155,8 +161,9 @@ def test_serving_path_scans_no_python_rdd(spark, backend, monkeypatch):
         assert python_rdd_scans(df) == [], what
         assert "Scan ExistingRDD" not in explain_str(df, "simple"), what
     # the insert batches add no operator of their own to the query: the
-    # IVF assignment is made on the driver, so no centroid cross join,
-    # no per-id window and no Python UDF is re-run by each query
+    # layout columns (IVF lists, PQ codes, LSH buckets) are computed on
+    # the driver, so no centroid cross join, no per-id window and no
+    # Python UDF is re-run by each query
     before, after = (explain_str(plans[w], "simple") for w in ("query_df", "query_df after inserts"))
     for op in ("Window", "CartesianProduct", "BroadcastNestedLoopJoin", "ArrowEvalPython"):
         assert after.count(op) == before.count(op), (op, after)
@@ -250,10 +257,11 @@ def test_unbounded_ivf_plan_has_no_query_id_join(spark, monkeypatch):
         assert joins and not [ln for ln in joins if "query_id" in ln], joins
 
 
-@pytest.mark.parametrize("backend", ["ivf", "ivfsq"])
+@pytest.mark.parametrize("backend", ["ivf", "ivfsq", "pq", "ivfpq"])
 def test_insert_runs_no_job(spark, backend):
-    """A facade insert into an IVF-family store runs no Spark job (the
-    batch is assigned on the driver and stays a LocalRelation); only
+    """A facade insert into an IVF-family or PQ store runs no Spark job
+    (the batch is assigned and encoded on the driver and stays a
+    LocalRelation); only
     the every-_INSERT_CHECKPOINT_EVERY-th insert runs one, its delta
     checkpoint. A bounded query after any number of inserts runs as
     many jobs as before the first."""
@@ -264,9 +272,12 @@ def test_insert_runs_no_job(spark, backend):
     rng = np.random.default_rng(8)
     X = rng.standard_normal((400, 8))
     C = X[:8] / np.linalg.norm(X[:8], axis=1)[:, None]
-    params = {"nlist": 8, "nprobe": 2, "centroids": C}
-    if backend == "ivfsq":
-        params["refine"] = 4
+    params = {
+        "ivf": {"nlist": 8, "nprobe": 2, "centroids": C},
+        "ivfsq": {"nlist": 8, "nprobe": 2, "centroids": C, "refine": 4},
+        "pq": {"m": 4, "ksub": 16, "refine": 4},
+        "ivfpq": {"nlist": 8, "nprobe": 2, "centroids": C, "m": 4, "ksub": 16, "refine": 4},
+    }[backend]
     store = VectorStore.from_vectors_and_items(
         spark, X, [f"i{i}" for i in range(400)], backend_type=backend, metric="cosine", **params
     )
@@ -286,6 +297,47 @@ def test_insert_runs_no_job(spark, backend):
                 assert query() == before, i
     finally:
         store._base_df.unpersist()
+
+
+# (backend, metric, params) of each layout codec an insert applies
+_INSERT_CODECS = {
+    "ivf_preset": ("ivf", "cosine", {"nlist": 6, "nprobe": 2}),
+    "pq": ("pq", "cosine", {"m": 4, "ksub": 16}),
+    "ivfpqr": ("ivfpq", "cosine", {"nlist": 6, "nprobe": 2, "m": 4, "ksub": 16, "refine_m": 4}),
+    "lsh_gaussian_cosine": ("lsh", "cosine", {"n_tables": 4, "n_bits": 8}),
+    "lsh_pstable_euclidean": ("lsh", "euclidean", {"n_tables": 4, "n_bits": 4}),
+}
+
+
+@pytest.mark.parametrize("name", list(_INSERT_CODECS))
+def test_insert_layout_equal_on_driver_and_in_udf(spark, name):
+    """`on_insert` gives the same layout columns whether the batch is a
+    LocalRelation (the codec runs on the driver and the result stays
+    local) or any other frame (the codec runs as one Arrow UDF): both
+    paths apply one numpy function to the same float64 matrix. An
+    empty local batch stays local and empty."""
+    from vicinity_spark.session import local_rows
+    from vicinity_spark.store import VectorStore, _ingest_frame
+
+    backend, metric, params = _INSERT_CODECS[name]
+    rng = np.random.default_rng(11)
+    X = rng.standard_normal((200, 8))
+    if "nlist" in params:
+        params = dict(params, centroids=X[:6].tolist())
+    store = VectorStore.from_vectors_and_items(
+        spark, X, [f"i{i}" for i in range(200)], backend_type=backend, metric=metric, **params
+    )
+    batch = _ingest_frame(spark, 200, [f"n{i}" for i in range(40)], rng.standard_normal((40, 8)))
+    on_driver = store.strategy.on_insert(batch, store.metric, store.dim)
+    in_udf = store.strategy.on_insert(batch.repartition(3), store.metric, store.dim)
+    assert local_rows(on_driver) is not None and local_rows(in_udf) is None
+    assert "ArrowEvalPython" in explain_str(in_udf, "simple")
+    layout = [c for c in on_driver.columns if c.startswith("__")]
+    assert layout and on_driver.columns == in_udf.columns
+    rows = [sorted(df.select("id", *layout).collect()) for df in (on_driver, in_udf)]
+    assert rows[0] == rows[1] and len(rows[0]) == 40
+    empty = store.strategy.on_insert(batch.limit(0), store.metric, store.dim)
+    assert local_rows(empty) == [] and empty.columns == on_driver.columns
 
 
 def test_bounded_ivf_plan_prunes_lists(spark, tmp_path):
@@ -316,3 +368,49 @@ def test_bounded_ivf_plan_prunes_lists(spark, tmp_path):
     scans = [ln for ln in s.splitlines() if "FileScan" in ln and "vector" in ln]
     assert len(scans) == 1 and "PartitionFilters: [__cluster" in scans[0] and " IN (" in scans[0], s
     assert len(loaded.query_df(qdf, k=3).collect()) == 9
+
+
+def test_vector_udfs_come_from_one_helper():
+    """Every per-row vector codec (list assignment, PQ and residual
+    codes, LSH buckets, graph seeds, the float64 pack) is a numpy
+    function on `session.vector_udf`. The only other scalar pandas
+    UDFs are the projection that maps ragged vectors to null and the
+    probe of a whole query block per row. No backend defines one."""
+    import ast
+    import pathlib
+
+    import vicinity_spark
+
+    def is_udf(node):
+        f = node.func if isinstance(node, ast.Call) else node
+        return getattr(f, "attr", getattr(f, "id", None)) == "pandas_udf"
+
+    class Finder(ast.NodeVisitor):
+        def __init__(self, where):
+            self.where, self.stack, self.found = where, [], set()
+
+        def visit_FunctionDef(self, node):
+            self.stack.append(node.name)
+            if any(is_udf(d) for d in node.decorator_list):
+                self.found.add(f"{self.where}:{'.'.join(self.stack)}")
+            for child in node.body:
+                self.visit(child)
+            self.stack.pop()
+
+        def visit_Call(self, node):
+            if is_udf(node):
+                self.found.add(f"{self.where}:{'.'.join(self.stack)}")
+            self.generic_visit(node)
+
+    root = pathlib.Path(vicinity_spark.__file__).parent
+    found = set()
+    for path in sorted(root.rglob("*.py")):
+        finder = Finder(path.relative_to(root).as_posix())
+        finder.visit(ast.parse(path.read_text()))
+        found |= finder.found
+    assert not [f for f in found if f.startswith("backends/")], found
+    assert found == {
+        "session.py:vector_udf",
+        "operators/embedding.py:_project_arrow._proj",
+        "operators/grid.py:cluster_grid.block_probes",
+    }

@@ -774,9 +774,9 @@ def test_bounded_scan_equals_unbounded(spark, monkeypatch, name):
     batch forced down the unbounded plans (row limit patched to -1).
     Arrow batches of 7 rows split every inverted list across batches.
     Covers planted duplicate vectors, an empty batch, a `where` that
-    removes every probed list, and k past the probed rows. The exact
-    threshold search is the JVM `expr` plan when bounded and the numpy
-    grid when not, so there rows are equal and distances approximate."""
+    removes every probed list, and k past the probed rows. Range
+    search included: both plans score cells with `dense_cell_within`
+    (the exact store's too), so every case is bit-equal."""
     import vicinity_spark.operators.knn as knn_mod
     from vicinity_spark.session import local_frame
 
@@ -835,11 +835,7 @@ def test_bounded_scan_equals_unbounded(spark, monkeypatch, name):
         store.df.unpersist()
     for (what, q, arg, where), b, u in zip(calls, bounded, unbounded):
         case = (what, arg, where, q is empty)
-        if backend == "basic" and what == "thr":
-            assert [r[:2] for r in b] == [r[:2] for r in u], case
-            assert [r[2] for r in b] == pytest.approx([r[2] for r in u], abs=1e-6), case
-        else:
-            assert b == u, case
+        assert b == u, case
         assert bool(b) == (q is qdf and where is None), case
     # the query equal to the planted duplicates ranks them first, tied
     top = sorted((r[3], r[1]) for r in bounded[0] if r[0] == 0)[:3]
@@ -851,7 +847,8 @@ def test_from_dataframe_items_without_item_json(spark, backend):
     """A `from_dataframe` store has no item_json column: query and
     query_threshold return a dict of the row's payload columns as its
     item, and an inserted row (which has an item_json) its decoded
-    item. The ivf store is queried after one insert."""
+    item. The ivf store is queried after one insert. `delete` takes
+    the items query returns, before and after an insert."""
     rng = np.random.default_rng(21)
     X = rng.standard_normal((50, 4))
     df = spark.createDataFrame(
@@ -860,6 +857,12 @@ def test_from_dataframe_items_without_item_json(spark, backend):
     )
     params = {"nlist": 4, "nprobe": 4, "centroids": X[:4]} if backend == "ivf" else {}
     store = VectorStore.from_dataframe(df, backend_type=backend, metric="euclidean", **params)
+    gone = store.query(X[3], k=1)[0][0][0]
+    assert gone == {"text": "t3"}
+    store.delete([gone])
+    assert len(store) == 49
+    with pytest.raises(ValueError, match="were not in the store"):
+        store.delete([gone])
     want = [({"text": "t7"}, 0.0)]
     if backend == "ivf":
         store.insert([{"new": 1}], X[7] + 1e-3)
@@ -867,3 +870,9 @@ def test_from_dataframe_items_without_item_json(spark, backend):
     assert store.query(X[7], k=len(want)) == [want]
     got = store.query_threshold(X[7], threshold=0.01)
     assert sorted(got[0], key=lambda h: h[1]) == want
+    store.insert([{"new": 2}], X[9])
+    hit = [item for item, _ in store.query(X[9], k=2)[0]]
+    assert sorted(map(str, hit)) == ["{'new': 2}", "{'text': 't9'}"]
+    store.delete(hit)
+    assert len(store) == (50 if backend == "ivf" else 49) - 1
+    assert not {str(item) for item, _ in store.query(X[9], k=3)[0]} & set(map(str, hit))

@@ -45,13 +45,12 @@ train-once posture, faiss.py:24-32).
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from vicinity_spark.backends.base import IndexStrategy
 from vicinity_spark.datatypes import Backend, Metric
-from vicinity_spark.session import local_frame
+from vicinity_spark.session import local_frame, vector_column
 
 NBRS_COL = "__nbrs"
 INSERTED_COL = "__inserted"
@@ -247,17 +246,13 @@ class GraphStrategy(IndexStrategy):
         space = self._seed_space
         Csq = (C * C).sum(axis=1)
 
-        @F.pandas_udf("__scl int, __sd double")
-        def assign(v: pd.Series) -> pd.DataFrame:
+        def assign(X):
             # BLAS argmin (grid.py:35) — never the nq×k×dim broadcasting
             # form; n=1 distances are exact (the member cut ranks on them)
-            Q = space(np.vstack(v.to_numpy()).astype(np.float64), angular)
-            sel, dist = nearest_centroids(Q, C, n=1, Csq=Csq)
-            return pd.DataFrame(
-                {"__scl": sel[:, 0].astype(np.int32), "__sd": dist[:, 0]}
-            )
+            sel, dist = nearest_centroids(space(X, angular), C, n=1, Csq=Csq)
+            return {"__scl": sel[:, 0], "__sd": dist[:, 0]}
 
-        a = vectors.select("id", assign(F.col("vector")).alias("s")).select(
+        a = vector_column(vectors, "s", "__scl int, __sd double", assign, "vector").select(
             "id", "s.__scl", "s.__sd"
         )
         w = Window.partitionBy("__scl").orderBy(F.col("__sd"), F.col("id"))
@@ -278,8 +273,6 @@ class GraphStrategy(IndexStrategy):
         """(query_id, id) per-query seeds from the probed centroids'
         member sets. The probe is executor-side (no driver collect);
         the member table is nlist×seed_members rows — broadcast."""
-        from pyspark.sql.types import ArrayType, IntegerType
-
         from vicinity_spark.operators.grid import nearest_centroids
 
         C = np.asarray(self.params["seed_centroids"], dtype=np.float64)
@@ -288,16 +281,16 @@ class GraphStrategy(IndexStrategy):
         space = self._seed_space
         Csq = (C * C).sum(axis=1)
 
-        @F.pandas_udf(ArrayType(IntegerType()))
-        def probe(v: pd.Series) -> pd.Series:
+        def probe(Q):
             # BLAS top-p (grid.py:35); the probed set feeds a distinct
             # member join, so the n>1 set contract is exactly what the
             # consumer needs
-            Q = space(np.vstack(v.to_numpy()).astype(np.float64), angular)
-            sel, _ = nearest_centroids(Q, C, n=p, Csq=Csq)
-            return pd.Series(list(sel.astype(np.int32)))
+            return nearest_centroids(space(Q, angular), C, n=p, Csq=Csq)[0]
 
-        probed = queries.select("query_id", F.explode(probe(F.col("qvec"))).alias("__scl"))
+        # _outer: see LSHStrategy._probe_df
+        probed = vector_column(queries, "__p", "array<int>", probe, "qvec").select(
+            "query_id", F.explode_outer("__p").alias("__scl")
+        )
         members = self.params["seed_member_ids"]
         mdf = local_frame(
             queries.sparkSession,

@@ -12,10 +12,9 @@ every query runs its probe and scoring stages over that layout, and
 each Python task costs a fixed worker launch whether its partition
 holds one list or many. Centroids are stored in params (nlist × dim
 doubles — tiny), so the index reloads from metadata alone and inserts
-assign clusters without refitting. An insert batch built on the driver
-is assigned there (`nearest_centroids`, the preset build's rule) and
-stays a LocalRelation: the insert and every later scan of its rows run
-no Spark job for the assignment.
+assign clusters without refitting (`_assign_lists`, also the preset
+build): on the driver for a local frame, which stays a LocalRelation,
+so an insert and every later scan of its rows run no Spark job for it.
 
 Query: one `grid.cell_scan` over the inverted lists, the same call as
 the IVF composites' code scans. A bounded batch (at most
@@ -27,8 +26,8 @@ each inverted list's rows against only the queries that probe it
 (grid.probe_scan). An unbounded query table runs `grid.cluster_grid`:
 each list folds into one block row joined only to the query blocks
 that probe it. Both deliver cells to the dense cell kernel → top-k
-merge. `_probe_df` (executor-side probes as rows) stays for the
-streaming serving path.
+merge. `_probe_df` (probes as rows, the same `vector_column`) stays
+for the streaming serving path.
 """
 
 from __future__ import annotations
@@ -36,16 +35,22 @@ from __future__ import annotations
 from typing import Optional, Sequence
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import IntegerType, StructField, StructType
 
 from vicinity_spark.backends.base import IndexStrategy
 from vicinity_spark.datatypes import Backend, Metric
-from vicinity_spark.session import local_frame, local_rows
+from vicinity_spark.session import vector_column
 
 CLUSTER_COL = "__cluster"
+
+
+def _assign_lists(df: DataFrame, centroids) -> DataFrame:
+    """``df`` + ``__cluster``: each vector's nearest centroid, argmin
+    squared l2 with ties to the lower index (`grid.centroid_assign`)."""
+    from vicinity_spark.operators.grid import centroid_assign
+
+    return vector_column(df, CLUSTER_COL, *centroid_assign(centroids), "vector")
 
 
 class IVFStrategy(IndexStrategy):
@@ -69,18 +74,13 @@ class IVFStrategy(IndexStrategy):
         self.params["dim"] = int(dim)
         if self.params.get("centroids") is not None:
             # preset centroids (r5): skip the KMeans fit and assign each
-            # row to its argmin-l2 centroid with the same vectorized
-            # kernel shape as _probe_df (tiny centroid matrix in the
-            # closure, no shuffle, no row explosion). Deterministic
-            # given the centroid list — which is what lets an external
-            # oracle replicate cluster assignment exactly, and what a
-            # production reload does after `load` (centroids live in
-            # params, build never refits on reload).
-            from vicinity_spark.operators.grid import centroid_assign_udf
-
+            # row to its argmin-l2 centroid (`on_insert`'s rule).
+            # Deterministic given the centroid list — which is what
+            # lets an external oracle replicate cluster assignment
+            # exactly, and what a production reload does after `load`
+            # (centroids live in params, build never refits on reload).
             self.params["nlist"] = len(self.params["centroids"])
-            assign = centroid_assign_udf(self.params["centroids"])
-            out = df.withColumn(CLUSTER_COL, assign(F.col("vector")))
+            out = _assign_lists(df, self.params["centroids"])
             # same session-sized inverted-list layout as the fit path
             return out.repartition(F.col(CLUSTER_COL))
         feats = df.withColumn(
@@ -103,45 +103,21 @@ class IVFStrategy(IndexStrategy):
     def on_insert(self, new_df: DataFrame, metric: Metric, dim: int) -> DataFrame:
         """Assign appended rows their nearest centroid — no refit (the
         reference's trainable indexes likewise train once, add many) —
-        by the preset-centroid build's rule: argmin squared l2, ties to
-        the lower index (`nearest_centroids`). A driver-built batch (a
-        LocalRelation: every `VectorStore.insert`) is assigned on the
-        driver and comes back as a LocalRelation, so neither the insert
-        nor a later scan of the rows runs a job or a Python task for
-        it; any other frame (a streaming micro-batch) gets
-        `centroid_assign_udf`."""
-        from vicinity_spark.operators.grid import centroid_assign_udf, nearest_centroids
-
-        rows = local_rows(new_df)
-        if rows is None:
-            assign = centroid_assign_udf(self.params["centroids"])
-            return new_df.withColumn(CLUSTER_COL, assign(F.col("vector")))
-        schema = new_df.schema
-        cols = {f.name: [r[i] for r in rows] for i, f in enumerate(schema.fields)}
-        X = np.asarray(cols["vector"], dtype=np.float64).reshape(len(rows), dim)
-        cols[CLUSTER_COL] = nearest_centroids(X, self.centroids)[0][:, 0].astype(np.int32)
-        out = StructType(schema.fields + [StructField(CLUSTER_COL, IntegerType())])
-        return local_frame(new_df.sparkSession, cols, out)
+        by the preset build's rule (`_assign_lists`): on the driver for
+        a driver-built batch (every `VectorStore.insert`), which stays
+        a LocalRelation; one Arrow UDF for any other frame."""
+        return _assign_lists(new_df, self.params["centroids"])
 
     def _probe_df(self, queries: DataFrame, extra_cols: Sequence[str] = ()) -> DataFrame:
         """(query_id, *extra_cols, __cluster) for the nprobe nearest
-        centroids — computed *executor-side* in an Arrow-vectorized
-        pandas UDF with the tiny centroid matrix riding in the closure
-        (same pattern as LSH's _probe_df): no driver collect, so a
-        10M-row query table probes in parallel instead of bottlenecking
-        the driver. `extra_cols` ride along for the streaming serving
-        path (ts + qvec, so scoring never re-joins the query stream)."""
-        from pyspark.sql.types import ArrayType
-
-        lists = self._lists(None)
-
-        @F.pandas_udf(ArrayType(IntegerType()))
-        def probe(v: pd.Series) -> pd.Series:
-            Q = np.vstack(v.to_numpy()).astype(np.float64)
-            return pd.Series(list(lists.probes(Q).astype(np.int32)))
-
-        return queries.select(
-            "query_id", *extra_cols, F.explode(probe(F.col("qvec"))).alias(CLUSTER_COL)
+        centroids (one `vector_column`, the tiny centroid matrix in the
+        closure): a query table probes executor-side in parallel.
+        `extra_cols` ride along for the streaming serving path (ts +
+        qvec, so scoring never re-joins the query stream)."""
+        probes = vector_column(queries, "__probes", "array<int>", self._lists(None).probes, "qvec")
+        # _outer: see LSHStrategy._probe_df
+        return probes.select(
+            "query_id", *extra_cols, F.explode_outer("__probes").alias(CLUSTER_COL)
         )
 
     def _lists(self, metric: Metric):

@@ -10,6 +10,11 @@ KMeans, `__cluster` layout + centroids in metadata), and each row's
 at the same byte budget: residual magnitudes are much smaller than
 vector magnitudes, so the per-subspace codebooks spend their 8 bits on
 the fine structure instead of re-describing the coarse position.
+Insert: IVF's list assignment, then the residual (and refinement)
+codes with the stored centroids and codebooks — each layout column one
+`session.vector_column`, so a driver-built insert batch is assigned
+and encoded on the driver and stays a LocalRelation. The IVF half is
+`IVFStrategy.build` / `on_insert` called on this strategy's own params.
 
 Query: PQStrategy's ADC scan over the inverted lists — this class
 overrides only its `_lists` and `_cell_tables` hooks. A bounded batch
@@ -46,11 +51,11 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, ShortType
 
 from vicinity_spark.backends.ivf import CLUSTER_COL, IVFStrategy
 from vicinity_spark.backends.pq import (
     CODE_COL,
+    CODES_TYPE,
     PQStrategy,
     _normalized,
     _train_sample,
@@ -62,6 +67,7 @@ from vicinity_spark.backends.pq import (
 from vicinity_spark.datatypes import Backend, Metric
 from vicinity_spark.functions.metrics import normalize_expr
 from vicinity_spark.operators.knn import _KNN_SCHEMA
+from vicinity_spark.session import vector_column
 
 _RESIDUAL_METRICS = (Metric.COSINE, Metric.EUCLIDEAN, Metric.L2_SQUARED)
 
@@ -97,50 +103,54 @@ class IVFPQStrategy(PQStrategy):
         self.params["residual"] = bool(residual)
         self.params["refine_m"] = int(refine_m)
         self.params["rbooks"] = rbooks
-        self._ivf = IVFStrategy(
-            nlist=int(nlist), nprobe=int(nprobe), seed=self.params["seed"], centroids=centroids
-        )
 
     # ---- residual machinery -----------------------------------------
     def _use_residual(self, metric: Metric) -> bool:
         return self.params["residual"] and metric in _RESIDUAL_METRICS
 
-    def _t_expr(self, col, metric: Metric):
-        """Metric-space transform: unit sphere for cosine, identity else."""
-        c = F.col(col) if isinstance(col, str) else col
-        return normalize_expr(c) if metric is Metric.COSINE else c.cast("array<double>")
-
-    def _residual_encode_kernel(self):
+    def _residual_codes(self, out: DataFrame, dim: int) -> DataFrame:
+        """``out`` (metric-space ``__tvec`` plus ``__cluster``) with
+        ``__pqcode``, the residual to the row's centroid under the
+        stored codebooks, and with ``refine_m`` ``__rcode``, the
+        residual left after decoding it — the IndexIVFPQR layout;
+        ``__tvec`` dropped. Each code is one `session.vector_column`."""
         books = self._codebooks()
         C = np.asarray(self.params["centroids"], dtype=np.float64)
+        enc = lambda X, cl: encode(X - C[cl], books)  # noqa: E731
+        out = vector_column(out, CODE_COL, CODES_TYPE, enc, "__tvec", CLUSTER_COL)
+        if self.params["refine_m"]:
+            self._train_refinement(out, dim)
+            rbooks = self._rbooks()
+            renc = lambda X, cl, c1: encode(X - self._decode_primary(cl, c1), rbooks)  # noqa: E731
+            out = vector_column(out, RCODE_COL, CODES_TYPE, renc, "__tvec", CLUSTER_COL, CODE_COL)
+        return out.drop("__tvec")
 
-        @F.pandas_udf(ArrayType(ShortType()))
-        def residual_encode(tv: pd.Series, cl: pd.Series) -> pd.Series:
-            X = np.vstack(tv.to_numpy()).astype(np.float64)
-            return pd.Series(list(encode(X - C[cl.to_numpy().astype(int)], books)))
-
-        return residual_encode
+    def _metric_space(self, df: DataFrame, metric: Metric, assign) -> DataFrame:
+        """``assign(df')`` (IVF's build or insert: ``__cluster`` added)
+        for ``df'`` = ``df`` with its vectors moved to the metric space
+        (the unit sphere for cosine, else unchanged); then ``__tvec``
+        holds those vectors and ``vector`` the original column again
+        (kept for the exact re-rank and the payload)."""
+        v = F.col("vector")
+        t = normalize_expr(v) if metric is Metric.COSINE else v.cast("array<double>")
+        tdf = (
+            df.withColumn("__tvec", t)
+            .withColumnRenamed("vector", "__orig")
+            .withColumnRenamed("__tvec", "vector")
+        )
+        out = assign(tdf)
+        return out.withColumnRenamed("vector", "__tvec").withColumnRenamed("__orig", "vector")
 
     # ---- build -------------------------------------------------------
     def build(self, df: DataFrame, metric: Metric, dim: int) -> DataFrame:
         if not self._use_residual(metric):
-            out = self._ivf.build(df, metric, dim)
-            self.params["centroids"] = self._ivf.params["centroids"]
-            return super().build(out, metric, dim)
+            return super().build(IVFStrategy.build(self, df, metric, dim), metric, dim)
         self.params["dim"] = int(dim)
         m = self.params["m"]
         if dim % m != 0:
             raise ValueError(f"dim {dim} not divisible by m={m} subspaces")
-        # coarse-cluster the metric-space vectors; keep the original
-        # vector column untouched for the exact re-rank / payload
-        tdf = (
-            df.withColumn("__tvec", self._t_expr("vector", metric))
-            .withColumnRenamed("vector", "__orig")
-            .withColumnRenamed("__tvec", "vector")
-        )
-        out = self._ivf.build(tdf, metric, dim)
-        self.params["centroids"] = self._ivf.params["centroids"]
-        out = out.withColumnRenamed("vector", "__tvec").withColumnRenamed("__orig", "vector")
+        # coarse-cluster the metric-space vectors
+        out = self._metric_space(df, metric, lambda t: IVFStrategy.build(self, t, metric, dim))
         if self.params.get("codebooks") is None:
             sample = _train_sample(
                 out, ["__tvec", CLUSTER_COL], self.params["train_sample"], self.params["seed"]
@@ -151,11 +161,7 @@ class IVFPQStrategy(PQStrategy):
             self.params["codebooks"] = train_codebooks(
                 R, m, self.params["ksub"], self.params["seed"]
             )
-        enc = self._residual_encode_kernel()
-        out = out.withColumn(CODE_COL, enc(F.col("__tvec"), F.col(CLUSTER_COL)))
-        if self.params["refine_m"]:
-            out = self._add_refinement_codes(out, dim)
-        return out.drop("__tvec")
+        return self._residual_codes(out, dim)
 
     # ---- ivfpqr refinement codes (faiss.py:111-113) ------------------
     def _decode_primary(self, cl: np.ndarray, code1: np.ndarray) -> np.ndarray:
@@ -166,9 +172,9 @@ class IVFPQStrategy(PQStrategy):
     def _rbooks(self) -> np.ndarray:
         return np.asarray(self.params["rbooks"], dtype=np.float64)
 
-    def _add_refinement_codes(self, out: DataFrame, dim: int) -> DataFrame:
-        """Train the refinement quantizer on the residual-of-residual
-        (x_t − x̂₁) and encode `__rcode` — the IndexIVFPQR layout."""
+    def _train_refinement(self, out: DataFrame, dim: int) -> None:
+        """Train the refinement quantizer, once, on the
+        residual-of-residual (x_t − x̂₁) of ``out``'s rows."""
         rm = self.params["refine_m"]
         if dim % rm != 0:
             raise ValueError(f"dim {dim} not divisible by refine_m={rm} subspaces")
@@ -186,19 +192,6 @@ class IVFPQStrategy(PQStrategy):
             self.params["rbooks"] = train_codebooks(
                 R2, rm, self.params["ksub"], self.params["seed"] + 1000
             )
-        strat = self
-        rbooks = self._rbooks()
-
-        @F.pandas_udf(ArrayType(ShortType()))
-        def rencode(tv: pd.Series, cl: pd.Series, c1: pd.Series) -> pd.Series:
-            X = np.vstack(tv.to_numpy()).astype(np.float64)
-            code1 = np.vstack(c1.to_numpy()).astype(np.int64)
-            R2 = X - strat._decode_primary(cl.to_numpy(), code1)
-            return pd.Series(list(encode(R2, rbooks)))
-
-        return out.withColumn(
-            RCODE_COL, rencode(F.col("__tvec"), F.col(CLUSTER_COL), F.col(CODE_COL))
-        )
 
     def _recon_scored(
         self, cand: DataFrame, corpus: DataFrame, queries: DataFrame, metric: Metric
@@ -272,22 +265,14 @@ class IVFPQStrategy(PQStrategy):
     knn = PQStrategy.knn
 
     def on_insert(self, new_df: DataFrame, metric: Metric, dim: int) -> DataFrame:
-        self._ivf.params["centroids"] = self.params["centroids"]
+        # lists, codebooks and refinement books trained at build;
+        # appended rows are assigned and encoded with them
         if not self._use_residual(metric):
-            return super().on_insert(self._ivf.on_insert(new_df, metric, dim), metric, dim)
-        tdf = (
-            new_df.withColumn("__tvec", self._t_expr("vector", metric))
-            .withColumnRenamed("vector", "__orig")
-            .withColumnRenamed("__tvec", "vector")
+            return super().on_insert(IVFStrategy.on_insert(self, new_df, metric, dim), metric, dim)
+        out = self._metric_space(
+            new_df, metric, lambda t: IVFStrategy.on_insert(self, t, metric, dim)
         )
-        out = self._ivf.on_insert(tdf, metric, dim)
-        out = out.withColumnRenamed("vector", "__tvec").withColumnRenamed("__orig", "vector")
-        enc = self._residual_encode_kernel()
-        out = out.withColumn(CODE_COL, enc(F.col("__tvec"), F.col(CLUSTER_COL)))
-        if self.params["refine_m"]:
-            # rbooks trained at build; appended rows encode with them
-            out = self._add_refinement_codes(out, dim)
-        return out.drop("__tvec")
+        return self._residual_codes(out, dim)
 
     # ---- query -------------------------------------------------------
     def _lists(self, metric: Metric):

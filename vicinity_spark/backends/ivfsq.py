@@ -3,7 +3,8 @@
 vectors, the IndexIVFScalarQuantizer design).
 
 Build: MLlib KMeans coarse clustering (`__cluster` inverted-list
-layout + centroids in metadata, exactly backends/ivf.py) composed with
+layout + centroids in metadata: `IVFStrategy.build` itself, run on
+this strategy's params, and likewise `on_insert`) composed with
 the per-dimension min/max scalar quantizer (`__code: array<smallint>`,
 exactly backends/sq.py). Scan payload per row: 4 bytes cluster + dim
 bytes of codes — the IVF prune and the 4-8× SQ byte reduction stack.
@@ -50,22 +51,18 @@ class IVFSQStrategy(SQStrategy):
         self.params["nprobe"] = int(nprobe)
         self.params["seed"] = int(seed)
         self.params["centroids"] = centroids
-        self._ivf = IVFStrategy(
-            nlist=int(nlist), nprobe=int(nprobe), seed=int(seed), centroids=centroids
-        )
 
     # ---- build -------------------------------------------------------
+    # IVF's methods run on this strategy's own params (centroids, nlist,
+    # nprobe, seed), as `_lists` does
     def build(self, df: DataFrame, metric: Metric, dim: int) -> DataFrame:
-        out = self._ivf.build(df, metric, dim)
-        self.params["centroids"] = self._ivf.params["centroids"]
         # SQStrategy.build trains the scalar codebook and adds __code
-        return super().build(out, metric, dim)
+        return super().build(IVFStrategy.build(self, df, metric, dim), metric, dim)
 
     def on_insert(self, new_df: DataFrame, metric: Metric, dim: int) -> DataFrame:
         # train once, add many: cluster assignment from stored centroids,
         # codes from the stored min/scale ranges
-        self._ivf.params["centroids"] = self.params["centroids"]
-        return super().on_insert(self._ivf.on_insert(new_df, metric, dim), metric, dim)
+        return super().on_insert(IVFStrategy.on_insert(self, new_df, metric, dim), metric, dim)
 
     # ---- query -------------------------------------------------------
     _lists = IVFStrategy._lists

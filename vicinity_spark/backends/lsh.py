@@ -7,7 +7,11 @@ Design (100 TB posture):
   index is *reproducible from params alone* — nothing binary to persist,
   and inserted rows hash identically forever.
 - Build decorates the corpus with one `__buckets: array<bigint>` column
-  (L tables), computed in a single Arrow-vectorized pandas UDF pass.
+  (L tables): a pure Catalyst expression for the sparse-plane and
+  bit-sampling families, else one `session.vector_column` — on the
+  driver for a local frame (every insert batch and facade query batch
+  stays a LocalRelation), one Arrow UDF otherwise. Inserts and probes
+  hash through the same `_buckets`.
 - Query is a pure equi-join plan: posexplode corpus buckets ⋈ probe
   buckets on (table, bucket) → distinct candidate pairs → exact distance
   re-rank. No cross product anywhere; the candidate join shuffles only
@@ -25,14 +29,13 @@ from __future__ import annotations
 from typing import Optional, Sequence
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, LongType
 
 from vicinity_spark.backends.base import IndexStrategy
 from vicinity_spark.datatypes import Backend, Metric
 from vicinity_spark.functions.metrics import clip_distance
+from vicinity_spark.session import vector_column
 
 BUCKETS_COL = "__buckets"
 POSTINGS_DIR = "postings.parquet"
@@ -219,6 +222,20 @@ def _bucket_expr(params: dict, dim: int, vec_col, metric: Metric):
     return F.array(*tables)
 
 
+def _buckets(df: DataFrame, params: dict, vec_col: str, metric: Metric):
+    """``(df', buckets)``: ``vec_col``'s L per-table bucket ids — the
+    pure-Catalyst `_bucket_expr` over ``df`` for the families it covers
+    (no Python worker), else `_bucket_matrix_np` as the ``__buckets``
+    column of ``df'`` = one `session.vector_column` (on the driver for
+    a local frame, one Arrow UDF otherwise). The UDF closure holds the
+    params dict, never a strategy and its postings."""
+    dim = params.get("dim")
+    if dim is not None and _expr_bucket_family(params, metric) is not None:
+        return df, _bucket_expr(params, int(dim), vec_col, metric)
+    fn = lambda X: _bucket_matrix_np(params, X, metric)  # noqa: E731
+    return vector_column(df, BUCKETS_COL, "array<bigint>", fn, vec_col), F.col(BUCKETS_COL)
+
+
 class LSHStrategy(IndexStrategy):
     backend = Backend.LSH
     exact = False
@@ -245,20 +262,8 @@ class LSHStrategy(IndexStrategy):
         #: cadence counter)
         self._extra_batches = 0
 
-    # ---- hashing (delegates to module-level kernels so UDF closures
-    # capture only the plain params dict, never the strategy object —
-    # which may hold an unpicklable DataFrame in _postings) -----------
     def _planes(self, dim: int) -> np.ndarray:
         return _planes_np(self.params, dim)
-
-    def _offsets(self) -> np.ndarray:
-        return _offsets_np(self.params)
-
-    def _sampled_coords(self, dim: int) -> np.ndarray:
-        return _sampled_coords_np(self.params, dim)
-
-    def _bucket_matrix(self, X: np.ndarray, metric: Metric) -> np.ndarray:
-        return _bucket_matrix_np(self.params, X, metric)
 
     def build(self, df: DataFrame, metric: Metric, dim: int) -> DataFrame:
         self.params["dim"] = int(dim)
@@ -269,21 +274,8 @@ class LSHStrategy(IndexStrategy):
             from vicinity_spark.functions.stats import vector_stats
 
             self.params["means"] = [float(m) for m in vector_stats(df, "vector").mean]
-        params = dict(self.params)
-        if _expr_bucket_family(params, metric) is not None:
-            # JVM-side hashing (sparse/bit-sample families): no Python
-            # worker in the build path, whole-stage codegen all the way
-            return df.withColumn(
-                BUCKETS_COL, _bucket_expr(params, int(dim), "vector", metric)
-            )
-
-        @F.pandas_udf(ArrayType(LongType()))
-        def bucketize(v: pd.Series) -> pd.Series:
-            X = np.vstack(v.to_numpy()).astype(np.float64)
-            M = _bucket_matrix_np(params, X, metric)
-            return pd.Series(list(M))
-
-        return df.withColumn(BUCKETS_COL, bucketize(F.col("vector")))
+        out, buckets = _buckets(df, dict(self.params), "vector", metric)
+        return out.withColumn(BUCKETS_COL, buckets)
 
     def on_insert(self, new_df: DataFrame, metric: Metric, dim: int) -> DataFrame:
         """Hash the appended rows and, when a persisted posting layout
@@ -370,34 +362,22 @@ class LSHStrategy(IndexStrategy):
     def _probe_df(
         self, queries: DataFrame, metric: Metric, extra_cols: Sequence[str] = ()
     ) -> DataFrame:
-        """(query_id, *extra_cols, table, bucket) probes — hashed
-        executor-side with the same family as build (no driver
-        roundtrip). `extra_cols` ride along for callers that need
-        the query's payload past the probe (the streaming serving path
-        carries ts + qvec so scoring never re-joins the query stream).
-        Sparse/bit-sample families probe with the pure-Catalyst
-        `_bucket_expr` — no Python worker per micro-batch."""
-        params = dict(self.params)
-        dim = params.get("dim")
-        if dim is not None and _expr_bucket_family(params, metric) is not None:
-            return queries.select(
-                "query_id",
-                *extra_cols,
-                F.posexplode(_bucket_expr(params, int(dim), "qvec", metric)).alias(
-                    "table", "bucket"
-                ),
-            )
-
-        @F.pandas_udf(ArrayType(LongType()))
-        def bucketize(v: pd.Series) -> pd.Series:
-            X = np.vstack(v.to_numpy()).astype(np.float64)
-            return pd.Series(list(_bucket_matrix_np(params, X, metric)))
-
-        return queries.select(
-            "query_id",
-            *extra_cols,
-            F.posexplode(bucketize(F.col("qvec"))).alias("table", "bucket"),
-        )
+        """(query_id, *extra_cols, table, bucket) probes — hashed with
+        the same family as build (`_buckets`: executor-side for a
+        query table, on the driver for a local batch). `extra_cols`
+        ride along for callers that need the query's payload past the
+        probe (the streaming serving path carries ts + qvec so scoring
+        never re-joins the query stream). Sparse/bit-sample families
+        probe with the pure-Catalyst `_bucket_expr` — no Python worker
+        per micro-batch."""
+        probes, buckets = _buckets(queries, dict(self.params), "qvec", metric)
+        # a column of a new frame explodes _outer (the same rows: a
+        # bucket array is never empty, a null one joins nothing): an
+        # inner explode of a column makes the optimizer infer a
+        # non-empty filter on it and push that below the projection,
+        # which computes the column twice
+        explode = F.posexplode if probes is queries else F.posexplode_outer
+        return probes.select("query_id", *extra_cols, explode(buckets).alias("table", "bucket"))
 
     def _candidates(self, corpus: DataFrame, queries: DataFrame, metric: Metric) -> DataFrame:
         probe = self._probe_df(queries, metric)

@@ -5,9 +5,11 @@ product quantization … per-subspace KMeans codebooks + byte codes").
 Train: sample the corpus to the driver (PQ codebooks are always trained
 on a sample), run seeded Lloyd iterations per subspace in numpy, store
 the m × ksub × dsub codebook in params (it reloads from metadata, no
-binary files). Encode: one Arrow pass assigns each subvector its
-nearest centroid id → `__pqcode: array<smallint>` (m bytes per vector —
-a dim×4/m byte reduction, 32× at dim=64, m=8). The codec itself —
+binary files). Encode assigns each subvector its nearest centroid id →
+`__pqcode: array<smallint>` (m bytes per vector — a dim×4/m byte
+reduction, 32× at dim=64, m=8) through one `session.vector_column`:
+on the driver for a local frame (every insert batch, which stays a
+LocalRelation), as one Arrow UDF otherwise. The codec itself —
 `train_codebooks`, `encode`, `l2_tables`, `decode` — is module-level
 and shared with backends/ivfpq.py (residual codes, ivfpqr refinement).
 
@@ -46,8 +48,10 @@ from pyspark.sql.types import ArrayType, ShortType
 from vicinity_spark.backends.base import RerankStrategy
 from vicinity_spark.datatypes import Backend, Metric
 from vicinity_spark.operators.knn import _KNN_SCHEMA
+from vicinity_spark.session import vector_column
 
 CODE_COL = "__pqcode"
+CODES_TYPE = ArrayType(ShortType())
 
 # Only cosine is served by unit-normalization (‖q−x‖² = 2·(1−cos) on
 # the unit sphere). INNER_PRODUCT must NOT be normalized: the high-norm
@@ -194,15 +198,14 @@ class PQStrategy(RerankStrategy):
     def _codebooks(self) -> np.ndarray:
         return np.asarray(self.params["codebooks"], dtype=np.float64)
 
-    def _encode_kernel(self, metric: Metric):
+    def _encoded(self, df: DataFrame, metric: Metric) -> DataFrame:
+        """``df`` + ``__pqcode``: each vector's codes under the stored
+        codebooks (`encode`, in the metric's space), on the driver for
+        a local batch (`session.vector_column`)."""
         books = self._codebooks()  # m × ksub × dsub
-
-        @F.pandas_udf(ArrayType(ShortType()))
-        def pq_encode(v: pd.Series) -> pd.Series:
-            X = np.vstack(v.to_numpy()).astype(np.float64)
-            return pd.Series(list(encode(_normalized(X, metric), books)))
-
-        return pq_encode
+        return vector_column(
+            df, CODE_COL, CODES_TYPE, lambda X: encode(_normalized(X, metric), books), "vector"
+        )
 
     # ---- build -------------------------------------------------------
     def build(self, df: DataFrame, metric: Metric, dim: int) -> DataFrame:
@@ -218,11 +221,11 @@ class PQStrategy(RerankStrategy):
             self.params["codebooks"] = train_codebooks(
                 _normalized(S, metric), m, self.params["ksub"], self.params["seed"]
             )
-        return df.withColumn(CODE_COL, self._encode_kernel(metric)(F.col("vector")))
+        return self._encoded(df, metric)
 
     def on_insert(self, new_df: DataFrame, metric: Metric, dim: int) -> DataFrame:
         # codebooks train once (faiss.py:24-32); new rows encode with them
-        return new_df.withColumn(CODE_COL, self._encode_kernel(metric)(F.col("vector")))
+        return self._encoded(new_df, metric)
 
     # ---- query: ADC candidates (RerankStrategy re-ranks them) --------
     def _cell_tables(self, metric: Metric):

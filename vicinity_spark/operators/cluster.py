@@ -19,7 +19,7 @@ LAION scale, keeping clusters ~10⁴ rows).
 Scale shape:
 - assignment is a NARROW projection (Arrow-vectorized argmin against
   the k×dim centroid matrix riding in the closure — the one
-  `grid.centroid_assign_udf` the IVF backend also builds with, so
+  `grid.centroid_assign` the IVF backend also builds with, so
   labels share its tie rule); no shuffle, no join, replayable by an
   `ORDER BY dist, cid` oracle;
 - the pair mine is ONE equi-join shuffle keyed on cluster id — pair
@@ -43,9 +43,10 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import BinaryType
 
-from vicinity_spark.operators.grid import centroid_assign_udf
-from vicinity_spark.session import local_frame
+from vicinity_spark.operators.grid import centroid_assign
+from vicinity_spark.session import local_frame, vector_column
 
 #: rows of the per-cluster distance matrix computed per kernel slice —
 #: bounds kernel memory at _PCHUNK × cluster_size doubles (the grid
@@ -99,23 +100,6 @@ def _unpack_vecs(cell) -> "np.ndarray":
     )
 
 
-def _pack_udf():
-    """vector → float64 bytes, for paths whose cluster labels are
-    already computed (``batch_cluster_col``/``snapshot_cluster_col``)
-    and therefore have no assignment pass to amortize the pack into.
-    Same packed layout as `centroid_assign_udf(..., with_packed=True)`."""
-    from pyspark.sql.types import BinaryType
-
-    @F.pandas_udf(BinaryType())
-    def pack(v: pd.Series) -> pd.Series:
-        if not len(v):
-            return pd.Series([], dtype=object)
-        Q = np.vstack(v.to_numpy()).astype(np.float64)
-        return pd.Series([Q[i].tobytes() for i in range(len(Q))])
-
-    return pack
-
-
 def assign_clusters(
     df: DataFrame,
     centroids,
@@ -127,9 +111,7 @@ def assign_clusters(
     centroid (squared-euclidean argmin, ties to the lower index).
     Narrow projection — the k×dim matrix rides in the closure; no
     shuffle, no join, so this composes into any scan."""
-    return df.withColumn(
-        cluster_col, centroid_assign_udf(centroids)(F.col(vector_col))
-    )
+    return vector_column(df, cluster_col, *centroid_assign(centroids), vector_col)
 
 
 def _packed_rows(df, centroids, id_col, vector_col, cluster_col=None):
@@ -138,16 +120,15 @@ def _packed_rows(df, centroids, id_col, vector_col, cluster_col=None):
     or, when ``cluster_col`` names precomputed labels, in a dedicated
     one-column pack pass (nothing to amortize it into)."""
     if cluster_col is not None:
-        return df.select(
+        # the pack alone: an identity codec on a binary column
+        return vector_column(df, "__packed", BinaryType(), lambda X: X, vector_col).select(
             F.col(id_col).alias("id"),
-            _pack_udf()(F.col(vector_col)).alias("__packed"),
+            "__packed",
             F.col(cluster_col).cast("int").alias("cluster_id"),
         )
-    assign = centroid_assign_udf(centroids, with_packed=True)
-    return df.select(
-        F.col(id_col).alias("id"), assign(F.col(vector_col)).alias("__a")
-    ).select(
-        "id",
+    assign = centroid_assign(centroids, with_packed=True)
+    return vector_column(df, "__a", *assign, vector_col).select(
+        F.col(id_col).alias("id"),
         F.col("__a.cluster_id").alias("cluster_id"),
         F.col("__a.packed").alias("__packed"),
     )
@@ -376,8 +357,8 @@ def semdedup(
     # pair kernel rebuilds each cluster with one frombuffer (values
     # bit-identical: the kernels widened members to float64 before).
     farthest = keep == "farthest"
-    assign = centroid_assign_udf(centroids, with_dist=farthest, with_packed=True)
-    asg = base.withColumn("__a", assign(F.col("vector"))).select(
+    assign = centroid_assign(centroids, with_dist=farthest, with_packed=True)
+    asg = vector_column(base, "__a", *assign, "vector").select(
         "id",
         F.col("__a.cluster_id").alias("cluster_id"),
         *([F.col("__a.cdist").alias("__cdist")] if farthest else []),
@@ -923,8 +904,7 @@ def cluster_stats(
     One narrow assignment pass (the same closure kernel) + one
     map-side-combined groupBy, output bounded by k rows — safe to run
     at any corpus size."""
-    assign = centroid_assign_udf(centroids, with_dist=True)
-    asg = df.withColumn("__a", assign(F.col(vector_col)))
+    asg = vector_column(df, "__a", *centroid_assign(centroids, with_dist=True), vector_col)
     return (
         asg.groupBy(F.col("__a.cluster_id").alias("cluster_id"))
         .agg(

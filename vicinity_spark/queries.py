@@ -4877,7 +4877,7 @@ _CLUSTER_K = 8
 def _cluster_asg_ctes(keep_dist: bool = False) -> str:
     """cent + asg CTEs: nearest-preset-centroid assignment, squared-l2
     argmin with ties to the lower centroid id — exactly the
-    np.argmin(first-minimum) rule of operators/grid.py:centroid_assign_udf
+    np.argmin(first-minimum) rule of operators/grid.py:centroid_assign
     (centroid index ≡ vec_id because the preset list is the first
     _CLUSTER_K rows in vec_id order). ``keep_dist=True`` names the
     CTE ``asgd`` and keeps each row's distance as ``cdist`` (the
@@ -5345,7 +5345,7 @@ _CHECK_FIRST = [
     #     through _pair_kernel's block shape, the one shape no other
     #     in-window row executes;
     #   emb_semdedup_incremental — the packed fold through
-    #     _pair_kernel's cross (__sides) shape plus the new _pack_udf
+    #     _pair_kernel's cross (__sides) shape plus the pack-only vector column
     #     (precomputed-cluster inputs), likewise unique.
     # Six further r15-touched r14-green rows stay in the tail under
     # the r12 docs_unigram_xent subsumption precedent (the touched
@@ -5358,7 +5358,7 @@ _CHECK_FIRST = [
     # emb_cluster_curate run semdedup's default packed path, certified
     # in-window by emb_semdedup (curate's join-back and the farthest
     # re-pick are untouched this round; emb_semdedup_farthest's only
-    # delta — cdist emission in centroid_assign_udf — is pinned
+    # delta — cdist emission in centroid_assign — is pinned
     # bit-equal by tests/test_cluster.py::
     # test_packed_assignment_matches_plain_and_roundtrips).
     # knn_filtered_label / multimodal_knn / ann_recall_summary share

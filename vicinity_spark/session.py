@@ -8,8 +8,11 @@ from __future__ import annotations
 
 import os
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import StructType
+from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, BinaryType, DataType, StructField, StructType
 
 
 def _default_driver_mem() -> str:
@@ -170,6 +173,79 @@ def local_rows(df: DataFrame):
     if plan is None or plan.getClass().getSimpleName() != "LocalRelation":
         return None
     return df.collect()
+
+
+#: numpy dtype of each Spark numeric type a vector column emits
+_NUMPY_TYPES = {
+    "smallint": np.int16,
+    "int": np.int32,
+    "bigint": np.int64,
+    "double": np.float64,
+}
+
+
+def _vector_out(out, dtype: DataType):
+    """A vector function's result as ``dtype`` column values: a struct
+    from a dict of arrays, a binary column as each row's float64 bytes
+    (the one pack rule; cluster.py's `_unpack_vecs` reads it), an array
+    column as one 1-D array per row, a scalar column as a 1-D array."""
+    if isinstance(dtype, StructType):
+        return {f.name: _vector_out(out[f.name], f.dataType) for f in dtype.fields}
+    if isinstance(dtype, BinaryType):
+        return [row.tobytes() for row in np.asarray(out, dtype=np.float64)]
+    if isinstance(dtype, ArrayType):
+        return list(np.asarray(out, dtype=_NUMPY_TYPES[dtype.elementType.simpleString()]))
+    return np.asarray(out, dtype=_NUMPY_TYPES[dtype.simpleString()])
+
+
+def _vector_apply(fn, dtype: DataType, columns):
+    """``fn`` over the input columns' values, as ``dtype`` column values.
+    An array column reaches ``fn`` as one row matrix (float64, or int64
+    for integer codes), a scalar column as a 1-D array. An empty batch
+    gives an empty column without calling ``fn``."""
+    if not len(columns[0]):
+        return {f.name: [] for f in dtype.fields} if isinstance(dtype, StructType) else []
+    args = []
+    for values in columns:
+        if isinstance(values[0], (list, np.ndarray)):
+            values = np.vstack(values)
+            values = values.astype(np.int64 if values.dtype.kind in "iu" else np.float64)
+        args.append(np.asarray(values))
+    return _vector_out(fn(*args), dtype)
+
+
+def vector_udf(fn, dtype: "DataType | str"):
+    """The one Arrow wrapper for a vector codec: a scalar pandas UDF
+    that runs the numpy function ``fn`` (`_vector_apply`) per batch.
+    ``fn`` returns an array, or a dict of arrays for a struct
+    ``dtype``. `vector_column` skips it for rows already on the
+    driver."""
+    dtype = DataType.fromDDL(dtype) if isinstance(dtype, str) else dtype
+
+    def codec(*cols: pd.Series) -> pd.Series:  # a struct column returns a DataFrame
+        out = _vector_apply(fn, dtype, [c.to_numpy() for c in cols])
+        return pd.DataFrame(out) if isinstance(dtype, StructType) else pd.Series(out)
+
+    return F.pandas_udf(codec, dtype)
+
+
+def vector_column(df: DataFrame, name: str, dtype: "DataType | str", fn, *cols: str) -> DataFrame:
+    """``df`` with column ``name`` = ``fn`` over the columns ``cols``.
+    When ``df``'s optimized plan is a LocalRelation (`local_rows`: an
+    insert or query batch, a small Arrow ``createDataFrame``) ``fn``
+    runs on the driver and the result is again a LocalRelation: no
+    Spark job or Python task computes the column, now or in a later
+    scan. Any other frame gets it through `vector_udf`. Both paths
+    give ``fn`` the same float64 matrix, so the values are equal."""
+    dtype = DataType.fromDDL(dtype) if isinstance(dtype, str) else dtype
+    rows = local_rows(df)
+    if rows is None:
+        return df.withColumn(name, vector_udf(fn, dtype)(*cols))
+    data = {f.name: [r[i] for r in rows] for i, f in enumerate(df.schema.fields)}
+    out = _vector_apply(fn, dtype, [data[c] for c in cols])
+    data[name] = [dict(zip(out, v)) for v in zip(*out.values())] if isinstance(out, dict) else out
+    fields = [f for f in df.schema.fields if f.name != name] + [StructField(name, dtype)]
+    return local_frame(df.sparkSession, data, StructType(fields))
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str):

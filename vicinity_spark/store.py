@@ -18,13 +18,14 @@ id that is absent rather than merely ≥ len.
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import time
 from typing import Any, Optional, Sequence
 
 import numpy as np
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, FloatType, LongType, StringType, StructField, StructType
 
@@ -260,20 +261,44 @@ class VectorStore:
         rows.sort(key=lambda r: (r["query_id"], r["rank"]))
         return self._nested(rows, n)
 
-    def _nested(self, rows, n: int) -> "list[list[tuple[Any, float]]]":
-        """Result rows → the reference's per-query (item, distance)
-        lists. A row's item is its decoded ``item_json`` when it has
-        one; otherwise (rows of a `from_dataframe` store) a dict of its
-        other payload columns, or its id when there are none."""
+    def _item_of(self):
+        """``item(row)``: a corpus or result row's item, the one rule
+        `query` returns and `delete` matches — its decoded
+        ``item_json`` when it has one; otherwise (rows of a
+        `from_dataframe` store) a dict of its other payload columns, or
+        its id when there are none."""
         other = [c for c in self.payload_cols if c != "item_json"]
-        out: "list[list[tuple[Any, float]]]" = [[] for _ in range(n)]
-        for r in rows:
+
+        def item(r):
             d = r.asDict()
             if d.get("item_json") is not None:
-                item = json.loads(d["item_json"])
-            else:
-                item = {c: d[c] for c in other} if other else d["id"]
-            out[d["query_id"]].append((item, float(d["distance"])))
+                return json.loads(d["item_json"])
+            return {c: d[c] for c in other} if other else d["id"]
+
+        return item
+
+    def _item_filter(self, items) -> Column:
+        """True on every row whose `_item_of` item may be in ``items``
+        (and on a few more): item_json tokens, payload-column equality,
+        or the id when there is no payload."""
+        other = [c for c in self.payload_cols if c != "item_json"]
+        json_col = "item_json" in self.df.columns
+        conds = [F.col("item_json").isin([_dump_item(t) for t in items])] if json_col else []
+        for t in items:
+            if other and isinstance(t, dict) and set(t) == set(other):
+                eq = [F.col(c).eqNullSafe(F.lit(t[c])) for c in other]
+                conds.append(functools.reduce(Column.__and__, eq))
+            elif not other and isinstance(t, int):
+                conds.append(F.col("id") == F.lit(t))
+        return functools.reduce(Column.__or__, conds, F.lit(False))
+
+    def _nested(self, rows, n: int) -> "list[list[tuple[Any, float]]]":
+        """Result rows → the reference's per-query (item, distance)
+        lists (`_item_of`)."""
+        item = self._item_of()
+        out: "list[list[tuple[Any, float]]]" = [[] for _ in range(n)]
+        for r in rows:
+            out[r["query_id"]].append((item(r), float(r["distance"])))
         return out
 
     def query_stream(
@@ -415,7 +440,12 @@ class VectorStore:
         return np.asarray([found[i] for i in idxs], dtype=np.float64)
 
     def _id_upper_bound(self) -> int:
-        return self._next_id if self._next_id is not None else len(self)
+        """The first id an insert takes: one past the largest (read once
+        on a `from_dataframe` store, whose count is no bound)."""
+        if self._next_id is None:
+            top = self.df.agg(F.max("id")).first()[0]
+            self._next_id = 0 if top is None else int(top) + 1
+        return self._next_id
 
     # ---- mutation (F9/F10) -----------------------------------------
     def insert(self, items: Sequence[Any], vectors) -> None:
@@ -435,7 +465,8 @@ class VectorStore:
             if c not in new_df.columns and not c.startswith("__"):
                 new_df = new_df.withColumn(c, F.lit(None))
         new_df = self.strategy.on_insert(new_df, self._metric, self._dim)
-        self._count = (self._count or 0) + len(V)
+        if self._count is not None:
+            self._count += len(V)
         self._next_id = start + len(V)
         # lifecycle (r11, same shape as the LSH insert-postings
         # branch): the BASE corpus frame is never re-unioned or
@@ -471,24 +502,25 @@ class VectorStore:
         """Delete by item equality; duplicates all removed; missing
         tokens raise (vicinity.py:255-283)."""
         by_token = {_dump_item(t): t for t in items}
-        tokens = list(by_token)
-        # one job gives both the present set and the removed count;
-        # the result is bounded by len(items) rows
-        present = dict(
-            self.df.where(F.col("item_json").isin(tokens))
-            .groupBy("item_json")
-            .count()
+        # one job collects the rows the items may name (bounded by the
+        # matches); `_item_of` then decides each row, as query does
+        item = self._item_of()
+        hits = [
+            (r["id"], token)
+            for r in self.df.where(self._item_filter(list(by_token.values())))
+            .select("id", *self.payload_cols)
             .collect()
-        )
-        missing = [by_token[t] for t in tokens if t not in present]
+            if (token := _dump_item(item(r))) in by_token
+        ]
+        present = {token for _, token in hits}
+        missing = [t for token, t in by_token.items() if token not in present]
         if missing:
             raise ValueError(f"Tokens {missing} were not in the store.")
-        removed = sum(present.values())
         # the filtered frame (which already folds in any insert delta)
         # becomes the new base; the delta restarts empty
-        self._set_df(self.df.where(~F.col("item_json").isin(tokens)))
+        self._set_df(self.df.where(~F.col("id").isin([i for i, _ in hits])))
         if self._count is not None:
-            self._count -= removed
+            self._count -= len(hits)
 
     # ---- persistence (F11/F12) -------------------------------------
     def save(
