@@ -195,19 +195,13 @@ def _count_jobs(spark, fn) -> int:
 _GRID_JOBS = {"sq": 13, "pq": 13, "ivfsq": 10, "ivfpq": 11}
 
 
-@pytest.mark.parametrize("backend", ["basic", "ivf", "sq", "pq", "ivfsq", "ivfpq"])
-def test_bounded_query_job_count(spark, backend):
-    """A bounded query batch takes one broadcast-query scan of the
-    corpus partitions: exact and IVF run at most 4 jobs per collected
-    query_df and at most 2 per collected threshold_df, and the
-    code-scan strategies fewer than the block grid did. Counts, not
-    times."""
-    import numpy as np
-
+def _serve_store(spark, backend, n=400):
+    """A cached ``backend`` store over ``n`` seeded 8-d vectors, as the
+    job-count tests build it (preset lists for the IVF family)."""
     from vicinity_spark.store import VectorStore
 
     rng = np.random.default_rng(5)
-    X = rng.standard_normal((400, 8))
+    X = rng.standard_normal((n, 8))
     C = X[:8] / np.linalg.norm(X[:8], axis=1)[:, None]
     params = {
         "basic": {},
@@ -218,19 +212,62 @@ def test_bounded_query_job_count(spark, backend):
         "ivfpq": {"nlist": 8, "nprobe": 2, "centroids": C, "m": 4, "ksub": 16, "refine": 4},
     }[backend]
     store = VectorStore.from_vectors_and_items(
-        spark, X, [f"i{i}" for i in range(400)], backend_type=backend, metric="cosine", **params
+        spark, X, [f"i{i}" for i in range(n)], backend_type=backend, metric="cosine", **params
     )
     store.df.cache()
     store.df.count()
+    return store, rng
+
+
+@pytest.mark.parametrize("backend", ["basic", "ivf", "sq", "pq", "ivfsq", "ivfpq"])
+def test_bounded_query_job_count(spark, backend):
+    """A bounded query batch takes one broadcast-query scan of the
+    corpus partitions: exact and IVF run exactly 3 jobs per collected
+    query_df (the scan with its partial top-k exchange, the payload
+    join, the collect) and 2 per collected threshold_df, and the
+    code-scan strategies fewer than the block grid did. Counts, not
+    times."""
+    store, rng = _serve_store(spark, backend)
     qdf, _ = store._queries_df(rng.standard_normal((5, 8)))
     try:
         jobs = _count_jobs(spark, lambda: store.query_df(qdf, k=5).collect())
         thr_jobs = _count_jobs(spark, lambda: store.threshold_df(qdf, 0.5).collect())
     finally:
         store.df.unpersist()
-    assert jobs <= 4 if backend in ("basic", "ivf") else jobs < _GRID_JOBS[backend], jobs
+    assert jobs == 3 if backend in ("basic", "ivf") else jobs < _GRID_JOBS[backend], jobs
     if backend in ("basic", "ivf"):
-        assert thr_jobs <= 2, thr_jobs
+        assert thr_jobs == 2, thr_jobs
+
+
+@pytest.mark.parametrize("backend", ["basic", "ivf", "sq", "pq", "ivfsq", "ivfpq"])
+def test_facade_query_runs_one_job(spark, backend):
+    """A bounded `store.query` and `store.query_threshold` on a cached
+    cell-scan store run ONE Spark job each — one scan that carries the
+    payload, the rank cut made on the driver — before any write, after
+    one insert, after nine (the eighth checkpoints the insert delta)
+    and after a delete."""
+    from vicinity_spark.store import _INSERT_CHECKPOINT_EVERY
+
+    store, rng = _serve_store(spark, backend)
+    cached = store.df
+    Q = rng.standard_normal((5, 8))
+
+    def counts():
+        return (
+            _count_jobs(spark, lambda: store.query(Q, k=5)),
+            _count_jobs(spark, lambda: store.query_threshold(Q, 0.5)),
+        )
+
+    try:
+        assert counts() == (1, 1), "cached"
+        for i in range(_INSERT_CHECKPOINT_EVERY + 1):
+            store.insert([f"n{i}"], rng.standard_normal(8))
+            if i in (0, _INSERT_CHECKPOINT_EVERY):
+                assert counts() == (1, 1), f"after {i + 1} inserts"
+        store.delete(["i3", "n0"])
+        assert counts() == (1, 1), "after a delete"
+    finally:
+        cached.unpersist()
 
 
 def test_unbounded_ivf_plan_has_no_query_id_join(spark, monkeypatch):

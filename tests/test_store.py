@@ -230,6 +230,32 @@ def test_evaluate_ann_recall_floor(spark, data, backend):
     assert recall >= 0.8, f"{backend} recall {recall} below floor"
 
 
+def test_evaluate_caches_nothing(spark, data):
+    """`evaluate` leaves the session's cached RDDs as it found them
+    (its query batch is a LocalRelation and is not cached), and its
+    recall is the fraction of returned distances within ε of each
+    query's exact k-th distance, recomputed here in numpy."""
+    vectors, _, _ = data
+    store = make_store(spark, data, "ivf", nprobe=2)
+    Q = vectors[:12] + 0.05
+
+    def cached():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    before = cached()
+    _, recall = store.evaluate(Q, k=5)
+    assert cached() == before
+    X = vectors.astype(np.float32).astype(np.float64)
+    Qf = Q.astype(np.float32).astype(np.float64)
+    D = 1.0 - (Qf / np.linalg.norm(Qf, axis=1)[:, None]) @ (X / np.linalg.norm(X, axis=1)[:, None]).T
+    kth = np.sort(D, axis=1)[:, 4]
+    hits = [
+        sum(d <= kth[qi] + 1e-3 for _, d in res) / 5 for qi, res in enumerate(store.query(Q, k=5))
+    ]
+    assert recall == pytest.approx(float(np.mean(hits)))
+    assert recall < 1.0  # nprobe=2 of 8 lists misses some neighbours
+
+
 def test_evaluate_rejects_manhattan(spark, data):
     vectors, items, _ = data
     store = VectorStore.from_vectors_and_items(
@@ -876,3 +902,144 @@ def test_from_dataframe_items_without_item_json(spark, backend):
     store.delete(hit)
     assert len(store) == (50 if backend == "ivf" else 49) - 1
     assert not {str(item) for item, _ in store.query(X[9], k=3)[0]} & set(map(str, hit))
+
+
+def _frame_answer(store, V, k=None, threshold=None, max_k=100, where=None):
+    """The DataFrame plans' answer to a facade call: ``query_df`` (or
+    the strategy's ``threshold`` plan) collected and nested."""
+    qdf, n = store._queries_df(V)
+    if threshold is None:
+        rows = [r.asDict() for r in store.query_df(qdf, k=k, where=where).collect()]
+        rows.sort(key=lambda r: (r["query_id"], r["rank"]))
+    else:
+        rows = [
+            r.asDict()
+            for r in store.strategy.threshold(
+                store.df, qdf, threshold=threshold, metric=store.metric,
+                payload_cols=store.payload_cols, max_k=max_k,
+            ).collect()
+        ]
+    return store._nested(rows, n)
+
+
+def _unordered(res):
+    """Threshold hits per query in a fixed order (they are unsorted)."""
+    return [sorted(hits, key=lambda h: (h[1], str(h[0]))) for hits in res]
+
+
+_FACADE_STORES = {
+    **{k: v for k, v in _SCAN_STORES.items() if k != "ivfpq_flat"},
+    "lsh": ("lsh", {"n_tables": 6, "n_bits": 4}),
+    "graph": ("graph", {"k_build": 12, "iters": 2, "beam": 48, "expansions": 3}),
+}
+
+
+@pytest.mark.parametrize("name", list(_FACADE_STORES))
+def test_facade_equals_dataframe_path(spark, monkeypatch, name):
+    """`query` and `query_threshold` (one job on the cell-scan
+    strategies, the DataFrame plan on lsh and graph) return exactly
+    what the DataFrame plans return, to the float bit. Four duplicate
+    vectors sit in three of the four ingest partitions, and the
+    queries include them, so the (distance, id) cuts — per scan task
+    and on the driver — decide exact ties; covered: k past the corpus
+    size, a `where` filter, a `max_k` that caps the pool strategies'
+    radius search, and an insert (lsh and graph, whose facade is the
+    DataFrame plan, take the first two calls only). With the row
+    bound patched to 0 the facade declines and the DataFrame plan runs
+    (more than one job) with the same answer."""
+    import vicinity_spark.backends.base as base_mod
+    from test_plans import _count_jobs
+
+    backend, params = _FACADE_STORES[name]
+    rng = np.random.default_rng(23)
+    n, dim = 240, 8
+    X = rng.standard_normal((n, dim))
+    X[11] = X[130] = X[200] = X[5]  # ingest slices of 60 rows: 3 partitions
+    if "nlist" in params:
+        params = dict(params, centroids=X[20:26] / np.linalg.norm(X[20:26], axis=1)[:, None])
+    store = VectorStore.from_vectors_and_items(
+        spark, X, [f"i{i}" for i in range(n)], backend_type=backend, metric="cosine", **params
+    )
+    cached = store.df.cache()
+    Q = np.vstack([X[5], X[130], rng.standard_normal((4, dim))])
+    cells = name not in ("lsh", "graph")  # their facade is the DataFrame plan
+    calls = [dict(k=5), dict(threshold=0.6, max_k=2)]
+    if cells:
+        calls += [dict(threshold=0.6), dict(k=n + 10), dict(k=4, where="id % 3 != 0")]
+
+    def facade(how):
+        if "threshold" in how:
+            return _unordered(store.query_threshold(Q, **how))
+        return store.query(Q, **how)
+
+    def frame(how):
+        got = _frame_answer(store, Q, **how)
+        return _unordered(got) if "threshold" in how else got
+
+    try:
+        for how in calls:
+            assert facade(how) == frame(how), how
+        if backend in ("basic", "ivf", "sq", "ivfsq"):  # exact or exact re-rank of every tie
+            top = store.query(Q[:1], k=4)[0]
+            assert [item for item, _ in top] == ["i5", "i11", "i130", "i200"]
+        if cells:
+            store.insert(["new"], X[5])
+            assert facade(calls[0]) == frame(calls[0]), "after an insert"
+            want = facade(calls[0])
+            monkeypatch.setattr(base_mod, "SERVE_ROWS", 0)
+            assert _count_jobs(spark, lambda: facade(calls[0])) > 1
+            assert facade(calls[0]) == want
+    finally:
+        cached.unpersist()
+
+
+_BIG = (1 << 60) + 1  # a long that float64 does not hold
+
+
+@pytest.mark.parametrize("backend", ["basic", "sq"])
+def test_facade_items_of_frame_store(spark, backend):
+    """A `from_dataframe` store without item_json: the facade's scan
+    carries its payload columns (a string, a long with nulls and values
+    past 2**53, a boolean, a double with nulls and a NaN), and `query`
+    / `query_threshold` return the same payload dicts, in the same
+    order, as the DataFrame plans — also after an insert, whose rows
+    carry an item_json and null payload columns. (Compared by repr, so
+    that NaN equals NaN.)"""
+    from vicinity_spark.session import local_frame
+
+    rng = np.random.default_rng(29)
+    n, dim = 120, 6
+    X = rng.standard_normal((n, dim))
+    X[7] = X[90] = X[3]
+    df = local_frame(
+        spark,
+        {
+            "id": np.arange(n, dtype=np.int64),
+            "text": [f"t{i}" for i in range(n)],
+            "n": [None if i % 4 == 0 else _BIG + i for i in range(n)],
+            "flag": [i % 2 == 0 for i in range(n)],
+            "score": [None if i % 5 == 0 else float("nan") if i == 7 else i / 3 for i in range(n)],
+            "vector": list(X.astype(np.float32)),
+        },
+        "id long, text string, n long, flag boolean, score double, vector array<float>",
+    )
+    store = VectorStore.from_dataframe(df, backend_type=backend, metric="euclidean")
+    Q = np.vstack([X[3], rng.standard_normal((3, dim))])
+    got = store.query(Q, k=4)
+    # the one-job path serves this store
+    assert store._serve(store._query_matrix(Q), store.df, k=4) is not None
+    assert repr(got) == repr(_frame_answer(store, Q, k=4))
+    assert repr([item for item, _ in got[0][:3]]) == repr([
+        {
+            "text": f"t{i}",
+            "n": None if i % 4 == 0 else _BIG + i,
+            "flag": i % 2 == 0,
+            "score": None if i % 5 == 0 else float("nan") if i == 7 else i / 3,
+        }
+        for i in (3, 7, 90)
+    ])
+    store.insert([{"new": 1}], X[3])
+    assert repr(store.query(Q, k=4)) == repr(_frame_answer(store, Q, k=4))
+    assert {"new": 1} in [item for item, _ in store.query(Q, k=4)[0]]
+    t = _unordered(store.query_threshold(Q, threshold=1.5, max_k=3))
+    assert repr(t) == repr(_unordered(_frame_answer(store, Q, threshold=1.5, max_k=3)))

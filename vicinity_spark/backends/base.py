@@ -35,26 +35,128 @@ The contract:
   candidates (`_within`), and the exact strategy with an exact range
   search; those three ignore `max_k`, as the reference's BASIC and
   range-search backends do (basic.py:149-172).
+- The facade (`VectorStore.query` / `query_threshold`) collects a
+  bounded batch in ONE Spark job through `serve`: one `grid.probe_scan`
+  of the strategy's cell kernel (`_cells`; `_range_cells` for a range
+  search), whose output rows carry the store's payload columns. Each
+  task keeps each query's best rows by the first cut stage and adds
+  the re-rank's exact distances (`_serve_plan`); the driver applies
+  every stage's `(distance, id)` cut, then clips. `_scored` (the
+  DataFrame plans of `knn`, `threshold` and `query_df`) runs the same
+  kernel through `grid.cell_scan`. A strategy without cells (LSH,
+  graph), a payload type outside `_CARRY`, or a top-k scan whose tasks
+  would ship more than SERVE_ROWS rows returns None, and the facade
+  collects the DataFrame plan.
 """
 
 from __future__ import annotations
 
+from functools import partial
 from typing import Optional, Sequence
 
 import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, StringType, StructField, StructType
 
 from vicinity_spark.datatypes import Backend, Metric
 from vicinity_spark.functions.metrics import clip_distance
 from vicinity_spark.operators.knn import (
+    _KNN_SCHEMA,
     KNN_COLS,
     RADIUS_COLS,
+    _np_pairwise,
     clipped_topk,
     join_payload,
     score_joined,
     topk_by_distance,
+    topk_positions,
 )
+
+#: The facade's bound on the rows its scan tasks ship to the driver:
+#: corpus partitions × queries × first-stage rows (`_serve_plan`), each
+#: task's per-query cut. Past it `serve` declines and the facade
+#: collects the DataFrame plan, which cuts in Spark and ships queries ×
+#: k rows. Measured on a cached 20k × 64 cosine IVF store in 4
+#: partitions, 4 cpus (ROADMAP item 2): the facade is faster up to
+#: 32,768 such rows and slower from 65,536, where collecting and
+#: merging the rows on the driver outweighs the jobs it saves.
+SERVE_ROWS = 1 << 15
+#: The payload column types the scan carries exactly, each with the
+#: driver's decode of its carried form: a string or boolean column as
+#: it is (None), an integral or double column as its string cast
+#: (pandas would turn a nullable integral column that holds a null into
+#: float64, and a double NaN comes back from pandas as null). A store
+#: with another payload type takes the DataFrame plan.
+_CARRY = {
+    "string": None,
+    "boolean": None,
+    "bigint": int,
+    "int": int,
+    "smallint": int,
+    "tinyint": int,
+    "double": float,
+}
+
+
+def _within_kernel(kernel, t: float):
+    """``kernel``'s rows with a RAW distance ``<= t``, distances
+    clipped — `_within`'s filter and clip inside the cell kernel."""
+
+    def within(ids, payload, qids, Q, key):
+        for f in kernel(ids, payload, qids, Q, key):
+            d = f["distance"].to_numpy()
+            hit = d <= t
+            if hit.any():
+                yield f[hit].assign(distance=np.maximum(d[hit], 0.0))
+
+    return within
+
+
+def _task_best(size: int, extras, drop, frames, qids, Q):
+    """What a facade scan task emits: each query's best ``size`` rows
+    of the task by (distance, id) — which hold every row of that
+    query's global best ``size`` the task scanned — with the columns
+    ``extras(frame, Qrows)`` adds, and without the ``drop`` columns it
+    read."""
+    frames = [f for f in frames if len(f)]
+    if not frames:
+        return
+    f = pd.concat(frames, ignore_index=True)
+    keep = topk_positions(
+        f["query_id"].to_numpy(), f["distance"].to_numpy(), f["id"].to_numpy(), size
+    )
+    f = f.iloc[keep].reset_index(drop=True)
+    if extras is not None:
+        f = extras(f, Q[pd.Index(qids).get_indexer(f["query_id"])])
+    yield f.drop(columns=list(drop))
+
+
+def _merged(rows, stages, payload) -> "list[dict]":
+    """The facade's driver merge of the scan tasks' rows: every stage's
+    (column, id) cut (`topk_positions`), then the last column clipped
+    as the result distance (`clipped_topk`'s order; a NaN crossed the
+    Arrow boundary as null, and stays NaN). ``payload`` maps each
+    payload column to its `_CARRY` decode."""
+    qid = np.array([r["query_id"] for r in rows], dtype=np.int64)
+    ids = np.array([r["id"] for r in rows], dtype=np.int64)
+    keep = np.arange(len(rows))
+    for col, size in stages:
+        d = np.array([rows[i][col] for i in keep], dtype=np.float64)
+        keep = keep[topk_positions(qid[keep], d, ids[keep], size)]
+    return [_hit(rows[i], stages[-1][0], payload) for i in keep]
+
+
+def _hit(r, col: str, payload) -> dict:
+    """A scan row as a result dict: query_id, id, ``col`` clipped as
+    the distance, the payload columns decoded."""
+    d = r[col]
+    hit = {"query_id": r["query_id"], "id": r["id"]}
+    hit["distance"] = float("nan") if d is None else max(d, 0.0)
+    for c, decode in payload.items():
+        hit[c] = r[c] if decode is None or r[c] is None else decode(r[c])
+    return hit
 
 
 class IndexStrategy:
@@ -87,11 +189,120 @@ class IndexStrategy:
         None: a flat scan."""
         return None
 
+    def _cells(self, metric: Metric, k: "int | None"):
+        """The strategy's one cell kernel: ``(payload_col, kernel,
+        target_rows)``, where ``kernel(ids, payload, qids, Q, key)``
+        yields (query_id, id, RAW distance) frames, each query's top
+        ``k`` of the cell by (distance, id) — every row when ``k`` is
+        None. None: the strategy scans no cells (LSH, graph)."""
+        return None
+
+    def _range_cells(self, metric: Metric, threshold: float):
+        """The range-search cell kernel, as `_cells`, whose rows are
+        final hits (distance ``<= threshold``, clipped). None: the
+        strategy's `threshold` is not a range search over cells."""
+        return None
+
+    def _cell_scan(
+        self, corpus: DataFrame, queries: DataFrame, metric: Metric, k: "int | None"
+    ) -> DataFrame:
+        """`_cells` over `grid.cell_scan` cells of ``corpus``."""
+        from vicinity_spark.operators.grid import cell_scan
+
+        payload_col, kernel, target_rows = self._cells(metric, k)
+        return cell_scan(
+            corpus,
+            queries,
+            payload_col,
+            kernel,
+            _KNN_SCHEMA,
+            lists=self._lists(metric),
+            target_rows=target_rows,
+        )
+
     def _scored(
         self, corpus: DataFrame, queries: DataFrame, k: "int | None", metric: Metric
     ) -> DataFrame:
         """(query_id, id, distance) scored candidates, RAW distances."""
         raise NotImplementedError
+
+    def _serve_plan(self, k: int, metric: Metric):
+        """The facade's top-``k`` after the scan: ``(stages, read,
+        extras)``. ``stages`` are (column, rows per query) cuts, each
+        query's best rows by (column, id) kept stage after stage; the
+        first ranks the cell kernel's ``distance`` and sizes its ``k``,
+        the last column is the result distance. ``extras(frame,
+        Qrows)`` (None: none) adds the later stages' columns in the
+        scan task from the corpus columns ``read``."""
+        return [("distance", k)], (), None
+
+    def serve(
+        self,
+        corpus: DataFrame,
+        batch,
+        metric: Metric,
+        payload_cols: Sequence[str],
+        *,
+        k: "int | None" = None,
+        threshold: "float | None" = None,
+        max_k: int = 100,
+    ) -> "list[dict] | None":
+        """The facade's one-job query of a bounded batch ``(qids, Q)``:
+        top ``k`` (the rows of `knn`, in rank order) or, with
+        ``threshold``, the rows of `threshold` — as dicts of query_id,
+        id, distance and the payload columns. One `grid.probe_scan` of
+        the cell kernel carries the payload; for a top-k each task
+        keeps each query's best first-stage rows and the driver makes
+        every cut. None when the strategy scans no cells, a payload
+        column has a type the scan does not carry (`_CARRY`), or the
+        tasks of a top-k scan would ship more than SERVE_ROWS rows; the
+        caller then collects the DataFrame plan."""
+        from vicinity_spark.operators.grid import probe_scan
+
+        fields = {f.name: f.dataType for f in corpus.schema.fields}
+        types = {c: fields[c].simpleString() for c in payload_cols}
+        if any(t not in _CARRY for t in types.values()):
+            return None
+        payload = {c: _CARRY[t] for c, t in types.items()}
+        carried = {c: F.col(c).cast("string") for c, decode in payload.items() if decode}
+        scan = corpus.withColumns(carried)
+        out_fields = [
+            StructField(c, StringType() if c in carried else fields[c]) for c in payload_cols
+        ]
+        lists = self._lists(metric)
+        cells = None if threshold is None else self._range_cells(metric, float(threshold))
+        if cells is not None:
+            # a range search ships its hits only, as the DataFrame
+            # plan's collect does: no cut, no bound
+            payload_col, kernel, target_rows = cells
+            out = probe_scan(
+                scan, payload_col, batch, kernel, StructType(_KNN_SCHEMA.fields + out_fields),
+                lists, target_rows, carry=tuple(payload_cols),
+            )
+            return [_hit(r, "distance", payload) for r in out.collect()]
+        if threshold is not None:
+            k = max_k
+        stages, read, extras = self._serve_plan(k, metric)
+        size = stages[0][1]
+        cells = self._cells(metric, size)
+        if cells is None:
+            return None
+        if k < 1:
+            raise ValueError("k must be greater than 0")
+        if corpus.rdd.getNumPartitions() * len(batch[0]) * size > SERVE_ROWS:
+            return None
+        payload_col, kernel, target_rows = cells
+        dists = [StructField(c, DoubleType()) for c, _ in stages[1:]]
+        out = probe_scan(
+            scan, payload_col, batch, kernel, StructType(_KNN_SCHEMA.fields + dists + out_fields),
+            lists, target_rows,
+            carry=tuple(dict.fromkeys([*payload_cols, *read])),
+            finish=partial(_task_best, size, extras, [c for c in read if c not in payload]),
+        )
+        hits = _merged(out.collect(), stages, payload)
+        if threshold is not None:
+            hits = [h for h in hits if h["distance"] <= float(threshold)]
+        return hits
 
     def knn(
         self,
@@ -161,23 +372,33 @@ class IndexStrategy:
 
 class RerankStrategy(IndexStrategy):
     """Two-phase scoring for the code-scan strategies (sq, pq and their
-    IVF composites): approximate candidates over compact codes, each
-    query's top `k × refine` of them by `(distance, id)`, then an exact
-    re-score of only those rows against the true vectors. Recall is
-    governed by `refine`."""
+    IVF composites): approximate candidates over compact codes (the
+    strategy's `_cells` kernel), each query's top `k × refine` of them
+    by `(distance, id)`, then an exact re-score of only those rows
+    against the true vectors. Recall is governed by `refine`.
+
+    The DataFrame plan joins the pool back to the vectors
+    (`score_joined`). The facade's scan carries each row's vector
+    instead: a task keeps its local top `k × refine` by approximate
+    distance and scores those rows exactly; the global pool is a subset
+    of the union of the local ones, so the driver's two cuts give the
+    same rows."""
+
+    def _kk(self, k: int) -> int:
+        return max(k * self.params["refine"], k)
 
     def _candidates(
         self, corpus: DataFrame, queries: DataFrame, kk: int, metric: Metric
     ) -> DataFrame:
         """(query_id, id, approximate distance) — at least each query's
         top `kk` over the codes (more rows are allowed; _pool cuts)."""
-        raise NotImplementedError
+        return self._cell_scan(corpus, queries, metric, kk)
 
     def _pool(
         self, corpus: DataFrame, queries: DataFrame, k: int, metric: Metric
     ) -> DataFrame:
         """(query_id, id) — each query's top `k × refine` candidates."""
-        kk = max(k * self.params["refine"], k)
+        kk = self._kk(k)
         cand = self._candidates(corpus, queries, kk, metric)
         return topk_by_distance(cand, kk, "__r0").select("query_id", "id")
 
@@ -190,3 +411,15 @@ class RerankStrategy(IndexStrategy):
             corpus.select("id", "vector"), "id"
         )
         return score_joined(joined, queries, metric)
+
+    def _serve_plan(self, k: int, metric: Metric):
+        def exact(f, Qr):
+            return f.assign(**{"__exact": _np_pairwise(metric, Qr, _vectors(f["vector"]))})
+
+        return [("distance", self._kk(k)), ("__exact", k)], ("vector",), exact
+
+
+def _vectors(col: pd.Series) -> np.ndarray:
+    """A carried array column as a float64 matrix (as score_pairs
+    decodes it)."""
+    return np.vstack(col.to_numpy()).astype(np.float64)

@@ -38,7 +38,7 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from vicinity_spark.backends.base import IndexStrategy
+from vicinity_spark.backends.base import IndexStrategy, _within_kernel
 from vicinity_spark.datatypes import Backend, Metric
 from vicinity_spark.session import vector_column
 
@@ -125,30 +125,36 @@ class IVFStrategy(IndexStrategy):
 
         return InvertedLists(self.params["centroids"], self.params["nprobe"])
 
-    def _scored(
-        self, corpus: DataFrame, queries: DataFrame, k: "int | None", metric: Metric
-    ) -> DataFrame:
-        """Probed-list rows scored by the dense cell kernel over
-        `grid.cell_scan` cells (`probe_scan` for a bounded batch,
-        `cluster_grid` for an unbounded table); with ``k`` each cell
-        keeps its per-query top ``k``, with None (range search) every
-        probed row, scored in _CCHUNK-row slices so the merge matrix
-        stays queries × _CCHUNK whatever the cell size."""
-        from vicinity_spark.operators.grid import _CCHUNK, cell_scan, dense_cell_topk
-        from vicinity_spark.operators.knn import _KNN_SCHEMA
+    def _cells(self, metric: Metric, k: "int | None"):
+        """The dense cell kernel over the probed lists: with ``k`` each
+        cell keeps its per-query top ``k``, with None (range search)
+        every probed row, scored in _CCHUNK-row slices so the merge
+        matrix stays queries × _CCHUNK whatever the cell size."""
+        from vicinity_spark.operators.grid import _CCHUNK, _CTARGET, dense_cell_topk
+        from vicinity_spark.operators.knn import topk_cells
 
-        def kernel(ids, X, qids, Q, key):
+        if k is not None:
+            return "vector", topk_cells(metric, k), _CTARGET
+
+        def every(ids, X, qids, Q, key):
             X = X.astype(np.float64)
-            if k is not None:
-                yield dense_cell_topk(qids, ids, X, Q, metric, k)
-                return
             for s in range(0, len(ids), _CCHUNK):
                 e = s + _CCHUNK
                 yield dense_cell_topk(qids, ids[s:e], X[s:e], Q, metric, _CCHUNK)
 
-        return cell_scan(
-            corpus, queries, "vector", kernel, _KNN_SCHEMA, lists=self._lists(metric)
-        )
+        return "vector", every, _CTARGET
+
+    def _range_cells(self, metric: Metric, threshold: float):
+        payload_col, kernel, target_rows = self._cells(metric, None)
+        return payload_col, _within_kernel(kernel, threshold), target_rows
+
+    def _scored(
+        self, corpus: DataFrame, queries: DataFrame, k: "int | None", metric: Metric
+    ) -> DataFrame:
+        """Probed-list rows scored by `_cells` over `grid.cell_scan`
+        cells (`probe_scan` for a bounded batch, `cluster_grid` for an
+        unbounded table)."""
+        return self._cell_scan(corpus, queries, metric, k)
 
     # named in the class so per-class instrumentation that wraps only a
     # class's own methods (perfbench/run.py spans) still sees it

@@ -17,7 +17,8 @@ and encoded on the driver and stays a LocalRelation. The IVF half is
 `IVFStrategy.build` / `on_insert` called on this strategy's own params.
 
 Query: PQStrategy's ADC scan over the inverted lists — this class
-overrides only its `_lists` and `_cell_tables` hooks. A bounded batch
+overrides its `_lists` and `_cell_tables` hooks (and, for IVFPQR, the
+facade's `_serve_plan`). A bounded batch
 is probed on the driver and scanned in one corpus pass restricted to
 the probed lists (grid.probe_scan); a larger query table folds each
 inverted list's codes into one block row joined ONLY to the query
@@ -25,7 +26,11 @@ blocks that probe it (grid.cluster_grid). Each cell computes its
 queries' residual ADC tables against that single centroid
 executor-side — centroids and codebooks ride in the task closure. The
 usual exact re-rank on true vectors follows. Scan payload per row: 4
-bytes cluster + m bytes code, independent of dim.
+bytes cluster + m bytes code, independent of dim — in the DataFrame
+plan. The facade's one-job scan (`IndexStrategy.serve`) also carries
+each probed row's true vector and store payload, so the re-rank needs
+no join back (measured faster than the DataFrame plan on 5k- and
+50k-row stores at dim 64; ROADMAP item 2).
 
 Metrics without a clean residual-L2 decomposition (inner product,
 hamming, tanimoto, manhattan) fall back to the non-residual path of
@@ -33,12 +38,15 @@ the parent PQStrategy (metric-aware ADC on whole vectors, same probed-
 list masking), so every metric stays served.
 
 IVFPQR (`refine_m > 0`): a second, finer PQ on the post-reconstruction
-residual re-ranks candidates from codes alone — the full-width second
-scan FAISS IndexIVFPQR avoids (faiss.py:111-113) never happens here
-either. NOTE a deliberate default-on divergence: `final_refine`
+residual re-ranks candidates from codes alone — in the DataFrame plan
+the full-width second scan FAISS IndexIVFPQR avoids (faiss.py:111-113)
+never happens either; the facade's one-job scan reads the vectors of
+the probed lists instead, and scores only the re-rank winners with
+them. NOTE a deliberate default-on divergence: `final_refine`
 (default 2) exact-rescores ONLY the nq×(final_refine·k) re-rank
-winners via a tiny join back to the true vectors, so emitted distances
-are exact (hash-checkable against the exact-kNN oracle). Set
+winners via a tiny join back to the true vectors (the facade's scan
+scores them from the vectors it carries), so emitted distances are
+exact (hash-checkable against the exact-kNN oracle). Set
 `final_refine=0` for FAISS IndexIVFPQR parity (pure reconstruction
 distances). The recall-floor test (test_evaluate_ann_recall_floor) is
 the stated backstop if params/testdata regeneration ever stops the
@@ -66,7 +74,7 @@ from vicinity_spark.backends.pq import (
 )
 from vicinity_spark.datatypes import Backend, Metric
 from vicinity_spark.functions.metrics import normalize_expr
-from vicinity_spark.operators.knn import _KNN_SCHEMA
+from vicinity_spark.operators.knn import _KNN_SCHEMA, _np_pairwise
 from vicinity_spark.session import vector_column
 
 _RESIDUAL_METRICS = (Metric.COSINE, Metric.EUCLIDEAN, Metric.L2_SQUARED)
@@ -200,11 +208,7 @@ class IVFPQStrategy(PQStrategy):
         join reads (cluster, pqcode, rcode) — m + refine_m bytes + 4 —
         per candidate instead of the dim×4-byte true vector, and scores
         the metric-space query against the two-stage reconstruction."""
-        from vicinity_spark.operators.knn import _np_pairwise
-
-        strat = self
-        rbooks = self._rbooks()
-
+        distance = self._recon_distance(metric)
         joined = (
             cand.join(corpus.select("id", CLUSTER_COL, CODE_COL, RCODE_COL), "id")
             .join(queries.select("query_id", F.col("qvec").alias("__qvec")), "query_id")
@@ -214,12 +218,7 @@ class IVFPQStrategy(PQStrategy):
             for b in batches:
                 if len(b) == 0:
                     continue
-                Q = np.vstack(b["__qvec"].to_numpy()).astype(np.float64)
-                cl = b[CLUSTER_COL].to_numpy()
-                code1 = np.vstack(b[CODE_COL].to_numpy()).astype(np.int64)
-                code2 = np.vstack(b[RCODE_COL].to_numpy()).astype(np.int64)
-                recon = strat._decode_primary(cl, code1) + decode(code2, rbooks)
-                d = _np_pairwise(metric, _normalized(Q, metric), recon)
+                d = distance(b, np.vstack(b["__qvec"].to_numpy()).astype(np.float64))
                 yield pd.DataFrame(
                     {
                         "query_id": b["query_id"].to_numpy(),
@@ -230,10 +229,29 @@ class IVFPQStrategy(PQStrategy):
 
         return joined.mapInPandas(kernel, _KNN_SCHEMA)
 
+    def _recon_distance(self, metric: Metric):
+        """``distance(frame, Qrows)``: each row's distance from its
+        query (a row of ``Qrows``) to the two-stage reconstruction of
+        the frame's (cluster, pqcode, rcode) — the re-rank score of
+        `_recon_scored` and of the facade's `_serve_plan`."""
+        rbooks = self._rbooks()
+
+        def distance(f: pd.DataFrame, Qr: np.ndarray) -> np.ndarray:
+            code1 = np.vstack(f[CODE_COL].to_numpy()).astype(np.int64)
+            code2 = np.vstack(f[RCODE_COL].to_numpy()).astype(np.int64)
+            recon = self._decode_primary(f[CLUSTER_COL].to_numpy(), code1) + decode(code2, rbooks)
+            return _np_pairwise(metric, _normalized(Qr, metric), recon)
+
+        return distance
+
+    def _refines(self, metric: Metric) -> bool:
+        """True when candidates re-rank on the refinement codes."""
+        return bool(self.params["refine_m"]) and self._use_residual(metric)
+
     def _scored(
         self, corpus: DataFrame, queries: DataFrame, k: int, metric: Metric
     ) -> DataFrame:
-        if not (self.params["refine_m"] and self._use_residual(metric)):
+        if not self._refines(metric):
             # refine_m on a non-residual metric falls back to the exact
             # re-rank (no clean two-stage decomposition exists there)
             return super()._scored(corpus, queries, k, metric)
@@ -259,6 +277,27 @@ class IVFPQStrategy(PQStrategy):
                 winners.join(corpus.select("id", "vector"), "id"), queries, metric
             )
         return scored
+
+    def _serve_plan(self, k: int, metric: Metric):
+        """`_scored`'s cuts for the facade: the pool by code distance,
+        then by reconstruction distance (`_recon_scored`'s kernel, from
+        the carried codes), then, with ``final_refine``, by exact
+        distance (from the carried vector)."""
+        if not self._refines(metric):
+            return super()._serve_plan(k, metric)
+        fr = int(self.params.get("final_refine", 2))
+        exact = super()._serve_plan(k, metric)[2] if fr else None
+        distance = self._recon_distance(metric)
+
+        def extras(f, Qr):
+            f = f.assign(**{"__recon": distance(f, Qr)})
+            return f if exact is None else exact(f, Qr)
+
+        read = (CLUSTER_COL, CODE_COL, RCODE_COL)
+        if not fr:
+            return [("distance", self._kk(k)), ("__recon", k)], read, extras
+        stages = [("distance", self._kk(k)), ("__recon", max(k * fr, k)), ("__exact", k)]
+        return stages, read + ("vector",), extras
 
     # named in the class so per-class instrumentation that wraps only a
     # class's own methods (perfbench/run.py spans) still sees it

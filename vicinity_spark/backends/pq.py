@@ -47,7 +47,6 @@ from pyspark.sql.types import ArrayType, ShortType
 
 from vicinity_spark.backends.base import RerankStrategy
 from vicinity_spark.datatypes import Backend, Metric
-from vicinity_spark.operators.knn import _KNN_SCHEMA
 from vicinity_spark.session import vector_column
 
 CODE_COL = "__pqcode"
@@ -236,18 +235,16 @@ class PQStrategy(RerankStrategy):
         books = self._codebooks()
         return lambda Q, key: adc_tables(Q, books, metric)
 
-    def _candidates(
-        self, corpus: DataFrame, queries: DataFrame, kk: int, metric: Metric
-    ) -> DataFrame:
-        """ADC scan over `grid.cell_scan` cells: each cell builds its
-        queries' tables (`_cell_tables`) and emits per-query top-kk by
-        pure lookups — D[q, n] = Σ_j tables[q, j, codes[n, j]] — via
-        chunked argpartition (grid.cell_topk). On the unbounded grid,
-        codes fold into ceil(n/262144) density-sized hash blocks: the
-        m-byte payload affords 4× the dense default, and every extra
-        block re-computes the per-cell ADC tables and widens the
-        candidate merge."""
-        from vicinity_spark.operators.grid import cell_scan, cell_topk
+    def _cells(self, metric: Metric, kk: int):
+        """ADC cell kernel: each cell builds its queries' tables
+        (`_cell_tables`) and emits per-query top-kk by pure lookups —
+        D[q, n] = Σ_j tables[q, j, codes[n, j]] — via chunked
+        argpartition (grid.cell_topk). Cells hold up to 262,144 rows
+        (on the unbounded grid, ceil(n/262144) density-sized hash
+        blocks): the m-byte payload affords 4× the dense default, and
+        every extra cell re-computes the per-cell ADC tables and widens
+        the candidate merge."""
+        from vicinity_spark.operators.grid import cell_topk
 
         m = self.params["m"]
         tables = self._cell_tables(metric)
@@ -255,12 +252,4 @@ class PQStrategy(RerankStrategy):
         def kernel(ids, codes, qids, Q, key):
             yield cell_topk(qids, ids, codes, tables(Q, key), m, kk)
 
-        return cell_scan(
-            corpus,
-            queries,
-            CODE_COL,
-            kernel,
-            _KNN_SCHEMA,
-            lists=self._lists(metric),
-            target_rows=262_144,
-        )
+        return CODE_COL, kernel, 262_144

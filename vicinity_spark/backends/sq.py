@@ -12,7 +12,8 @@ Query: two-phase. Phase 1 scans only (id, __code), dequantizes in the
 vectorized partial-top-k kernel, and keeps k×refine candidates per
 query. Phase 2 re-ranks candidates with exact distances on the true
 vectors — a join against the corpus touching only the candidate
-rows (RerankStrategy). Recall is governed by `refine` (evaluate() gates it).
+rows, or, in the facade's one-job scan, the vectors each task carries
+(RerankStrategy). Recall is governed by `refine` (evaluate() gates it).
 """
 
 from __future__ import annotations
@@ -23,7 +24,6 @@ from pyspark.sql import functions as F
 
 from vicinity_spark.backends.base import RerankStrategy
 from vicinity_spark.datatypes import Backend, Metric
-from vicinity_spark.operators.knn import _KNN_SCHEMA
 
 CODE_COL = "__code"
 
@@ -78,13 +78,11 @@ class SQStrategy(RerankStrategy):
         return new_df.withColumn(CODE_COL, self._encode_expr())
 
     # ---- phase 1: approximate candidates over codes ------------------
-    def _candidates(
-        self, corpus: DataFrame, queries: DataFrame, kk: int, metric: Metric
-    ) -> DataFrame:
-        """Quantized scan over `grid.cell_scan` cells (same shape as the
-        PQ path): dequantize + chunked partial top-k inside each cell.
-        The codebook (2×dim doubles) rides in the closure."""
-        from vicinity_spark.operators.grid import cell_scan, dense_cell_topk
+    def _cells(self, metric: Metric, kk: int):
+        """Quantized cell kernel (same shape as the PQ path): dequantize
+        + chunked partial top-kk inside each cell. The codebook (2×dim
+        doubles) rides in the closure."""
+        from vicinity_spark.operators.grid import _CTARGET, dense_cell_topk
 
         mins = np.asarray(self.params["mins"])
         scales = np.asarray(self.params["scales"])
@@ -93,6 +91,4 @@ class SQStrategy(RerankStrategy):
             X = codes.astype(np.float64) * scales[None, :] + mins[None, :]
             yield dense_cell_topk(qids, ids, X, Q, metric, kk)
 
-        return cell_scan(
-            corpus, queries, CODE_COL, kernel, _KNN_SCHEMA, lists=self._lists(metric)
-        )
+        return CODE_COL, kernel, _CTARGET

@@ -26,8 +26,9 @@ scan, routes between them (knn.bounded_query_matrix decides):
   batches into cells of up to the grid's block size (per inverted
   list, or flat) with the queries in _QBLOCK slices — no fold, no
   join, no count job. Consumers: the exact ``auto`` top-k and radius
-  search, IVF's scoring, and the candidate scans of sq, pq, ivfsq,
-  ivfpq and ivfpqr.
+  search, IVF's scoring, the candidate scans of sq, pq, ivfsq, ivfpq
+  and ivfpqr, and the facade's one-job queries
+  (`IndexStrategy.serve`), whose scan rows carry the payload.
 
 Everything a kernel needs beyond its cell (codebooks, centroids) is
 closure-small.
@@ -415,6 +416,9 @@ def probe_scan(
     schema,
     lists: "InvertedLists | None" = None,
     target_rows: int = _CTARGET,
+    *,
+    carry: "tuple[str, ...]" = (),
+    finish=None,
 ) -> DataFrame:
     """The bounded twin of `cluster_grid` + `scan_cells`: ONE
     mapInPandas over the corpus partitions, with the driver-collected
@@ -425,6 +429,12 @@ def probe_scan(
     store); each task then gathers its rows into one cell per inverted
     list, handed only the queries that probe that list. Without
     ``lists`` a task's rows form flat cells with every query.
+
+    ``carry`` names corpus columns each kernel output row gets, looked
+    up by its ``id`` in the cell that emitted it (the facade's payload,
+    or the vectors a re-rank scores). ``finish(frames, qids, Q)``, a
+    generator over all of a task's kernel frames, shapes what the task
+    emits (the facade's per-task cut); ``schema`` is then its output's.
 
     A cell is cut once adding the next Arrow batch (or a list's share
     of it) would pass ``target_rows`` rows, so cells are as coarse as
@@ -449,47 +459,65 @@ def probe_scan(
         corpus = corpus.where(F.col(CLUSTER_COL).isin([int(c) for c in union]))
         cols.append(CLUSTER_COL)
     bq = spark.sparkContext.broadcast((qids, Q, members))
-    fn = partial(_probe_scan, kernel, payload_col, target_rows, bq)
+    fn = partial(
+        _probe_scan, kernel, payload_col, target_rows, bq, carry=tuple(carry), finish=finish
+    )
     fn.__name__ = "probe_scan"  # the UDF's name in plan dumps
-    return corpus.select(*cols).mapInPandas(fn, schema)
+    return corpus.select(*dict.fromkeys(cols + list(carry))).mapInPandas(fn, schema)
 
 
-def _probe_scan(kernel, payload_col, target_rows, bq, batches: Iterator[pd.DataFrame]):
+def _probe_scan(
+    kernel, payload_col, target_rows, bq, batches: Iterator[pd.DataFrame], carry=(), finish=None
+):
+    qids, Q, members = bq.value
+    frames = _probe_cells(kernel, payload_col, target_rows, carry, qids, Q, members, batches)
+    yield from frames if finish is None else finish(frames, qids, Q)
+
+
+def _probe_cells(kernel, payload_col, target_rows, carry, qids, Q, members, batches):
     from vicinity_spark.backends.ivf import CLUSTER_COL
 
-    qids, Q, members = bq.value
     every = np.arange(len(qids))
-    pending = {}  # cell (list id, or None when flat) → [ids parts, payload parts, rows]
+    # cell (list id, or None when flat) → [ids parts, payload parts, carry parts, rows]
+    pending = {}
 
     def cut(c):
-        id_parts, pay_parts, _ = pending.pop(c)
+        id_parts, pay_parts, carry_parts, _ = pending.pop(c)
         ids, payload = np.concatenate(id_parts), np.concatenate(pay_parts)
         order = np.argsort(ids, kind="stable")
         ids, payload = ids[order], payload[order]
+        carried = {n: np.concatenate([p[n] for p in carry_parts])[order] for n in carry}
         qs, key = (every, {}) if c is None else (members[c], {CLUSTER_COL: c})
         for s in range(0, len(qs), _QBLOCK):
             b = qs[s : s + _QBLOCK]
-            yield from kernel(ids, payload, qids[b], Q[b], key)
+            for f in kernel(ids, payload, qids[b], Q[b], key):
+                if carried:
+                    at = np.searchsorted(ids, f["id"].to_numpy())
+                    f = f.assign(**{n: v[at] for n, v in carried.items()})
+                yield f
 
     for pdf in batches:
         if not len(pdf):
             continue
         ids = pdf["id"].to_numpy().astype(np.int64)
         payload = np.vstack(pdf[payload_col].to_numpy())
+        extra = {n: pdf[n].to_numpy() for n in carry}
         if members is None:
-            pieces = [(None, ids, payload)]
+            pieces = [(None, ids, payload, extra)]
         else:
             cl = pdf[CLUSTER_COL].to_numpy()
-            pieces = [
-                (int(c), ids[cl == c], payload[cl == c]) for c in np.unique(cl)
-            ]
-        for c, pids, ppay in pieces:
-            if c in pending and pending[c][2] + len(pids) > target_rows:
+            pieces = []
+            for c in np.unique(cl):
+                m = cl == c
+                pieces.append((int(c), ids[m], payload[m], {n: v[m] for n, v in extra.items()}))
+        for c, pids, ppay, pextra in pieces:
+            if c in pending and pending[c][3] + len(pids) > target_rows:
                 yield from cut(c)
-            cell = pending.setdefault(c, [[], [], 0])
+            cell = pending.setdefault(c, [[], [], [], 0])
             cell[0].append(pids)
             cell[1].append(ppay)
-            cell[2] += len(pids)
+            cell[2].append(pextra)
+            cell[3] += len(pids)
     for c in list(pending):
         yield from cut(c)
 

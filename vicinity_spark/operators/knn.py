@@ -41,6 +41,14 @@ Three physical strategies for top-k:
 Payload columns ride along: ``window`` carries them through the rank
 in-row; ``auto`` and ``grid`` re-join the corpus payload onto the
 merged q×k result (join_payload — AQE broadcasts the small side).
+The facade (`VectorStore.query` / `query_threshold`) skips that join
+and the merge exchange: its one `grid.probe_scan` carries the payload
+columns in the kernel rows (looked up by id in each cell), each task
+keeps each query's top k by (distance, id) (`topk_positions`), and the
+driver makes the final cut and clips — one Spark job per bounded
+batch. It collects this module's plans instead when the batch is
+unbounded, or when partitions × q × k rows would pass
+`backends.base.SERVE_ROWS`.
 
 Radius search has the same two cell plans (``auto``, ``grid``) over
 the chunked range kernel, plus ``expr``, the JVM reference plan, as
@@ -257,6 +265,17 @@ def topk_by_distance(df: DataFrame, k: int, rank_col: str = "rank") -> DataFrame
     return df.withColumn(rank_col, F.row_number().over(w)).where(F.col(rank_col) <= k)
 
 
+def topk_positions(qids: np.ndarray, d: np.ndarray, ids: np.ndarray, k: int) -> np.ndarray:
+    """`topk_by_distance` on numpy columns: the positions of each
+    query's ``k`` best rows by (d, id), NaN last, in (query, d, id)
+    order — the same cut for the facade's per-task and driver merges."""
+    order = np.lexsort((ids, d, qids))
+    q = qids[order]
+    first = np.flatnonzero(np.r_[True, q[1:] != q[:-1]])
+    rank = np.arange(len(q)) - np.repeat(first, np.diff(np.r_[first, len(q)]))
+    return order[rank < k]
+
+
 def clipped_topk(scored: DataFrame, k: int) -> DataFrame:
     """topk_by_distance on the RAW distances, then clip the returned
     values — the reference's argsort-then-clip order (basic.py:202,
@@ -325,11 +344,24 @@ def bounded_query_matrix(
     return None if len(qids) > AUTO_GRID_QUERY_ROWS else (qids, Q)
 
 
+def topk_cells(metric: Metric, k: int):
+    """The exact top-k cell kernel: each query's best ``k`` rows of a
+    cell by (distance, id), distances re-scored per pair
+    (grid.dense_cell_topk)."""
+    return lambda ids, X, qids, Q, key: [dense_cell_topk(qids, ids, X.astype(np.float64), Q, metric, k)]
+
+
+def within_cells(metric: Metric, t: float):
+    """The exact range cell kernel: every (query, row) pair of a cell
+    with distance ``<= t``, clipped (grid.dense_cell_within)."""
+    return lambda ids, X, qids, Q, key: dense_cell_within(qids, ids, X.astype(np.float64), Q, metric, t)
+
+
 def _dense_scan(corpus, queries, cols, kernel, algorithm: str) -> DataFrame:
-    """The exact cell scans: ``kernel(qids, ids, X, Q)`` over
-    `grid.cell_scan` cells of the corpus (``cols``: id, vector, query
-    id and query vector column names); ``grid`` skips the bounded
-    route."""
+    """The exact cell scans: the cell ``kernel`` (`topk_cells`,
+    `within_cells`) over `grid.cell_scan` cells of the corpus
+    (``cols``: id, vector, query id and query vector column names);
+    ``grid`` skips the bounded route."""
     id_col, vector_col, query_id_col, query_vector_col = cols
     return cell_scan(
         corpus.select(F.col(id_col).alias("id"), F.col(vector_col).alias("vector")),
@@ -337,7 +369,7 @@ def _dense_scan(corpus, queries, cols, kernel, algorithm: str) -> DataFrame:
             F.col(query_id_col).alias("query_id"), F.col(query_vector_col).alias("qvec")
         ),
         "vector",
-        lambda ids, X, qids, Q, key: kernel(qids, ids, X.astype(np.float64), Q),
+        kernel,
         _KNN_SCHEMA,
         bounded=algorithm != "grid",
     )
@@ -401,7 +433,7 @@ def knn_join(
             corpus,
             queries,
             (id_col, vector_col, query_id_col, query_vector_col),
-            lambda *cell: [dense_cell_topk(*cell, metric, k)],
+            topk_cells(metric, k),
             algorithm,
         )
     else:
@@ -449,7 +481,7 @@ def threshold_join(
             corpus,
             queries,
             (id_col, vector_col, query_id_col, query_vector_col),
-            lambda *cell: dense_cell_within(*cell, metric, t),
+            within_cells(metric, t),
             algorithm,
         )
         return join_payload(out, corpus, payload_cols, RADIUS_COLS, id_col=id_col)

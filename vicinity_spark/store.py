@@ -205,7 +205,8 @@ class VectorStore:
         ]
 
     # ---- query (F3/F4) ---------------------------------------------
-    def _queries_df(self, vectors) -> "tuple[DataFrame, int]":
+    def _query_matrix(self, vectors) -> np.ndarray:
+        """The query batch as float32 rows, as the store holds vectors."""
         V = np.asarray(vectors, dtype=np.float64)
         if V.ndim == 1:  # 1-D promotion, vicinity.py:129-131
             V = V[None, :]
@@ -216,15 +217,27 @@ class VectorStore:
             raise ValueError(
                 f"Query vectors have dimension {V.shape[1]}, store has {self.dim}"
             )
+        return V.astype(np.float32)
+
+    def _queries_df(self, vectors) -> "tuple[DataFrame, int]":
+        V = self._query_matrix(vectors)
         qdf = local_frame(
             self.df.sparkSession,
-            {
-                "query_id": np.arange(len(V), dtype=np.int64),
-                "qvec": list(V.astype(np.float32)),
-            },
+            {"query_id": np.arange(len(V), dtype=np.int64), "qvec": list(V)},
             _QUERY_SCHEMA,
         )
         return qdf, len(V)
+
+    def _serve(self, V: np.ndarray, corpus: DataFrame, **how) -> "list[dict] | None":
+        """The strategy's one-job answer (`IndexStrategy.serve`) for a
+        bounded batch — at most AUTO_GRID_QUERY_ROWS rows, the rule the
+        DataFrame plans route by — else None."""
+        from vicinity_spark.operators import knn
+
+        if len(V) > knn.AUTO_GRID_QUERY_ROWS:
+            return None
+        batch = (np.arange(len(V), dtype=np.int64), V.astype(np.float64))
+        return self.strategy.serve(corpus, batch, self._metric, self.payload_cols, **how)
 
     def _filtered_corpus(self, where) -> DataFrame:
         """Corpus restricted by the filtered-search predicate (string
@@ -253,24 +266,36 @@ class VectorStore:
 
     def query(self, vectors, k: int = 10, where=None) -> "list[list[tuple[Any, float]]]":
         """Batched k-NN; returns the reference's nested-list shape
-        (vicinity.py:114-138). `where` enables filtered search."""
-        qdf, n = self._queries_df(vectors)
-        # at most n·k rows: sorted here, not by a Spark orderBy (a
-        # range-sampling job and a shuffle)
-        rows = self.query_df(qdf, k=k, where=where).collect()
-        rows.sort(key=lambda r: (r["query_id"], r["rank"]))
-        return self._nested(rows, n)
+        (vicinity.py:114-138). `where` enables filtered search.
+
+        A bounded batch (at most AUTO_GRID_QUERY_ROWS vectors) on a
+        cell-scan strategy (basic, ivf, sq, pq, ivfsq, ivfpq) runs ONE
+        Spark job: one scan whose rows carry the payload, with each
+        query's rank cut on the driver (`IndexStrategy.serve`). An
+        unbounded batch, an LSH or graph store, a payload type the
+        scan does not carry, or a scan whose tasks would ship more than
+        `backends.base.SERVE_ROWS` rows collects ``query_df`` instead;
+        both give the same rows."""
+        V = self._query_matrix(vectors)
+        corpus = self._filtered_corpus(where)
+        rows = self._serve(V, corpus, k=k)
+        if rows is None:
+            qdf, _ = self._queries_df(V)
+            # at most n·k rows: sorted here, not by a Spark orderBy (a
+            # range-sampling job and a shuffle)
+            rows = [r.asDict() for r in self.query_df(qdf, k=k, where=where).collect()]
+            rows.sort(key=lambda r: (r["query_id"], r["rank"]))
+        return self._nested(rows, len(V))
 
     def _item_of(self):
-        """``item(row)``: a corpus or result row's item, the one rule
-        `query` returns and `delete` matches — its decoded
-        ``item_json`` when it has one; otherwise (rows of a
+        """``item(d)``: a corpus or result row's item (``d``: the row
+        as a dict), the one rule `query` returns and `delete` matches —
+        its decoded ``item_json`` when it has one; otherwise (rows of a
         `from_dataframe` store) a dict of its other payload columns, or
         its id when there are none."""
         other = [c for c in self.payload_cols if c != "item_json"]
 
-        def item(r):
-            d = r.asDict()
+        def item(d):
             if d.get("item_json") is not None:
                 return json.loads(d["item_json"])
             return {c: d[c] for c in other} if other else d["id"]
@@ -293,8 +318,8 @@ class VectorStore:
         return functools.reduce(Column.__or__, conds, F.lit(False))
 
     def _nested(self, rows, n: int) -> "list[list[tuple[Any, float]]]":
-        """Result rows → the reference's per-query (item, distance)
-        lists (`_item_of`)."""
+        """Result rows (dicts) → the reference's per-query (item,
+        distance) lists (`_item_of`)."""
         item = self._item_of()
         out: "list[list[tuple[Any, float]]]" = [[] for _ in range(n)]
         for r in rows:
@@ -407,17 +432,29 @@ class VectorStore:
         per query on the ANN strategies that search a top-`max_k` pool
         (sq, pq, ivfpq, ivfsq, graph); the exact, IVF and LSH range
         searches ignore it, like the reference's BASIC backend
-        (basic.py:149-172)."""
-        qdf, n = self._queries_df(vectors)
-        rows = self.strategy.threshold(
-            self.df,
-            qdf,
-            threshold=threshold,
-            metric=self._metric,
-            payload_cols=self.payload_cols,
-            max_k=max_k,
-        ).collect()
-        return self._nested(rows, n)
+        (basic.py:149-172).
+
+        Like `query`, a bounded batch on a cell-scan strategy runs ONE
+        Spark job: the exact and IVF range searches filter inside the
+        scan, the capped ones cut each query's top `max_k` per scan
+        task and again on the driver. Otherwise the strategy's
+        ``threshold`` plan (``threshold_df``) is collected."""
+        V = self._query_matrix(vectors)
+        rows = self._serve(V, self.df, threshold=threshold, max_k=max_k)
+        if rows is None:
+            qdf, _ = self._queries_df(V)
+            rows = [
+                r.asDict()
+                for r in self.strategy.threshold(
+                    self.df,
+                    qdf,
+                    threshold=threshold,
+                    metric=self._metric,
+                    payload_cols=self.payload_cols,
+                    max_k=max_k,
+                ).collect()
+            ]
+        return self._nested(rows, len(V))
 
     # ---- point lookup (F5) -----------------------------------------
     def get_vector_by_index(self, index) -> np.ndarray:
@@ -510,7 +547,7 @@ class VectorStore:
             for r in self.df.where(self._item_filter(list(by_token.values())))
             .select("id", *self.payload_cols)
             .collect()
-            if (token := _dump_item(item(r))) in by_token
+            if (token := _dump_item(item(r.asDict()))) in by_token
         ]
         present = {token for _, token in hits}
         missing = [t for token, t in by_token.items() if token not in present]
@@ -624,9 +661,9 @@ class VectorStore:
             )  # vicinity.py:350-360
         from vicinity_spark.operators.knn import knn_join
 
+        # the batch is a LocalRelation: caching it would add a count job,
+        # slow the timed collect and leave a cached RDD behind
         qdf, n = self._queries_df(query_vectors)
-        qdf = qdf.cache()
-        qdf.count()
         gt = (
             knn_join(self.df, qdf, k=k, metric=self._metric, algorithm="auto")
             .groupBy("query_id")
