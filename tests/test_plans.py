@@ -270,6 +270,64 @@ def test_facade_query_runs_one_job(spark, backend):
         cached.unpersist()
 
 
+def test_worker_keeps_zip_directories(spark, tmp_path, monkeypatch):
+    """After a library task, the Python workers keep their zip
+    finders' directories when PySpark invalidates the import caches at
+    the next task (`session.freeze_zip_finders`), and still import a
+    pyspark module they have not loaded. The driver's zip finders
+    still refresh. The probe imports the package first, as unpickling
+    any library kernel does, so whichever pooled worker runs it has
+    imported it."""
+    import importlib
+    import sys
+    import zipfile
+    import zipimport
+
+    import pandas as pd
+
+    store, rng = _serve_store(spark, "basic")
+    cached, corpus = store.df, store.df.repartition(4).cache()
+    store._set_df(corpus)
+    try:
+        assert corpus.rdd.getNumPartitions() == 4
+        store.query(rng.standard_normal((5, 8)), k=5)
+
+        def probe(batches):
+            import importlib
+            import zipimport
+
+            import vicinity_spark  # noqa: F401
+
+            before = dict(zipimport._zip_directory_cache)
+            importlib.invalidate_caches()
+            kept = all(zipimport._zip_directory_cache.get(a) is d for a, d in before.items())
+            resolved = importlib.import_module("pyspark.ml.linalg").__name__
+            for _ in batches:
+                pass
+            yield pd.DataFrame({"zips": [len(before)], "kept": [kept], "resolved": [resolved]})
+
+        out = corpus.select("id").mapInPandas(probe, "zips long, kept boolean, resolved string").toPandas()
+    finally:
+        corpus.unpersist()
+        cached.unpersist()
+    assert len(out) == 4 and (out["zips"] > 0).all(), out
+    assert out["kept"].all(), out
+    assert (out["resolved"] == "pyspark.ml.linalg").all(), out
+
+    archive = str(tmp_path / "zipped.zip")
+    with zipfile.ZipFile(archive, "w") as z:
+        z.writestr("vicinity_zip_probe.py", "X = 1\n")
+    monkeypatch.syspath_prepend(archive)
+    assert importlib.import_module("vicinity_zip_probe").X == 1
+    finders = [f for f in sys.path_importer_cache.values() if isinstance(f, zipimport.zipimporter)]
+    assert finders and not [f for f in finders if "invalidate_caches" in vars(f)]
+    before = zipimport._zip_directory_cache[archive]
+    importlib.invalidate_caches()
+    assert zipimport._zip_directory_cache.get(archive) is not before
+    sys.modules.pop("vicinity_zip_probe", None)
+    sys.path_importer_cache.pop(archive, None)
+
+
 def test_unbounded_ivf_plan_has_no_query_id_join(spark, monkeypatch):
     """An unbounded IVF query table scores on the cluster-keyed block
     grid: cells join on `__cluster`, and no join re-attaches query

@@ -13,9 +13,17 @@ pick the physical strategy; Python UDFs appear only where built-in
 operators cannot express the semantics.
 """
 
+from pyspark import TaskContext
+
 from vicinity_spark.datatypes import Backend, Metric
+from vicinity_spark.session import freeze_zip_finders
 from vicinity_spark.store import VectorStore
 
 __version__ = "0.1.0"
 
 __all__ = ["Backend", "Metric", "VectorStore", "__version__"]
+
+# Unpickling any library kernel imports this package, so a Python
+# worker runs this once, at its first library task.
+if TaskContext.get() is not None:
+    freeze_zip_finders()

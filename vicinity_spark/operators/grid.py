@@ -456,7 +456,8 @@ def probe_scan(
         probes = lists.probes(Q)
         union = np.unique(probes)
         members = {int(c): np.nonzero((probes == c).any(axis=1))[0] for c in union}
-        corpus = corpus.where(F.col(CLUSTER_COL).isin([int(c) for c in union]))
+        # one SQL string, not one py4j literal per probed list
+        corpus = corpus.where(f"{CLUSTER_COL} IN ({', '.join(str(int(c)) for c in union)})")
         cols.append(CLUSTER_COL)
     bq = spark.sparkContext.broadcast((qids, Q, members))
     fn = partial(
