@@ -189,12 +189,6 @@ def _count_jobs(spark, fn) -> int:
     return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
-# jobs per bounded query_df(...).collect() at the commit before the
-# bounded scan, on the store built below (query_blocks / corpus_blocks
-# counts, the block folds and the grid joins, each a job)
-_GRID_JOBS = {"sq": 13, "pq": 13, "ivfsq": 10, "ivfpq": 11}
-
-
 def _serve_store(spark, backend, n=400):
     """A cached ``backend`` store over ``n`` seeded 8-d vectors, as the
     job-count tests build it (preset lists for the IVF family)."""
@@ -210,7 +204,12 @@ def _serve_store(spark, backend, n=400):
         "pq": {"m": 4, "ksub": 16, "refine": 4},
         "ivfsq": {"nlist": 8, "nprobe": 2, "centroids": C, "refine": 4},
         "ivfpq": {"nlist": 8, "nprobe": 2, "centroids": C, "m": 4, "ksub": 16, "refine": 4},
+        "ivfpqr": {
+            "nlist": 8, "nprobe": 2, "centroids": C, "m": 4, "ksub": 16, "refine": 4,
+            "refine_m": 4,
+        },
     }[backend]
+    backend = "ivfpq" if backend == "ivfpqr" else backend
     store = VectorStore.from_vectors_and_items(
         spark, X, [f"i{i}" for i in range(n)], backend_type=backend, metric="cosine", **params
     )
@@ -219,14 +218,14 @@ def _serve_store(spark, backend, n=400):
     return store, rng
 
 
-@pytest.mark.parametrize("backend", ["basic", "ivf", "sq", "pq", "ivfsq", "ivfpq"])
+@pytest.mark.parametrize("backend", ["basic", "ivf", "sq", "pq", "ivfsq", "ivfpq", "ivfpqr"])
 def test_bounded_query_job_count(spark, backend):
     """A bounded query batch takes one broadcast-query scan of the
-    corpus partitions: exact and IVF run exactly 3 jobs per collected
+    corpus partitions: every strategy runs exactly 3 jobs per collected
     query_df (the scan with its partial top-k exchange, the payload
-    join, the collect) and 2 per collected threshold_df, and the
-    code-scan strategies fewer than the block grid did. Counts, not
-    times."""
+    join, the collect) — the code-scan strategies re-rank inside the
+    scan, so no pool joins back to the vectors — and exact and IVF 2
+    per collected threshold_df. Counts, not times."""
     store, rng = _serve_store(spark, backend)
     qdf, _ = store._queries_df(rng.standard_normal((5, 8)))
     try:
@@ -234,7 +233,7 @@ def test_bounded_query_job_count(spark, backend):
         thr_jobs = _count_jobs(spark, lambda: store.threshold_df(qdf, 0.5).collect())
     finally:
         store.df.unpersist()
-    assert jobs == 3 if backend in ("basic", "ivf") else jobs < _GRID_JOBS[backend], jobs
+    assert jobs == 3, jobs
     if backend in ("basic", "ivf"):
         assert thr_jobs == 2, thr_jobs
 
@@ -328,10 +327,14 @@ def test_worker_keeps_zip_directories(spark, tmp_path, monkeypatch):
     sys.path_importer_cache.pop(archive, None)
 
 
-def test_unbounded_ivf_plan_has_no_query_id_join(spark, monkeypatch):
-    """An unbounded IVF query table scores on the cluster-keyed block
-    grid: cells join on `__cluster`, and no join re-attaches query
-    vectors by query_id (the join-scored plan it replaces did)."""
+@pytest.mark.parametrize("backend", ["ivf", "ivfsq", "ivfpq", "ivfpqr"])
+def test_unbounded_ivf_plan_has_no_query_id_join(spark, monkeypatch, backend):
+    """An unbounded query table on IVF or an IVF composite scores on
+    the cluster-keyed block grid: cells join on `__cluster`, no join
+    re-attaches query vectors by query_id (the join-scored plan it
+    replaces did), and the query_df plan holds exactly one
+    MapInPandas — the re-rank strategies score their pools inside the
+    cell scan."""
     import numpy as np
 
     import vicinity_spark.operators.knn as knn_mod
@@ -339,17 +342,26 @@ def test_unbounded_ivf_plan_has_no_query_id_join(spark, monkeypatch):
 
     rng = np.random.default_rng(4)
     X = rng.standard_normal((120, 8))
+    params = {"nlist": 4, "nprobe": 2, "centroids": X[:4]}
+    params.update({
+        "ivf": {},
+        "ivfsq": {"refine": 4},
+        "ivfpq": {"m": 4, "ksub": 16, "refine": 4},
+        "ivfpqr": {"m": 4, "ksub": 16, "refine": 4, "refine_m": 4},
+    }[backend])
     store = VectorStore.from_vectors_and_items(
-        spark, X, [f"i{i}" for i in range(120)], backend_type="ivf",
-        nlist=4, nprobe=2, centroids=X[:4],
+        spark, X, [f"i{i}" for i in range(120)],
+        backend_type="ivfpq" if backend == "ivfpqr" else backend, **params,
     )
     qdf, _ = store._queries_df(rng.standard_normal((6, 8)))
     monkeypatch.setattr(knn_mod, "AUTO_GRID_QUERY_ROWS", -1)
-    for df in (store.query_df(qdf, k=3), store.threshold_df(qdf, 0.5)):
+    knn = store.query_df(qdf, k=3)
+    for df in (knn, store.threshold_df(qdf, 0.5)):
         s = explain_str(df, "simple")
         assert "MapInPandas" in s and "__cluster" in s
         joins = [ln for ln in s.splitlines() if "Join" in ln]
         assert joins and not [ln for ln in joins if "query_id" in ln], joins
+    assert explain_str(knn, "simple").count("MapInPandas") == 1
 
 
 @pytest.mark.parametrize("backend", ["ivf", "ivfsq", "pq", "ivfpq"])

@@ -7,20 +7,29 @@ strategy returns results of one shape with one tie order.
 
 The contract:
 
-- `_scored(corpus, queries, k, metric)` is the one hook a strategy
-  supplies: scored candidate rows `(query_id, id, distance)` with RAW
+- `_scored(corpus, queries, k, metric)` gives the DataFrame plans
+  their scored candidate rows `(query_id, id, distance)` with RAW
   (unclipped) distances, at most one row per (query_id, id). `k` is the
   result size the caller asked for; strategies that prune internally
   (code scans, beam pools) size their pools from it. The range-search
-  strategies (IVF, LSH) ignore it, and `_within` passes None.
+  strategies (IVF, LSH) ignore it, and `_within` passes None. A cell
+  strategy supplies `_cells` (its cell kernel), `_lists` (IVF probes)
+  and `_stages` (its cuts after the scan); the base `_scored` runs them.
+  LSH and graph override `_scored` and join their own candidates.
 - Dense scans: the exact, IVF, SQ/PQ and IVF-SQ/PQ candidate scans
   are one `grid.cell_scan` call each, which alone picks the plan. A
   query batch of at most AUTO_GRID_QUERY_ROWS rows is scored in one
   broadcast-query scan of the corpus partitions (`grid.probe_scan`;
   IVF strategies probe on the driver and push the probed lists into
   the scan); a larger query table runs the block grid (`cluster_grid`
-  for IVF strategies), which never collects it. LSH and graph join
-  their own candidates.
+  for IVF strategies), which never collects it.
+- One stage plan (`_stages`, scanned by `_stage_scan`) feeds both
+  `serve` and `_scored`. A re-rank strategy's scan carries the
+  columns its later stages read (the vector; ivfpqr's codes): each
+  task — each cell on the block grid — keeps each query's best
+  first-stage rows and scores the later stages on them, and the
+  stage cuts then run on the driver (`serve`) or as Spark windows
+  (`_scored`). No pool joins back to the corpus.
 - `knn` rejects `k < 1`, keeps each query's top `k` by
   `(distance, id)` — the id tiebreak makes the cut independent of the
   physical layout at exact ties — and only then clips the returned
@@ -40,10 +49,10 @@ The contract:
   of the strategy's cell kernel (`_cells`; `_range_cells` for a range
   search), whose output rows carry the store's payload columns. Each
   task keeps each query's best rows by the first cut stage and adds
-  the re-rank's exact distances (`_serve_plan`); the driver applies
-  every stage's `(distance, id)` cut, then clips. `_scored` (the
-  DataFrame plans of `knn`, `threshold` and `query_df`) runs the same
-  kernel through `grid.cell_scan`. A strategy without cells (LSH,
+  the later stages' columns (`_stages`); the driver applies every
+  stage's `(distance, id)` cut, then clips. `_scored` (the DataFrame
+  plans of `knn`, `threshold` and `query_df`) runs the same scan
+  through `grid.cell_scan`. A strategy without cells (LSH,
   graph), a payload type outside `_CARRY`, or a top-k scan whose tasks
   would ship more than SERVE_ROWS rows returns None, and the facade
   collects the DataFrame plan.
@@ -69,13 +78,12 @@ from vicinity_spark.operators.knn import (
     _np_pairwise,
     clipped_topk,
     join_payload,
-    score_joined,
     topk_by_distance,
     topk_positions,
 )
 
 #: The facade's bound on the rows its scan tasks ship to the driver:
-#: corpus partitions × queries × first-stage rows (`_serve_plan`), each
+#: corpus partitions × queries × first-stage rows (`_stages`), each
 #: task's per-query cut. Past it `serve` declines and the facade
 #: collects the DataFrame plan, which cuts in Spark and ships queries ×
 #: k rows. Measured on a cached 20k × 64 cosine IVF store in 4
@@ -203,38 +211,69 @@ class IndexStrategy:
         strategy's `threshold` is not a range search over cells."""
         return None
 
-    def _cell_scan(
-        self, corpus: DataFrame, queries: DataFrame, metric: Metric, k: "int | None"
-    ) -> DataFrame:
-        """`_cells` over `grid.cell_scan` cells of ``corpus``."""
-        from vicinity_spark.operators.grid import cell_scan
+    def _stages(self, k: "int | None", metric: Metric):
+        """The strategy's top-``k`` plan after the cell scan, the one
+        both `serve` and `_scored` run: ``(stages, read, extras)``.
+        ``stages`` are (column, rows per query) cuts, each query's best
+        rows by (column, id) kept stage after stage; the first ranks
+        the cell kernel's ``distance`` and sizes its ``k``, the last
+        column is the result distance. ``extras(frame, Qrows)`` (None:
+        none) adds the later stages' columns in the scan task from the
+        corpus columns ``read``."""
+        return [("distance", k)], (), None
 
-        payload_col, kernel, target_rows = self._cells(metric, k)
-        return cell_scan(
-            corpus,
-            queries,
-            payload_col,
-            kernel,
-            _KNN_SCHEMA,
+    def _stage_scan(self, metric: Metric, k: "int | None", carry=(), fields=(), cut=False):
+        """The scan of `_stages`: ``(stages, args, kwargs)``, where
+        ``grid.cell_scan(corpus, queries, *args, **kwargs)`` or
+        ``grid.probe_scan(corpus, batch, *args, **kwargs)`` runs the
+        cell kernel and emits (query_id, id, distance, the later
+        stages' columns, the ``carry`` columns; ``fields`` types
+        those). With extras — or with ``cut`` — each task (each cell
+        on the block grid) keeps only each query's best first-stage
+        rows (`_task_best`), which hold every row of the global cut it
+        scanned, and scores the extras on them from the carried
+        ``read`` columns. None when the strategy scans no cells."""
+        stages, read, extras = self._stages(k, metric)
+        size = stages[0][1]
+        cells = self._cells(metric, size)
+        if cells is None:
+            return None
+        payload_col, kernel, target_rows = cells
+        dists = [StructField(c, DoubleType()) for c, _ in stages[1:]]
+        schema = StructType(_KNN_SCHEMA.fields + dists + list(fields))
+        finish = None
+        if cut or extras is not None:
+            finish = partial(_task_best, size, extras, [c for c in read if c not in carry])
+        kwargs = dict(
             lists=self._lists(metric),
             target_rows=target_rows,
+            carry=tuple(dict.fromkeys([*carry, *read])),
+            finish=finish,
         )
+        return stages, (payload_col, kernel, schema), kwargs
 
     def _scored(
         self, corpus: DataFrame, queries: DataFrame, k: "int | None", metric: Metric
     ) -> DataFrame:
-        """(query_id, id, distance) scored candidates, RAW distances."""
-        raise NotImplementedError
+        """(query_id, id, distance) scored candidates, RAW distances:
+        `_stage_scan` over `grid.cell_scan` cells, then each stage but
+        the last cut by its (column, id) window; the last stage's
+        column comes back as ``distance``, and its cut is `knn`'s. A
+        single-stage strategy (exact, IVF) returns the scan as it is."""
+        from vicinity_spark.operators.grid import cell_scan
 
-    def _serve_plan(self, k: int, metric: Metric):
-        """The facade's top-``k`` after the scan: ``(stages, read,
-        extras)``. ``stages`` are (column, rows per query) cuts, each
-        query's best rows by (column, id) kept stage after stage; the
-        first ranks the cell kernel's ``distance`` and sizes its ``k``,
-        the last column is the result distance. ``extras(frame,
-        Qrows)`` (None: none) adds the later stages' columns in the
-        scan task from the corpus columns ``read``."""
-        return [("distance", k)], (), None
+        plan = self._stage_scan(metric, k)
+        if plan is None:
+            raise NotImplementedError
+        stages, args, kwargs = plan
+        scored = cell_scan(corpus, queries, *args, **kwargs)
+        for (_, size), (col, _) in zip(stages, stages[1:]):
+            scored = (
+                topk_by_distance(scored, size, "__cut")
+                .drop("__cut", "distance")
+                .withColumnRenamed(col, "distance")
+            )
+        return scored
 
     def serve(
         self,
@@ -269,37 +308,27 @@ class IndexStrategy:
         out_fields = [
             StructField(c, StringType() if c in carried else fields[c]) for c in payload_cols
         ]
-        lists = self._lists(metric)
         cells = None if threshold is None else self._range_cells(metric, float(threshold))
         if cells is not None:
             # a range search ships its hits only, as the DataFrame
             # plan's collect does: no cut, no bound
             payload_col, kernel, target_rows = cells
             out = probe_scan(
-                scan, payload_col, batch, kernel, StructType(_KNN_SCHEMA.fields + out_fields),
-                lists, target_rows, carry=tuple(payload_cols),
+                scan, batch, payload_col, kernel, StructType(_KNN_SCHEMA.fields + out_fields),
+                lists=self._lists(metric), target_rows=target_rows, carry=tuple(payload_cols),
             )
             return [_hit(r, "distance", payload) for r in out.collect()]
         if threshold is not None:
             k = max_k
-        stages, read, extras = self._serve_plan(k, metric)
-        size = stages[0][1]
-        cells = self._cells(metric, size)
-        if cells is None:
+        plan = self._stage_scan(metric, k, tuple(payload_cols), out_fields, cut=True)
+        if plan is None:
             return None
         if k < 1:
             raise ValueError("k must be greater than 0")
-        if corpus.rdd.getNumPartitions() * len(batch[0]) * size > SERVE_ROWS:
+        stages, args, kwargs = plan
+        if corpus.rdd.getNumPartitions() * len(batch[0]) * stages[0][1] > SERVE_ROWS:
             return None
-        payload_col, kernel, target_rows = cells
-        dists = [StructField(c, DoubleType()) for c, _ in stages[1:]]
-        out = probe_scan(
-            scan, payload_col, batch, kernel, StructType(_KNN_SCHEMA.fields + dists + out_fields),
-            lists, target_rows,
-            carry=tuple(dict.fromkeys([*payload_cols, *read])),
-            finish=partial(_task_best, size, extras, [c for c in read if c not in payload]),
-        )
-        hits = _merged(out.collect(), stages, payload)
+        hits = _merged(probe_scan(scan, batch, *args, **kwargs).collect(), stages, payload)
         if threshold is not None:
             hits = [h for h in hits if h["distance"] <= float(threshold)]
         return hits
@@ -377,42 +406,19 @@ class RerankStrategy(IndexStrategy):
     by `(distance, id)`, then an exact re-score of only those rows
     against the true vectors. Recall is governed by `refine`.
 
-    The DataFrame plan joins the pool back to the vectors
-    (`score_joined`). The facade's scan carries each row's vector
-    instead: a task keeps its local top `k × refine` by approximate
-    distance and scores those rows exactly; the global pool is a subset
-    of the union of the local ones, so the driver's two cuts give the
-    same rows."""
+    Both plans re-rank inside the scan: it carries each scanned row's
+    vector, a task (a cell on the block grid) keeps its local top
+    `k × refine` by approximate distance and scores those rows
+    exactly. The global pool is a subset of the union of the local
+    ones, so the two cuts — on the driver for the facade, as Spark
+    windows in `_scored` — give each query's global pool, scored
+    exactly (`_np_pairwise` reduces each row alone, so a pair's value
+    does not depend on the task that scored it)."""
 
     def _kk(self, k: int) -> int:
         return max(k * self.params["refine"], k)
 
-    def _candidates(
-        self, corpus: DataFrame, queries: DataFrame, kk: int, metric: Metric
-    ) -> DataFrame:
-        """(query_id, id, approximate distance) — at least each query's
-        top `kk` over the codes (more rows are allowed; _pool cuts)."""
-        return self._cell_scan(corpus, queries, metric, kk)
-
-    def _pool(
-        self, corpus: DataFrame, queries: DataFrame, k: int, metric: Metric
-    ) -> DataFrame:
-        """(query_id, id) — each query's top `k × refine` candidates."""
-        kk = self._kk(k)
-        cand = self._candidates(corpus, queries, kk, metric)
-        return topk_by_distance(cand, kk, "__r0").select("query_id", "id")
-
-    def _scored(
-        self, corpus: DataFrame, queries: DataFrame, k: int, metric: Metric
-    ) -> DataFrame:
-        # no broadcast hint: the pool scales with the query batch; AQE
-        # broadcasts it at runtime when it is actually small
-        joined = self._pool(corpus, queries, k, metric).join(
-            corpus.select("id", "vector"), "id"
-        )
-        return score_joined(joined, queries, metric)
-
-    def _serve_plan(self, k: int, metric: Metric):
+    def _stages(self, k: int, metric: Metric):
         def exact(f, Qr):
             return f.assign(**{"__exact": _np_pairwise(metric, Qr, _vectors(f["vector"]))})
 

@@ -148,14 +148,6 @@ class IVFStrategy(IndexStrategy):
         payload_col, kernel, target_rows = self._cells(metric, None)
         return payload_col, _within_kernel(kernel, threshold), target_rows
 
-    def _scored(
-        self, corpus: DataFrame, queries: DataFrame, k: "int | None", metric: Metric
-    ) -> DataFrame:
-        """Probed-list rows scored by `_cells` over `grid.cell_scan`
-        cells (`probe_scan` for a bounded batch, `cluster_grid` for an
-        unbounded table)."""
-        return self._cell_scan(corpus, queries, metric, k)
-
     # named in the class so per-class instrumentation that wraps only a
     # class's own methods (perfbench/run.py spans) still sees it
     knn = IndexStrategy.knn

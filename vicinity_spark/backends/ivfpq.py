@@ -18,19 +18,18 @@ and encoded on the driver and stays a LocalRelation. The IVF half is
 
 Query: PQStrategy's ADC scan over the inverted lists — this class
 overrides its `_lists` and `_cell_tables` hooks (and, for IVFPQR, the
-facade's `_serve_plan`). A bounded batch
+stage plan `_stages`). A bounded batch
 is probed on the driver and scanned in one corpus pass restricted to
 the probed lists (grid.probe_scan); a larger query table folds each
-inverted list's codes into one block row joined ONLY to the query
+inverted list's rows into one block row joined ONLY to the query
 blocks that probe it (grid.cluster_grid). Each cell computes its
 queries' residual ADC tables against that single centroid
 executor-side — centroids and codebooks ride in the task closure. The
-usual exact re-rank on true vectors follows. Scan payload per row: 4
-bytes cluster + m bytes code, independent of dim — in the DataFrame
-plan. The facade's one-job scan (`IndexStrategy.serve`) also carries
-each probed row's true vector and store payload, so the re-rank needs
-no join back (measured faster than the DataFrame plan on 5k- and
-50k-row stores at dim 64; ROADMAP item 2).
+usual exact re-rank on true vectors follows inside the same scan
+(RerankStrategy): the ADC ranks 4 bytes cluster + m bytes code per
+row, independent of dim, and the scan also reads each probed row's
+true vector, which the task scores for its local pool only. Nothing
+joins back to the corpus, in `query_df` as in the facade.
 
 Metrics without a clean residual-L2 decomposition (inner product,
 hamming, tanimoto, manhattan) fall back to the non-residual path of
@@ -38,17 +37,16 @@ the parent PQStrategy (metric-aware ADC on whole vectors, same probed-
 list masking), so every metric stays served.
 
 IVFPQR (`refine_m > 0`): a second, finer PQ on the post-reconstruction
-residual re-ranks candidates from codes alone — in the DataFrame plan
-the full-width second scan FAISS IndexIVFPQR avoids (faiss.py:111-113)
-never happens either; the facade's one-job scan reads the vectors of
-the probed lists instead, and scores only the re-rank winners with
-them. NOTE a deliberate default-on divergence: `final_refine`
-(default 2) exact-rescores ONLY the nq×(final_refine·k) re-rank
-winners via a tiny join back to the true vectors (the facade's scan
-scores them from the vectors it carries), so emitted distances are
-exact (hash-checkable against the exact-kNN oracle). Set
-`final_refine=0` for FAISS IndexIVFPQR parity (pure reconstruction
-distances). The recall-floor test (test_evaluate_ann_recall_floor) is
+residual re-ranks candidates from codes alone, inside the scan task,
+from the carried (cluster, pqcode, rcode), where FAISS IndexIVFPQR
+would otherwise need a full-width second scan (faiss.py:111-113). NOTE
+a deliberate default-on divergence: `final_refine` (default 2)
+exact-rescores ONLY each task's final_refine·k code re-rank winners
+per query, from the true vectors the scan then also reads for the
+probed lists, so emitted distances are exact (hash-checkable against
+the exact-kNN oracle). Set `final_refine=0` for FAISS IndexIVFPQR
+parity (pure reconstruction distances; the scan reads codes only, no
+vector). The recall-floor test (test_evaluate_ann_recall_floor) is
 the stated backstop if params/testdata regeneration ever stops the
 code re-rank from containing the true top-k at the gate params.
 """
@@ -74,7 +72,7 @@ from vicinity_spark.backends.pq import (
 )
 from vicinity_spark.datatypes import Backend, Metric
 from vicinity_spark.functions.metrics import normalize_expr
-from vicinity_spark.operators.knn import _KNN_SCHEMA, _np_pairwise
+from vicinity_spark.operators.knn import _np_pairwise
 from vicinity_spark.session import vector_column
 
 _RESIDUAL_METRICS = (Metric.COSINE, Metric.EUCLIDEAN, Metric.L2_SQUARED)
@@ -101,10 +99,10 @@ class IVFPQStrategy(PQStrategy):
         quantizer encodes the residual left AFTER the primary PQ
         reconstruction, and the candidate re-rank reconstructs x̂ ≈
         centroid + decode(pqcode) + decode(rcode) from codes alone —
-        m + refine_m bytes per candidate row instead of a dim×4-byte
-        second scan of the true vectors. refine_m == 0 (default) keeps
-        the exact-vector re-rank: higher fidelity, but at 100 TB it
-        re-reads the full-width vector column for the candidate set."""
+        m + refine_m bytes per candidate row instead of the dim×4-byte
+        true vector; with ``final_refine=0`` the scan reads no vector
+        at all. refine_m == 0 (default) keeps the exact-vector re-rank:
+        higher fidelity, and the scan reads each probed row's vector."""
         super().__init__(centroids=centroids, **params)
         self.params["nlist"] = int(nlist)
         self.params["nprobe"] = int(nprobe)
@@ -201,39 +199,11 @@ class IVFPQStrategy(PQStrategy):
                 R2, rm, self.params["ksub"], self.params["seed"] + 1000
             )
 
-    def _recon_scored(
-        self, cand: DataFrame, corpus: DataFrame, queries: DataFrame, metric: Metric
-    ) -> DataFrame:
-        """Candidate re-rank from codes alone (the ivfpqr trade): the
-        join reads (cluster, pqcode, rcode) — m + refine_m bytes + 4 —
-        per candidate instead of the dim×4-byte true vector, and scores
-        the metric-space query against the two-stage reconstruction."""
-        distance = self._recon_distance(metric)
-        joined = (
-            cand.join(corpus.select("id", CLUSTER_COL, CODE_COL, RCODE_COL), "id")
-            .join(queries.select("query_id", F.col("qvec").alias("__qvec")), "query_id")
-        )
-
-        def kernel(batches):
-            for b in batches:
-                if len(b) == 0:
-                    continue
-                d = distance(b, np.vstack(b["__qvec"].to_numpy()).astype(np.float64))
-                yield pd.DataFrame(
-                    {
-                        "query_id": b["query_id"].to_numpy(),
-                        "id": b["id"].to_numpy(),
-                        "distance": d,
-                    }
-                )
-
-        return joined.mapInPandas(kernel, _KNN_SCHEMA)
-
     def _recon_distance(self, metric: Metric):
         """``distance(frame, Qrows)``: each row's distance from its
         query (a row of ``Qrows``) to the two-stage reconstruction of
-        the frame's (cluster, pqcode, rcode) — the re-rank score of
-        `_recon_scored` and of the facade's `_serve_plan`."""
+        the frame's (cluster, pqcode, rcode) — the code re-rank score
+        of `_stages`."""
         rbooks = self._rbooks()
 
         def distance(f: pd.DataFrame, Qr: np.ndarray) -> np.ndarray:
@@ -248,45 +218,17 @@ class IVFPQStrategy(PQStrategy):
         """True when candidates re-rank on the refinement codes."""
         return bool(self.params["refine_m"]) and self._use_residual(metric)
 
-    def _scored(
-        self, corpus: DataFrame, queries: DataFrame, k: int, metric: Metric
-    ) -> DataFrame:
+    def _stages(self, k: int, metric: Metric):
+        """The ivfpqr cuts: the pool by code distance, then by
+        reconstruction distance (`_recon_distance`, from the carried
+        codes), then, with ``final_refine``, the
+        ``final_refine × k`` winners by exact distance (from the carried
+        vector). On a metric without the residual decomposition,
+        ``refine_m`` falls back to the exact re-rank."""
         if not self._refines(metric):
-            # refine_m on a non-residual metric falls back to the exact
-            # re-rank (no clean two-stage decomposition exists there)
-            return super()._scored(corpus, queries, k, metric)
-        scored = self._recon_scored(
-            self._pool(corpus, queries, k, metric), corpus, queries, metric
-        )
+            return super()._stages(k, metric)
         fr = int(self.params.get("final_refine", 2))
-        if fr:
-            # Final exact touch-up: the code-based re-rank narrows the
-            # nq×kk candidate pool to nq×(final_refine·k) winners, and
-            # ONLY those rows join back to the true vector column for an
-            # exact re-score. This preserves the ivfpqr property — the
-            # full-width second scan of the kk-candidate set that
-            # refine_m exists to avoid (faiss.py:111-113) never happens;
-            # what does happen is a tiny O(nq·k) join — while making the
-            # emitted distances exact (hash-checkable against the exact
-            # k-NN oracle). final_refine=0 restores pure reconstruction
-            # distances (FAISS IndexIVFPQR parity).
-            from vicinity_spark.operators.knn import score_joined, topk_by_distance
-
-            winners = topk_by_distance(scored, max(k * fr, k), "__r1").select("query_id", "id")
-            scored = score_joined(
-                winners.join(corpus.select("id", "vector"), "id"), queries, metric
-            )
-        return scored
-
-    def _serve_plan(self, k: int, metric: Metric):
-        """`_scored`'s cuts for the facade: the pool by code distance,
-        then by reconstruction distance (`_recon_scored`'s kernel, from
-        the carried codes), then, with ``final_refine``, by exact
-        distance (from the carried vector)."""
-        if not self._refines(metric):
-            return super()._serve_plan(k, metric)
-        fr = int(self.params.get("final_refine", 2))
-        exact = super()._serve_plan(k, metric)[2] if fr else None
+        exact = super()._stages(k, metric)[2] if fr else None
         distance = self._recon_distance(metric)
 
         def extras(f, Qr):

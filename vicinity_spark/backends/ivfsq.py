@@ -7,19 +7,21 @@ layout + centroids in metadata: `IVFStrategy.build` itself, run on
 this strategy's params, and likewise `on_insert`) composed with
 the per-dimension min/max scalar quantizer (`__code: array<smallint>`,
 exactly backends/sq.py). Scan payload per row: 4 bytes cluster + dim
-bytes of codes — the IVF prune and the 4-8× SQ byte reduction stack.
+bytes of codes, ranked by the IVF prune and the SQ decode; the
+re-rank reads each probed row's vector as well.
 
 Query: SQStrategy's code scan over the inverted lists — the one hook
 this class takes from IVF is `_lists` (grid.InvertedLists), and
 `grid.cell_scan` routes the scan exactly as it routes IVF's: a bounded
 batch is probed on the driver and scanned in one corpus pass
 restricted to the probed lists (grid.probe_scan); a larger query table
-folds each inverted list's SQ codes into one block row that joins ONLY
-the query blocks probing it (grid.cluster_grid — an unprobed list
-ships nowhere). Either way each cell gets only the
+folds each inverted list's SQ codes and vectors into one block row
+that joins ONLY the query blocks probing it (grid.cluster_grid — an
+unprobed list ships nowhere). Either way each cell gets only the
 queries that probe its list, dequantizes with the closure-resident
 codebook (2×dim doubles) and runs the chunked dense partial top-k; the
-exact re-rank on true vectors follows (RerankStrategy phase 2).
+exact re-rank on the true vectors the scan carries follows in the same
+task (RerankStrategy phase 2), with no join back to the corpus.
 """
 
 from __future__ import annotations

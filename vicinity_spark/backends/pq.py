@@ -22,17 +22,19 @@ query table runs as a BLOCK GRID — corpus code blocks × query blocks
 via crossJoin, the query vectors arriving through the join — so a
 10M-row query table distributes instead of materializing nq×dim on the
 driver. Each cell emits its per-query top-k×refine candidates
-pre-ranked (the chunked argpartition runs inside the kernel); the only
-later shuffle is the bounded candidate merge followed by the exact
-re-rank on true vectors. Cosine is served by normalizing
+pre-ranked (the chunked argpartition runs inside the kernel), and the
+same task re-ranks them exactly on the true vectors the scan carries
+beside the codes (RerankStrategy); the only later shuffle is the
+bounded merge of those scored pools. Cosine is served by normalizing
 at train/encode/query time: squared-euclidean ADC ranking on unit
 vectors is cosine ranking (‖q−x‖² = 2·(1−cos) on the unit sphere).
 
-Scale envelope (unbounded tables): the grid replicates the compact code
-blocks once per query block (ceil(nq/512)); with m-byte codes that is a
-dim·4/m-fold smaller payload than replicating vectors. For full-corpus
-× huge-query sweeps prefer IVFPQ, whose grid joins only probed
-(cluster, query-block) pairs.
+Scale envelope (unbounded tables): the grid replicates each corpus
+block once per query block (ceil(nq/512)), and a block carries each
+row's vector for the re-rank beside its m-byte codes, so the ADC saves
+compute, not replicated bytes. For full-corpus × huge-query sweeps
+prefer IVFPQ, whose grid joins only probed (cluster, query-block)
+pairs.
 """
 
 from __future__ import annotations

@@ -4,16 +4,17 @@ for `pq`/`ivfpq` faiss.py:96-110; SURVEY.md §4 "Compression" row).
 
 Build: one aggregation pass computes per-dimension min/max; vectors are
 quantized to uint8 codes (`__code: array<smallint>`), a 4× byte
-reduction of the scan payload — at 100 TB that is the difference
-between scanning 25 TB and 100 TB per query sweep. The codebook
-(mins/scales, 2×dim doubles) lives in params/metadata.
+reduction of what the first phase ranks on. The codebook (mins/scales,
+2×dim doubles) lives in params/metadata.
 
-Query: two-phase. Phase 1 scans only (id, __code), dequantizes in the
-vectorized partial-top-k kernel, and keeps k×refine candidates per
-query. Phase 2 re-ranks candidates with exact distances on the true
-vectors — a join against the corpus touching only the candidate
-rows, or, in the facade's one-job scan, the vectors each task carries
-(RerankStrategy). Recall is governed by `refine` (evaluate() gates it).
+Query: two-phase, in one scan. Phase 1 ranks on (id, __code),
+dequantized in the vectorized partial-top-k kernel, and keeps k×refine
+candidates per query. Phase 2 re-ranks those candidates with exact
+distances on the true vectors, which the scan reads beside the codes
+for every scanned row; the task scores only its local pool, and
+nothing joins back to the corpus (RerankStrategy). So the 4× byte
+reduction is in what the ranking decodes and compares, not in what
+the scan reads. Recall is governed by `refine` (evaluate() gates it).
 """
 
 from __future__ import annotations

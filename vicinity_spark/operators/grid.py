@@ -26,9 +26,18 @@ scan, routes between them (knn.bounded_query_matrix decides):
   batches into cells of up to the grid's block size (per inverted
   list, or flat) with the queries in _QBLOCK slices — no fold, no
   join, no count job. Consumers: the exact ``auto`` top-k and radius
-  search, IVF's scoring, the candidate scans of sq, pq, ivfsq, ivfpq
-  and ivfpqr, and the facade's one-job queries
+  search, IVF's scoring, the re-ranked code scans of sq, pq, ivfsq,
+  ivfpq and ivfpqr, and the facade's one-job queries
   (`IndexStrategy.serve`), whose scan rows carry the payload.
+
+Both plans take a ``carry`` (corpus columns each kernel row gets,
+looked up by id in its cell) and a ``finish`` (what a task emits,
+from its kernel frames): the block grid collects the carried columns
+into its block rows and runs ``finish`` per cell, `probe_scan` per
+task. That is how a re-rank strategy scores its pool inside the scan
+on either plan (`IndexStrategy._stage_scan`: the carried vector or
+codes, a per-task cut and the exact score), and how the facade's scan
+rows carry the store's payload.
 
 Everything a kernel needs beyond its cell (codebooks, centroids) is
 closure-small.
@@ -201,14 +210,22 @@ def query_blocks(queries: DataFrame, qblock: int = _QBLOCK) -> DataFrame:
     )
 
 
+def _held(carry) -> list:
+    """collect_list of each ``carry`` column, named as `cell_arrays`
+    reads it back."""
+    return [F.collect_list(c).alias(f"__carry_{c}") for c in carry]
+
+
 def corpus_blocks(
     corpus: DataFrame,
     payload_col: str,
     n_blocks: int = None,
     target_rows: int = _CTARGET,
+    carry: "tuple[str, ...]" = (),
 ) -> DataFrame:
     """(__cb, __cids, __ccodes) — the corpus scan payload folded into
-    hash blocks (one narrow shuffle of the compact payload).
+    hash blocks (one narrow shuffle of the compact payload), plus one
+    collected list per ``carry`` column.
 
     Block count is a DIRECT cost multiplier on every consumer: the
     crossJoin against query_blocks ships each query block once per
@@ -237,7 +254,7 @@ def corpus_blocks(
     raw parquet corpus would copy the full payload into executor
     storage for no reason, while re-running a decode lineage for a
     count burns a full Python-worker pass."""
-    compact = corpus.select("id", payload_col)
+    compact = corpus.select(*dict.fromkeys(["id", payload_col, *carry]))
     if n_blocks is None:
         cached = corpus.storageLevel.useMemory or corpus.storageLevel.useDisk
         if not cached and _has_python_stage(compact):
@@ -251,6 +268,7 @@ def corpus_blocks(
         .agg(
             F.collect_list("id").alias("__cids"),
             F.collect_list(payload_col).alias("__ccodes"),
+            *_held(carry),
         )
     )
 
@@ -274,12 +292,14 @@ class InvertedLists:
         return nearest_centroids(Q, self.C, self.nprobe, self.Csq)[0]
 
 
-def cluster_grid(corpus: DataFrame, queries: DataFrame, lists: InvertedLists, payload_col: str):
+def cluster_grid(
+    corpus: DataFrame, queries: DataFrame, lists: InvertedLists, payload_col: str, carry=()
+):
     """Cluster-keyed block grid for IVF and its composites (ivfsq, ivfpq):
     one block row per inverted list (`__cluster` plus the collected
-    ids and `payload_col`), joined ONLY to the query blocks that probe
-    it — nprobe pruning at the block level, so an unprobed list ships
-    nowhere. The (query block → probed clusters) pairs come from an
+    ids, `payload_col` and ``carry`` columns), joined ONLY to the
+    query blocks that probe it — nprobe pruning at the block level, so
+    an unprobed list ships nowhere. The (query block → probed clusters) pairs come from an
     executor-side pandas UDF over the block's own query vectors; the
     centroids ride in the closure.
 
@@ -292,11 +312,12 @@ def cluster_grid(corpus: DataFrame, queries: DataFrame, lists: InvertedLists, pa
     from vicinity_spark.backends.ivf import CLUSTER_COL
 
     lists_df = (
-        corpus.select("id", payload_col, CLUSTER_COL)
+        corpus.select(*dict.fromkeys(["id", payload_col, CLUSTER_COL, *carry]))
         .groupBy(CLUSTER_COL)
         .agg(
             F.collect_list("id").alias("__cids"),
             F.collect_list(payload_col).alias("__ccodes"),
+            *_held(carry),
         )
     )
 
@@ -322,8 +343,10 @@ def cluster_grid(corpus: DataFrame, queries: DataFrame, lists: InvertedLists, pa
     return grid, probe_mask
 
 
-def cell_arrays(pdf: pd.DataFrame, i: int):
-    """Decode one grid-cell row back to numpy (ids, payload, qids, Q).
+def cell_arrays(pdf: pd.DataFrame, i: int, carry=()):
+    """Decode one grid-cell row back to numpy (ids, payload, qids, Q,
+    carried): ``carried`` maps each ``carry`` column to its values,
+    row-aligned with ``ids``.
 
     Corpus entries come back SORTED BY id: collect_list order is
     nondeterministic, and the top-k kernels below break exact-distance
@@ -336,12 +359,15 @@ def cell_arrays(pdf: pd.DataFrame, i: int):
     payload = np.vstack([np.asarray(c) for c in pdf["__ccodes"].iloc[i]])
     order = np.argsort(ids, kind="stable")
     ids, payload = ids[order], payload[order]
+    carried = {c: np.asarray(pdf[f"__carry_{c}"].iloc[i])[order] for c in carry}
     qids = np.asarray(pdf["__qids"].iloc[i], dtype=np.int64)
     Q = np.vstack([np.asarray(v) for v in pdf["__qvecs"].iloc[i]]).astype(np.float64)
-    return ids, payload, qids, Q
+    return ids, payload, qids, Q, carried
 
 
-def scan_cells(grid: DataFrame, kernel, schema, probe_mask=None) -> DataFrame:
+def scan_cells(
+    grid: DataFrame, kernel, schema, probe_mask=None, *, carry=(), finish=None
+) -> DataFrame:
     """The one mapInPandas over grid cells. Each cell row is decoded by
     `cell_arrays` (id-sorted corpus ids and payload, query ids, float64
     Q) and handed to ``kernel(ids, payload, qids, Q, key)``, which
@@ -349,30 +375,44 @@ def scan_cells(grid: DataFrame, kernel, schema, probe_mask=None) -> DataFrame:
     (``__cluster``, ``__cb``, ``__qb`` — those the grid has) to ints.
     With a `cluster_grid` ``probe_mask``, the kernel sees only the
     queries that probe the cell's cluster, and cells no query probes
-    are skipped. The loop is a module function bound by `partial`, so
-    a task's closure carries only the kernel, the key names and the
-    mask."""
+    are skipped. ``carry`` and ``finish`` act per cell as in
+    `probe_scan`: each kernel row gets its ``carry`` columns (collected
+    by `corpus_blocks` / `cluster_grid`), and ``finish(frames, qids,
+    Q)`` shapes what the cell emits. The loop is a module function
+    bound by `partial`, so a task's closure carries only the kernel,
+    the key names, the mask and ``finish``."""
     from vicinity_spark.backends.ivf import CLUSTER_COL
 
     keys = [c for c in (CLUSTER_COL, "__cb", "__qb") if c in grid.columns]
-    fn = partial(_scan, kernel, keys, probe_mask)
+    fn = partial(_scan, kernel, keys, probe_mask, carry=tuple(carry), finish=finish)
     fn.__name__ = "scan_cells"  # the UDF's name in plan dumps
     return grid.mapInPandas(fn, schema)
 
 
-def _scan(kernel, keys, probe_mask, batches: Iterator[pd.DataFrame]):
+def _scan(kernel, keys, probe_mask, batches: Iterator[pd.DataFrame], carry=(), finish=None):
     from vicinity_spark.backends.ivf import CLUSTER_COL
 
     for pdf in batches:
         for i in range(len(pdf)):
-            ids, payload, qids, Q = cell_arrays(pdf, i)
+            ids, payload, qids, Q, carried = cell_arrays(pdf, i, carry)
             key = {c: int(pdf[c].iloc[i]) for c in keys}
             if probe_mask is not None:
                 mask = probe_mask(Q, key[CLUSTER_COL])
                 if not mask.any():
                     continue
                 qids, Q = qids[mask], Q[mask]
-            yield from kernel(ids, payload, qids, Q, key)
+            frames = _with_carry(kernel(ids, payload, qids, Q, key), ids, carried)
+            yield from frames if finish is None else finish(frames, qids, Q)
+
+
+def _with_carry(frames, ids: np.ndarray, carried: dict):
+    """``frames`` with each ``carried`` column (row-aligned with the
+    id-sorted cell ``ids``) looked up by the row's ``id``."""
+    for f in frames:
+        if carried:
+            at = np.searchsorted(ids, f["id"].to_numpy())
+            f = f.assign(**{n: v[at] for n, v in carried.items()})
+        yield f
 
 
 def cell_scan(
@@ -385,6 +425,8 @@ def cell_scan(
     lists: "InvertedLists | None" = None,
     target_rows: int = _CTARGET,
     bounded: bool = True,
+    carry: "tuple[str, ...]" = (),
+    finish=None,
 ) -> DataFrame:
     """The query scan of every cell kernel: ``kernel(ids, payload, qids,
     Q, key)`` over ``corpus`` (``id`` plus ``payload_col``, and
@@ -394,29 +436,33 @@ def cell_scan(
     unbounded one — or any batch when ``bounded`` is False — runs the
     block grid: `cluster_grid` with ``lists``, else ``corpus_blocks``
     (``target_rows`` per block) × `query_blocks`, through
-    `scan_cells`."""
+    `scan_cells`. ``carry`` and ``finish`` are `probe_scan`'s; the
+    block grid honours them per cell."""
     from vicinity_spark.operators.knn import bounded_query_matrix
 
     batch = bounded_query_matrix(queries) if bounded else None
     if batch is not None:
-        return probe_scan(corpus, payload_col, batch, kernel, schema, lists, target_rows)
+        return probe_scan(
+            corpus, batch, payload_col, kernel, schema,
+            lists=lists, target_rows=target_rows, carry=carry, finish=finish,
+        )
     if lists is None:
-        blocks = corpus_blocks(corpus, payload_col, target_rows=target_rows)
+        blocks = corpus_blocks(corpus, payload_col, target_rows=target_rows, carry=carry)
         grid, probe_mask = blocks.crossJoin(query_blocks(queries)), None
     else:
-        grid, probe_mask = cluster_grid(corpus, queries, lists, payload_col)
-    return scan_cells(grid, kernel, schema, probe_mask)
+        grid, probe_mask = cluster_grid(corpus, queries, lists, payload_col, carry)
+    return scan_cells(grid, kernel, schema, probe_mask, carry=carry, finish=finish)
 
 
 def probe_scan(
     corpus: DataFrame,
-    payload_col: str,
     batch,
+    payload_col: str,
     kernel,
     schema,
+    *,
     lists: "InvertedLists | None" = None,
     target_rows: int = _CTARGET,
-    *,
     carry: "tuple[str, ...]" = (),
     finish=None,
 ) -> DataFrame:
@@ -432,9 +478,9 @@ def probe_scan(
 
     ``carry`` names corpus columns each kernel output row gets, looked
     up by its ``id`` in the cell that emitted it (the facade's payload,
-    or the vectors a re-rank scores). ``finish(frames, qids, Q)``, a
+    or the columns a re-rank scores). ``finish(frames, qids, Q)``, a
     generator over all of a task's kernel frames, shapes what the task
-    emits (the facade's per-task cut); ``schema`` is then its output's.
+    emits (a re-rank's per-task cut); ``schema`` is then its output's.
 
     A cell is cut once adding the next Arrow batch (or a list's share
     of it) would pass ``target_rows`` rows, so cells are as coarse as
@@ -491,11 +537,7 @@ def _probe_cells(kernel, payload_col, target_rows, carry, qids, Q, members, batc
         qs, key = (every, {}) if c is None else (members[c], {CLUSTER_COL: c})
         for s in range(0, len(qs), _QBLOCK):
             b = qs[s : s + _QBLOCK]
-            for f in kernel(ids, payload, qids[b], Q[b], key):
-                if carried:
-                    at = np.searchsorted(ids, f["id"].to_numpy())
-                    f = f.assign(**{n: v[at] for n, v in carried.items()})
-                yield f
+            yield from _with_carry(kernel(ids, payload, qids[b], Q[b], key), ids, carried)
 
     for pdf in batches:
         if not len(pdf):

@@ -170,10 +170,14 @@ def score_joined(
     vector_col: str = "vector",
 ) -> DataFrame:
     """(query_id, id, vector) rows → (query_id, id, distance), scored by
-    the vectorized row-wise numpy kernel (Arrow batches). Used by every
-    ANN strategy to re-score its candidate set: candidate volumes are
-    queries × bucket/list sizes, where per-row JVM evaluation of a
-    dim-wide expression dominates. Query vectors arrive by *joining* the
+    the vectorized row-wise numpy kernel (Arrow batches). The scorer of
+    the candidate sets that are joined, not scanned: LSH's bucket
+    candidates (`LSHStrategy._scored`), the graph beam's frontiers, and
+    the pq and sq branches of the registered `ann_recall_summary`
+    query; the cell-scan strategies score inside their scan instead
+    (`IndexStrategy._stage_scan`). Candidate volumes are queries ×
+    bucket sizes, where per-row JVM evaluation of a dim-wide expression
+    dominates. Query vectors arrive by *joining* the
     query DataFrame on query_id — no driver collect, so the plan holds
     at any query count (AQE broadcasts the query side when it is small).
     Distances are RAW (callers rank on them first and clip only the
