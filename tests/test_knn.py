@@ -1382,6 +1382,61 @@ def test_dense_cell_within_bounded_matches_brute_force(metric, monkeypatch):
         assert (int(min(ids[i], ids[j])), int(max(ids[i], ids[j]))) in got
 
 
+@pytest.mark.parametrize("seed", range(6))
+def test_task_best_streams_within_bounds(monkeypatch, seed):
+    """A re-rank scan task's finish (backends.base._task_best) emits
+    what one concat-then-cut of all its kernel frames would — each
+    query's best ``size`` rows by (distance, id), ties and NaN
+    distances included, with the extras scored and the read column
+    dropped — while it scores the extras in slices of at most
+    _QBLOCK × _CCHUNK query-vector doubles and skips the rows its kept
+    rows already beat. One query is still short of ``size`` rows when
+    the worse rows of its last frame arrive."""
+    import pandas as pd
+
+    from vicinity_spark.backends import base
+    from vicinity_spark.operators import grid
+    from vicinity_spark.operators.knn import topk_positions
+
+    monkeypatch.setattr(grid, "_QBLOCK", 4)
+    monkeypatch.setattr(grid, "_CCHUNK", 6)
+    rng = np.random.default_rng(seed)
+    nq, dim, size = 24, 3, 5
+    qids = np.arange(50, 50 + nq, dtype=np.int64)
+    Q = rng.random((nq, dim))
+    frames, pool = [], iter(rng.permutation(10**5))
+    for cell in range(60):
+        slice_ = rng.choice(qids[1:], rng.integers(1, 5), replace=False)
+        q = np.repeat(slice_, rng.integers(1, size + 1, len(slice_)))
+        d = rng.integers(0, 8, len(q)) / 4.0
+        d[rng.random(len(q)) < 0.1] = np.nan
+        if cell in (0, 59):
+            extra = [0.0] * 2 if cell == 0 else [2.0] * size
+            q, d = np.r_[q, [qids[0]] * len(extra)], np.r_[d, extra]
+        ids = np.array([next(pool) for _ in q])  # ties meet ids in no order
+        vecs = list(rng.random((len(q), dim)))
+        frames.append(pd.DataFrame({"query_id": q, "id": ids, "distance": d, "vector": vecs}))
+    scored = []
+
+    def extras(f, Qr):
+        scored.append(len(f))
+        return f.assign(__exact=(Qr * np.vstack(f["vector"].to_numpy())).sum(axis=1))
+
+    out = pd.concat(list(base._task_best(size, extras, ["vector"], iter(frames), qids, Q)))
+    every = pd.concat(frames, ignore_index=True)
+    keep = topk_positions(
+        every["query_id"].to_numpy(), every["distance"].to_numpy(), every["id"].to_numpy(), size
+    )
+    want = every.iloc[keep]
+    want = extras(want, Q[pd.Index(qids).get_indexer(want["query_id"])]).drop(columns="vector")
+    key = ["query_id", "id"]
+    pd.testing.assert_frame_equal(
+        out.sort_values(key).reset_index(drop=True), want.sort_values(key).reset_index(drop=True)
+    )
+    assert max(scored[:-1]) <= 4 * 6 // dim
+    assert sum(scored[:-1]) < len(every)
+
+
 @pytest.mark.parametrize("metric", ["cosine", "euclidean"])
 def test_probe_scan_bounded_matches_brute_force(metric, monkeypatch):
     """The bounded twin of the grid scan slices the broadcast queries

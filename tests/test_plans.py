@@ -334,7 +334,8 @@ def test_unbounded_ivf_plan_has_no_query_id_join(spark, monkeypatch, backend):
     re-attaches query vectors by query_id (the join-scored plan it
     replaces did), and the query_df plan holds exactly one
     MapInPandas — the re-rank strategies score their pools inside the
-    cell scan."""
+    cell scan. ivfpqr's codes, its payload and a column its re-rank
+    reads, are collected into the block rows once."""
     import numpy as np
 
     import vicinity_spark.operators.knn as knn_mod
@@ -361,6 +362,7 @@ def test_unbounded_ivf_plan_has_no_query_id_join(spark, monkeypatch, backend):
         assert "MapInPandas" in s and "__cluster" in s
         joins = [ln for ln in s.splitlines() if "Join" in ln]
         assert joins and not [ln for ln in joins if "query_id" in ln], joins
+        assert "__carry___pqcode" not in s
     assert explain_str(knn, "simple").count("MapInPandas") == 1
 
 

@@ -23,13 +23,6 @@ The contract:
   IVF strategies probe on the driver and push the probed lists into
   the scan); a larger query table runs the block grid (`cluster_grid`
   for IVF strategies), which never collects it.
-- One stage plan (`_stages`, scanned by `_stage_scan`) feeds both
-  `serve` and `_scored`. A re-rank strategy's scan carries the
-  columns its later stages read (the vector; ivfpqr's codes): each
-  task — each cell on the block grid — keeps each query's best
-  first-stage rows and scores the later stages on them, and the
-  stage cuts then run on the driver (`serve`) or as Spark windows
-  (`_scored`). No pool joins back to the corpus.
 - `knn` rejects `k < 1`, keeps each query's top `k` by
   `(distance, id)` — the id tiebreak makes the cut independent of the
   physical layout at exact ties — and only then clips the returned
@@ -44,18 +37,17 @@ The contract:
   candidates (`_within`), and the exact strategy with an exact range
   search; those three ignore `max_k`, as the reference's BASIC and
   range-search backends do (basic.py:149-172).
-- The facade (`VectorStore.query` / `query_threshold`) collects a
-  bounded batch in ONE Spark job through `serve`: one `grid.probe_scan`
-  of the strategy's cell kernel (`_cells`; `_range_cells` for a range
-  search), whose output rows carry the store's payload columns. Each
-  task keeps each query's best rows by the first cut stage and adds
-  the later stages' columns (`_stages`); the driver applies every
-  stage's `(distance, id)` cut, then clips. `_scored` (the DataFrame
-  plans of `knn`, `threshold` and `query_df`) runs the same scan
-  through `grid.cell_scan`. A strategy without cells (LSH,
+- One stage plan (`_stages`, scanned by `_stage_scan`) feeds the
+  DataFrame plans and the facade. The scan carries the columns the
+  later stages read (a re-rank's vector, ivfpqr's codes); each task —
+  each cell on the block grid — keeps each query's best first-stage
+  rows and scores the later stages on them. `_scored` then cuts as
+  Spark windows; `serve` (`VectorStore.query` / `query_threshold`)
+  runs it as ONE `grid.probe_scan` job whose rows also carry the
+  payload, and cuts on the driver. A strategy without cells (LSH,
   graph), a payload type outside `_CARRY`, or a top-k scan whose tasks
-  would ship more than SERVE_ROWS rows returns None, and the facade
-  collects the DataFrame plan.
+  would ship more than SERVE_ROWS rows makes `serve` return None, and
+  the facade collects the DataFrame plan.
 """
 
 from __future__ import annotations
@@ -123,22 +115,51 @@ def _within_kernel(kernel, t: float):
 
 
 def _task_best(size: int, extras, drop, frames, qids, Q):
-    """What a facade scan task emits: each query's best ``size`` rows
-    of the task by (distance, id) — which hold every row of that
-    query's global best ``size`` the task scanned — with the columns
-    ``extras(frame, Qrows)`` adds, and without the ``drop`` columns it
-    read."""
-    frames = [f for f in frames if len(f)]
-    if not frames:
-        return
+    """What a scan task (a cell, on the block grid) emits: each query's
+    best ``size`` rows by (distance, id) — a superset of the task's
+    share of the global cut — with the columns ``extras(frame, Qrows)``
+    adds and without the ``drop`` columns. Frames are scored as they
+    come, in slices of at most _QBLOCK × _CCHUNK query-vector doubles,
+    and drop their read columns at once (a carried vector pins its
+    Arrow batch). The kept rows are re-cut once most of them lie past
+    their query's ``size``-th, and a row beyond its query's
+    ``size``-th kept distance is then skipped unscored."""
+    from vicinity_spark.operators.grid import _CCHUNK, _QBLOCK
+
+    at = pd.Index(qids)
+    step = max(1, _QBLOCK * _CCHUNK // max(1, Q.shape[1]))
+    bound = np.full(len(qids), np.inf)
+    count = np.zeros(len(qids), dtype=np.int64)
+    kept = []
+    for f in frames:
+        pos = at.get_indexer(f["query_id"])
+        live = ~(f["distance"].to_numpy() > bound[pos])
+        f, pos = f[live], pos[live]
+        for s in range(0, len(f), step):
+            part = f.iloc[s : s + step]
+            if extras is not None:
+                part = extras(part, Q[pos[s : s + step]])
+            kept.append(part.drop(columns=list(drop)))
+        count += np.bincount(pos, minlength=len(qids))
+        if 2 * np.maximum(count - size, 0).sum() > count.sum():
+            kept, count = [_best(kept, size)], np.minimum(count, size)
+            q, d = kept[0]["query_id"].to_numpy(), kept[0]["distance"].to_numpy()
+            u, first, n = np.unique(q, return_index=True, return_counts=True)
+            full = n == size
+            bound[at.get_indexer(u[full])] = d[(first + n - 1)[full]]
+    if (count > size).any():
+        kept = [_best(kept, size)]
+    yield from (f for f in kept if len(f))
+
+
+def _best(frames, size: int) -> pd.DataFrame:
+    """Each query's best ``size`` rows of ``frames`` by (distance, id),
+    in (query_id, distance, id) order."""
     f = pd.concat(frames, ignore_index=True)
     keep = topk_positions(
         f["query_id"].to_numpy(), f["distance"].to_numpy(), f["id"].to_numpy(), size
     )
-    f = f.iloc[keep].reset_index(drop=True)
-    if extras is not None:
-        f = extras(f, Q[pd.Index(qids).get_indexer(f["query_id"])])
-    yield f.drop(columns=list(drop))
+    return f.iloc[keep].reset_index(drop=True)
 
 
 def _merged(rows, stages, payload) -> "list[dict]":
@@ -223,22 +244,24 @@ class IndexStrategy:
         return [("distance", k)], (), None
 
     def _stage_scan(self, metric: Metric, k: "int | None", carry=(), fields=(), cut=False):
-        """The scan of `_stages`: ``(stages, args, kwargs)``, where
+        """The scan of `_stages`: ``(stages, args, kwargs)`` for
         ``grid.cell_scan(corpus, queries, *args, **kwargs)`` or
-        ``grid.probe_scan(corpus, batch, *args, **kwargs)`` runs the
-        cell kernel and emits (query_id, id, distance, the later
-        stages' columns, the ``carry`` columns; ``fields`` types
-        those). With extras — or with ``cut`` — each task (each cell
-        on the block grid) keeps only each query's best first-stage
-        rows (`_task_best`), which hold every row of the global cut it
-        scanned, and scores the extras on them from the carried
-        ``read`` columns. None when the strategy scans no cells."""
+        ``grid.probe_scan(corpus, batch, ...)``, emitting (query_id,
+        id, distance, the later stages' columns, the ``carry`` columns
+        typed by ``fields``). With extras or ``cut``, each task cuts
+        and scores through `_task_best`. A scan that carries the vector
+        is as wide as a dense one, so its cells take at most the dense
+        _CTARGET rows. None when the strategy scans no cells."""
+        from vicinity_spark.operators.grid import _CTARGET
+
         stages, read, extras = self._stages(k, metric)
         size = stages[0][1]
         cells = self._cells(metric, size)
         if cells is None:
             return None
         payload_col, kernel, target_rows = cells
+        if "vector" in read:
+            target_rows = min(target_rows, _CTARGET)
         dists = [StructField(c, DoubleType()) for c, _ in stages[1:]]
         schema = StructType(_KNN_SCHEMA.fields + dists + list(fields))
         finish = None
@@ -406,14 +429,11 @@ class RerankStrategy(IndexStrategy):
     by `(distance, id)`, then an exact re-score of only those rows
     against the true vectors. Recall is governed by `refine`.
 
-    Both plans re-rank inside the scan: it carries each scanned row's
-    vector, a task (a cell on the block grid) keeps its local top
-    `k × refine` by approximate distance and scores those rows
-    exactly. The global pool is a subset of the union of the local
-    ones, so the two cuts — on the driver for the facade, as Spark
-    windows in `_scored` — give each query's global pool, scored
-    exactly (`_np_pairwise` reduces each row alone, so a pair's value
-    does not depend on the task that scored it)."""
+    Both plans re-rank inside the scan, which carries each row's
+    vector: a task keeps its local top `k × refine` by approximate
+    distance and scores it exactly. The global pool lies in the union
+    of the local ones, so the later cuts give each query's global pool,
+    scored exactly (`_np_pairwise` reduces each row alone)."""
 
     def _kk(self, k: int) -> int:
         return max(k * self.params["refine"], k)
@@ -428,4 +448,4 @@ class RerankStrategy(IndexStrategy):
 def _vectors(col: pd.Series) -> np.ndarray:
     """A carried array column as a float64 matrix (as score_pairs
     decodes it)."""
-    return np.vstack(col.to_numpy()).astype(np.float64)
+    return np.concatenate(col.to_numpy()).reshape(len(col), -1).astype(np.float64)

@@ -40,11 +40,11 @@ IVFPQR (`refine_m > 0`): a second, finer PQ on the post-reconstruction
 residual re-ranks candidates from codes alone, inside the scan task,
 from the carried (cluster, pqcode, rcode), where FAISS IndexIVFPQR
 would otherwise need a full-width second scan (faiss.py:111-113). NOTE
-a deliberate default-on divergence: `final_refine` (default 2)
-exact-rescores ONLY each task's final_refine·k code re-rank winners
-per query, from the true vectors the scan then also reads for the
-probed lists, so emitted distances are exact (hash-checkable against
-the exact-kNN oracle). Set `final_refine=0` for FAISS IndexIVFPQR
+a deliberate default-on divergence: with `final_refine` (default 2)
+the scan also reads the probed rows' true vectors, each task scores
+its pool exactly, and only each query's final_refine·k code re-rank
+winners keep that score, so emitted distances are exact
+(hash-checkable against the exact-kNN oracle). Set `final_refine=0` for FAISS IndexIVFPQR
 parity (pure reconstruction distances; the scan reads codes only, no
 vector). The recall-floor test (test_evaluate_ann_recall_floor) is
 the stated backstop if params/testdata regeneration ever stops the

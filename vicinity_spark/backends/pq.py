@@ -241,11 +241,11 @@ class PQStrategy(RerankStrategy):
         """ADC cell kernel: each cell builds its queries' tables
         (`_cell_tables`) and emits per-query top-kk by pure lookups —
         D[q, n] = Σ_j tables[q, j, codes[n, j]] — via chunked
-        argpartition (grid.cell_topk). Cells hold up to 262,144 rows
-        (on the unbounded grid, ceil(n/262144) density-sized hash
-        blocks): the m-byte payload affords 4× the dense default, and
-        every extra cell re-computes the per-cell ADC tables and widens
-        the candidate merge."""
+        argpartition (grid.cell_topk). Cells of codes hold up to
+        262,144 rows (ceil(n/262144) hash blocks on the unbounded
+        grid), 4× the dense default, since every extra cell recomputes
+        the ADC tables; a scan that carries the vector for its re-rank
+        keeps the dense default (`IndexStrategy._stage_scan`)."""
         from vicinity_spark.operators.grid import cell_topk
 
         m = self.params["m"]

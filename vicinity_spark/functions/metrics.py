@@ -165,11 +165,6 @@ def cosine_distance(a: Column, b: Column, dim: "int | None" = None) -> Column:
     return F.lit(1.0) - sim
 
 
-def cosine_distance_prenormalized(a_hat: Column, b_hat: Column, dim: "int | None" = None) -> Column:
-    """Fast path when both sides carry unit vectors (basic.py:216-222)."""
-    return F.lit(1.0) - dot_product(a_hat, b_hat, dim)
-
-
 def l2_squared_distance(a: Column, b: Column, dim: "int | None" = None) -> Column:
     if dim:
         return _chain_sum(

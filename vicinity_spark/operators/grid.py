@@ -30,14 +30,12 @@ scan, routes between them (knn.bounded_query_matrix decides):
   ivfpq and ivfpqr, and the facade's one-job queries
   (`IndexStrategy.serve`), whose scan rows carry the payload.
 
-Both plans take a ``carry`` (corpus columns each kernel row gets,
-looked up by id in its cell) and a ``finish`` (what a task emits,
-from its kernel frames): the block grid collects the carried columns
-into its block rows and runs ``finish`` per cell, `probe_scan` per
-task. That is how a re-rank strategy scores its pool inside the scan
-on either plan (`IndexStrategy._stage_scan`: the carried vector or
-codes, a per-task cut and the exact score), and how the facade's scan
-rows carry the store's payload.
+Both plans take a ``carry`` (corpus columns each kernel row gets by
+id; a carried payload column comes from the payload, not held twice)
+and a ``finish`` (what a cell or task emits from its kernel frames):
+how a re-rank scores its pool inside the scan on either plan
+(`IndexStrategy._stage_scan`) and how the facade's rows carry the
+payload.
 
 Everything a kernel needs beyond its cell (codebooks, centroids) is
 closure-small.
@@ -210,10 +208,15 @@ def query_blocks(queries: DataFrame, qblock: int = _QBLOCK) -> DataFrame:
     )
 
 
-def _held(carry) -> list:
+def _collected(carry) -> list:
     """collect_list of each ``carry`` column, named as `cell_arrays`
     reads it back."""
     return [F.collect_list(c).alias(f"__carry_{c}") for c in carry]
+
+
+def _held(carry, payload_col: str) -> tuple:
+    """The ``carry`` columns a cell holds beside its payload."""
+    return tuple(c for c in carry if c != payload_col)
 
 
 def corpus_blocks(
@@ -236,24 +239,18 @@ def corpus_blocks(
     folds a small corpus into few blocks (the r12 fixed-32 default
     regressed pq/sq ~2× on a 2k-row corpus) while a huge corpus still
     gets memory-bounded cells whose block count grows with the data,
-    not with a static conf. Callers that already know their count or
-    payload width pass n_blocks directly, or tune target_rows (pq's
-    payload is m-byte codes, so it affords denser blocks than the
-    dim×8-byte dense decode paths).
+    not with a static conf. Callers pass n_blocks when they know it, or
+    size target_rows by a block row's width: m-byte pq codes afford
+    denser blocks than dim×8-byte vectors (`IndexStrategy._stage_scan`
+    keeps the dense default once the vector rides along).
 
-    The count is taken so it never doubles the corpus work: a cached
-    or file-scan corpus counts directly (column-pruned, ~free), but a
-    lineage with Python-worker stages (mapInPandas codecs, Arrow
-    UDFs) would re-run the whole kernel chain for the count — there
-    the compact (id, payload) projection is materialized once
-    (eager localCheckpoint, the payload the fold is about to shuffle
-    anyway) and both the count and the fold read the checkpoint
-    (caught live: a 200k BMP decode→feature→grid-knn chain ran its
-    decode twice, 3.3s → 7.4s, when the count hit the raw lineage).
-    At 100 TB the split matters in both directions: checkpointing a
-    raw parquet corpus would copy the full payload into executor
-    storage for no reason, while re-running a decode lineage for a
-    count burns a full Python-worker pass."""
+    The count never doubles the corpus work: a cached or file-scan
+    corpus counts directly (column-pruned, ~free), but a lineage with
+    Python-worker stages would re-run its whole kernel chain for the
+    count, so there the compact projection is materialized once (eager
+    localCheckpoint) and both the count and the fold read it (a 200k
+    decode→grid-knn chain ran its decode twice, 3.3s → 7.4s, when the
+    count hit the raw lineage)."""
     compact = corpus.select(*dict.fromkeys(["id", payload_col, *carry]))
     if n_blocks is None:
         cached = corpus.storageLevel.useMemory or corpus.storageLevel.useDisk
@@ -268,7 +265,7 @@ def corpus_blocks(
         .agg(
             F.collect_list("id").alias("__cids"),
             F.collect_list(payload_col).alias("__ccodes"),
-            *_held(carry),
+            *_collected(carry),
         )
     )
 
@@ -297,9 +294,9 @@ def cluster_grid(
 ):
     """Cluster-keyed block grid for IVF and its composites (ivfsq, ivfpq):
     one block row per inverted list (`__cluster` plus the collected
-    ids, `payload_col` and ``carry`` columns), joined ONLY to the
-    query blocks that probe it — nprobe pruning at the block level, so
-    an unprobed list ships nowhere. The (query block → probed clusters) pairs come from an
+    ids, `payload_col` and ``carry``), joined ONLY to the query blocks
+    that probe it — nprobe pruning at the block level, so an unprobed
+    list ships nowhere. The (query block → probed clusters) pairs come from an
     executor-side pandas UDF over the block's own query vectors; the
     centroids ride in the closure.
 
@@ -317,7 +314,7 @@ def cluster_grid(
         .agg(
             F.collect_list("id").alias("__cids"),
             F.collect_list(payload_col).alias("__ccodes"),
-            *_held(carry),
+            *_collected(carry),
         )
     )
 
@@ -366,7 +363,7 @@ def cell_arrays(pdf: pd.DataFrame, i: int, carry=()):
 
 
 def scan_cells(
-    grid: DataFrame, kernel, schema, probe_mask=None, *, carry=(), finish=None
+    grid: DataFrame, kernel, schema, probe_mask=None, *, carry=(), finish=None, payload_col=None
 ) -> DataFrame:
     """The one mapInPandas over grid cells. Each cell row is decoded by
     `cell_arrays` (id-sorted corpus ids and payload, query ids, float64
@@ -375,26 +372,31 @@ def scan_cells(
     (``__cluster``, ``__cb``, ``__qb`` — those the grid has) to ints.
     With a `cluster_grid` ``probe_mask``, the kernel sees only the
     queries that probe the cell's cluster, and cells no query probes
-    are skipped. ``carry`` and ``finish`` act per cell as in
-    `probe_scan`: each kernel row gets its ``carry`` columns (collected
-    by `corpus_blocks` / `cluster_grid`), and ``finish(frames, qids,
-    Q)`` shapes what the cell emits. The loop is a module function
-    bound by `partial`, so a task's closure carries only the kernel,
-    the key names, the mask and ``finish``."""
+    are skipped. ``carry``, ``payload_col`` and ``finish`` act per cell
+    as in `probe_scan`. The loop is a module function bound by
+    `partial`, so a task's closure carries only the kernel, the key
+    names, the mask and ``finish``."""
     from vicinity_spark.backends.ivf import CLUSTER_COL
 
     keys = [c for c in (CLUSTER_COL, "__cb", "__qb") if c in grid.columns]
-    fn = partial(_scan, kernel, keys, probe_mask, carry=tuple(carry), finish=finish)
+    fn = partial(
+        _scan, kernel, keys, probe_mask, carry=tuple(carry), finish=finish, payload_col=payload_col
+    )
     fn.__name__ = "scan_cells"  # the UDF's name in plan dumps
     return grid.mapInPandas(fn, schema)
 
 
-def _scan(kernel, keys, probe_mask, batches: Iterator[pd.DataFrame], carry=(), finish=None):
+def _scan(
+    kernel, keys, probe_mask, batches: Iterator[pd.DataFrame], carry=(), finish=None,
+    payload_col=None,
+):
     from vicinity_spark.backends.ivf import CLUSTER_COL
 
     for pdf in batches:
         for i in range(len(pdf)):
-            ids, payload, qids, Q, carried = cell_arrays(pdf, i, carry)
+            ids, payload, qids, Q, carried = cell_arrays(pdf, i, _held(carry, payload_col))
+            if payload_col in carry:
+                carried[payload_col] = payload
             key = {c: int(pdf[c].iloc[i]) for c in keys}
             if probe_mask is not None:
                 mask = probe_mask(Q, key[CLUSTER_COL])
@@ -407,11 +409,12 @@ def _scan(kernel, keys, probe_mask, batches: Iterator[pd.DataFrame], carry=(), f
 
 def _with_carry(frames, ids: np.ndarray, carried: dict):
     """``frames`` with each ``carried`` column (row-aligned with the
-    id-sorted cell ``ids``) looked up by the row's ``id``."""
+    id-sorted cell ``ids``; the payload matrix row by row) looked up
+    by the row's ``id``."""
     for f in frames:
         if carried:
             at = np.searchsorted(ids, f["id"].to_numpy())
-            f = f.assign(**{n: v[at] for n, v in carried.items()})
+            f = f.assign(**{n: v[at] if v.ndim == 1 else list(v[at]) for n, v in carried.items()})
         yield f
 
 
@@ -446,12 +449,15 @@ def cell_scan(
             corpus, batch, payload_col, kernel, schema,
             lists=lists, target_rows=target_rows, carry=carry, finish=finish,
         )
+    held = _held(carry, payload_col)
     if lists is None:
-        blocks = corpus_blocks(corpus, payload_col, target_rows=target_rows, carry=carry)
+        blocks = corpus_blocks(corpus, payload_col, target_rows=target_rows, carry=held)
         grid, probe_mask = blocks.crossJoin(query_blocks(queries)), None
     else:
-        grid, probe_mask = cluster_grid(corpus, queries, lists, payload_col, carry)
-    return scan_cells(grid, kernel, schema, probe_mask, carry=carry, finish=finish)
+        grid, probe_mask = cluster_grid(corpus, queries, lists, payload_col, held)
+    return scan_cells(
+        grid, kernel, schema, probe_mask, carry=carry, finish=finish, payload_col=payload_col
+    )
 
 
 def probe_scan(
@@ -478,7 +484,8 @@ def probe_scan(
 
     ``carry`` names corpus columns each kernel output row gets, looked
     up by its ``id`` in the cell that emitted it (the facade's payload,
-    or the columns a re-rank scores). ``finish(frames, qids, Q)``, a
+    or the columns a re-rank scores; ``payload_col`` row by row from
+    the cell's payload). ``finish(frames, qids, Q)``, a
     generator over all of a task's kernel frames, shapes what the task
     emits (a re-rank's per-task cut); ``schema`` is then its output's.
 
@@ -525,6 +532,7 @@ def _probe_cells(kernel, payload_col, target_rows, carry, qids, Q, members, batc
     from vicinity_spark.backends.ivf import CLUSTER_COL
 
     every = np.arange(len(qids))
+    held = _held(carry, payload_col)
     # cell (list id, or None when flat) → [ids parts, payload parts, carry parts, rows]
     pending = {}
 
@@ -533,7 +541,9 @@ def _probe_cells(kernel, payload_col, target_rows, carry, qids, Q, members, batc
         ids, payload = np.concatenate(id_parts), np.concatenate(pay_parts)
         order = np.argsort(ids, kind="stable")
         ids, payload = ids[order], payload[order]
-        carried = {n: np.concatenate([p[n] for p in carry_parts])[order] for n in carry}
+        carried = {n: np.concatenate([p[n] for p in carry_parts])[order] for n in held}
+        if payload_col in carry:
+            carried[payload_col] = payload
         qs, key = (every, {}) if c is None else (members[c], {CLUSTER_COL: c})
         for s in range(0, len(qs), _QBLOCK):
             b = qs[s : s + _QBLOCK]
@@ -544,7 +554,7 @@ def _probe_cells(kernel, payload_col, target_rows, carry, qids, Q, members, batc
             continue
         ids = pdf["id"].to_numpy().astype(np.int64)
         payload = np.vstack(pdf[payload_col].to_numpy())
-        extra = {n: pdf[n].to_numpy() for n in carry}
+        extra = {n: pdf[n].to_numpy() for n in held}
         if members is None:
             pieces = [(None, ids, payload, extra)]
         else:

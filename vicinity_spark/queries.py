@@ -31,12 +31,7 @@ from typing import Callable, Optional
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from vicinity_spark.functions.metrics import (
-    clip_distance,
-    distance_expr,
-    l2_norm,
-    sq_norm,
-)
+from vicinity_spark.functions.metrics import distance_expr, l2_norm, sq_norm
 from vicinity_spark.operators.knn import knn_join, threshold_join
 
 DIM = 64  # embeddings.parquet vector width (TESTDATA.md)
@@ -443,20 +438,6 @@ def neardup_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return neardup_join(e, _NEARDUP_T, "cosine").select(
         "id_a", "id_b", F.round("distance", 6).alias("distance")
-    )
-
-
-def _neardup_theta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The JVM-expression theta-join form (kept for plan tests)."""
-    e = _t(spark, sf_dir, "embeddings")
-    a = e.select(F.col("vec_id").alias("id_a"), F.col("embedding").alias("va"))
-    b = e.select(F.col("vec_id").alias("id_b"), F.col("embedding").alias("vb"))
-    d = clip_distance(distance_expr("cosine", "va", "vb", DIM))
-    return (
-        a.join(b, F.col("id_a") < F.col("id_b"))
-        .withColumn("distance", d)
-        .where(F.col("distance") <= _NEARDUP_T)
-        .select("id_a", "id_b", F.round("distance", 6).alias("distance"))
     )
 
 

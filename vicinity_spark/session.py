@@ -283,11 +283,6 @@ def vector_column(df: DataFrame, name: str, dtype: "DataType | str", fn, *cols: 
     return local_frame(df.sparkSession, data, StructType(fields))
 
 
-def load_table(spark: SparkSession, sf_dir: str, name: str):
-    """Read one of the driver's parquet tables (TESTDATA.md)."""
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-
-
 def scan_reads_path(df, target: str) -> bool:
     """True when ``df``'s file scan reads from under ``target`` — the
     predicate behind every save-over-own-source guard (store.save,
