@@ -374,6 +374,54 @@ def test_neardup_join_equals_theta_join(spark):
         assert d == pytest.approx(max(D[a, b], 0.0), abs=1e-9)
 
 
+def test_range_search_layout_invariant(spark, monkeypatch):
+    """Exact range search (`threshold_join`, ``auto`` and ``grid``) and
+    the near-dup self-join return the same rows, to the distance bit,
+    from one corpus held in 1 and in 3 partitions, with the range
+    kernel's corpus chunk patched to 7 rows on the second side: a hit
+    and its distance are per-pair values, whatever the cell and chunk
+    shapes."""
+    import vicinity_spark.operators.knn as knn_mod
+    from vicinity_spark.operators import grid
+    from vicinity_spark.operators.knn import neardup_join
+
+    rng = np.random.default_rng(23)
+    n, dim = 300, 16
+    X = rng.standard_normal((n, dim))
+    X[40] = X[41] = X[4]  # duplicates
+    X[50] = X[10] * 1.001
+    Qv = X[rng.choice(n, 7, replace=False)] + 0.1 * rng.standard_normal((7, dim))
+    rows = [(i, [float(x) for x in X[i]]) for i in range(n)]
+    queries = spark.createDataFrame(
+        [(q, [float(x) for x in v]) for q, v in enumerate(Qv)], "query_id long, qvec array<float>"
+    )
+    real = knn_mod.dense_cell_within
+
+    def small_chunks(*args):
+        # runs in the Python worker: patch its module for this call only
+        old, grid._CCHUNK = grid._CCHUNK, 7
+        try:
+            return list(real(*args))
+        finally:
+            grid._CCHUNK = old
+
+    def run(parts):
+        corpus = spark.createDataFrame(rows, "id long, vector array<float>").repartition(parts)
+        out = {}
+        for metric, t in (("cosine", 0.7), ("euclidean", 5.0)):
+            for alg in ("auto", "grid"):
+                res = threshold_join(corpus, queries, t, metric, algorithm=alg)
+                out[metric, alg] = sorted(tuple(r) for r in res.collect())
+            out[metric, "self"] = sorted(tuple(r) for r in neardup_join(corpus, t, metric).collect())
+        return out
+
+    one = run(1)
+    monkeypatch.setattr(knn_mod, "dense_cell_within", small_chunks)
+    assert run(3) == one
+    assert all(len(v) > 10 for v in one.values()), {k: len(v) for k, v in one.items()}
+    assert (4, 40, 0.0) in one["euclidean", "self"]
+
+
 def test_threshold_grid_equals_expr(spark, corpus_df, queries_df):
     """The grid radius plan returns the same rows as the expression
     theta join (the oracle-matched form), for every metric family."""
@@ -1218,9 +1266,9 @@ def test_merge_parts_cut_ignores_chunk_shape_ulp_noise():
 
 
 def test_rescore_pairs_chunked_matches_unchunked():
-    """rescore_pairs' query-row blocking is a pure memory bound: every
-    block size must produce bit-identical values (per-row reductions
-    are unaffected by row slicing)."""
+    """rescore_pairs' pair blocking is a pure memory bound: every block
+    size must produce bit-identical values (per-row reductions are
+    unaffected by row slicing)."""
     import numpy as np
 
     from vicinity_spark.datatypes import Metric
@@ -1229,10 +1277,10 @@ def test_rescore_pairs_chunked_matches_unchunked():
     rng = np.random.default_rng(3)
     Q = rng.random((37, 16))
     X = rng.random((50, 16))
-    ii = rng.integers(0, 50, size=(37, 9))
+    qi, ci = np.repeat(np.arange(37), 9), rng.integers(0, 50, size=37 * 9)
     for metric in (Metric.COSINE, Metric.EUCLIDEAN, Metric.MANHATTAN):
-        full = rescore_pairs(metric, Q, X, ii)
-        tiny = rescore_pairs(metric, Q, X, ii, budget_bytes=1)
+        full = rescore_pairs(metric, Q, X, qi, ci)
+        tiny = rescore_pairs(metric, Q, X, qi, ci, budget_bytes=1)
         assert np.array_equal(full, tiny), metric
 
 
@@ -1271,14 +1319,27 @@ class _CellsOnly:
         return fn
 
 
-@pytest.mark.parametrize("metric", ["cosine", "euclidean", "manhattan"])
+_WITHIN_T = {
+    "cosine": 0.05,
+    "euclidean": 0.9,
+    "manhattan": 1.8,
+    "inner_product": -0.6,
+    "l2sq": 0.8,
+    "tanimoto": 0.12,
+}
+
+
+@pytest.mark.parametrize("metric", list(_WITHIN_T))
 def test_dense_cell_within_bounded_matches_brute_force(metric, monkeypatch):
-    """The range kernel behind the `grid` threshold search and
-    neardup_join slices both sides of a cell: with _QBLOCK and _CCHUNK
+    """The one dense range kernel (exact and IVF threshold search,
+    neardup_join) slices both sides of a cell: with _QBLOCK and _CCHUNK
     patched small, every distance matrix stays within them, and both
-    consumers still equal a numpy brute force — duplicate vectors
-    included, each unordered self-join pair once (same-block cells
-    hold both orientations, cross-block cells one)."""
+    consumers equal a per-pair (`_np_pairwise`) brute force exactly —
+    the same pairs and the same distance bits, clipped. ``t`` is set to
+    a pair's per-pair distance and moved one ulp each way, so that pair
+    is a hit at ``t`` and above and a miss below. Duplicate vectors are
+    included, each unordered self-join pair once (same-block cells hold
+    both orientations, cross-block cells one)."""
     import numpy as np
     import pandas as pd
 
@@ -1298,7 +1359,6 @@ def test_dense_cell_within_bounded_matches_brute_force(metric, monkeypatch):
 
     monkeypatch.setattr(knn_mod, "_np_distances", recording)
     mm = Metric.from_string(metric)
-    t = {"cosine": 0.05, "euclidean": 0.9, "manhattan": 1.8}[metric]
     rng = np.random.default_rng(11)
     n = 47
     ids = rng.permutation(1000)[:n].astype(np.int64)
@@ -1308,42 +1368,38 @@ def test_dense_cell_within_bounded_matches_brute_force(metric, monkeypatch):
     V[30] = V[31] = V[40]
     V[12] = V[5] + 1e-3  # near copy
 
-    def brute(rows_a, rows_b):
-        A = np.repeat(V[rows_a], len(rows_b), axis=0)
-        B = np.tile(V[rows_b], (len(rows_a), 1))
-        return _np_pairwise(mm, A, B).reshape(len(rows_a), len(rows_b))
+    def brute(A, rows_b):
+        Ar = np.repeat(A, len(rows_b), axis=0)
+        B = np.tile(V[rows_b], (len(A), 1))
+        return _np_pairwise(mm, Ar, B).reshape(len(A), len(rows_b))
 
-    # the matrix kernel's expansion error (a square root of it for
-    # euclidean) may only move pairs within tol of t
-    tol = 1e-6 if metric == "euclidean" else 1e-9
-
-    def sandwich(got, truth):
-        lo = {p for p, d in truth.items() if d <= t - tol}
-        hi = {p for p, d in truth.items() if d <= t + tol}
-        assert lo, "fixture must plant matches"
-        assert lo <= set(got) <= hi
-        for p, d in got.items():
-            assert d == pytest.approx(max(truth[p], 0.0), abs=tol)
+    def hits(D, qid, cid, t):
+        i, j = np.nonzero(D <= t)
+        return {(int(qid[a]), int(cid[b])): float(max(D[a, b], 0.0)) for a, b in zip(i, j)}
 
     # threshold-grid shape: one cell, queries distinct from the corpus
     qrows, crows = np.arange(0, 13), np.arange(13, n)
     Qv = V[qrows].copy()
     Qv[0] = V[20]  # a query equal to a corpus row
-    D = brute(qrows, crows)
-    D[0] = _np_pairwise(mm, np.repeat(Qv[:1], len(crows), axis=0), V[crows])
-    truth = {
-        (int(ids[q]), int(ids[c])): D[i, j]
-        for i, q in enumerate(qrows)
-        for j, c in enumerate(crows)
-    }
-    got = {}
-    for f in grid.dense_cell_within(ids[qrows], ids[crows], V[crows], Qv, mm, t):
-        for q, c, d in zip(f["query_id"], f["id"], f["distance"]):
-            assert (int(q), int(c)) not in got
-            got[(int(q), int(c))] = float(d)
-    assert shapes and all(r <= 4 and c <= 5 for r, c in shapes)
-    sandwich(got, truth)
-    assert (int(ids[0]), int(ids[20])) in got
+    D = brute(Qv, crows)
+    # the boundary pair: the one whose per-pair distance lies nearest t
+    at = np.unravel_index(np.argmin(np.abs(D - _WITHIN_T[metric])), D.shape)
+    edge = (int(ids[qrows][at[0]]), int(ids[crows][at[1]]))
+    t0 = float(D[at])
+    for t in (np.nextafter(t0, -np.inf), t0, np.nextafter(t0, np.inf)):
+        shapes.clear()
+        got = {}
+        for f in grid.dense_cell_within(ids[qrows], ids[crows], V[crows], Qv, mm, float(t)):
+            for q, c, d in zip(f["query_id"], f["id"], f["distance"]):
+                assert (int(q), int(c)) not in got
+                got[(int(q), int(c))] = float(d)
+        assert shapes and all(r <= 4 and c <= 5 for r, c in shapes)
+        truth = hits(D, ids[qrows], ids[crows], t)
+        assert len(truth) > 3, "fixture must plant matches"
+        assert got == truth, t
+        assert (edge in got) == (t >= t0)
+    if metric != "inner_product":
+        assert (int(ids[0]), int(ids[20])) in got
 
     # self-join through scan_cells: three hash blocks, cells cb <= qb,
     # members in collect_list (not id) order
@@ -1361,25 +1417,117 @@ def test_dense_cell_within_bounded_matches_brute_force(metric, monkeypatch):
         for cb in range(3)
         for qb in range(cb, 3)
     ]
-    shapes.clear()
-    fn = grid.scan_cells(
-        _CellsOnly(rows[0]), _neardup_kernel(mm, t), knn_mod._PAIRS_SCHEMA
-    )
-    got = {}
-    for f in fn(iter([pd.DataFrame(rows)])):
-        for a, b, d in zip(f["id_a"], f["id_b"], f["distance"]):
-            assert a < b and (int(a), int(b)) not in got
-            got[(int(a), int(b))] = float(d)
-    assert shapes and all(r <= 4 and c <= 5 for r, c in shapes)
-    Dall = brute(np.arange(n), np.arange(n))
-    truth = {
-        (int(min(ids[i], ids[j])), int(max(ids[i], ids[j]))): Dall[i, j]
-        for i in range(n)
-        for j in range(i + 1, n)
-    }
-    sandwich(got, truth)
-    for i, j in ((3, 9), (3, 21), (9, 21), (30, 31), (30, 40), (31, 40)):
-        assert (int(min(ids[i], ids[j])), int(max(ids[i], ids[j]))) in got
+    Dall = brute(V, np.arange(n))
+    upper = np.triu(np.ones((n, n), dtype=bool), 1)
+    lo, hi = np.minimum.outer(ids, ids), np.maximum.outer(ids, ids)
+    at = np.unravel_index(np.argmin(np.where(upper, np.abs(Dall - _WITHIN_T[metric]), np.inf)), Dall.shape)
+    edge, t0 = (int(lo[at]), int(hi[at])), float(Dall[at])
+    for t in (np.nextafter(t0, -np.inf), t0, np.nextafter(t0, np.inf)):
+        shapes.clear()
+        fn = grid.scan_cells(
+            _CellsOnly(rows[0]), _neardup_kernel(mm, float(t)), knn_mod._PAIRS_SCHEMA
+        )
+        got = {}
+        for f in fn(iter([pd.DataFrame(rows)])):
+            for a, b, d in zip(f["id_a"], f["id_b"], f["distance"]):
+                assert a < b and (int(a), int(b)) not in got
+                got[(int(a), int(b))] = float(d)
+        assert shapes and all(r <= 4 and c <= 5 for r, c in shapes)
+        i, j = np.nonzero(upper & (Dall <= t))
+        truth = {(int(lo[a, b]), int(hi[a, b])): float(max(Dall[a, b], 0.0)) for a, b in zip(i, j)}
+        assert len(truth) > 3, "fixture must plant matches"
+        assert got == truth, t
+        assert (edge in got) == (t >= t0)
+    if metric != "inner_product":
+        for i, j in ((3, 9), (3, 21), (9, 21), (30, 31), (30, 40), (31, 40)):
+            assert (int(min(ids[i], ids[j])), int(max(ids[i], ids[j]))) in got
+
+
+def test_dense_cell_within_rescores_in_blocks(monkeypatch):
+    """A threshold that admits every pair of a full _QBLOCK × _CCHUNK
+    slice re-scores the preselected pairs in blocks within
+    `rescore_pairs`' byte budget per gathered side, never the whole
+    slice at once, and returns what one unblocked re-score does."""
+    from functools import partial
+
+    import pandas as pd
+
+    import vicinity_spark.operators.knn as knn_mod
+    from vicinity_spark.datatypes import Metric
+    from vicinity_spark.operators import grid
+
+    rng = np.random.default_rng(5)
+    dim, nq, n = 6, 8, 20
+    Q, X = rng.random((nq, dim)), rng.random((n, dim))
+    qids, ids = np.arange(nq, dtype=np.int64), np.arange(100, 100 + n, dtype=np.int64)
+    monkeypatch.setattr(grid, "_QBLOCK", 4)
+    monkeypatch.setattr(grid, "_CCHUNK", 10)
+    gathered = []
+    orig = knn_mod._np_pairwise
+
+    def recording(m, A, B):
+        gathered.append(A.shape)
+        return orig(m, A, B)
+
+    monkeypatch.setattr(knn_mod, "_np_pairwise", recording)
+
+    def rows():
+        gathered.clear()
+        out = pd.concat(grid.dense_cell_within(qids, ids, X, Q, Metric.COSINE, 2.0))
+        return sorted(zip(out["query_id"], out["id"], out["distance"])), list(gathered)
+
+    whole, blocks = rows()
+    assert len(whole) == nq * n and blocks == [(40, dim)] * 4  # one gather per slice
+    monkeypatch.setattr(grid, "rescore_pairs", partial(grid.rescore_pairs, budget_bytes=7 * dim * 8))
+    blocked, blocks = rows()
+    assert blocked == whole
+    assert blocks and all(r <= 7 and c == dim for r, c in blocks)
+    assert sum(r for r, _ in blocks) == nq * n
+
+
+def test_scan_slices_queries_to_qblock(monkeypatch):
+    """The block grid hands a cell's kernel its queries in _QBLOCK
+    slices, as `probe_scan` does — a query block hashed past _QBLOCK
+    rows builds no larger matrix — while ``finish`` still gets the
+    whole block; the rows equal the unsliced call's."""
+    import pandas as pd
+
+    from vicinity_spark.datatypes import Metric
+    from vicinity_spark.operators import grid
+    from vicinity_spark.operators.knn import topk_cells
+
+    rng = np.random.default_rng(9)
+    dim, n, nq = 5, 30, 11
+    X, Q = rng.random((n, dim)), rng.random((nq, dim))
+    cell = pd.DataFrame([{
+        "__cb": 0,
+        "__cids": rng.permutation(n).astype(np.int64),
+        "__ccodes": list(X),
+        "__qb": 0,
+        "__qids": np.arange(50, 50 + nq, dtype=np.int64),
+        "__qvecs": list(Q),
+    }])
+    topk = topk_cells(Metric.EUCLIDEAN, 3)
+    seen, finished = [], []
+
+    def kernel(ids, payload, qids, Qs, key):
+        seen.append(len(Qs))
+        return topk(ids, payload, qids, Qs, key)
+
+    def finish(frames, qids, Qs):
+        finished.append(len(qids))
+        yield from frames
+
+    def rows():
+        seen.clear()
+        out = pd.concat(grid._scan(kernel, ["__cb", "__qb"], None, iter([cell]), finish=finish))
+        return sorted(zip(out["query_id"], out["id"], out["distance"]))
+
+    whole = rows()
+    assert seen == [nq]
+    monkeypatch.setattr(grid, "_QBLOCK", 4)
+    assert rows() == whole and len(whole) == nq * 3
+    assert seen == [4, 4, 3] and finished == [nq, nq]
 
 
 @pytest.mark.parametrize("seed", range(6))

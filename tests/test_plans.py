@@ -334,8 +334,9 @@ def test_unbounded_ivf_plan_has_no_query_id_join(spark, monkeypatch, backend):
     re-attaches query vectors by query_id (the join-scored plan it
     replaces did), and the query_df plan holds exactly one
     MapInPandas — the re-rank strategies score their pools inside the
-    cell scan. ivfpqr's codes, its payload and a column its re-rank
-    reads, are collected into the block rows once."""
+    cell scan; IVF's threshold_df filters inside it too. ivfpqr's
+    codes, its payload and a column its re-rank reads, are collected
+    into the block rows once."""
     import numpy as np
 
     import vicinity_spark.operators.knn as knn_mod
@@ -364,6 +365,18 @@ def test_unbounded_ivf_plan_has_no_query_id_join(spark, monkeypatch, backend):
         assert joins and not [ln for ln in joins if "query_id" in ln], joins
         assert "__carry___pqcode" not in s
     assert explain_str(knn, "simple").count("MapInPandas") == 1
+    if backend == "ivf":
+        _assert_kernel_filters(store.threshold_df(qdf, 0.5))
+
+
+def _assert_kernel_filters(df):
+    """``df``'s optimized plan scores in ONE MapInPandas and filters on
+    distance nowhere outside it: the range kernel keeps the hits."""
+    from vicinity_spark.session import optimized_plan
+
+    plan = optimized_plan(df).toString()
+    assert plan.count("MapInPandas") == 1, plan
+    assert not [ln for ln in plan.splitlines() if "Filter" in ln and "distance" in ln], plan
 
 
 @pytest.mark.parametrize("backend", ["ivf", "ivfsq", "pq", "ivfpq"])
@@ -451,7 +464,8 @@ def test_insert_layout_equal_on_driver_and_in_udf(spark, name):
 
 def test_bounded_ivf_plan_prunes_lists(spark, tmp_path):
     """The bounded IVF plan scores on the corpus scan: no query_id join
-    carries the query vectors (they are broadcast), and on a reloaded
+    carries the query vectors (they are broadcast), the range search
+    filters inside the scan's kernel, and on a reloaded
     store — written partitionBy(__cluster) — the probed-list filter is
     a partition filter of the scan."""
     import numpy as np
@@ -468,6 +482,7 @@ def test_bounded_ivf_plan_prunes_lists(spark, tmp_path):
     for df in (store.query_df(qdf, k=3), store.threshold_df(qdf, 0.4)):
         s = explain_str(df, "simple")
         assert "qvec" not in s and "MapInPandas" in s
+    _assert_kernel_filters(store.threshold_df(qdf, 0.4))
     path = str(tmp_path / "ivf_store")
     store.save(path)
     loaded = VectorStore.load(path, spark)

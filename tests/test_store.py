@@ -801,8 +801,9 @@ def test_bounded_scan_equals_unbounded(spark, monkeypatch, name):
     Arrow batches of 7 rows split every inverted list across batches.
     Covers planted duplicate vectors, an empty batch, a `where` that
     removes every probed list, and k past the probed rows. Range
-    search included: both plans score cells with `dense_cell_within`
-    (the exact store's too), so every case is bit-equal."""
+    search included: the exact and IVF stores score their range cells
+    with `dense_cell_within` on both plans, and its distances are
+    per-pair values, so every case is bit-equal."""
     import vicinity_spark.operators.knn as knn_mod
     from vicinity_spark.session import local_frame
 

@@ -11,8 +11,8 @@ The contract:
   their scored candidate rows `(query_id, id, distance)` with RAW
   (unclipped) distances, at most one row per (query_id, id). `k` is the
   result size the caller asked for; strategies that prune internally
-  (code scans, beam pools) size their pools from it. The range-search
-  strategies (IVF, LSH) ignore it, and `_within` passes None. A cell
+  (code scans, beam pools) size their pools from it; the exact and
+  IVF kernels cut each cell at it, and LSH ignores it. A cell
   strategy supplies `_cells` (its cell kernel), `_lists` (IVF probes)
   and `_stages` (its cuts after the scan); the base `_scored` runs them.
   LSH and graph override `_scored` and join their own candidates.
@@ -30,12 +30,15 @@ The contract:
   order). Payload columns are left-joined by id last. Output columns:
   `query_id, id, distance, rank, *payload`.
 - `threshold` returns `query_id, id, distance, *payload` for
-  `distance <= threshold`. By default it is the reference's ANN radius
-  search: the top `max_k` by the same cut, then the `<=` filter
-  (hnsw.py:107-114, usearch.py:131-139) — sq, pq, ivfpq, ivfsq and
-  graph. IVF and LSH override it with a range search over their probed
-  candidates (`_within`), and the exact strategy with an exact range
-  search; those three ignore `max_k`, as the reference's BASIC and
+  `distance <= threshold`. A strategy with a range cell kernel
+  (`_range_cells`: exact and IVF, both `knn.within_cells`) runs
+  one `grid.cell_scan` of it, the scan `serve` probes too: the kernel
+  keeps the hits and clips them, with no cut and no Spark filter.
+  Otherwise it is the reference's ANN radius search: the top `max_k`
+  by the same cut, then the `<=` filter (hnsw.py:107-114,
+  usearch.py:131-139) — sq, pq, ivfpq, ivfsq and graph. LSH overrides
+  it with a range search over its bucket-matched candidates. Exact,
+  IVF and LSH ignore `max_k`, as the reference's BASIC and
   range-search backends do (basic.py:149-172).
 - One stage plan (`_stages`, scanned by `_stage_scan`) feeds the
   DataFrame plans and the facade. The scan carries the columns the
@@ -62,7 +65,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, StringType, StructField, StructType
 
 from vicinity_spark.datatypes import Backend, Metric
-from vicinity_spark.functions.metrics import clip_distance
 from vicinity_spark.operators.knn import (
     _KNN_SCHEMA,
     KNN_COLS,
@@ -98,20 +100,6 @@ _CARRY = {
     "tinyint": int,
     "double": float,
 }
-
-
-def _within_kernel(kernel, t: float):
-    """``kernel``'s rows with a RAW distance ``<= t``, distances
-    clipped — `_within`'s filter and clip inside the cell kernel."""
-
-    def within(ids, payload, qids, Q, key):
-        for f in kernel(ids, payload, qids, Q, key):
-            d = f["distance"].to_numpy()
-            hit = d <= t
-            if hit.any():
-                yield f[hit].assign(distance=np.maximum(d[hit], 0.0))
-
-    return within
 
 
 def _task_best(size: int, extras, drop, frames, qids, Q):
@@ -218,12 +206,12 @@ class IndexStrategy:
         None: a flat scan."""
         return None
 
-    def _cells(self, metric: Metric, k: "int | None"):
+    def _cells(self, metric: Metric, k: int):
         """The strategy's one cell kernel: ``(payload_col, kernel,
         target_rows)``, where ``kernel(ids, payload, qids, Q, key)``
         yields (query_id, id, RAW distance) frames, each query's top
-        ``k`` of the cell by (distance, id) — every row when ``k`` is
-        None. None: the strategy scans no cells (LSH, graph)."""
+        ``k`` of the cell by (distance, id). None: the strategy scans
+        no cells (LSH, graph)."""
         return None
 
     def _range_cells(self, metric: Metric, threshold: float):
@@ -232,7 +220,21 @@ class IndexStrategy:
         strategy's `threshold` is not a range search over cells."""
         return None
 
-    def _stages(self, k: "int | None", metric: Metric):
+    def _range_scan(self, metric: Metric, threshold: float, carry=(), fields=()):
+        """The scan of `_range_cells`: ``(args, kwargs)`` for
+        ``grid.cell_scan(corpus, queries, *args, **kwargs)`` or
+        ``grid.probe_scan(corpus, batch, ...)``, emitting the hits
+        (query_id, id, clipped distance) and the ``carry`` columns typed
+        by ``fields``. None when the strategy has no range kernel."""
+        cells = self._range_cells(metric, float(threshold))
+        if cells is None:
+            return None
+        payload_col, kernel, target_rows = cells
+        schema = StructType(_KNN_SCHEMA.fields + list(fields))
+        kwargs = dict(lists=self._lists(metric), target_rows=target_rows, carry=tuple(carry))
+        return (payload_col, kernel, schema), kwargs
+
+    def _stages(self, k: int, metric: Metric):
         """The strategy's top-``k`` plan after the cell scan, the one
         both `serve` and `_scored` run: ``(stages, read, extras)``.
         ``stages`` are (column, rows per query) cuts, each query's best
@@ -243,7 +245,7 @@ class IndexStrategy:
         corpus columns ``read``."""
         return [("distance", k)], (), None
 
-    def _stage_scan(self, metric: Metric, k: "int | None", carry=(), fields=(), cut=False):
+    def _stage_scan(self, metric: Metric, k: int, carry=(), fields=(), cut=False):
         """The scan of `_stages`: ``(stages, args, kwargs)`` for
         ``grid.cell_scan(corpus, queries, *args, **kwargs)`` or
         ``grid.probe_scan(corpus, batch, ...)``, emitting (query_id,
@@ -276,7 +278,7 @@ class IndexStrategy:
         return stages, (payload_col, kernel, schema), kwargs
 
     def _scored(
-        self, corpus: DataFrame, queries: DataFrame, k: "int | None", metric: Metric
+        self, corpus: DataFrame, queries: DataFrame, k: int, metric: Metric
     ) -> DataFrame:
         """(query_id, id, distance) scored candidates, RAW distances:
         `_stage_scan` over `grid.cell_scan` cells, then each stage but
@@ -331,17 +333,14 @@ class IndexStrategy:
         out_fields = [
             StructField(c, StringType() if c in carried else fields[c]) for c in payload_cols
         ]
-        cells = None if threshold is None else self._range_cells(metric, float(threshold))
-        if cells is not None:
-            # a range search ships its hits only, as the DataFrame
-            # plan's collect does: no cut, no bound
-            payload_col, kernel, target_rows = cells
-            out = probe_scan(
-                scan, batch, payload_col, kernel, StructType(_KNN_SCHEMA.fields + out_fields),
-                lists=self._lists(metric), target_rows=target_rows, carry=tuple(payload_cols),
-            )
-            return [_hit(r, "distance", payload) for r in out.collect()]
         if threshold is not None:
+            plan = self._range_scan(metric, threshold, payload_cols, out_fields)
+            if plan is not None:
+                # a range search ships its hits only, as the DataFrame
+                # plan's collect does: no cut, no bound
+                args, kwargs = plan
+                out = probe_scan(scan, batch, *args, **kwargs)
+                return [_hit(r, "distance", payload) for r in out.collect()]
             k = max_k
         plan = self._stage_scan(metric, k, tuple(payload_cols), out_fields, cut=True)
         if plan is None:
@@ -380,24 +379,14 @@ class IndexStrategy:
         payload_cols: Optional[Sequence[str]] = None,
         max_k: int = 100,
     ) -> DataFrame:
-        res = self.knn(corpus, queries, k=max_k, metric=metric, payload_cols=payload_cols)
-        return res.where(F.col("distance") <= F.lit(float(threshold))).drop("rank")
+        from vicinity_spark.operators.grid import cell_scan
 
-    def _within(
-        self,
-        corpus: DataFrame,
-        queries: DataFrame,
-        threshold: float,
-        metric: Metric,
-        payload_cols: Optional[Sequence[str]],
-    ) -> DataFrame:
-        """Range search: every scored candidate with a RAW distance
-        `<= threshold`, uncapped."""
-        hits = (
-            self._scored(corpus, queries, None, metric)
-            .where(F.col("distance") <= F.lit(float(threshold)))
-            .withColumn("distance", clip_distance(F.col("distance")))
-        )
+        plan = self._range_scan(metric, threshold)
+        if plan is None:
+            res = self.knn(corpus, queries, k=max_k, metric=metric, payload_cols=payload_cols)
+            return res.where(F.col("distance") <= F.lit(float(threshold))).drop("rank")
+        args, kwargs = plan
+        hits = cell_scan(corpus, queries, *args, **kwargs)
         return join_payload(hits, corpus, payload_cols, RADIUS_COLS)
 
     # persistence of strategy state (e.g. fitted MLlib models, derived

@@ -3,7 +3,8 @@ backend (vicinity/backends/basic.py:98-247): flat layout, exact
 distances, the ground truth every ANN strategy is measured against
 (vicinity/vicinity.py:363-368). Both queries take `knn_join` /
 `threshold_join` with their default `auto` plan: one `grid.cell_scan`
-of the kernels `_cells` / `_range_cells` hand the facade's scan.
+of the kernels `_cells` / `_range_cells` hand the facade's scan. IVF
+runs the same two kernels over its probed lists.
 """
 
 from __future__ import annotations

@@ -25,20 +25,24 @@ reloaded store), and ONE mapInPandas over the corpus partitions scores
 each inverted list's rows against only the queries that probe it
 (grid.probe_scan). An unbounded query table runs `grid.cluster_grid`:
 each list folds into one block row joined only to the query blocks
-that probe it. Both deliver cells to the dense cell kernel → top-k
-merge. `_probe_df` (probes as rows, the same `vector_column`) stays
-for the streaming serving path.
+that probe it. Both deliver cells to the exact strategy's cell
+kernels: the dense top-k (`topk_cells`) → top-k merge, or the range
+kernel (`within_cells`), whose rows are the final hits — so a range
+search is the same one scan in `threshold_df` and in the facade, with
+the exact store's per-pair distances. `_probe_df` (probes as rows, the
+same `vector_column`) stays for the streaming serving path.
 """
 
 from __future__ import annotations
 
-from typing import Optional, Sequence
+from typing import Sequence
 
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from vicinity_spark.backends.base import IndexStrategy, _within_kernel
+from vicinity_spark.backends.base import IndexStrategy
+from vicinity_spark.backends.exact import ExactStrategy
 from vicinity_spark.datatypes import Backend, Metric
 from vicinity_spark.session import vector_column
 
@@ -125,42 +129,11 @@ class IVFStrategy(IndexStrategy):
 
         return InvertedLists(self.params["centroids"], self.params["nprobe"])
 
-    def _cells(self, metric: Metric, k: "int | None"):
-        """The dense cell kernel over the probed lists: with ``k`` each
-        cell keeps its per-query top ``k``, with None (range search)
-        every probed row, scored in _CCHUNK-row slices so the merge
-        matrix stays queries × _CCHUNK whatever the cell size."""
-        from vicinity_spark.operators.grid import _CCHUNK, _CTARGET, dense_cell_topk
-        from vicinity_spark.operators.knn import topk_cells
-
-        if k is not None:
-            return "vector", topk_cells(metric, k), _CTARGET
-
-        def every(ids, X, qids, Q, key):
-            X = X.astype(np.float64)
-            for s in range(0, len(ids), _CCHUNK):
-                e = s + _CCHUNK
-                yield dense_cell_topk(qids, ids[s:e], X[s:e], Q, metric, _CCHUNK)
-
-        return "vector", every, _CTARGET
-
-    def _range_cells(self, metric: Metric, threshold: float):
-        payload_col, kernel, target_rows = self._cells(metric, None)
-        return payload_col, _within_kernel(kernel, threshold), target_rows
+    # the exact strategy's cell kernels, run over the probed lists only
+    _cells = ExactStrategy._cells
+    _range_cells = ExactStrategy._range_cells
 
     # named in the class so per-class instrumentation that wraps only a
-    # class's own methods (perfbench/run.py spans) still sees it
+    # class's own methods (perfbench/run.py spans) still sees them
     knn = IndexStrategy.knn
-
-    def threshold(
-        self,
-        corpus: DataFrame,
-        queries: DataFrame,
-        threshold: float,
-        metric: Metric,
-        *,
-        payload_cols: Optional[Sequence[str]] = None,
-        max_k: int = 100,
-    ) -> DataFrame:
-        """Range search over the probed lists; `max_k` does not cap it."""
-        return self._within(corpus, queries, threshold, metric, payload_cols)
+    threshold = IndexStrategy.threshold

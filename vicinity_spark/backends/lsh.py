@@ -510,6 +510,13 @@ class LSHStrategy(IndexStrategy):
         payload_cols: Optional[Sequence[str]] = None,
         max_k: int = 100,
     ) -> DataFrame:
-        """Range search over the bucket-matched candidates; `max_k` does
-        not cap it."""
-        return self._within(corpus, queries, threshold, metric, payload_cols)
+        """Range search over the bucket-matched candidates, every one
+        scored (`_scored` ignores its ``k``); `max_k` does not cap it."""
+        from vicinity_spark.operators.knn import RADIUS_COLS, join_payload
+
+        hits = (
+            self._scored(corpus, queries, max_k, metric)
+            .where(F.col("distance") <= F.lit(float(threshold)))
+            .withColumn("distance", clip_distance(F.col("distance")))
+        )
+        return join_payload(hits, corpus, payload_cols, RADIUS_COLS)

@@ -26,9 +26,10 @@ scan, routes between them (knn.bounded_query_matrix decides):
   batches into cells of up to the grid's block size (per inverted
   list, or flat) with the queries in _QBLOCK slices — no fold, no
   join, no count job. Consumers: the exact ``auto`` top-k and radius
-  search, IVF's scoring, the re-ranked code scans of sq, pq, ivfsq,
-  ivfpq and ivfpqr, and the facade's one-job queries
-  (`IndexStrategy.serve`), whose scan rows carry the payload.
+  search (also IVF's, whose cell kernels are the exact ones), the
+  re-ranked code scans of sq, pq, ivfsq, ivfpq and ivfpqr, and the
+  facade's one-job queries (`IndexStrategy.serve`), whose scan rows
+  carry the payload.
 
 Both plans take a ``carry`` (corpus columns each kernel row gets by
 id; a carried payload column comes from the payload, not held twice)
@@ -403,8 +404,17 @@ def _scan(
                 if not mask.any():
                     continue
                 qids, Q = qids[mask], Q[mask]
-            frames = _with_carry(kernel(ids, payload, qids, Q, key), ids, carried)
+            frames = _sliced(kernel, ids, payload, qids, Q, key, carried)
             yield from frames if finish is None else finish(frames, qids, Q)
+
+
+def _sliced(kernel, ids, payload, qids, Q, key, carried):
+    """The kernel over one cell with the queries in _QBLOCK slices, so
+    its matrices stay within _QBLOCK × _CCHUNK doubles, the ``carried``
+    columns looked up on each frame (`_with_carry`)."""
+    for s in range(0, len(qids), _QBLOCK):
+        b = slice(s, s + _QBLOCK)
+        yield from _with_carry(kernel(ids, payload, qids[b], Q[b], key), ids, carried)
 
 
 def _with_carry(frames, ids: np.ndarray, carried: dict):
@@ -531,7 +541,6 @@ def _probe_scan(
 def _probe_cells(kernel, payload_col, target_rows, carry, qids, Q, members, batches):
     from vicinity_spark.backends.ivf import CLUSTER_COL
 
-    every = np.arange(len(qids))
     held = _held(carry, payload_col)
     # cell (list id, or None when flat) → [ids parts, payload parts, carry parts, rows]
     pending = {}
@@ -544,10 +553,8 @@ def _probe_cells(kernel, payload_col, target_rows, carry, qids, Q, members, batc
         carried = {n: np.concatenate([p[n] for p in carry_parts])[order] for n in held}
         if payload_col in carry:
             carried[payload_col] = payload
-        qs, key = (every, {}) if c is None else (members[c], {CLUSTER_COL: c})
-        for s in range(0, len(qs), _QBLOCK):
-            b = qs[s : s + _QBLOCK]
-            yield from _with_carry(kernel(ids, payload, qids[b], Q[b], key), ids, carried)
+        qs, key = (slice(None), {}) if c is None else (members[c], {CLUSTER_COL: c})
+        yield from _sliced(kernel, ids, payload, qids[qs], Q[qs], key, carried)
 
     for pdf in batches:
         if not len(pdf):
@@ -603,13 +610,12 @@ def det_topk_idx(D: np.ndarray, cap: int) -> np.ndarray:
     return out
 
 
-def rescore_pairs(metric, Q: np.ndarray, X: np.ndarray, ii: np.ndarray,
+def rescore_pairs(metric, Q: np.ndarray, X: np.ndarray, qi: np.ndarray, ci: np.ndarray,
                   budget_bytes: int = 32 << 20) -> np.ndarray:
-    """Exact per-pair distances for a candidate matrix: row r of the
-    result scores (Q[r], X[ii[r, j]]) with the per-pair kernel
-    (`_np_pairwise` — per-row reductions, so the value depends only on
-    the pair, never on batch shape). Processed in query-row blocks so
-    the repeated-Q and gathered-X temporaries stay ≤ budget_bytes each
+    """Exact distances of the pairs (Q[qi[p]], X[ci[p]]) by the per-pair
+    kernel (`_np_pairwise` — per-row reductions, so the value depends
+    only on the pair, never on batch shape). The pairs are gathered in
+    blocks so the gathered Q and X temporaries stay ≤ budget_bytes each
     (r14 ADVICE: the unchunked form materialized two nq·cap × dim
     float64 matrices — ~800 MB each at 1k queries × cap 100 × dim
     1024 — a peak-memory term outside the _CCHUNK discipline, and the
@@ -617,19 +623,12 @@ def rescore_pairs(metric, Q: np.ndarray, X: np.ndarray, ii: np.ndarray,
     from vicinity_spark.operators.knn import _np_pairwise
 
     Q = np.asarray(Q, dtype=np.float64)
-    nq, w = ii.shape
-    if nq == 0 or w == 0:
-        return np.empty((nq, w), dtype=np.float64)
-    dim = X.shape[1] if X.ndim == 2 else 1
-    out = np.empty((nq, w), dtype=np.float64)
-    rows = max(1, budget_bytes // max(1, w * dim * 8))
-    for s in range(0, nq, rows):
-        blk = ii[s : s + rows]
-        A = np.repeat(Q[s : s + rows], w, axis=0)
-        out[s : s + rows] = _np_pairwise(metric, A, X[blk.ravel()]).reshape(
-            blk.shape
-        )
-    return out
+    step = max(1, budget_bytes // max(1, (X.shape[1] if X.ndim == 2 else 1) * 8))
+    parts = [
+        _np_pairwise(metric, Q[qi[s : s + step]], X[ci[s : s + step]])
+        for s in range(0, len(qi), step)
+    ]
+    return np.concatenate(parts) if parts else np.empty(0)
 
 
 def _merge_parts(qids, ids, parts_d, parts_i, kk: int, rescore=None) -> pd.DataFrame:
@@ -664,7 +663,8 @@ def _merge_parts(qids, ids, parts_d, parts_i, kk: int, rescore=None) -> pd.DataF
         # identically); cost is nq × kk·n_chunks pair scores beside
         # the nq × n matrix already computed (<1%).
         Q, X, metric = rescore
-        D2 = rescore_pairs(metric, Q, X, I2)
+        qi = np.repeat(np.arange(len(I2)), I2.shape[1])
+        D2 = rescore_pairs(metric, Q, X, qi, I2.ravel()).reshape(I2.shape)
     sel = det_topk_idx(D2, cap)
     dd = np.take_along_axis(D2, sel, axis=1)
     ii = np.take_along_axis(I2, sel, axis=1)
@@ -715,22 +715,37 @@ def dense_cell_topk(qids, ids, X: np.ndarray, Q: np.ndarray, metric, kk: int) ->
 def dense_cell_within(qids, ids, X: np.ndarray, Q: np.ndarray, metric, t: float):
     """Every (query, corpus row) pair of one grid cell with distance
     ``<= t``, as (query_id, id, distance) frames, distances clipped to
-    ≥ 0 — the range kernel of the exact `grid` threshold search and
-    the near-dup self-join. Both sides are sliced (_QBLOCK queries ×
-    _CCHUNK rows), so no distance matrix exceeds that many doubles
-    whatever the block sizes."""
+    ≥ 0 — the one dense range kernel (exact and IVF range search, the
+    near-dup self-join). The matrix kernel only preselects the pairs
+    within a band of ``t``; the cut and the clip run on their per-pair
+    distances (`rescore_pairs`), so a hit and its distance never depend
+    on the cell or chunk shape (see the rescore note in `_merge_parts`).
+    The band is sized by the computation's magnitude, 1e-9 × (1 + ‖q‖²
+    + ‖x‖²) as in `nearest_centroids`, on the squared distance for
+    euclidean and on unit vectors for cosine, where the expansion's
+    error lives. Both sides are sliced (_QBLOCK queries × _CCHUNK rows),
+    so no distance matrix exceeds that many doubles."""
+    from vicinity_spark.datatypes import Metric
     from vicinity_spark.operators.knn import _np_distances
 
+    squared, unit = metric is Metric.EUCLIDEAN, metric is Metric.COSINE
+    mm, bound = (Metric.L2_SQUARED, math.copysign(t * t, t)) if squared else (metric, t)
+    q2 = np.ones(len(Q)) if unit else (Q * Q).sum(axis=1)
     for s in range(0, len(ids), _CCHUNK):
         Xs, cs = X[s : s + _CCHUNK], ids[s : s + _CCHUNK]
+        # fmax: a NaN row must not void the band of its whole chunk
+        x2 = 1.0 if unit else float(np.fmax.reduce((Xs * Xs).sum(axis=1), initial=0.0))
         for r in range(0, len(qids), _QBLOCK):
-            D = _np_distances(metric, Q[r : r + _QBLOCK], Xs)
-            qi, ci = np.nonzero(D <= t)
-            if len(qi):
+            Qr = Q[r : r + _QBLOCK]
+            band = bound + 1e-9 * (1.0 + q2[r : r + _QBLOCK] + x2)
+            qi, ci = np.nonzero(_np_distances(mm, Qr, Xs) <= band[:, None])
+            d = rescore_pairs(metric, Qr, Xs, qi, ci)
+            hit = d <= t
+            if hit.any():
                 yield pd.DataFrame(
                     {
-                        "query_id": qids[r : r + _QBLOCK][qi],
-                        "id": cs[ci],
-                        "distance": np.maximum(D[qi, ci], 0.0),
+                        "query_id": qids[r : r + _QBLOCK][qi[hit]],
+                        "id": cs[ci[hit]],
+                        "distance": np.maximum(d[hit], 0.0),
                     }
                 )

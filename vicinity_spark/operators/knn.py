@@ -51,8 +51,12 @@ unbounded, or when partitions × q × k rows would pass
 `backends.base.SERVE_ROWS`.
 
 Radius search has the same two cell plans (``auto``, ``grid``) over
-the chunked range kernel, plus ``expr``, the JVM reference plan, as
-``window`` is for top-k.
+the one dense range kernel (grid.dense_cell_within, also IVF's and the
+self-join's): the matrix kernel preselects each pair within a band of
+the threshold, and the ``<=`` cut and the clip run on the pair's
+per-pair distance, so hits and distances do not depend on the cell or
+chunk shape. ``expr`` is the JVM reference plan, as ``window`` is for
+top-k.
 
 ``bounded_query_matrix`` is the one bounded/unbounded router, called
 only by `grid.cell_scan`: every dense query scan (exact top-k and
@@ -356,8 +360,9 @@ def topk_cells(metric: Metric, k: int):
 
 
 def within_cells(metric: Metric, t: float):
-    """The exact range cell kernel: every (query, row) pair of a cell
-    with distance ``<= t``, clipped (grid.dense_cell_within)."""
+    """The exact range cell kernel (the exact and IVF stores'): every
+    (query, row) pair of a cell with distance ``<= t``, clipped,
+    distances scored per pair (grid.dense_cell_within)."""
     return lambda ids, X, qids, Q, key: dense_cell_within(qids, ids, X.astype(np.float64), Q, metric, t)
 
 
@@ -467,7 +472,9 @@ def threshold_join(
 
     `auto` (default) and `grid` route exactly as `knn_join` does: one
     `grid.cell_scan` over the chunked range kernel (grid.
-    dense_cell_within) — the bounded broadcast-query scan for a batch
+    dense_cell_within: per-pair distances, so the hits and their
+    values do not depend on the partition layout) — the bounded
+    broadcast-query scan for a batch
     of at most AUTO_GRID_QUERY_ROWS rows, else (and always for `grid`)
     the block grid; no dim-wide JVM expression, which falls out of
     whole-stage codegen at large dim. The same eager-probe caveat as
