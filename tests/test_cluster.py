@@ -759,7 +759,7 @@ _THRESH = {"cosine": 0.05, "euclidean": 0.5, "l2sq": 0.25}
 def _kernel_cluster(seed: int, m: int, dim: int = 6):
     """m rows with unsorted ids unique across seeds, planted
     near-duplicates and two zero vectors (distance 0 to each other
-    under l2, NaN under cosine)."""
+    under l2; never a match under cosine)."""
     import numpy as np
 
     rng = np.random.default_rng(seed)
@@ -771,42 +771,35 @@ def _kernel_cluster(seed: int, m: int, dim: int = 6):
     return ids, V
 
 
-def _brute_pairs(ids, V, metric, t):
-    """Unordered id pairs at exact per-pair distance <= t."""
+def _brute_pairs(ids, V, metric, eligible=lambda pair: True):
+    """{unordered id pair: per-pair distance} (`_np_pairwise`) of every
+    ``eligible`` pair; a zero vector has no pairs under cosine."""
     import numpy as np
 
-    out = set()
-    for a in range(len(ids)):
-        for b in range(a + 1, len(ids)):
-            x, y = V[a], V[b]
-            if metric == "cosine":
-                nx, ny = np.linalg.norm(x), np.linalg.norm(y)
-                if nx == 0.0 or ny == 0.0:
-                    continue  # zero vector: NaN distance, never a match
-                d = 1.0 - float(x @ y) / (nx * ny)
-            else:
-                d = float(((x - y) ** 2).sum())
-                if metric == "euclidean":
-                    d = d**0.5
-            if d <= t:
-                out.add(frozenset((int(ids[a]), int(ids[b]))))
-    return out
+    from vicinity_spark.datatypes import Metric
+    from vicinity_spark.operators.knn import _np_pairwise
+
+    a, b = np.triu_indices(len(ids), 1)
+    d = _np_pairwise(Metric.from_string(metric), V[a], V[b])
+    live = (V != 0.0).any(axis=1) if metric == "cosine" else np.ones(len(ids), bool)
+    return {
+        frozenset((int(ids[i]), int(ids[j]))): float(x)
+        for i, j, x in zip(a, b, d)
+        if live[i] and live[j] and eligible(frozenset((int(ids[i]), int(ids[j]))))
+    }
 
 
-def _kernel_rows(rows, metric):
+def _kernel_rows(rows, metric, t):
     """Run the pair kernel over one pandas frame of folded rows; the
-    emitted edges as unordered pairs, each asserted emitted once."""
+    emitted edges as unordered pairs, each asserted emitted once with
+    id_a < id_b."""
     import pandas as pd
 
     from vicinity_spark.operators.cluster import _pair_kernel
 
-    out = list(_pair_kernel(metric, _THRESH[metric])(iter([pd.DataFrame(rows)])))
-    edges = [
-        frozenset((int(a), int(b)))
-        for f in out
-        for a, b in zip(f["id_a"], f["id_b"])
-    ]
-    assert all(len(e) == 2 for e in edges)  # no self pairs
+    out = list(_pair_kernel(metric, float(t))(iter([pd.DataFrame(rows)])))
+    assert all((f["id_a"] < f["id_b"]).all() for f in out)
+    edges = [frozenset((int(a), int(b))) for f in out for a, b in zip(f["id_a"], f["id_b"])]
     assert len(edges) == len(set(edges))  # each unordered pair once
     return set(edges)
 
@@ -820,48 +813,58 @@ def _fold(ids, V, order, **member_cols):
     }
 
 
-def _assert_brute(got, ids, V, metric, keep=lambda pair: True):
-    """Sandwich against the exact brute force: ulp-level expansion
-    error may only move pairs within 1e-9 of the threshold."""
-    t = _THRESH[metric]
-    lo = {p for p in _brute_pairs(ids, V, metric, t - 1e-9) if keep(p)}
-    hi = {p for p in _brute_pairs(ids, V, metric, t + 1e-9) if keep(p)}
-    assert lo, "fixture must plant matches"
-    assert lo <= got <= hi
+def _assert_exact(rows, metric, truth):
+    """The kernel's edges over ``rows`` equal the brute force's pairs
+    at distance <= t exactly, with t at the per-pair distance of the
+    pair lying nearest the metric's threshold and one ulp either side:
+    that pair is an edge at t and above, and not below."""
+    import numpy as np
+
+    assert any(d <= _THRESH[metric] for d in truth.values()), "fixture must plant matches"
+    edge, t0 = min(truth.items(), key=lambda kv: abs(kv[1] - _THRESH[metric]))
+    for t in (np.nextafter(t0, -np.inf), t0, np.nextafter(t0, np.inf)):
+        got = _kernel_rows(rows, metric, t)
+        assert got == {p for p, d in truth.items() if d <= t}, t
+        assert (edge in got) == (t >= t0)
 
 
 @pytest.mark.parametrize("chunk", [None, 7], ids=["pchunk", "pchunk7"])
 @pytest.mark.parametrize("metric", ["cosine", "euclidean", "l2sq"])
 def test_pair_kernel_shapes_match_brute_force(metric, chunk, monkeypatch):
     """Within, cross (new vs snapshot) and split-cluster block shapes
-    of the one pair kernel against a numpy brute force, with the chunk
-    size at its real value and at 7 rows so every shape crosses slice
-    boundaries; a zero vector under cosine never matches."""
+    of the one pair kernel equal a per-pair (`_np_pairwise`) brute
+    force exactly, with the range kernel's slices (grid._QBLOCK and
+    grid._CCHUNK) at their real sizes and at 7 rows so every shape
+    crosses slice boundaries; a zero vector under cosine never
+    matches, even at a threshold past its distance of 1."""
     import numpy as np
 
-    from vicinity_spark.operators import cluster
+    from vicinity_spark.operators import grid
 
     if chunk is not None:
-        monkeypatch.setattr(cluster, "_PCHUNK", chunk)
-    zero, edges = set(), set()
+        monkeypatch.setattr(grid, "_QBLOCK", chunk)
+        monkeypatch.setattr(grid, "_CCHUNK", chunk)
 
     # within: two clusters in one frame (rows arrive in collect_list
     # order, not id order) plus a singleton that must emit nothing
     ids1, V1 = _kernel_cluster(1, 40)
     ids2, V2 = _kernel_cluster(2, 23)
     rng = np.random.default_rng(0)
-    got = _kernel_rows(
-        [
-            _fold(ids1, V1, rng.permutation(len(ids1))),
-            _fold(ids2, V2, rng.permutation(len(ids2))),
-            _fold(ids2[:1], V2[:1], [0]),
-        ],
-        metric,
-    )
-    _assert_brute({p for p in got if p <= set(ids1.tolist())}, ids1, V1, metric)
-    _assert_brute({p for p in got if p <= set(ids2.tolist())}, ids2, V2, metric)
-    edges |= got
-    zero |= {int(i) for i in ids1[-2:]} | {int(i) for i in ids2[-2:]}
+    rows = [
+        _fold(ids1, V1, rng.permutation(len(ids1))),
+        _fold(ids2, V2, rng.permutation(len(ids2))),
+        _fold(ids2[:1], V2[:1], [0]),
+    ]
+    within = {**_brute_pairs(ids1, V1, metric), **_brute_pairs(ids2, V2, metric)}
+    _assert_exact(rows, metric, within)
+    zero = {frozenset(map(int, ids1[-2:])), frozenset(map(int, ids2[-2:]))}
+    dead = {int(i) for i in (*ids1[-2:], *ids2[-2:])}
+    wide = _kernel_rows(rows, metric, 1.5)
+    if metric == "cosine":
+        assert wide == {p for p, d in within.items() if d <= 1.5}
+        assert not any(p & dead for p in wide)
+    else:  # the zero pair is an exact duplicate under l2
+        assert zero <= _kernel_rows(rows, metric, 0.0)
 
     # cross: only new-involved pairs (snapshot-snapshot ones are settled)
     ids, V = _kernel_cluster(3, 37)
@@ -869,10 +872,7 @@ def test_pair_kernel_shapes_match_brute_force(metric, chunk, monkeypatch):
     sides[:2] = [1, 0]
     new = {int(i) for i, sd in zip(ids, sides) if sd == 1}
     row = _fold(ids, V, rng.permutation(len(ids)), __sides=sides)
-    got = _kernel_rows([row], metric)
-    _assert_brute(got, ids, V, metric, keep=lambda p: bool(p & new))
-    edges |= got
-    zero |= {int(i) for i in ids[-2:]}
+    _assert_exact([row], metric, _brute_pairs(ids, V, metric, lambda p: bool(p & new)))
 
     # split cluster: B-row blocks in id order, one task per block pair
     # (ti <= tj); the union emits each unordered pair exactly once
@@ -887,12 +887,39 @@ def test_pair_kernel_shapes_match_brute_force(metric, chunk, monkeypatch):
             members = np.nonzero((blk == ti) | (blk == tj))[0]
             row = _fold(ids, V, rng.permutation(members), __blks=blk)
             tasks.append({**row, "__ti": ti, "__tj": tj})
-    got = _kernel_rows(tasks, metric)
-    _assert_brute(got, ids, V, metric)
-    edges |= got
-    zero |= {int(i) for i in ids[-2:]}
+    _assert_exact(tasks, metric, _brute_pairs(ids, V, metric))
 
-    # the zero pair is distance 0 under l2 but NaN under cosine
-    assert any(p <= zero for p in edges) == (metric != "cosine")
-    if metric == "cosine":
-        assert not any(p & zero for p in edges)
+
+@pytest.mark.parametrize("metric", ["cosine", "euclidean", "l2sq"])
+def test_pair_kernel_matrices_bounded(metric, monkeypatch):
+    """A cluster larger than the range kernel's slices (_QBLOCK and
+    _CCHUNK patched small) builds no distance matrix past _QBLOCK ×
+    _CCHUNK, in the whole-cluster and the incremental shapes, and its
+    edges equal the unpatched run's: the pair kernel's memory is
+    bounded in bytes whatever the cluster size."""
+    import numpy as np
+
+    import vicinity_spark.operators.knn as knn_mod
+    from vicinity_spark.operators import grid
+
+    ids, V = _kernel_cluster(5, 150)
+    rng = np.random.default_rng(1)
+    sides = rng.integers(0, 2, len(ids)).astype(np.int8)
+    folds = (
+        [_fold(ids, V, rng.permutation(len(ids)))],
+        [_fold(ids, V, rng.permutation(len(ids)), __sides=sides)],
+    )
+    whole = [_kernel_rows(rows, metric, _THRESH[metric]) for rows in folds]
+    assert all(len(w) > 10 for w in whole)
+    shapes = []
+    orig = knn_mod._np_distances
+
+    def recording(m, Q, X, *a, **k):
+        shapes.append((len(Q), len(X)))
+        return orig(m, Q, X, *a, **k)
+
+    monkeypatch.setattr(knn_mod, "_np_distances", recording)
+    monkeypatch.setattr(grid, "_QBLOCK", 16)
+    monkeypatch.setattr(grid, "_CCHUNK", 24)
+    assert [_kernel_rows(rows, metric, _THRESH[metric]) for rows in folds] == whole
+    assert len(shapes) > 20 and all(r <= 16 and c <= 24 for r, c in shapes)

@@ -375,14 +375,16 @@ def test_neardup_join_equals_theta_join(spark):
 
 
 def test_range_search_layout_invariant(spark, monkeypatch):
-    """Exact range search (`threshold_join`, ``auto`` and ``grid``) and
-    the near-dup self-join return the same rows, to the distance bit,
-    from one corpus held in 1 and in 3 partitions, with the range
-    kernel's corpus chunk patched to 7 rows on the second side: a hit
-    and its distance are per-pair values, whatever the cell and chunk
-    shapes."""
+    """Exact range search (`threshold_join`, ``auto`` and ``grid``), the
+    near-dup self-join and SemDeDup's cluster fold return the same
+    rows, to the distance bit, from one corpus held in 1 and in 3
+    partitions, with the range kernel's corpus chunk patched to 7 rows
+    on the second side: a hit and its distance are per-pair values,
+    whatever the cell and chunk shapes. SemDeDup's chunked fold (every
+    cluster split into 40-row blocks) labels as its plain fold does
+    (cosine, the default metric and the one whose zero rows it drops)."""
     import vicinity_spark.operators.knn as knn_mod
-    from vicinity_spark.operators import grid
+    from vicinity_spark.operators import cluster, grid
     from vicinity_spark.operators.knn import neardup_join
 
     rng = np.random.default_rng(23)
@@ -395,6 +397,7 @@ def test_range_search_layout_invariant(spark, monkeypatch):
     queries = spark.createDataFrame(
         [(q, [float(x) for x in v]) for q, v in enumerate(Qv)], "query_id long, qvec array<float>"
     )
+    cents = X[:3].tolist()  # three preset clusters of 126, 124 and 50 rows
     real = knn_mod.dense_cell_within
 
     def small_chunks(*args):
@@ -405,6 +408,9 @@ def test_range_search_layout_invariant(spark, monkeypatch):
         finally:
             grid._CCHUNK = old
 
+    def labels(df, t, **kw):
+        return sorted(tuple(r) for r in cluster.semdedup(df, cents, t, **kw).collect())
+
     def run(parts):
         corpus = spark.createDataFrame(rows, "id long, vector array<float>").repartition(parts)
         out = {}
@@ -413,13 +419,26 @@ def test_range_search_layout_invariant(spark, monkeypatch):
                 res = threshold_join(corpus, queries, t, metric, algorithm=alg)
                 out[metric, alg] = sorted(tuple(r) for r in res.collect())
             out[metric, "self"] = sorted(tuple(r) for r in neardup_join(corpus, t, metric).collect())
+        out["semdedup"] = labels(corpus, 0.3)
         return out
 
     one = run(1)
+    corpus = spark.createDataFrame(rows, "id long, vector array<float>")
+    assert labels(corpus, 0.3, max_cluster_rows=40, on_oversize="chunk") == one["semdedup"]
+    # both self-join kernels reach the range kernel through these names
     monkeypatch.setattr(knn_mod, "dense_cell_within", small_chunks)
+    monkeypatch.setattr(cluster, "dense_cell_within", small_chunks)
     assert run(3) == one
     assert all(len(v) > 10 for v in one.values()), {k: len(v) for k, v in one.items()}
     assert (4, 40, 0.0) in one["euclidean", "self"]
+    assert sum(not r[3] for r in one["semdedup"]) > 10
+
+    def no_hits(*args):
+        return iter(())
+
+    # the patch point reaches the workers: without hits, nothing dedups
+    monkeypatch.setattr(cluster, "dense_cell_within", no_hits)
+    assert all(r[3] for r in labels(corpus, 0.3))
 
 
 def test_threshold_grid_equals_expr(spark, corpus_df, queries_df):

@@ -23,10 +23,13 @@ Scale shape:
   labels share its tie rule); no shuffle, no join, replayable by an
   `ORDER BY dist, cid` oracle;
 - the pair mine is ONE equi-join shuffle keyed on cluster id — pair
-  work per task is bounded by that cluster's size, never all-pairs;
-  a single runaway cluster is the failure mode (quadratic in ITS
-  size): that is a k-sizing decision, not a plan property, so size k
-  to the corpus as the paper does;
+  work per task is bounded by that cluster's size, never all-pairs —
+  scored by the engine's one range kernel (grid.dense_cell_within,
+  under `neardup_join`'s keep rule), whose slices bound kernel memory
+  in bytes whatever the cluster size; a single runaway cluster is the
+  failure mode (a fold row linear and one task's time quadratic in
+  ITS size): that is a k-sizing decision, not a plan property, so
+  size k to the corpus as the paper does;
 - component closure and the final label join reuse
   `dedup.connected_components` (|edges|+|ids|-bounded iterations);
 - `cluster_balanced_sample` keeps a deterministic per-cluster cut by
@@ -45,13 +48,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import BinaryType
 
-from vicinity_spark.operators.grid import centroid_assign
+from vicinity_spark.datatypes import Metric
+from vicinity_spark.operators.grid import centroid_assign, dense_cell_within
+from vicinity_spark.operators.knn import self_join_pairs
 from vicinity_spark.session import local_frame, vector_column
-
-#: rows of the per-cluster distance matrix computed per kernel slice —
-#: bounds kernel memory at _PCHUNK × cluster_size doubles (the grid
-#: module's _CCHUNK discipline, operators/grid.py)
-_PCHUNK = 4_096
 
 #: cluster_curate join-back: broadcast the kept (id, cluster_id) set
 #: only when its ALGEBRAIC bound k × n_per_cluster fits this many
@@ -163,106 +163,76 @@ def _oversize_clusters(asg, max_cluster_rows, *, raise_for=None):
 
 def _pair_kernel(metric: str, max_distance: float):
     """mapInPandas kernel over cluster-folded rows (__ids, __vecs =
-    packed float64-byte rows): per row, a distance matrix in
-    _PCHUNK-row slices, emitting only the (id_a, id_b) edges with
-    distance ≤ the threshold. A MATRIX kernel, not a per-pair row
-    expansion — at cluster sizes in the thousands a join that expands
-    both vectors per candidate pair moves cluster_size² × dim doubles
-    through the shuffle (measured: the 200k/64-cluster bench tier ran
-    >10 min join-expanded vs seconds here); one BLAS product per slice
-    moves nothing. Zero vectors under cosine produce NaN distances
-    (excluded at any threshold) — the same contract as the Catalyst
-    distance expression.
+    packed float64-byte rows): per row, the cells of its shape through
+    the self-join's range kernel and keep rule (grid.dense_cell_within
+    under knn.self_join_pairs), emitting only the (id_a < id_b) edges
+    with per-pair distance ≤ the threshold. A MATRIX kernel, not a
+    per-pair row expansion — at cluster sizes in the thousands a join
+    that expands both vectors per candidate pair moves cluster_size² ×
+    dim doubles through the shuffle (measured: the 200k/64-cluster
+    bench tier ran >10 min join-expanded vs seconds here); the range
+    kernel's slices bound every matrix at _QBLOCK × _CCHUNK doubles,
+    whatever the cluster size. A zero vector never matches under
+    cosine (its rows are dropped first), as in the DuckDB oracle
+    (queries.sql_distance), whose cosine divides by the zero norm and
+    so is NULL, which no ``<=`` admits.
 
-    The folded row's columns pick the matrix shape and keep rule;
-    every unordered pair is emitted once:
+    The folded row's columns pick its cells — query rows × columns,
+    ``same`` when they are one row set — and every unordered pair is
+    emitted once:
 
-    | row carries                  | drive rows | columns    | keep           |
-    |------------------------------|------------|------------|----------------|
-    | __ids, __vecs only           | all        | all        | i < j          |
-    | + __sides (1 new, 0 snapshot)| new rows   | all        | new-new i < j, |
-    |                              |            |            | new-snap i != j|
-    | + __blks, __ti == __tj       | all        | all        | i < j          |
-    | + __blks, __ti != __tj       | block __ti | block __tj | all            |
+    | row carries                  | cells                            |
+    |------------------------------|----------------------------------|
+    | __ids, __vecs only           | all × all, same                  |
+    | + __sides (1 new, 0 snapshot)| new × new, same;                 |
+    |                              | new × snapshot, cross            |
+    | + __blks, __ti == __tj       | all × all, same                  |
+    | + __blks, __ti != __tj       | block __ti × block __tj, cross   |
 
     The incremental (__sides) shape costs new×(ns+nb) FLOPs, never the
     snapshot's ns² (snapshot-snapshot pairs were settled when the
     snapshot was built). The block shape is the over-budget chunked
     fold: blocks are id-ordered, so every cross pair lives in exactly
-    one off-diagonal task and peak memory is two blocks plus a
-    _PCHUNK × block_size slice."""
+    one off-diagonal task and peak memory is two blocks."""
     if metric not in ("cosine", "euclidean", "l2sq"):
         raise ValueError(
             f"semdedup supports cosine/euclidean/l2sq, got {metric!r}"
         )
+    mm, t = Metric.from_string(metric), float(max_distance)
 
     def fn(it):
         for pdf in it:
-            for i in range(len(pdf)):
-                ids = np.asarray(pdf["__ids"].iloc[i], dtype=np.int64)
-                m = len(ids)
-                if m < 2:
+            out_a, out_b = [], []
+            for row in pdf.to_dict("records"):
+                ids = np.asarray(row["__ids"], dtype=np.int64)
+                if len(ids) < 2:
                     continue
-                # collect_list order is nondeterministic; id-sort so
-                # slice boundaries (and thus float paths) are stable
+                # collect_list order is nondeterministic: id-sort so
+                # the edges come out in one order
                 order = np.argsort(ids, kind="stable")
                 ids = ids[order]
-                # drive/cols None = every row, as plain s:e slices
-                drive = cols = new = None
-                if "__sides" in pdf.columns:
-                    new = np.asarray(pdf["__sides"].iloc[i])[order] == 1
-                    drive = np.nonzero(new)[0]
-                elif "__blks" in pdf.columns:
-                    ti, tj = int(pdf["__ti"].iloc[i]), int(pdf["__tj"].iloc[i])
-                    if ti != tj:
-                        blks = np.asarray(pdf["__blks"].iloc[i])[order]
-                        drive = np.nonzero(blks == ti)[0]
-                        cols = np.nonzero(blks == tj)[0]
-                n_drive = m if drive is None else len(drive)
-                if not n_drive or (cols is not None and not len(cols)):
-                    continue
-                V = _unpack_vecs(pdf["__vecs"].iloc[i])[order]
-                if metric == "cosine":
-                    nrm = np.linalg.norm(V, axis=1)
-                    nrm[nrm == 0.0] = np.nan  # zero vector → NaN row
-                    W = V / nrm[:, None]
-                else:
-                    W = V
-                    sq = (V * V).sum(axis=1)
-                    sqc = sq if cols is None else sq[cols]
-                Wc = W if cols is None else W[cols]
-                out_a, out_b = [], []
-                for s in range(0, n_drive, _PCHUNK):
-                    if drive is None:
-                        rows = slice(s, s + _PCHUNK)
-                    else:
-                        rows = drive[s : s + _PCHUNK]
-                    if metric == "cosine":
-                        D = 1.0 - W[rows] @ Wc.T
-                    else:
-                        D = sq[rows, None] + sqc[None, :] - 2.0 * (W[rows] @ Wc.T)
-                        if metric == "euclidean":
-                            D = np.sqrt(np.maximum(D, 0.0))
-                    with np.errstate(invalid="ignore"):
-                        ii, jj = np.nonzero(D <= max_distance)
-                    gi = ii + s if drive is None else rows[ii]
-                    gj = jj if cols is None else cols[jj]
-                    if new is not None:  # new-new once; new-snapshot always
-                        keep = np.where(new[gj], gi < gj, gi != gj)
-                        gi, gj = gi[keep], gj[keep]
-                    elif cols is None:
-                        keep = gi < gj  # upper triangle: each pair once
-                        gi, gj = gi[keep], gj[keep]
-                    if len(gi):
-                        out_a.append(ids[gi])
-                        out_b.append(ids[gj])
-                if out_a:
-                    yield pd.DataFrame(
-                        {
-                            "id_a": np.concatenate(out_a),
-                            "id_b": np.concatenate(out_b),
-                        }
-                    )
+                V = _unpack_vecs(row["__vecs"])[order]
+                # a zero vector never matches under cosine
+                rows = np.ones(len(ids), bool)
+                if mm is Metric.COSINE:
+                    rows = np.linalg.norm(V, axis=1) != 0.0
+                cells = [(rows, rows, True)]  # (query rows, columns, same)
+                if "__sides" in row:
+                    new = np.asarray(row["__sides"])[order] == 1
+                    cells = [(rows & new, rows & new, True), (rows & new, rows & ~new, False)]
+                elif "__blks" in row:
+                    ti, tj = int(row["__ti"]), int(row["__tj"])
+                    blks = np.asarray(row["__blks"])[order]
+                    cells = [(rows & (blks == ti), rows & (blks == tj), ti == tj)]
+                for q, c, same in cells:
+                    hits = dense_cell_within(ids[q], ids[c], V[c], V[q], mm, t)
+                    for a, b, _ in self_join_pairs(hits, same):
+                        out_a.append(a)
+                        out_b.append(b)
+            if out_a:
+                yield pd.DataFrame(
+                    {"id_a": np.concatenate(out_a), "id_b": np.concatenate(out_b)}
+                )
 
     return fn
 
@@ -290,8 +260,9 @@ def semdedup(
     stay bounded (see module docstring).
 
     Plan: assignment (narrow) → ONE groupBy(cluster) shuffle folding
-    each cluster into a block row → the chunked matrix kernel emits
-    flagged edges (Σ cluster_size² FLOPs but only |edges| rows) →
+    each cluster into a block row → the range kernel emits flagged
+    edges (Σ cluster_size² FLOPs in bounded slices, only |edges|
+    rows; `_pair_kernel`) →
     `connected_components` closure. Distance semantics match the
     engine's near-dup family (cosine DISTANCE ≤ t, i.e. similarity ≥
     1−t).
@@ -309,12 +280,15 @@ def semdedup(
 
     ``max_cluster_rows`` ENFORCES the k-sizing contract instead of
     just documenting it: the fold materializes one whole cluster per
-    block row, so a runaway cluster (a catch-all centroid) OOMs its
-    task quadratically in ITS size. When set, a k-row size pass (the
+    block row, so a runaway cluster (a catch-all centroid) ships a
+    fold row linear in ITS size to one task and costs that task time
+    quadratic in it (the kernel's own memory is bounded by the range
+    kernel's slices). When set, a k-row size pass (the
     `cluster_stats` shape — one map-side-combined groupBy, k rows to
     the driver) runs BEFORE any pair work and raises naming the
     offending clusters, so the failure is a one-line re-fit-with-
-    larger-k message rather than an executor OOM mid-fold. Costs one
+    larger-k message rather than a straggler task or an executor OOM
+    mid-fold. Costs one
     extra assignment pass over the corpus — opt-in for that reason
     (the dedup family's hot-bucket cap got the same treatment in
     r10).

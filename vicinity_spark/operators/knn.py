@@ -52,10 +52,12 @@ unbounded, or when partitions × q × k rows would pass
 
 Radius search has the same two cell plans (``auto``, ``grid``) over
 the one dense range kernel (grid.dense_cell_within, also IVF's and the
-self-join's): the matrix kernel preselects each pair within a band of
-the threshold, and the ``<=`` cut and the clip run on the pair's
-per-pair distance, so hits and distances do not depend on the cell or
-chunk shape. ``expr`` is the JVM reference plan, as ``window`` is for
+self-joins': `neardup_join` and SemDeDup's cluster folds in
+operators/cluster.py, which share one keep rule, `self_join_pairs`):
+the matrix kernel preselects each pair within a band of the
+threshold, and the ``<=`` cut and the clip run on the pair's per-pair
+distance, so hits and distances do not depend on the cell or chunk
+shape. ``expr`` is the JVM reference plan, as ``window`` is for
 top-k.
 
 ``bounded_query_matrix`` is the one bounded/unbounded router, called
@@ -65,6 +67,7 @@ radius, IVF, the code scans) decides (and collects) there.
 
 from __future__ import annotations
 
+import math
 from typing import Iterator, Optional, Sequence
 
 import numpy as np
@@ -93,9 +96,8 @@ def _np_distances(
     Kernels match functions/metrics.py (and the reference kernels they
     mirror: basic.py:218-222, 241-247; usearch.py:27-34). MANHATTAN and
     HAMMING broadcast a rows × len(X) × dim temporary, so Q is taken in
-    row blocks that keep it within ``budget_bytes`` (the rescore_pairs
-    budget); each value is a per-pair reduction, so the blocking never
-    changes a bit.
+    row blocks that keep it within ``budget_bytes``; each value is a
+    per-pair reduction, so the blocking never changes a bit.
     """
     if metric in (Metric.MANHATTAN, Metric.HAMMING):
         out = np.empty((len(Q), len(X)), dtype=np.float64)
@@ -536,14 +538,22 @@ def neardup_join(
     codegen at large dim — functions/metrics.py). Nothing collects to
     the driver, so the plan holds at any corpus size; for corpora where
     O(n²) itself is the problem, the LSH-bucketed
-    `LSHStrategy.neardup_pairs` is the sub-quadratic path."""
-    a = corpus_blocks(corpus.select("id", "vector"), "vector")
+    `LSHStrategy.neardup_pairs` is the sub-quadratic path.
+
+    The corpus folds into at least the fewest blocks whose upper
+    triangle has a cell per task slot (Spark's defaultParallelism), and
+    the cells are dealt round-robin over the slots, so a corpus under
+    one _CTARGET-row block still runs on every slot (the join alone
+    leaves the cells in the few partitions the fold coalesces to)."""
+    slots = corpus.sparkSession.sparkContext.defaultParallelism
+    tri = math.ceil((math.sqrt(8 * slots + 1) - 1) / 2)
+    a = corpus_blocks(corpus.select("id", "vector"), "vector", n_blocks=tri)
     b = a.select(
         F.col("__cb").alias("__qb"),
         F.col("__cids").alias("__qids"),
         F.col("__ccodes").alias("__qvecs"),
     )
-    grid = a.join(b, F.col("__cb") <= F.col("__qb"))
+    grid = a.join(b, F.col("__cb") <= F.col("__qb")).repartition(slots)
     return scan_cells(
         grid, _neardup_kernel(Metric.from_string(metric), float(threshold)), _PAIRS_SCHEMA
     )
@@ -551,22 +561,26 @@ def neardup_join(
 
 def _neardup_kernel(metric: Metric, t: float):
     """scan_cells kernel for one block pair of the self-join: the range
-    kernel's hits, each unordered pair emitted once as (id_a < id_b). A
-    same-block cell holds both orientations of every pair, so it keeps
-    the one with the query side lower; a cross-block cell holds each
-    pair once, so it only drops self pairs."""
+    kernel's hits under `self_join_pairs`, the cell being ``same`` when
+    both sides are one hash block."""
 
     def kernel(ids, X, qids, Q, key):
-        same = key["__cb"] == key["__qb"]
-        for f in dense_cell_within(qids, ids, X.astype(np.float64), Q, metric, t):
-            qi, ci = f["query_id"].to_numpy(), f["id"].to_numpy()
-            keep = qi < ci if same else qi != ci
-            yield pd.DataFrame(
-                {
-                    "id_a": np.minimum(qi, ci)[keep],
-                    "id_b": np.maximum(qi, ci)[keep],
-                    "distance": f["distance"].to_numpy()[keep],
-                }
-            )
+        hits = dense_cell_within(qids, ids, X.astype(np.float64), Q, metric, t)
+        for a, b, d in self_join_pairs(hits, key["__cb"] == key["__qb"]):
+            yield pd.DataFrame({"id_a": a, "id_b": b, "distance": d})
 
     return kernel
+
+
+def self_join_pairs(hits, same: bool):
+    """The one self-join keep rule, of `neardup_join` and the SemDeDup
+    folds (operators/cluster.py): the range kernel's hit frames of one
+    cell (grid.dense_cell_within) as (id_a, id_b, distance) arrays,
+    each unordered pair once with id_a < id_b. A ``same`` cell (its
+    query rows are its rows) holds both orientations of every pair, so
+    it keeps the one with the query side lower; a cross cell (disjoint
+    row sets) holds each pair once, so it only drops self pairs."""
+    for f in hits:
+        qi, ci = f["query_id"].to_numpy(), f["id"].to_numpy()
+        keep = qi < ci if same else qi != ci
+        yield np.minimum(qi, ci)[keep], np.maximum(qi, ci)[keep], f["distance"].to_numpy()[keep]

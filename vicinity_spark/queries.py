@@ -5323,10 +5323,12 @@ _CHECK_FIRST = [
     #     7-metric row is the strongest single certifier of that
     #     kernel, and no tail row runs the exact-knn pool path;
     #   emb_semdedup_chunked — the packed-binary fold (commit 125d3dc)
-    #     through _pair_kernel's block shape, the one shape no other
-    #     in-window row executes;
+    #     through _pair_kernel's block shape (block __ti × block __tj
+    #     cells of the range kernel), the one shape no other in-window
+    #     row executes;
     #   emb_semdedup_incremental — the packed fold through
-    #     _pair_kernel's cross (__sides) shape plus the pack-only vector column
+    #     _pair_kernel's __sides shape (new × new and new × snapshot
+    #     cells) plus the pack-only vector column
     #     (precomputed-cluster inputs), likewise unique.
     # Six further r15-touched r14-green rows stay in the tail under
     # the r12 docs_unigram_xent subsumption precedent (the touched
